@@ -9,8 +9,12 @@ import org.apache.spark.sql.streaming.Trigger
   *
   *  - [[loadCustomerDim]] ≙ `New_LoadCustomerDim`: list landing CSVs →
   *    per file: read → align → keyed merge → archive → delete.
-  *  - [[bookingTransform]] ≙ the `New_BookingTransformation` dataflow graph:
-  *    split → lookup-latest → flag → project → align (T1→T5).
+  *  - [[bookingTransform]] ≙ the `New_BookingTransformation` dataflow graph
+  *    as far as it shapes the written rows: split → align (T1, T5). The
+  *    graph's lookup-latest → insert/update flag → project (T2–T4) only
+  *    decides which sink branch a row takes; the keyed merge's anti-join +
+  *    union applies both branches the same way, so the flag is never
+  *    computed (`Ops.lookupLatest`/`Ops.flagInsertUpdate` keep the operators).
   *  - [[loadBookingFactBatch]] / [[loadBookingFactStream]] ≙
   *    `New_LoadBookingFact`: incremental feed → transform → merge → refresh
   *    the aggregate table (§2.4 + K5).
@@ -37,9 +41,13 @@ object BookingFlow {
     files
   }
 
-  /** T1→T5 over a raw change-feed batch. Returns (transformed, badRecords).
+  /** T1 + T5 over a raw change-feed batch. Returns (transformed, badRecords).
     * The reference's BadRecords branch dangles (rows dropped) but we surface
     * it so callers can route it to a quarantine sink.
+    *
+    * `fact` is unused: the reference's T2 lookup against it only fed the T3
+    * insert/update flag, which the fact schema drops at alignment. Kept in
+    * the signature so callers need not change.
     */
   def bookingTransform(raw: DataFrame, fact: KeyedTable): (DataFrame, DataFrame) = {
     // Quality split per the reference, plus a null-key guard: the reference's
@@ -48,15 +56,7 @@ object BookingFlow {
     // to all-null) are rejected there — we route them to BadRecords instead.
     val (bad, ok) = Ops.split(raw,
       (col("checkout_date") < col("checkin_date")) || col("booking_id").isNull)
-    val looked =
-      if (fact.exists)
-        Ops.lookupLatest(ok, fact.current.select("booking_id", "updated_at"),
-          "booking_id", "updated_at")
-      else ok.withColumn("lookup_booking_id", lit(null).cast("string"))
-    val flagged = Ops.flagInsertUpdate(looked, "lookup_booking_id")
-    val projected = Ops.project(flagged, raw.columns.toSeq :+ Ops.OpCol)
-    val aligned = Align.alignTo(projected, Schemas.bookingFact)
-    (aligned, bad)
+    (Align.alignTo(ok, Schemas.bookingFact), bad)
   }
 
   /** One incremental run: read new feed files → transform → merge → refresh

@@ -47,7 +47,9 @@ import java.nio.charset.StandardCharsets
   *    keys → UNION batch → write → swap pointer. The anti-join runs against a
   *    broadcast of ONLY the batch's key columns (a few MB even for millions
   *    of changed keys), so the snapshot side streams map-side with no
-  *    shuffle.
+  *    shuffle. Keys match NULL-safe ([[KeyedTable.withoutKeys]]), which also
+  *    lets AQE share one scan of the batch between the key side and the
+  *    union.
   *  - Bucket routing is `pmod(hash(keys), B)` — the same Murmur3 the engine
   *    uses for shuffle partitioning, so keys distribute like a shuffle would.
   *  - On object stores the pointer-swap commit would need a conditional-put;
@@ -386,9 +388,8 @@ final class KeyedTable(
         b
       }
     }
-    val dk = if (broadcastBatchKeys && threshold > 0 && deltaBytes <= threshold)
-      broadcast(deltaKeys) else deltaKeys
-    base.join(dk, keys, "left_anti").unionByName(survivors)
+    val bcast = broadcastBatchKeys && threshold > 0 && deltaBytes <= threshold
+    KeyedTable.withoutKeys(base, deltaKeys, keys, bcast).unionByName(survivors)
   }
 
   /** Time travel: read the snapshot as of version `v` (must not have been
@@ -721,40 +722,42 @@ final class KeyedTable(
     }
     if (storedSchema.isEmpty) writeText(fs, new Path(root, SchemaMarker), current.schema.json)
     // NULL-key rejection, ENFORCED in-plan with a DEDICATED error (r10
-    // ADVICE): the merge algebra is anti-join-based and join equality never
-    // matches NULL, so a NULL key tuple is unaddressable — CoW would keep
-    // the current group AND union the replacement (duplicate) while a MOR
-    // segment's read-time window (null-safe partitioning) would replace it:
-    // the exact silent CoW/MOR divergence this method guards against.
-    // Callers with genuinely nullable key sources (e.g. a left-join fact's
-    // NULL dim reference) must filter or surrogate them upstream —
-    // [[JoinDelta]] excludes NULL-ref pairs from its index for this reason.
-    // The check rides the write action (no extra job), like the covered-keys
-    // probe below.
+    // ADVICE): the anti-joins match keys NULL-safe (withoutKeys), so CoW and
+    // MOR would agree on a NULL key tuple — but a NULL key in a group
+    // replace is almost always an upstream defect (a left-join fact's NULL
+    // dim reference, an unparsed feed line), and replacing "the NULL group"
+    // would silently fold unrelated rows together. Bad input fails loudly:
+    // callers with genuinely nullable key sources must filter or surrogate
+    // them upstream — [[JoinDelta]] excludes NULL-ref pairs from its index
+    // for this reason. The check rides the write action (no extra job),
+    // like the covered-keys probe below. It is a projection, not a filter:
+    // a filter on the key columns would be pushed below the batch's per-key
+    // collapse on this read only, and the batch would be scanned twice.
     def nullKeyError(where: String) = raise_error(concat(
       lit(s"KeyedTable.replaceKeys: NULL key value in $where ("),
       concat_ws(",", keys.map(k => coalesce(col(k).cast("string"), lit("NULL"))).toIndexedSeq: _*),
-      lit(") - the anti-join merge algebra cannot address NULL keys; " +
+      lit(") - a group replace does not accept NULL keys; " +
         "filter or surrogate them upstream")))
     val anyNullKey = keys.map(col(_).isNull).reduce(_ || _)
     // distinct so the broadcast key set never carries one copy per
     // replacement row — callers legitimately pass multi-row key frames
     val allKeys = keysDf.select(keys.map(col).toIndexedSeq: _*).distinct()
-      .withColumn("__knull", when(anyNullKey, nullKeyError("keysDf")).otherwise(lit(true)))
-      .filter(col("__knull")).drop("__knull")
+      .select(keys.map(k => when(anyNullKey, nullKeyError("keysDf")).otherwise(col(k)).as(k))
+        .toIndexedSeq: _*)
     // Covered-keys contract, ENFORCED in-plan (r9 ADVICE): replacement keys
     // must be ⊆ keysDf. On contract-violating input the two apply modes
     // diverge SILENTLY — CoW's cdcMergePlan algebra duplicates an uncovered
     // key's rows (current group kept + replacement unioned), while a MOR
     // delta segment replaces the current group (any key in the segment wins
     // at read time). Fail loudly instead; the check rides the write action
-    // (no extra job) and the probe join reuses the same broadcast the apply
-    // itself makes of the touched-key set. A NULL-key replacement row gets
-    // the dedicated NULL error above, not a misleading "not in keysDf" (it
-    // can never probe-match even when keysDf holds the identical NULL tuple).
-    val covered = allKeys.withColumn("__covered", lit(true))
-    val coveredB = if (broadcastBatchKeys) broadcast(covered) else covered
-    val replacement0 = replacement.join(coveredB, keys.toSeq, "left_outer")
+    // (no extra job), and the probe's key set comes from the same single
+    // scan of the batch as the apply's. A NULL-key replacement row gets
+    // the dedicated NULL error above, not a misleading "not in keysDf". The
+    // probe matches NULL-safe like the apply: an `=` join would make
+    // Catalyst infer `isnotnull(key)` on this read of the batch only, and
+    // the plan would then scan and parse the batch twice.
+    val replacement0 = KeyedTable.joinOnKeys(replacement,
+        allKeys.withColumn("__covered", lit(true)), keys, broadcastBatchKeys, "left_outer")
       .withColumn("__kchk",
         when(anyNullKey, nullKeyError("replacement"))
         .when(col("__covered").isNotNull, lit(true)).otherwise(
@@ -781,8 +784,8 @@ final class KeyedTable(
       val repl = replacement0.select(cols.map(col).toIndexedSeq: _*)
         .withColumn(TombCol, lit(false))
       val sch = storedSchema.get
-      val tombs = allKeys.join(
-          replacement0.select(keys.map(col).toIndexedSeq: _*).distinct(), keys, "left_anti")
+      val tombs = KeyedTable.withoutKeys(allKeys,
+        replacement0.select(keys.map(col).toIndexedSeq: _*).distinct(), keys, broadcastKeys = false)
       val tombRows = sch.fields.filterNot(f => keys.contains(f.name))
         .foldLeft(tombs)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
         .select(cols.map(col).toIndexedSeq: _*)
@@ -1036,11 +1039,11 @@ final class KeyedTable(
     */
   def deleteKeys(keysDf: DataFrame): Long = {
     require(exists, s"KeyedTable at $root has no committed version")
-    val k = broadcast(keysDf.select(keys.map(col).toIndexedSeq: _*).distinct())
+    val k = keysDf.select(keys.map(col).toIndexedSeq: _*).distinct()
     if (!bucketed) {
       val next = currentVersion + 1
       reserveVersion(next)
-      current.join(k, keys, "left_anti")
+      KeyedTable.withoutKeys(current, k, keys, broadcastKeys = true)
         .write.mode("overwrite").parquet(s"$root/v=$next")
       commitVersion(next)
       next
@@ -1055,7 +1058,8 @@ final class KeyedTable(
       writeDeltaCommit(tombRows, None)
     } else {
       val touched = bucketsOf(k).get
-      commitBucketsRewrite(touched, readBuckets(touched).join(k, keys, "left_anti"))
+      commitBucketsRewrite(touched,
+        KeyedTable.withoutKeys(readBuckets(touched), k, keys, broadcastKeys = true))
     }
   }
 
@@ -1206,11 +1210,7 @@ object KeyedTable {
   def mergePlan(current: DataFrame, batch: DataFrame, keys: Seq[String],
                 broadcastBatchKeys: Boolean = true): DataFrame = {
     val cur = if (current.columns.contains(BucketCol)) current.drop(BucketCol) else current
-    val batchKeys = {
-      val k = batch.select(keys.map(col).toIndexedSeq: _*)
-      if (broadcastBatchKeys) broadcast(k) else k
-    }
-    cur.join(batchKeys, keys, "left_anti")
+    withoutKeys(cur, batch, keys, broadcastBatchKeys)
       .unionByName(batch.select(cur.columns.map(col).toIndexedSeq: _*))
   }
 
@@ -1223,8 +1223,40 @@ object KeyedTable {
   def cdcMergePlan(current: DataFrame, upserts: DataFrame, allKeys: DataFrame,
                    keys: Seq[String]): DataFrame = {
     val cur = if (current.columns.contains(BucketCol)) current.drop(BucketCol) else current
-    cur.join(broadcast(allKeys), keys, "left_anti")
+    withoutKeys(cur, allKeys, keys, broadcastKeys = true)
       .unionByName(upserts.select(cur.columns.map(col).toIndexedSeq: _*))
+  }
+
+  /** Rows of `df` whose key tuple does not appear in `keysDf` — the one
+    * anti-join behind every merge, delete and merge-on-read coalesce.
+    *
+    * Keys match NULL-safe (`<=>`), so a NULL key is an ordinary value here
+    * just as it is in the per-key windows ([[Ops.latestPerKey]], the MOR
+    * read's latest-segment window): re-merging a NULL-key row replaces it
+    * instead of appending a copy, and CoW and MOR agree on it. The choice
+    * also keeps the plan single-pass: a plain `=` makes Catalyst infer an
+    * `isnotnull(key)` filter on the key side only, so the batch's two reads
+    * (key side here, row side in the caller's union) differ and AQE cannot
+    * reuse one exchange for both — the batch source is scanned and parsed
+    * twice. With `<=>` the two reads stay identical and run once.
+    *
+    * The key side's columns are renamed, so a `keysDf` derived from `df`
+    * itself (a self-merge such as `q_merge_upsert`) stays unambiguous.
+    */
+  private[engine] def withoutKeys(df: DataFrame, keysDf: DataFrame, keys: Seq[String],
+                                  broadcastKeys: Boolean): DataFrame =
+    joinOnKeys(df, keysDf.select(keys.map(col).toIndexedSeq: _*), keys, broadcastKeys, "left_anti")
+
+  /** [[withoutKeys]]' NULL-safe key match for any join type: `keysDf`'s
+    * non-key columns pass through, its renamed key columns are dropped.
+    */
+  private[engine] def joinOnKeys(df: DataFrame, keysDf: DataFrame, keys: Seq[String],
+                                 broadcastKeys: Boolean, joinType: String): DataFrame = {
+    val renamed = keys.zipWithIndex.map { case (k, i) => k -> s"__key$i" }.toMap
+    val k = keysDf.select(keysDf.columns.toIndexedSeq.map(c => renamed.get(c).fold(col(c))(col(c).as(_))): _*)
+    df.join(if (broadcastKeys) broadcast(k) else k,
+      keys.map(c => col(c) <=> col(renamed(c))).reduce(_ && _), joinType)
+      .drop(renamed.values.toSeq: _*)
   }
 
   /** Schema-drift twin of [[mergePlan]] — the reference's `allowSchemaDrift:

@@ -75,14 +75,6 @@ object Ops {
   def flagInsertUpdate(df: DataFrame, lookupKey: String): DataFrame =
     df.withColumn(OpCol, when(col(lookupKey).isNull, lit("insert")).otherwise(lit("update")))
 
-  /** T4 — final projection (reference
-    * `dataflow/New_BookingTransformation.json:115-141`): keep only the
-    * source-side columns (plus our op flag), dropping the widened lookup
-    * columns. Catalyst prunes the dropped columns all the way to the scan.
-    */
-  def project(df: DataFrame, columns: Seq[String]): DataFrame =
-    df.select(columns.map(col).toIndexedSeq: _*)
-
   /** The shared in-plan CDC op validation — `opCol` must be I/U/D, anything
     * else fails the job (silently dropping unknown ops is how a sink
     * diverges from its source). One definition for every op-coded consumer

@@ -1383,10 +1383,10 @@ object Multimodal {
     // single-position template collisions dominating the stream cannot do.
     // Survivors are verified EXACTLY against per-video signature arrays
     // (n_matching recomputed over every sampled position), so the output
-    // is row-identical by construction (MultimodalSpec pins new ≡ old on a
-    // planted corpus; the oracle pins it end-to-end). Below 0.75 the
-    // pigeonhole does not hold (a single miss can kill the only pair) and
-    // the per-position path remains.
+    // is row-identical by construction (AviSpec pins it against a
+    // first-principles recount on a planted corpus; the oracle pins it
+    // end-to-end). Below 0.75 the pigeonhole does not hold (a single miss
+    // can kill the only pair) and the per-position path remains.
     if (minMatchFrac >= 0.75)
       return videoPairsPairBlocked(spark, h0, maxHamming, minMatchFrac, frameStride)
     // NO signature-class collapse here, by measurement (r18): the plain
@@ -1587,8 +1587,10 @@ object Multimodal {
     *      covers every full-resolution pair with m ≥ 2 (its witness pair
     *      sits at 2t+1 ≤ m−1 < tierMin, within both videos' key ranges);
     *   B. consecutive SAMPLED position pairs over LONG videos only — covers
-    *      both-long pairs (S_m ≥ 8 sampled positions by the tier bound, so
-    *      the pigeonhole holds with room);
+    *      both-long pairs (m ≥ tierMin gives S_m ≥ ⌊(tierMin−1)/stride⌋+1
+    *      sampled positions: 4 under the declared tierMin = 8 at stride 2,
+    *      8 under the default 8·stride; at minMatchFrac ≥ 0.75 the
+    *      pigeonhole needs only S_m ≥ 2);
     *   C. the position-0 fallback for m = 1 pairs (nf = 1 side).
     * Branches may overlap (a both-long pair can match at prefix AND sampled
     * pairs) — the verify runs after one distinct(), so overlap costs rows,
@@ -1679,11 +1681,11 @@ object Multimodal {
     // candidate branches only ever decide WHICH pairs get verified. At
     // minMatchFrac ≥ 0.75 the pigeonhole guarantees coverage per branch:
     // full-res pairs (m < tierMin) from consecutive PREFIX position pairs,
-    // both-long pairs (S_m ≥ 8) from consecutive SAMPLED position pairs,
-    // m = 1 pairs from the position-0 fallback. This replaces the
-    // class-collapse + tagged-mine machinery whose pair-group shuffle was
-    // the family's last big exchange (11.9 s vs the rewritten plain
-    // miner's 2.8 s at sf1).
+    // both-long pairs (S_m ≥ 4 at the declared tierMin = 8, stride 2) from
+    // consecutive SAMPLED position pairs, m = 1 pairs from the position-0
+    // fallback. This replaces the class-collapse + tagged-mine machinery
+    // whose pair-group shuffle was the family's last big exchange (11.9 s
+    // vs the rewritten plain miner's 2.8 s at sf1).
     if (minMatchFrac >= 0.75)
       return videoPairsTieredPairBlocked(spark, mineWidth(spark, hashes),
         maxHamming, minMatchFrac, frameStride, tierMin)
@@ -1701,7 +1703,8 @@ object Multimodal {
     //     pair only at strided blocks — which drops the prefix long×long
     //     candidates the single relation admits that the old long-branch
     //     never formed. Output is row-identical to the three-branch
-    //     composition (MultimodalSpec + the oracle pin both hold).
+    //     composition (AviSpec's first-principles recount and the oracle
+    //     pin both hold).
     val h0 = mineWidth(spark, hashes).localCheckpoint()
     // signature-class collapse first (videoClasses) — the tier machinery
     // then runs over representatives only; tiers are class-level (nf is a

@@ -39,21 +39,25 @@ object PlanLint {
     override def toString = s"LINT[$rule] $node — $detail"
   }
 
+  /** Every node of an executed plan, stage plans included. AQE hides stage
+    * plans from TreeNode traversal (QueryStageExec has no children;
+    * collect/collectWithSubqueries stop at every stage boundary), so this
+    * recurses into stages and nested adaptive plans explicitly. A reused
+    * stage appears once, as its `ReusedExchangeExec` leaf.
+    */
+  def flatten(p: SparkPlan): Seq[SparkPlan] =
+    p.collectWithSubqueries { case x => x }.flatMap {
+      case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        q +: flatten(q.plan)
+      case x => Seq(x)
+    }
+
   /** Lint an EXECUTED plan (AQE finalized, metrics populated). */
   def lint(plan: SparkPlan,
            defaultParallelism: Int,
            minStreamedRows: Long = 512,
            minComputeNodes: Int = 2): Seq[Finding] = {
-    // AQE hides stage plans from TreeNode traversal (QueryStageExec has no
-    // children; collect/collectWithSubqueries stop at every stage boundary),
-    // so recurse into stages and nested adaptive plans explicitly.
-    def flatten(p: SparkPlan): Seq[SparkPlan] =
-      p.collectWithSubqueries { case x => x }.flatMap {
-        case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          q +: flatten(q.plan)
-        case x => Seq(x)
-      }
     val nodes = flatten(plan)
     nodes.flatMap {
       case b: BroadcastNestedLoopJoinExec => lintBnl(b, defaultParallelism, minStreamedRows)

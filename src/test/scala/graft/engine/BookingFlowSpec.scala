@@ -1,7 +1,7 @@
 package graft.engine
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.{lit, to_timestamp}
+import org.apache.spark.sql.functions.{col, lit, to_timestamp}
 
 import java.nio.file.{Files, Paths}
 
@@ -136,6 +136,50 @@ class BookingFlowSpec extends SparkSpec {
     // Japan lost its only booking: the incremental path must match the full
     // recompute exactly — USA recomputed AND Japan's row deleted
     assert(incMoved == fullMoved, s"inc=$incMoved full=$fullMoved")
+  }
+
+  test("bookingTransform is split → align: no join, rows of the lookup → flag formulation") {
+    val base = tmpDir("transform")
+    val fact = KeyedTable(spark, s"$base/fact", Seq("booking_id"), Some("updated_at"))
+    def feed(name: String, lines: Seq[String]) = {
+      writeFile(s"$base/$name", "b.json", lines.mkString("\n"))
+      spark.read.schema(Schemas.bookingRaw).json(s"$base/$name")
+    }
+    fact.merge(BookingFlow.bookingTransform(feed("f1", Seq(
+      bookingJson("bk1", 1, "Confirmed", 10.0, "2025-07-14T09:30:00+00:00", "2025-07-14T09:30:01+00:00"),
+      bookingJson("bk2", 2, "Confirmed", 20.0, "2025-07-14T09:31:00+00:00", "2025-07-14T09:31:01+00:00"),
+    )), fact)._1)
+    // updates of bk1/bk2 (bk2 twice), an insert, a checkout<checkin reject
+    // and a key-less line
+    val raw = feed("f2", Seq(
+      bookingJson("bk1", 1, "Cancelled", 10.0, "2025-07-14T09:30:00+00:00", "2025-07-20T00:00:00+00:00"),
+      bookingJson("bk2", 2, "Confirmed", 25.0, "2025-07-14T09:31:00+00:00", "2025-07-20T00:00:00+00:00"),
+      bookingJson("bk2", 2, "Cancelled", 25.0, "2025-07-14T09:31:00+00:00", "2025-07-21T00:00:00+00:00"),
+      bookingJson("bk3", 3, "Confirmed", 30.0, "2025-07-15T09:30:00+00:00", "2025-07-15T09:30:01+00:00"),
+      bookingJson("bad", 1, "Confirmed", 1.0, "2025-07-16T09:30:00+00:00", "2025-07-16T09:30:02+00:00",
+        checkin = "2025-08-14", checkout = "2025-08-11"),
+      """{"id":"x","customer_id":"1","status":"Confirmed","updated_at":"2025-07-16T09:30:02+00:00"}""",
+    ))
+    val (aligned, bad) = BookingFlow.bookingTransform(raw, fact)
+    assert(aligned.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.isEmpty, aligned.queryExecution.optimizedPlan.toString)
+
+    // the reference dataflow's T1→T5: lookup the latest fact row, flag
+    // insert/update, project (T4), align (the flag is dropped by alignment)
+    val (oldBad, ok) = Ops.split(raw,
+      (col("checkout_date") < col("checkin_date")) || col("booking_id").isNull)
+    val looked = Ops.lookupLatest(ok, fact.current.select("booking_id", "updated_at"),
+      "booking_id", "updated_at")
+    val flagged = Ops.flagInsertUpdate(looked, "lookup_booking_id")
+    val oldAligned = Align.alignTo(
+      flagged.select((raw.columns.toSeq :+ Ops.OpCol).map(col): _*), Schemas.bookingFact)
+    assert(flagged.filter(col(Ops.OpCol) === "update").count() == 3) // a real mix
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(aligned) == rows(oldAligned))
+    assert(rows(bad) == rows(oldBad))
+    assert(bad.count() == 2)
+    assert(aligned.count() == 4)
   }
 
   test("streaming shell: AvailableNow + foreachBatch merge matches batch mode") {

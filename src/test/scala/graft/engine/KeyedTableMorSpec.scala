@@ -74,6 +74,30 @@ class KeyedTableMorSpec extends SparkSpec {
     assert(morT.deltaMap.nonEmpty)
   }
 
+  test("NULL keys: MOR ≡ CoW through re-merge, update and deleteKeys") {
+    // the MOR read-time window groups NULL keys; the base anti-join must
+    // match them too, or a NULL-key update reads as two rows on MOR only
+    val s = spark
+    import s.implicits._
+    def rows(ks: Seq[Option[Long]], tag: String, v: Long) =
+      ks.map(k => (k, tag, v)).toDF("k", "name", "v")
+    val morT = KeyedTable(spark, tmpDir("mor-null-m"), Seq("k"),
+      orderCol = Some("v"), numBuckets = 4, mor = true)
+    val cowT = KeyedTable(spark, tmpDir("mor-null-c"), Seq("k"),
+      orderCol = Some("v"), numBuckets = 4)
+    def both(f: KeyedTable => Unit, hint: String): Unit = {
+      f(morT); f(cowT); assertSame(morT, cowT, hint)
+    }
+    both(_.overwrite(rows(Seq(Some(1L), Some(2L), None), "base", 1L)), "bootstrap")
+    both(_.merge(rows(Seq(None, Some(3L)), "upd", 2L)), "NULL-key upsert")
+    both(_.merge(rows(Seq(None, Some(3L)), "upd", 2L)), "NULL-key re-merge")
+    assert(morT.current.filter(col("k").isNull).collect().map(_.getString(1)).toSeq == Seq("upd"))
+    both(_.deleteKeys(Seq(Option.empty[Long]).toDF("k")), "deleteKeys of the NULL key")
+    assert(morT.current.filter(col("k").isNull).count() == 0)
+    both(t => if (t.effectiveMor) t.compactDeltas(maxDeltas = 1), "post-compaction")
+    assert(cowT.current.count() == 3)
+  }
+
   test("write amplification is ∝ the batch, never the table") {
     val s = spark
     import s.implicits._
@@ -249,9 +273,9 @@ class KeyedTableMorSpec extends SparkSpec {
   test("replaceKeys rejects NULL key values with a DEDICATED error — on BOTH modes") {
     // r10 ADVICE: a NULL key tuple present in BOTH keysDf and replacement
     // used to trip the covered-keys probe (null-intolerant equality never
-    // matches) with a misleading "not in keysDf" message. NULL keys are
-    // genuinely unaddressable by the anti-join algebra (CoW would duplicate
-    // where MOR replaces), so the rejection is correct — but it must say so.
+    // matches) with a misleading "not in keysDf" message. The merge
+    // anti-joins match NULL keys null-safe, but a group replace rejects
+    // them as bad input — and the rejection must say so.
     val s = spark
     import s.implicits._
     for (mor <- Seq(true, false)) {

@@ -70,6 +70,25 @@ class KeyedTableSpec extends SparkSpec {
     assert(t.current.count() == 1)
   }
 
+  test("NULL key is an ordinary key: re-merge is idempotent, deleteKeys removes it") {
+    val s = spark
+    import s.implicits._
+    for (buckets <- Seq(0, 4)) {
+      val t = KeyedTable(spark, tmpDir(s"kt-null-$buckets"), Seq("id"),
+        orderCol = Some("ver"), numBuckets = buckets)
+      def rows = t.current.collect().map(r => (Option(r.getString(0)), r.getString(2))).toSet
+      val batch = Seq((Option("a"), 1, "A1"), (Option.empty[String], 1, "N1"))
+        .toDF("id", "ver", "payload")
+      t.merge(batch)
+      t.merge(batch)
+      assert(t.current.count() == 2, s"buckets=$buckets: re-merge appended a NULL-key copy")
+      t.merge(Seq((Option.empty[String], 2, "N2")).toDF("id", "ver", "payload"))
+      assert(rows == Set((Some("a"), "A1"), (None, "N2")), s"buckets=$buckets")
+      t.deleteKeys(Seq(Option.empty[String]).toDF("id"))
+      assert(rows == Set((Some("a"), "A1")), s"buckets=$buckets")
+    }
+  }
+
   test("property: random batches — bucketed == unbucketed, idempotent, no deletes") {
     val s = spark
     import s.implicits._
