@@ -120,7 +120,6 @@ final class KeyedTable(
     val keys: Seq[String],
     val orderCol: Option[String] = None,
     val numBuckets: Int = 0,
-    val broadcastBatchKeys: Boolean = true,
     val commitProtocol: KeyedTable.CommitProtocol = KeyedTable.RenameCommit,
     val rangeCol: Option[String] = None,
     val statsCols: Seq[String] = Nil,
@@ -317,9 +316,19 @@ final class KeyedTable(
     if (!bucketed) {
       val hasData = fs.listStatus(new Path(s"$root/v=$v"))
         .exists(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      if (hasData) KeyedTable.cachedRead(spark, Seq(s"$root/v=$v")) else emptyTyped
-    } else resolve(manifest, if (morActive) deltaMap else Map.empty)
+      if (hasData) readPlan(root, v, Seq(s"$root/v=$v")) else emptyTyped
+    } else resolve(root, v, manifest, if (morActive) deltaMap else Map.empty)
   }
+
+  /** The parquet read plan over committed version dirs, memoized per
+    * session in [[SessionPlanCache]]: `source` is the table root and the
+    * token is `v`, the version being resolved, so a commit drops the
+    * superseded version's plans at the next read. Time-travel reads of an
+    * older version use their own source, so a snapshot diff (old version
+    * against current) keeps both sides cached.
+    */
+  private def readPlan(source: String, v: Long, paths: Seq[String]): DataFrame =
+    SessionPlanCache.getOrElseUpdate(spark, source, v, paths)(spark.read.parquet(paths: _*))
 
   /** The bucketed read, base + delta coalesce. `m` maps buckets to their
     * BASE version, `dm` to their uncompacted delta chains. With no deltas
@@ -331,17 +340,17 @@ final class KeyedTable(
     * per-key window to pick each key's latest segment, whose non-tombstone
     * rows are the key's entire current group (zero rows = key deleted).
     */
-  private def resolve(m: Map[Int, Long], dm: Map[Int, Seq[Long]]): DataFrame = {
+  private def resolve(source: String, v: Long, m: Map[Int, Long], dm: Map[Int, Seq[Long]]): DataFrame = {
     val basePaths = m.toSeq.map { case (b, ver) => s"$root/v=$ver/$BucketCol=$b" }
-    val base = if (basePaths.isEmpty) emptyTyped else KeyedTable.cachedRead(spark, basePaths)
+    val base = if (basePaths.isEmpty) emptyTyped else readPlan(source, v, basePaths)
     if (dm.isEmpty) return base
     // one scan leg per delta VERSION (buckets of a version read together),
     // tagged with its version so per-key latest-wins is decidable
     val byVer = dm.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) }
       .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq.sortBy(_._1)
-    val deltas = byVer.map { case (v, bs) =>
-      KeyedTable.cachedRead(spark, bs.map(b => s"$root/v=$v/$BucketCol=$b"))
-        .withColumn(DeltaVerCol, lit(v))
+    val deltas = byVer.map { case (dv, bs) =>
+      readPlan(source, v, bs.map(b => s"$root/v=$dv/$BucketCol=$b"))
+        .withColumn(DeltaVerCol, lit(dv))
     }.reduce(_.unionByName(_))
     val cols = base.columns.toSeq
     val w = org.apache.spark.sql.expressions.Window
@@ -351,14 +360,9 @@ final class KeyedTable(
       .filter(col(DeltaVerCol) === col("__maxv") && !col(TombCol))
       .select(cols.map(col).toIndexedSeq: _*)
     val deltaKeys = deltas.select(keys.map(col).toIndexedSeq: _*).distinct()
-    // Honor the table's broadcastBatchKeys escape hatch on the READ side
-    // too (r9 ADVICE): between compactions the delta key set is up to
-    // maxDeltas batches' worth of keys per bucket, so a table configured
-    // for large epochs must not be forced into a driver broadcast on every
-    // read — plain left_anti lets AQE pick the join (same rule the
-    // write-side mergePlan applies).
-    //
-    // ADAPTIVE guard on top of the manual hatch (r10 verdict #5): the
+    // Between compactions the delta key set is up to maxDeltas batches'
+    // worth of keys per bucket, so the read must not force a driver
+    // broadcast of it unconditionally. ADAPTIVE guard (r10 verdict #5): the
     // forced broadcast is derived from the delta segments' ON-DISK bytes —
     // a control-plane file listing, no extra Spark job — against the
     // session's autoBroadcastJoinThreshold. A long-uncompacted table (delta
@@ -381,14 +385,14 @@ final class KeyedTable(
       val cached = deltaBytesCache
       if (cached != null && cached._1 == dm) cached._2
       else {
-        val b = byVer.iterator.flatMap { case (v, bs) =>
-          bs.iterator.map(b => fs.getContentSummary(new Path(s"$root/v=$v/$BucketCol=$b")).getLength)
+        val b = byVer.iterator.flatMap { case (dv, bs) =>
+          bs.iterator.map(b => fs.getContentSummary(new Path(s"$root/v=$dv/$BucketCol=$b")).getLength)
         }.sum
         deltaBytesCache = (dm, b)
         b
       }
     }
-    val bcast = broadcastBatchKeys && threshold > 0 && deltaBytes <= threshold
+    val bcast = threshold > 0 && deltaBytes <= threshold
     KeyedTable.withoutKeys(base, deltaKeys, keys, bcast).unionByName(survivors)
   }
 
@@ -424,7 +428,7 @@ final class KeyedTable(
           s"$root: version $v manifest is gone — vacuumed while referenced?")
       // the deltas sidecar lives and dies with its manifest (vacuum deletes
       // both), so manifest-present + sidecar-absent is simply "no deltas"
-      resolve(readManifest(fs, mp),
+      resolve(if (v == currentVersion) root else s"$root#pinned", v, readManifest(fs, mp),
         if (effectiveMor) deltaMapAt(v) else Map.empty)
     }
   }
@@ -434,7 +438,7 @@ final class KeyedTable(
     */
   def readBuckets(buckets: Seq[Int]): DataFrame = {
     val keep = buckets.toSet
-    resolve(manifest.view.filterKeys(keep).toMap,
+    resolve(root, currentVersion, manifest.view.filterKeys(keep).toMap,
       if (morActive) deltaMap.view.filterKeys(keep).toMap else Map.empty)
   }
 
@@ -645,7 +649,7 @@ final class KeyedTable(
     if (!bucketed) {
       val next = currentVersion + 1
       reserveVersion(next)
-      KeyedTable.mergePlan(current, latest, keys, broadcastBatchKeys)
+      KeyedTable.mergePlan(current, latest, keys)
         .write.mode("overwrite").parquet(s"$root/v=$next")
       commitVersion(next)
       next
@@ -757,7 +761,7 @@ final class KeyedTable(
     // Catalyst infer `isnotnull(key)` on this read of the batch only, and
     // the plan would then scan and parse the batch twice.
     val replacement0 = KeyedTable.joinOnKeys(replacement,
-        allKeys.withColumn("__covered", lit(true)), keys, broadcastBatchKeys, "left_outer")
+        allKeys.withColumn("__covered", lit(true)), keys, broadcastKeys = true, "left_outer")
       .withColumn("__kchk",
         when(anyNullKey, nullKeyError("replacement"))
         .when(col("__covered").isNotNull, lit(true)).otherwise(
@@ -904,7 +908,7 @@ final class KeyedTable(
       val curWide = newCols.foldLeft(
         if (cur.columns.contains(BucketCol)) cur.drop(BucketCol) else cur)(
         (d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-      overwrite(KeyedTable.mergePlan(curWide, latest, keys, broadcastBatchKeys))
+      overwrite(KeyedTable.mergePlan(curWide, latest, keys))
     }
   }
 
@@ -1074,7 +1078,7 @@ final class KeyedTable(
     // Touched buckets: a driver-side collect of ≤ numBuckets ints.
     val touched = bucketsOf(latest).get
     val curTouched = readBuckets(touched)
-    commitBucketsRewrite(touched, KeyedTable.mergePlan(curTouched, latest, keys, broadcastBatchKeys))
+    commitBucketsRewrite(touched, KeyedTable.mergePlan(curTouched, latest, keys))
   }
 
   /** The table's data columns in stored-schema order — every delta segment
@@ -1149,43 +1153,6 @@ final class KeyedTable(
 }
 
 object KeyedTable {
-  // Version-dir parquet READ-PLAN cache (r18): committed version directories
-  // are IMMUTABLE (every write commits a NEW v=<n>/ dir; compaction and
-  // overwrite bump the version; vacuum only deletes, and a vacuumed plan
-  // fails loudly at its next action exactly as a pre-resolved DataFrame
-  // does — the spec-pinned race contract is unchanged because every
-  // existence/manifest check still runs BEFORE the cache lookup). So the
-  // `spark.read.parquet(paths)` relation for a given path set can be built
-  // once per session: constructing it costs ~90 ms (footer/schema read +
-  // file listing + analysis, measured by examples/KtLoadProbe), and the
-  // maintained-state queries re-resolved it on every run. Keyed by the
-  // exact path seq; a new version, compaction, or delta chain changes the
-  // paths and misses. The cached object is a lazy plan — every action still
-  // scans the parquet files. Session mechanics mirror queries.Td's plan
-  // caches (sid string + stopped-context sweep; a WeakHashMap alone would
-  // leak, since cached plans strongly reference their session).
-  private val readSessionIds =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, String]()
-  private val readPlanCache = new java.util.concurrent.ConcurrentHashMap[
-    String, scala.collection.concurrent.TrieMap[Seq[String], org.apache.spark.sql.DataFrame]]()
-  private def readSessionId(s: org.apache.spark.sql.SparkSession): String =
-    readSessionIds.synchronized {
-      var id = readSessionIds.get(s)
-      if (id == null) {
-        id = java.util.UUID.randomUUID().toString
-        readSessionIds.put(s, id)
-        readPlanCache.entrySet.removeIf(e => e.getValue.values.headOption
-          .exists(_.sparkSession.sparkContext.isStopped))
-      }
-      id
-    }
-  private[engine] def cachedRead(spark: org.apache.spark.sql.SparkSession,
-                                 paths: Seq[String]): org.apache.spark.sql.DataFrame =
-    readPlanCache
-      .computeIfAbsent(readSessionId(spark),
-        _ => scala.collection.concurrent.TrieMap.empty[Seq[String], org.apache.spark.sql.DataFrame])
-      .getOrElseUpdate(paths, spark.read.parquet(paths: _*))
-
   val CurrentMarker = "_CURRENT"
   val BucketsMarker = "_BUCKETS"
   val SchemaMarker = "_SCHEMA"
@@ -1207,10 +1174,9 @@ object KeyedTable {
     * never delete — the reference's sink contract (`dataflow:169-172`).
     * `batch` must already be deduped to one row per key.
     */
-  def mergePlan(current: DataFrame, batch: DataFrame, keys: Seq[String],
-                broadcastBatchKeys: Boolean = true): DataFrame = {
+  def mergePlan(current: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame = {
     val cur = if (current.columns.contains(BucketCol)) current.drop(BucketCol) else current
-    withoutKeys(cur, batch, keys, broadcastBatchKeys)
+    withoutKeys(cur, batch, keys, broadcastKeys = true)
       .unionByName(batch.select(cur.columns.map(col).toIndexedSeq: _*))
   }
 
@@ -1267,8 +1233,7 @@ object KeyedTable {
     * rows, and a same-name column with a different type is rejected loudly —
     * silent coercion is how drift corrupts a warehouse.
     */
-  def mergePlanEvolving(current: DataFrame, batch: DataFrame, keys: Seq[String],
-                        broadcastBatchKeys: Boolean = true): DataFrame = {
+  def mergePlanEvolving(current: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame = {
     val cur = if (current.columns.contains(BucketCol)) current.drop(BucketCol) else current
     requireAdditive(cur, batch, keys)
     val newCols = batch.schema.fields.filterNot(f => cur.columns.contains(f.name))
@@ -1277,7 +1242,7 @@ object KeyedTable {
       d.withColumn(f.name, lit(null).cast(f.dataType)))
     val batchWide = missing.foldLeft(batch)((d, f) =>
       d.withColumn(f.name, lit(null).cast(f.dataType)))
-    mergePlan(curWide, batchWide, keys, broadcastBatchKeys)
+    mergePlan(curWide, batchWide, keys)
   }
 
   private[engine] def requireAdditive(cur: DataFrame, batch: DataFrame, keys: Seq[String]): Unit = {

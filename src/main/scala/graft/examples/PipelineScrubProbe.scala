@@ -34,7 +34,6 @@ object PipelineScrubProbe {
       .filter(col("__rn") === 1).drop("__fp", "__rn")
     println(f"DOCS n=${docs.count()} dd=${t2(dd.count())}%.2f s")
     // the substring miner's internals, inlined at its k=16
-    val wins = docs.sparkSession.emptyDataFrame // placeholder to keep scope clean
     val winsDf = dd.select(col("doc_id").cast("long").as("doc_id"),
         posexplode(graft.functions.Kernels.window_fps(TextOps.tokens(col("text")), 16))
           .as(Seq("__p", "wfp")))

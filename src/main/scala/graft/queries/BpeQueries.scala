@@ -18,15 +18,12 @@ object BpeQueries {
 
   private val NMerges = 8
 
-  /** Training is deterministic per (corpus dir, nMerges) — memoize so the
-    * three BPE queries (and bench re-runs) train once per JVM instead of
-    * re-running the 8 argmax jobs each.
+  /** Training is deterministic per (corpus, nMerges) — memoize so the
+    * three BPE queries (and bench re-runs) train once per session and
+    * corpus version instead of re-running the 8 argmax jobs each.
     */
-  private val mergeCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Bpe.Merge]]
-
-  private def trainedMerges(s: org.apache.spark.sql.SparkSession, d: String): Seq[Bpe.Merge] =
-    mergeCache.getOrElseUpdate(s"$d#$NMerges",
+  private[queries] def trainedMerges(s: org.apache.spark.sql.SparkSession, d: String): Seq[Bpe.Merge] =
+    Td.derived(s, d, "documents", ("bpeMerges", NMerges))(
       Bpe.train(Td.documents(s, d), col("text"), NMerges))
 
   /** Word table CTE (w0): the same tokenizer fragment every text oracle
@@ -74,14 +71,12 @@ object BpeQueries {
   private val UniSeed = 2048    // seed vocabulary size (plus all singles)
   private val UniMinCount = 2L  // prune threshold after E-step 1
 
-  /** Training is deterministic per corpus dir — memoize like
-    * [[trainedMerges]] so the two unigram queries train once per JVM.
+  /** Training is deterministic per corpus — memoize like
+    * [[trainedMerges]] so the two unigram queries train once per session.
     */
-  private val uniCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, Long, Long)]]
   private def trainedUnigram(s: org.apache.spark.sql.SparkSession,
                              d: String): Seq[(String, Long, Long)] =
-    uniCache.getOrElseUpdate(s"$d#$UniL#$UniSeed#$UniMinCount",
+    Td.derived(s, d, "documents", ("unigram", UniL, UniSeed, UniMinCount))(
       Bpe.trainUnigram(Td.documents(s, d), col("text"), UniL, UniSeed, UniMinCount))
 
   /** M-step cost fragment over a count expression — the ONE arithmetic
