@@ -18,8 +18,10 @@ import org.apache.spark.sql.streaming.Trigger
   *  - [[loadBookingFactBatch]] / [[loadBookingFactStream]] ≙
   *    `New_LoadBookingFact`: incremental feed → transform → merge → refresh
   *    the aggregate table (§2.4 + K5).
-  *  - [[runAll]] ≙ `New_FinalAirBnBPipeline`: dim load then fact load,
-  *    sequential with failure short-circuit.
+  *  - [[runAll]] ≙ `New_FinalAirBnBPipeline`: the fact load gated on the
+  *    dim load's `Succeeded`, with failure short-circuit. The gate holds
+  *    for the fact load's effects (publish, feed watermark, aggregate);
+  *    its work (feed read → transform → staged merge) overlaps the dim load.
   */
 object BookingFlow {
   import Orchestrator._
@@ -64,13 +66,23 @@ object BookingFlow {
     */
   def loadBookingFactBatch(spark: SparkSession, feed: ChangeFeed,
                            fact: KeyedTable, dim: KeyedTable,
-                           aggTable: KeyedTable): Unit = {
+                           aggTable: KeyedTable): Unit =
+    applyFactBatch(prepareFactBatch(feed, fact), fact, dim, aggTable)
+
+  /** The fact load's work, none of it visible: new feed files → transform
+    * → the fact's next version, staged, with the feed watermark commit that
+    * must follow its publish. None when no new feed file landed.
+    */
+  private def prepareFactBatch(feed: ChangeFeed, fact: KeyedTable): Option[(KeyedTable.Staged, () => Unit)] = {
     val (raw, files, commit) = feed.readNew()
-    if (files.nonEmpty) {
-      val (aligned, _) = bookingTransform(raw, fact)
-      fact.merge(aligned)
-      commit()
-    }
+    if (files.isEmpty) None
+    else Some((fact.stageMerge(bookingTransform(raw, fact)._1), commit))
+  }
+
+  /** The fact load's effects, in order: publish, feed watermark, aggregate. */
+  private def applyFactBatch(prepared: Option[(KeyedTable.Staged, () => Unit)], fact: KeyedTable,
+                             dim: KeyedTable, aggTable: KeyedTable): Unit = {
+    prepared.foreach { case (version, commit) => version.publish(); commit() }
     refreshAggregate(fact, dim, aggTable)
   }
 
@@ -101,12 +113,24 @@ object BookingFlow {
     if (fact.exists && dim.exists)
       aggTable.overwrite(Aggregations.bookingAggregation(fact.current, dim.current))
 
-  /** O1 — the master pipeline, sequential, failure short-circuits. */
+  /** O1 — the master pipeline: LoadBookingFact gated on LoadCustomerDim,
+    * failure short-circuits. The fact load's work does not read the dim,
+    * so it starts with the pipeline on a thread of its own and ends in a
+    * staged, invisible version while the dim loads on the caller's thread.
+    * The gate holds for every effect: only once the dim load succeeded
+    * does LoadBookingFact publish the version, commit the feed watermark
+    * and refresh the aggregate. If the dim load fails, nothing is
+    * published and the next run re-stages the same feed files.
+    */
   def runAll(spark: SparkSession, rawDir: String, archiveDir: String,
              feed: ChangeFeed, dim: KeyedTable, fact: KeyedTable,
-             aggTable: KeyedTable): Seq[StepResult] =
-    runPipeline("FinalAirBnBPipeline", Seq(
+             aggTable: KeyedTable): Seq[StepResult] = {
+    val prepared = prepare(spark)(prepareFactBatch(feed, fact))
+    try runPipeline("FinalAirBnBPipeline", Seq(
       Step("LoadCustomerDim")(() => { loadCustomerDim(spark, rawDir, archiveDir, dim); () }),
-      Step("LoadBookingFact")(() => loadBookingFactBatch(spark, feed, fact, dim, aggTable)),
+      Step("LoadBookingFact", startedMs = Some(prepared.submittedMs))(() =>
+        applyFactBatch(prepared.get(), fact, dim, aggTable)),
     ))
+    finally prepared.await() // no write of this run outlives it
+  }
 }

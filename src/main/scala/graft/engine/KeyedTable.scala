@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import java.nio.charset.StandardCharsets
 
@@ -160,6 +161,31 @@ final class KeyedTable(
   private def reserveVersion(next: Long): Unit = {
     commitProtocol.reserve(fs, new Path(root, CurrentMarker), next - 1, next, writerToken)
     fs.delete(new Path(root, s"${TagPrefix}v$next"), false)
+    // likewise the sidecars a version writes only when it has content (a
+    // delta chain, bucket stats): v=next must not inherit those of an
+    // abandoned stage or a crashed commit
+    fs.delete(new Path(root, s"${DeltasPrefix}v$next"), false)
+    fs.delete(new Path(root, s"$StatsDir/v=$next"), true)
+  }
+
+  /** The handle of version `next`, written and reserved but not yet
+    * visible. Its publish is the pointer swap; for an unbucketed version
+    * (`written` = the schema of the DataFrame written) it then seeds the
+    * session's read plan of the new version, so the first read after a
+    * commit does not run a schema-inference job. The seed waits for the
+    * publish: a stage that is never published must not evict the plans of
+    * the version readers still see.
+    */
+  private def staged(next: Long, written: Option[StructType]): Staged =
+    new Staged(next, () => {
+      commitVersion(next)
+      written.foreach(schema => readPlan(root, next, Seq(s"$root/v=$next"), Some(schema)))
+    })
+
+  /** Write `df` as unbucketed version `next`, reserved by the caller. */
+  private def writeVersion(df: DataFrame, next: Long): Staged = {
+    df.write.mode("overwrite").parquet(s"$root/v=$next")
+    staged(next, Some(df.schema))
   }
 
   def exists: Boolean = currentVersion > 0
@@ -323,12 +349,20 @@ final class KeyedTable(
   /** The parquet read plan over committed version dirs, memoized per
     * session in [[SessionPlanCache]]: `source` is the table root and the
     * token is `v`, the version being resolved, so a commit drops the
-    * superseded version's plans at the next read. Time-travel reads of an
-    * older version use their own source, so a snapshot diff (old version
-    * against current) keeps both sides cached.
+    * superseded version's plans. Time-travel reads of an older version use
+    * their own source, so a snapshot diff (old version against current)
+    * keeps both sides cached.
+    *
+    * An unbucketed commit seeds its version's plan at publish, with the
+    * schema it wrote, so only a session that did not write the version
+    * infers its schema here. Bucketed and merge-on-read reads still infer
+    * on their first read of a version: their path sets come from the
+    * manifest and the delta chain, not from the write.
     */
-  private def readPlan(source: String, v: Long, paths: Seq[String]): DataFrame =
-    SessionPlanCache.getOrElseUpdate(spark, source, v, paths)(spark.read.parquet(paths: _*))
+  private def readPlan(source: String, v: Long, paths: Seq[String],
+                       schema: Option[StructType] = None): DataFrame =
+    SessionPlanCache.getOrElseUpdate(spark, source, v, paths)(
+      schema.fold(spark.read)(spark.read.schema).parquet(paths: _*))
 
   /** The bucketed read, base + delta coalesce. `m` maps buckets to their
     * BASE version, `dm` to their uncompacted delta chains. With no deltas
@@ -415,12 +449,16 @@ final class KeyedTable(
     * that the race is always an ERROR, not wrong data.
     */
   def atVersion(v: Long): DataFrame = {
-    require(v > 0 && v <= currentVersion, s"version $v out of range 1..$currentVersion")
+    val cur = currentVersion
+    require(v > 0 && v <= cur, s"version $v out of range 1..$cur")
+    val source = if (v == cur) root else s"$root#pinned"
     if (!bucketed) {
+      // checked before the cached plan is returned: a plan resolved before
+      // the drop would otherwise hide the vacuum until its next action
       if (!fs.exists(new Path(root, s"v=$v")))
         throw new IllegalStateException(
           s"$root: version $v directory is gone — vacuumed while referenced?")
-      spark.read.parquet(s"$root/v=$v")
+      readPlan(source, v, Seq(s"$root/v=$v"))
     } else {
       val mp = new Path(root, s"${ManifestPrefix}v$v")
       if (!fs.exists(mp))
@@ -428,7 +466,7 @@ final class KeyedTable(
           s"$root: version $v manifest is gone — vacuumed while referenced?")
       // the deltas sidecar lives and dies with its manifest (vacuum deletes
       // both), so manifest-present + sidecar-absent is simply "no deltas"
-      resolve(if (v == currentVersion) root else s"$root#pinned", v, readManifest(fs, mp),
+      resolve(source, v, readManifest(fs, mp),
         if (effectiveMor) deltaMapAt(v) else Map.empty)
     }
   }
@@ -445,13 +483,21 @@ final class KeyedTable(
   /** Truncate-and-reload (K5): write a fresh snapshot ignoring history.
     * Refuses to bootstrap (version 1) over a directory that already holds
     * version dirs without a `_CURRENT` pointer — that state means a commit
-    * crashed mid-swap, and re-bootstrapping would clobber live data.
+    * crashed mid-swap, and re-bootstrapping would clobber live data. A lone
+    * `v=1` is the exception: a swap's crash window always leaves v=N+1
+    * beside v=N, so a lone v=1 without a pointer is a bootstrap that was
+    * never published (crashed, or staged and abandoned) and is rewritten.
     */
-  def overwrite(df: DataFrame): Long = {
+  def overwrite(df: DataFrame): Long = stageOverwrite(df).publish()
+
+  private def stageOverwrite(df: DataFrame): Staged = {
     val next = currentVersion + 1
     if (!exists) {
       val staleVersions = fs.exists(new Path(root)) &&
-        fs.listStatus(new Path(root)).exists(_.getPath.getName.startsWith("v="))
+        fs.listStatus(new Path(root)).exists { st =>
+          val n = st.getPath.getName
+          n.startsWith("v=") && n != "v=1"
+        }
       if (staleVersions) throw new IllegalStateException(
         s"$root holds version dirs but no ${CurrentMarker} — crash mid-commit? restore the pointer manually")
       if (mor) {
@@ -474,15 +520,13 @@ final class KeyedTable(
     }
     reserveVersion(next)
     writeText(fs, new Path(root, SchemaMarker), df.schema.json)
-    if (!bucketed) {
-      df.write.mode("overwrite").parquet(s"$root/v=$next")
-    } else {
+    if (!bucketed) writeVersion(df, next)
+    else {
       writeBucketed(df, next)
       val present = listBuckets(fs, new Path(s"$root/v=$next"))
       writeManifest(fs, new Path(root, s"${ManifestPrefix}v$next"), present.map(_ -> next).toMap)
+      staged(next, None)
     }
-    commitVersion(next)
-    next
   }
 
   /** Shared bucketed-version writer: route to buckets; range tables also
@@ -635,25 +679,35 @@ final class KeyedTable(
     * one batch applies only the newest — this also makes merge idempotent.
     * Bucketed tables rewrite only the buckets the batch's keys hash into.
     */
-  def merge(batch: DataFrame): Long = mergeCollapsed(collapseLatest(batch))
+  def merge(batch: DataFrame): Long = stageMerge(batch).publish()
 
-  /** [[merge]] after the per-key collapse — the shared tail [[mergeEvolving]]
-    * re-enters so an already-collapsed batch doesn't pay a second window
-    * pass.
+  /** [[merge]] up to, not including, its pointer swap: reserves version
+    * N+1 and writes its data (bucketed tables: also its manifest and
+    * sidecars), then returns the handle whose `publish()` makes it current.
+    * Until then readers and [[currentVersion]] stay at N. An unpublished
+    * stage is the crash-before-publish state the commit protocol already
+    * tolerates: the next commit re-reserves and overwrites v=N+1 (under
+    * [[ConditionalPutCommit]] only this instance can, its claim being
+    * idempotent for it). `publish()` throws
+    * `ConcurrentModificationException` if another writer moved the pointer
+    * meanwhile.
     */
-  private def mergeCollapsed(latest: DataFrame): Long = {
-    if (!exists) return overwrite(latest)
+  def stageMerge(batch: DataFrame): Staged = stageCollapsed(collapseLatest(batch))
+
+  /** [[stageMerge]] after the per-key collapse — the shared tail
+    * [[mergeEvolving]] re-enters so an already-collapsed batch doesn't pay
+    * a second window pass.
+    */
+  private def stageCollapsed(latest: DataFrame): Staged = {
+    if (!exists) return stageOverwrite(latest)
     // legacy tables (created before _SCHEMA existed): backfill from the
     // readable current snapshot so empty-bucket reads stay typed
     if (storedSchema.isEmpty) writeText(fs, new Path(root, SchemaMarker), current.schema.json)
     if (!bucketed) {
       val next = currentVersion + 1
       reserveVersion(next)
-      KeyedTable.mergePlan(current, latest, keys)
-        .write.mode("overwrite").parquet(s"$root/v=$next")
-      commitVersion(next)
-      next
-    } else mergeBucketed(latest)
+      writeVersion(KeyedTable.mergePlan(current, latest, keys), next)
+    } else stageBucketed(latest)
   }
 
   /** Op-coded CDC merge: the batch carries an op column (`I`/`U`/`D`) and a
@@ -774,11 +828,8 @@ final class KeyedTable(
     if (!bucketed) {
       val next = currentVersion + 1
       reserveVersion(next)
-      KeyedTable.cdcMergePlan(current, replacement0, allKeys, keys)
-        .write.mode("overwrite").parquet(s"$root/v=$next")
       tag.foreach(t => writeText(fs, new Path(root, s"${TagPrefix}v$next"), t))
-      commitVersion(next)
-      next
+      writeVersion(KeyedTable.cdcMergePlan(current, replacement0, allKeys, keys), next).publish()
     } else if (morActive) {
       // MOR group replace: the delta segment carries the replacement rows
       // plus an explicit tombstone for every touched key with NO
@@ -794,12 +845,12 @@ final class KeyedTable(
         .foldLeft(tombs)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
         .select(cols.map(col).toIndexedSeq: _*)
         .withColumn(TombCol, lit(true))
-      writeDeltaCommit(repl.unionByName(tombRows), tag)
+      stageDelta(repl.unionByName(tombRows), tag).publish()
     } else {
       val touched = bucketsOf(allKeys).get
-      commitBucketsRewrite(touched,
+      stageBucketsRewrite(touched,
         KeyedTable.cdcMergePlan(readBuckets(touched), replacement0, allKeys, keys),
-        tag)
+        tag).publish()
     }
   }
 
@@ -886,7 +937,7 @@ final class KeyedTable(
     // missing key would otherwise surface as an unresolved-column error
     require(keys.forall(batch.columns.contains),
       s"drifted batch must still carry the key columns ${keys.mkString(", ")}")
-    if (!exists) return mergeCollapsed(collapseLatest(batch))
+    if (!exists) return merge(batch)
     if (storedSchema.isEmpty) writeText(fs, new Path(root, SchemaMarker), current.schema.json)
     val cur = current
     KeyedTable.requireAdditive(
@@ -901,7 +952,7 @@ final class KeyedTable(
     val latest = collapseLatest(missing.foldLeft(batch)((d, f) =>
       d.withColumn(f.name, lit(null).cast(f.dataType))))
     val newCols = latest.schema.fields.filterNot(f => cur.columns.contains(f.name))
-    if (newCols.isEmpty) mergeCollapsed(latest)
+    if (newCols.isEmpty) stageCollapsed(latest).publish()
     else {
       // new columns change every stored file's schema → widen the snapshot
       // and compact: one full rewrite at the union schema
@@ -1014,8 +1065,8 @@ final class KeyedTable(
       case (b, (files, _)) if files > maxFilesPerBucket => b
     }.toSeq.sorted
     if (fragmented.isEmpty) None
-    else Some(commitBucketsRewrite(fragmented,
-      readBuckets(fragmented).repartition(fragmented.size, bucketExpr)))
+    else Some(stageBucketsRewrite(fragmented,
+      readBuckets(fragmented).repartition(fragmented.size, bucketExpr)).publish())
   }
 
   /** Export the current snapshot as a native Spark bucketed table (same
@@ -1047,10 +1098,7 @@ final class KeyedTable(
     if (!bucketed) {
       val next = currentVersion + 1
       reserveVersion(next)
-      KeyedTable.withoutKeys(current, k, keys, broadcastKeys = true)
-        .write.mode("overwrite").parquet(s"$root/v=$next")
-      commitVersion(next)
-      next
+      writeVersion(KeyedTable.withoutKeys(current, k, keys, broadcastKeys = true), next).publish()
     } else if (morActive) {
       // MOR delete: pure tombstone segment — write cost ∝ deleted keys
       val sch = storedSchema.getOrElse(current.schema)
@@ -1059,26 +1107,26 @@ final class KeyedTable(
           d.withColumn(f.name, lit(null).cast(f.dataType)))
         .select(tableColumns.map(col).toIndexedSeq: _*)
         .withColumn(TombCol, lit(true))
-      writeDeltaCommit(tombRows, None)
+      stageDelta(tombRows, None).publish()
     } else {
       val touched = bucketsOf(k).get
-      commitBucketsRewrite(touched,
-        KeyedTable.withoutKeys(readBuckets(touched), k, keys, broadcastKeys = true))
+      stageBucketsRewrite(touched,
+        KeyedTable.withoutKeys(readBuckets(touched), k, keys, broadcastKeys = true)).publish()
     }
   }
 
-  private def mergeBucketed(latest: DataFrame): Long = {
+  private def stageBucketed(latest: DataFrame): Staged = {
     if (morActive)
       // MOR upsert: the collapsed batch IS the delta segment — a key
       // appearing in it replaces its current row at read time, identical
       // to what the CoW anti-join+union would have materialized
-      return writeDeltaCommit(
+      return stageDelta(
         latest.select(tableColumns.map(col).toIndexedSeq: _*)
           .withColumn(TombCol, lit(false)), None)
     // Touched buckets: a driver-side collect of ≤ numBuckets ints.
     val touched = bucketsOf(latest).get
     val curTouched = readBuckets(touched)
-    commitBucketsRewrite(touched, KeyedTable.mergePlan(curTouched, latest, keys))
+    stageBucketsRewrite(touched, KeyedTable.mergePlan(curTouched, latest, keys))
   }
 
   /** The table's data columns in stored-schema order — every delta segment
@@ -1089,12 +1137,12 @@ final class KeyedTable(
     storedSchema.map(_.fields.map(_.name).toSeq)
       .getOrElse(current.columns.toSeq.filterNot(_ == BucketCol))
 
-  /** Commit one MOR delta segment as version N+1: the batch's rows (and
+  /** Stage one MOR delta segment as version N+1: the batch's rows (and
     * tombstones) land bucket-routed under `v=N+1`, base manifest pointers
     * are COPIED UNCHANGED, and the delta sidecar appends N+1 to each
     * written bucket's chain. Write cost ∝ the batch — never the table.
     */
-  private def writeDeltaCommit(deltaRows: DataFrame, tag: Option[String]): Long = {
+  private def stageDelta(deltaRows: DataFrame, tag: Option[String]): Staged = {
     val next = currentVersion + 1
     reserveVersion(next)
     writeBucketed(deltaRows, next)
@@ -1105,8 +1153,7 @@ final class KeyedTable(
     if (nextD.nonEmpty)
       writeDeltaMap(fs, new Path(root, s"${DeltasPrefix}v$next"), nextD)
     tag.foreach(t => writeText(fs, new Path(root, s"${TagPrefix}v$next"), t))
-    commitVersion(next)
-    next
+    staged(next, None)
   }
 
   /** Threshold compaction of the MOR read tax: rewrite ONLY the buckets
@@ -1123,15 +1170,15 @@ final class KeyedTable(
     require(maxDeltas >= 1, "maxDeltas must be >= 1")
     val frag = deltaMap.collect { case (b, vs) if vs.size >= maxDeltas => b }.toSeq.sorted
     if (frag.isEmpty) None
-    else Some(commitBucketsRewrite(frag, readBuckets(frag)))
+    else Some(stageBucketsRewrite(frag, readBuckets(frag)).publish())
   }
 
-  /** Write `newData` as the new content of `touched` buckets at version N+1;
-    * untouched buckets keep their old manifest pointers, touched-but-empty
-    * buckets drop out.
+  /** Stage `newData` as the new content of `touched` buckets at version
+    * N+1; untouched buckets keep their old manifest pointers,
+    * touched-but-empty buckets drop out.
     */
-  private def commitBucketsRewrite(touched: Seq[Int], newData: DataFrame,
-                                   tag: Option[String] = None): Long = {
+  private def stageBucketsRewrite(touched: Seq[Int], newData: DataFrame,
+                                  tag: Option[String] = None): Staged = {
     val next = currentVersion + 1
     reserveVersion(next)
     writeBucketed(newData, next)
@@ -1147,8 +1194,7 @@ final class KeyedTable(
         writeDeltaMap(fs, new Path(root, s"${DeltasPrefix}v$next"), nextD)
     }
     tag.foreach(t => KeyedTable.writeText(fs, new Path(root, s"${TagPrefix}v$next"), t))
-    commitVersion(next)
-    next
+    staged(next, None)
   }
 }
 
@@ -1167,6 +1213,13 @@ object KeyedTable {
   val DeltasPrefix = "_DELTAS_"
   val TombCol = "__tomb"
   val DeltaVerCol = "__dv"
+
+  /** A written, unpublished version of a table ([[KeyedTable.stageMerge]]).
+    * `publish()` swaps the table's pointer to [[version]] and returns it.
+    */
+  final class Staged private[KeyedTable] (val version: Long, swap: () => Unit) {
+    def publish(): Long = { swap(); version }
+  }
 
   /** The merge as a pure logical plan: rows of `current` whose key is NOT in
     * `batch` (anti-join against a broadcast of the batch's key columns — zero

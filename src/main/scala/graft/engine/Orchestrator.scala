@@ -2,11 +2,16 @@ package graft.engine
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
+
+import java.util.concurrent.{CompletableFuture, CompletionException, Executors}
 
 /** O1–O5 — the control plane (SURVEY §2.5), deliberately thin: ordered Scala
-  * steps with failure short-circuit, a retry policy knob, and the file
-  * lifecycle used by the customer-dim load. No Spark involvement beyond the
-  * Hadoop FS API — orchestration must not serialize into tasks.
+  * steps with failure short-circuit, a retry policy knob, work a step can
+  * start ahead of its gate, and the file lifecycle used by the customer-dim
+  * load. No Spark involvement beyond the Hadoop FS API and driver threads —
+  * orchestration must not serialize into tasks.
   */
 object Orchestrator {
 
@@ -16,10 +21,17 @@ object Orchestrator {
     */
   final case class RetryPolicy(retries: Int = 0, intervalMs: Long = 30000L)
 
-  final case class Step(name: String, policy: RetryPolicy = RetryPolicy())(val run: () => Unit)
+  /** `startedMs` is set for a step whose work began before the pipeline
+    * reached it ([[prepare]]): its result reports that moment as its start.
+    */
+  final case class Step(name: String, policy: RetryPolicy = RetryPolicy(),
+                        startedMs: Option[Long] = None)(val run: () => Unit)
 
+  /** One step's outcome, with its start and end wall-clock times (epoch ms). */
   final case class StepResult(name: String, succeeded: Boolean, attempts: Int,
-                              error: Option[Throwable])
+                              error: Option[Throwable], startMs: Long, endMs: Long) {
+    def durationMs: Long = endMs - startMs
+  }
 
   /** O1/O2 — run steps sequentially, each gated on the predecessor's
     * `Succeeded` (the reference's `dependsOn` edges,
@@ -31,6 +43,7 @@ object Orchestrator {
     var failed = false
     steps.foreach { s =>
       if (!failed) {
+        val start = s.startedMs.getOrElse(System.currentTimeMillis())
         var attempt = 0
         var err: Option[Throwable] = None
         var ok = false
@@ -44,11 +57,39 @@ object Orchestrator {
           }
         }
         if (!ok) failed = true
-        out += StepResult(s.name, ok, attempt, err)
+        out += StepResult(s.name, ok, attempt, err, start, System.currentTimeMillis())
       }
     }
     out.result()
   }
+
+  /** Work started ahead of the step that consumes it ([[prepare]]). */
+  final class Prepared[T] private[Orchestrator] (val submittedMs: Long, result: CompletableFuture[T]) {
+    /** Waits for the work and returns its result, or rethrows its failure. */
+    def get(): T =
+      try result.join()
+      catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+
+    /** Waits for the work to end, whatever its outcome. */
+    def await(): Unit = result.handle[Unit]((_, _) => ()).join()
+  }
+
+  // Daemon threads, created on demand and dropped after a minute idle.
+  private lazy val preparers = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-prepare")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Starts `body` on a driver thread of its own, so a step can do the work
+    * that does not depend on its predecessors while they run, and keep only
+    * its effects behind the gate. The thread runs with `spark` as its
+    * active session and with the caller's Spark local properties as they
+    * are at this call, not as they were when the pool thread was created
+    * (Spark's own `SQLExecution.withThreadLocalCaptured`).
+    */
+  def prepare[T](spark: SparkSession)(body: => T): Prepared[T] =
+    new Prepared(System.currentTimeMillis(), SQLExecution.withThreadLocalCaptured(spark, preparers)(body))
 
   /** S4 — GetMetadata childItems: enumerate files in a landing folder
     * (reference `pipeline/New_LoadCustomerDim.json:5-33`). Driver-side by

@@ -58,7 +58,8 @@ object BookingDemo {
 
     println(s"== run 1: master pipeline (base + delta dim, feed batch 1) under $base")
     val r1 = BookingFlow.runAll(spark, rawDir, archiveDir, feed, dim, fact, agg)
-    r1.foreach(r => println(s"  step ${r.name}: ${if (r.succeeded) "Succeeded" else "Failed: " + r.error}"))
+    r1.foreach(r => println(s"  step ${r.name}: ${if (r.succeeded) "Succeeded" else "Failed: " + r.error}" +
+      s" (${r.durationMs} ms)"))
     println("-- dim_customer (delta applied to customer 1):")
     dim.current.orderBy("customer_id").show(truncate = false)
     println("-- fact_booking (bad record dropped):")

@@ -55,6 +55,9 @@ class BookingFlowSpec extends SparkSpec {
 
     val results = BookingFlow.runAll(spark, rawDir, archiveDir, feed, dim, fact, agg)
     assert(results.forall(_.succeeded), results.mkString("; "))
+    // the fact load's work was submitted before the dim step started
+    val step = results.map(r => r.name -> r).toMap
+    assert(step("LoadBookingFact").startMs <= step("LoadCustomerDim").startMs, results)
 
     // dim: 3 rows, customer 1 updated by delta (SCD-1 last-file-wins)
     assert(dim.current.count() == 3)
@@ -136,6 +139,73 @@ class BookingFlowSpec extends SparkSpec {
     // Japan lost its only booking: the incremental path must match the full
     // recompute exactly — USA recomputed AND Japan's row deleted
     assert(incMoved == fullMoved, s"inc=$incMoved full=$fullMoved")
+  }
+
+  test("the dependsOn gate holds for effects: a failed dim load publishes no fact work") {
+    val base = tmpDir("gate")
+    val rawDir = s"$base/customer-raw-data"
+    val archiveDir = s"$base/customer-data-archive"
+    val feedDir = s"$base/booking-feed"
+    val ckpt = s"$base/feed.ckpt"
+    val dim = KeyedTable(spark, s"$base/dim_customer", Seq("customer_id"))
+    val fact = KeyedTable(spark, s"$base/fact_booking", Seq("booking_id"), Some("updated_at"))
+    val agg = KeyedTable(spark, s"$base/agg", Seq("country"))
+    val feed = new ChangeFeed(spark, feedDir, Schemas.bookingRaw, ckpt)
+    def run() = BookingFlow.runAll(spark, rawDir, archiveDir, feed, dim, fact, agg)
+    // under ANSI casts a non-numeric customer_id fails the dim merge
+    def badDim(name: String) = writeFile(rawDir, name,
+      (dimHeader +: Seq(dimRow(1, "USA").replaceFirst("^1,", "one,"))).mkString("\n"))
+    def fixDim(name: String, row: String) = {
+      Files.delete(Paths.get(rawDir, name))
+      writeFile(rawDir, name, (dimHeader +: Seq(row)).mkString("\n"))
+    }
+    def factRows = fact.current.collect().map(_.toString).sorted.toSeq
+    def watermark = if (Files.exists(Paths.get(ckpt))) Files.readString(Paths.get(ckpt)) else ""
+    def assertFailedDimOnly(results: Seq[Orchestrator.StepResult]) = {
+      assert(results.map(r => (r.name, r.succeeded)) == Seq("LoadCustomerDim" -> false), results)
+      assert(results.head.error.isDefined)
+    }
+
+    // the first run bootstraps both tables: its dim load fails, so the
+    // staged fact bootstrap is abandoned, and the next good run rewrites it
+    badDim("c0.csv")
+    writeFile(feedDir, "b1.json", Seq(
+      bookingJson("bk1", 1, "Confirmed", 10.0, "2025-07-14T09:30:00+00:00", "2025-07-14T09:30:01+00:00"),
+      bookingJson("bk2", 2, "Confirmed", 20.0, "2025-07-15T09:30:00+00:00", "2025-07-15T09:30:01+00:00"),
+    ).mkString("\n"))
+    assertFailedDimOnly(run())
+    assert(!fact.exists && !agg.exists && watermark.isEmpty)
+    fixDim("c0.csv", Seq(dimRow(1, "USA"), dimRow(2, "Japan")).mkString("\n"))
+    assert(run().forall(_.succeeded))
+    assert(fact.currentVersion == 1 && fact.current.count() == 2)
+    assert(agg.current.count() == 2)
+
+    // a later epoch: a new feed batch lands beside a bad dim delta
+    val (version, rows, mark, aggRows) =
+      (fact.currentVersion, factRows, watermark, agg.current.collect().map(_.toString).sorted.toSeq)
+    writeFile(feedDir, "b2.json", Seq(
+      bookingJson("bk2", 2, "Cancelled", 20.0, "2025-07-15T09:30:00+00:00", "2025-07-20T00:00:00+00:00"),
+      bookingJson("bk3", 1, "Confirmed", 30.0, "2025-07-16T09:30:00+00:00", "2025-07-16T09:30:01+00:00"),
+    ).mkString("\n"))
+    badDim("c1.csv")
+    assertFailedDimOnly(run())
+    assert(fact.currentVersion == version)
+    assert(factRows == rows)
+    assert(watermark == mark)
+    assert(agg.current.collect().map(_.toString).sorted.toSeq == aggRows)
+
+    // the next good run applies that batch exactly once and refreshes the aggregate
+    fixDim("c1.csv", dimRow(1, "USA", city = "Elsewhere"))
+    assert(run().forall(_.succeeded))
+    assert(fact.currentVersion == version + 1)
+    assert(fact.current.count() == 3)
+    assert(fact.current.filter("booking_id = 'bk2'").collect().head.getAs[String]("status") == "Cancelled")
+    assert(watermark.split("\n").map(_.split("/").last).toSeq == Seq("b1.json", "b2.json"))
+    val byCountry = agg.current.collect().map(r => r.getAs[String]("country") -> r).toMap
+    assert(byCountry("USA").getAs[Long]("total_bookings") == 2)
+    assert(byCountry("Japan").getAs[Long]("cancelled_bookings") == 1)
+    assert(run().forall(_.succeeded))
+    assert(fact.currentVersion == version + 1, "no feed file left to apply")
   }
 
   test("bookingTransform is split → align: no join, rows of the lookup → flag formulation") {

@@ -296,4 +296,40 @@ class KeyedTableMorSpec extends SparkSpec {
       assert(t.current.filter(col("k") === 1L).head().getString(1) == "a2")
     }
   }
+
+  test("stageMerge on MOR: invisible until published; an abandoned delta stage leaves no trace") {
+    val s = spark
+    import s.implicits._
+    def rows(ids: Range, tag: String) =
+      ids.map(i => (i.toLong, tag + i, i * 10L)).toDF("k", "name", "v")
+    val morT = KeyedTable(spark, tmpDir("mor-stage-m"), Seq("k"),
+      orderCol = Some("v"), numBuckets = 8, mor = true)
+    val cowT = KeyedTable(spark, tmpDir("mor-stage-c"), Seq("k"),
+      orderCol = Some("v"), numBuckets = 8)
+    Seq(morT, cowT).foreach(_.overwrite(rows(1 to 100, "base")))
+    Seq(morT, cowT).foreach(_.merge(rows(10 to 20, "upd")))
+    val chains = morT.deltaMap
+    // a stage without publish: readers, the version and the chains stay
+    val abandoned = morT.stageMerge(rows(30 to 90, "lost"))
+    assert(abandoned.version == 3 && morT.currentVersion == 2)
+    assert(morT.deltaMap == chains)
+    assertSame(morT, cowT, "an unpublished stage is invisible")
+    // the next commit of v3 clears every chain, so it writes no delta
+    // sidecar: the abandoned stage's must not survive it
+    assert(morT.compactDeltas(maxDeltas = 1).contains(3L))
+    assert(morT.deltaMap.isEmpty)
+    assertSame(morT, cowT, "compaction over an abandoned stage")
+    // publish makes the staged delta current with the merged rows
+    val staged = morT.stageMerge(rows(40 to 45, "pub"))
+    assert(morT.currentVersion == 3)
+    assert(staged.publish() == 4)
+    cowT.merge(rows(40 to 45, "pub"))
+    assert(morT.deltaMap.nonEmpty)
+    assertSame(morT, cowT, "published stage")
+    // a merge after an abandoned stage commits a correct next version
+    morT.stageMerge(rows(50 to 60, "lost"))
+    Seq(morT, cowT).foreach(_.merge(rows(70 to 72, "after")))
+    assert(morT.currentVersion == 5)
+    assertSame(morT, cowT, "merge after an abandoned stage")
+  }
 }

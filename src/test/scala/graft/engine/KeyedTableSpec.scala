@@ -626,4 +626,74 @@ class KeyedTableSpec extends SparkSpec {
     val m = t.current.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m == Map("a" -> "A2", "b" -> "B1"))
   }
+
+  test("stageMerge: invisible until published; an abandoned stage is overwritten by the next commit") {
+    val s = spark
+    import s.implicits._
+    for (buckets <- Seq(0, 4)) {
+      val t = KeyedTable(spark, tmpDir(s"ktstage-$buckets"), Seq("id"), numBuckets = buckets,
+        statsCols = if (buckets > 0) Seq("v") else Nil)
+      def rows = t.current.select("id", "v").as[(String, Int)].collect().toSet
+      t.overwrite((1 to 8).map(i => (s"k$i", i)).toDF("id", "v"))
+      val base = rows
+      // a stage without publish: readers and currentVersion stay at v1
+      val abandoned = t.stageMerge(Seq(("k1", 10), ("new", 0)).toDF("id", "v"))
+      assert(abandoned.version == 2)
+      assert(t.currentVersion == 1 && rows == base, s"buckets=$buckets")
+      // the next merge re-reserves v2 and overwrites the abandoned data
+      assert(t.merge(Seq(("k2", 20)).toDF("id", "v")) == 2)
+      assert(rows == base - (("k2", 2)) + (("k2", 20)), s"buckets=$buckets")
+      // publish makes the staged version current with the merged rows
+      val staged = t.stageMerge(Seq(("k3", 30), ("k9", 9)).toDF("id", "v"))
+      assert(t.currentVersion == 2)
+      assert(staged.publish() == 3)
+      assert(t.currentVersion == 3)
+      assert(rows == base - (("k2", 2)) - (("k3", 3)) + (("k2", 20)) + (("k3", 30)) + (("k9", 9)),
+        s"buckets=$buckets")
+      if (buckets > 0)
+        assert(t.scanRange("v", 9, 9).select("id").as[String].collect().toSeq == Seq("k9"))
+    }
+  }
+
+  test("publishing a stage after another writer committed throws; the winner stays current") {
+    val s = spark
+    import s.implicits._
+    val root = tmpDir("ktstage-race")
+    val t = KeyedTable(spark, root, Seq("id"))
+    t.overwrite(Seq(("a", 1)).toDF("id", "v"))
+    val staged = t.stageMerge(Seq(("b", 2)).toDF("id", "v"))
+    val other = KeyedTable(spark, root, Seq("id"))
+    assert(other.merge(Seq(("c", 3)).toDF("id", "v")) == 2)
+    intercept[java.util.ConcurrentModificationException] { staged.publish() }
+    assert(t.currentVersion == 2)
+    assert(t.current.select("id", "v").as[(String, Int)].collect().toSet == Set(("a", 1), ("c", 3)))
+  }
+
+  test("conditional-put: the same instance re-stages after abandoning a stage, others cannot") {
+    val s = spark
+    import s.implicits._
+    val root = tmpDir("ktstage-condput")
+    val t = new KeyedTable(spark, root, Seq("id"), commitProtocol = KeyedTable.ConditionalPutCommit)
+    t.overwrite(Seq(("a", 1)).toDF("id", "v"))
+    t.stageMerge(Seq(("b", 2)).toDF("id", "v")) // claims v2, never published
+    val other = new KeyedTable(spark, root, Seq("id"), commitProtocol = KeyedTable.ConditionalPutCommit)
+    intercept[java.util.ConcurrentModificationException] { other.merge(Seq(("c", 3)).toDF("id", "v")) }
+    assert(t.stageMerge(Seq(("d", 4)).toDF("id", "v")).publish() == 2)
+    assert(t.current.select("id", "v").as[(String, Int)].collect().toSet == Set(("a", 1), ("d", 4)))
+  }
+
+  test("an abandoned bootstrap stage is rewritten by the next bootstrap") {
+    val s = spark
+    import s.implicits._
+    val t = KeyedTable(spark, tmpDir("ktstage-boot"), Seq("id"))
+    val abandoned = t.stageMerge(Seq(("a", 1)).toDF("id", "v"))
+    assert(abandoned.version == 1 && !t.exists)
+    assert(t.merge(Seq(("b", 2)).toDF("id", "v")) == 1)
+    assert(t.current.select("id", "v").as[(String, Int)].collect().toSeq == Seq(("b", 2)))
+    // a missing pointer beside two versions is still a crashed swap
+    t.merge(Seq(("c", 3)).toDF("id", "v"))
+    new java.io.File(t.root, KeyedTable.CurrentMarker).delete()
+    val e = intercept[IllegalStateException] { t.merge(Seq(("d", 4)).toDF("id", "v")) }
+    assert(e.getMessage.contains("crash mid-commit"), e.getMessage)
+  }
 }

@@ -19,6 +19,40 @@ class OrchestratorSpec extends SparkSpec {
     assert(results(1).error.get.getMessage == "boom")
   }
 
+  test("step results carry start and end times, ordered for a sequential pipeline") {
+    val before = System.currentTimeMillis()
+    val results = runPipeline("p", Seq(
+      Step("a")(() => Thread.sleep(5)),
+      Step("b")(() => Thread.sleep(5)),
+      Step("c")(() => throw new RuntimeException("boom")),
+    ))
+    val after = System.currentTimeMillis()
+    assert(results.map(_.name) == Seq("a", "b", "c"))
+    results.foreach { r =>
+      assert(before <= r.startMs && r.startMs <= r.endMs && r.endMs <= after, r)
+      assert(r.durationMs == r.endMs - r.startMs)
+    }
+    assert(results(0).durationMs >= 5 && results(1).durationMs >= 5)
+    results.sliding(2).foreach { case Seq(x, y) => assert(x.endMs <= y.startMs, s"$x then $y") }
+    // a step whose work was started ahead reports that moment as its start
+    val ahead = runPipeline("p", Seq(Step("x", startedMs = Some(before - 1000))(() => ())))
+    assert(ahead.head.startMs == before - 1000)
+  }
+
+  test("prepare: local properties as at submission; get rethrows the work's own failure") {
+    val sc = spark.sparkContext
+    val seen = (1 to 3).map { i =>
+      sc.setLocalProperty("graft.spec.prepare", s"p$i")
+      prepare(spark)(sc.getLocalProperty("graft.spec.prepare")).get()
+    }
+    sc.setLocalProperty("graft.spec.prepare", null)
+    assert(seen == Seq("p1", "p2", "p3"))
+    val failed = prepare(spark)(throw new IllegalStateException("prep failed"))
+    val e = intercept[IllegalStateException](failed.get())
+    assert(e.getMessage == "prep failed")
+    failed.await()
+  }
+
   test("O5: retry policy retries with interval, succeeds within budget") {
     val attempts = new AtomicInteger(0)
     val results = runPipeline("p", Seq(

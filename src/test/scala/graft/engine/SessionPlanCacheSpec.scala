@@ -1,6 +1,9 @@
 package graft.engine
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{lit, when}
 
 /** [[SessionPlanCache]] holds at most one token's entries per source: a
   * [[KeyedTable]]'s read plans are keyed by the version being read, so a
@@ -46,16 +49,76 @@ class SessionPlanCacheSpec extends SparkSpec {
   test("a time-travel read does not evict the current version's plans") {
     val s = spark
     import s.implicits._
-    val root = tmpDir("spc-pinned")
-    val t = KeyedTable(spark, root, Seq("id"), numBuckets = 2)
-    t.overwrite(Seq(("a", 1), ("b", 2)).toDF("id", "v"))
-    t.merge(Seq(("a", 10)).toDF("id", "v"))
-    val cur = t.current
-    val v1 = t.atVersion(1)
-    assert(t.current eq cur)
-    assert(t.atVersion(1) eq v1)
-    assert(t.atVersion(2) eq cur, "atVersion at the current version shares the current read")
-    assert(v1.select("id", "v").as[(String, Int)].collect().toSet == Set(("a", 1), ("b", 2)))
-    assert(cur.select("id", "v").as[(String, Int)].collect().toSet == Set(("a", 10), ("b", 2)))
+    for (buckets <- Seq(2, 0)) {
+      val root = tmpDir(s"spc-pinned-$buckets")
+      val t = KeyedTable(spark, root, Seq("id"), numBuckets = buckets)
+      t.overwrite(Seq(("a", 1), ("b", 2)).toDF("id", "v"))
+      t.merge(Seq(("a", 10)).toDF("id", "v"))
+      val cur = t.current
+      val v1 = t.atVersion(1)
+      assert(t.current eq cur, s"buckets=$buckets")
+      assert(t.atVersion(1) eq v1, s"buckets=$buckets")
+      assert(t.atVersion(2) eq cur, "atVersion at the current version shares the current read")
+      assert(v1.select("id", "v").as[(String, Int)].collect().toSet == Set(("a", 1), ("b", 2)))
+      assert(cur.select("id", "v").as[(String, Int)].collect().toSet == Set(("a", 10), ("b", 2)))
+    }
+  }
+
+  /** The Spark jobs `body` starts on this thread. Listener events arrive
+    * asynchronously, so a marker job run after `body` is awaited first.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val prop = "graft.spec.probe"
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(prop))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(prop, tag)
+      val out = body
+      sc.setLocalProperty(prop, s"$tag-marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(s"$tag-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(s"$tag-marker"), "listener bus did not deliver the marker job")
+      (out, seen.toArray.count(_ == tag))
+    } finally {
+      sc.setLocalProperty(prop, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("an unbucketed commit seeds its read: the writing session reads the new version with no job") {
+    val s = spark
+    import s.implicits._
+    val root = tmpDir("spc-seed")
+    val t = KeyedTable(spark, root, Seq("id"))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def check(op: String)(commit: => Long): Unit = {
+      val v = commit
+      assert(t.currentVersion == v, op)
+      val (cur, jobs) = jobsOf(t.current)
+      assert(jobs == 0, s"$op: building the current read ran $jobs Spark job(s)")
+      val fresh = spark.read.parquet(s"$root/v=$v")
+      assert(cur.schema == fresh.schema, op)
+      assert(rows(cur) == rows(fresh), op)
+    }
+    def batch(from: Int, to: Int, tag: String) = (from to to).map(i =>
+      (s"k$i", i, BigDecimal(i) / 4, java.sql.Timestamp.valueOf(s"2025-07-0${1 + i % 9} 10:00:00"),
+        if (i % 3 == 0) null else s"$tag$i"))
+      .toDF("id", "n", "amount", "ts", "note")
+    check("overwrite")(t.overwrite(batch(1, 6, "base")))
+    check("merge")(t.merge(batch(4, 9, "upd")))
+    check("deleteKeys")(t.deleteKeys(Seq("k1", "k2").toDF("id")))
+    check("replaceKeys")(t.replaceKeys(Seq("k3", "k4").toDF("id"), batch(3, 3, "repl")))
+    check("mergeCdc")(t.mergeCdc(batch(5, 6, "cdc")
+      .withColumn("_op", when($"n" === 5, "D").otherwise("U")).withColumn("_seq", lit(1L))))
+    assert(t.current.select("id").as[String].collect().sorted.toSeq ==
+      Seq("k3", "k6", "k7", "k8", "k9"))
+    assert(SessionPlanCache.entries(spark, root) == 1)
   }
 }
