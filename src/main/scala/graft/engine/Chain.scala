@@ -141,7 +141,7 @@ object Chain {
 
   /** [[ack]] for MANY consumers of one epoch in ONE ack-table commit — at
     * high epoch cadence the per-(consumer, epoch) commit machinery (a
-    * version dir + manifest + pointer swap each) is the chain's dominant
+    * version dir + log entry each) is the chain's dominant
     * overhead once consumers multiply; a fan-out epoch should ack all its
     * appliers in one batch (r10 verdict #4; SCALING.md bounds the cadence).
     */

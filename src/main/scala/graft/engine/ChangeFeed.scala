@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
 /** S1 — incremental document feed.
@@ -20,9 +19,10 @@ import scala.jdk.CollectionConverters._
   *    Spark's own offset log in `checkpointLocation` is the continuation
   *    token. Run with `Trigger.AvailableNow` for the reference's
   *    run-to-completion-per-invocation behavior (SURVEY §2.5 O3).
-  *  - '''Batch-incremental''' ([[readNew]]): explicit high-watermark file
-  *    listing processed feed files; returns the unprocessed slice and a
-  *    commit callback. This is the unit-testable core; streaming is a shell.
+  *  - '''Batch-incremental''' ([[readNew]]): an explicit watermark, the set
+  *    of processed feed files, kept as a create-once log in
+  *    `checkpointDir`; returns the unprocessed slice and a commit callback.
+  *    This is the unit-testable core; streaming is a shell.
   *
   * Scale note: file listing is driver-side O(files); at real scale the feed
   * dir should be date-partitioned (`feed/date=.../ *.json`) so the listing and
@@ -33,7 +33,7 @@ final class ChangeFeed(
     spark: SparkSession,
     feedDir: String,
     schema: StructType,
-    checkpointFile: String,
+    checkpointDir: String,
 ) {
   private val hconf = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = new Path(feedDir).getFileSystem(hconf)
@@ -42,16 +42,19 @@ final class ChangeFeed(
   def stream(): DataFrame =
     spark.readStream.schema(schema).option("mode", "PERMISSIVE").json(feedDir)
 
-  private def processed: Set[String] = {
-    val p = new Path(checkpointFile)
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        .split("\n").map(_.trim).filter(_.nonEmpty).toSet
-      finally in.close()
+  private def ckpt = new Path(checkpointDir)
+
+  /** The highest checkpoint entry and the processed set it holds; (0, ∅)
+    * before the first commit. Each entry holds the whole set, so an older
+    * entry a crash left behind is only history.
+    */
+  private def watermark: (Long, Set[String]) =
+    KeyedTable.logVersions(fs, ckpt).lastOption.fold((0L, Set.empty[String])) { k =>
+      val p = new Path(ckpt, k.toString)
+      val body = KeyedTable.readText(fs, p).getOrElse(throw new IllegalStateException(
+        s"$p vanished while read — a second consumer on this checkpoint?"))
+      (k, body.split("\n").map(_.trim).filter(_.nonEmpty).toSet)
     }
-  }
 
   private def listFeed(): Seq[String] = {
     val dir = new Path(feedDir)
@@ -68,15 +71,18 @@ final class ChangeFeed(
     * the keyed merge makes effectively exactly-once).
     */
   def readNew(): (DataFrame, Seq[String], () => Unit) = {
+    val (_, processed) = watermark
     val todo = listFeed().filterNot(processed.contains)
     val df =
       if (todo.isEmpty) spark.createDataFrame(List.empty[org.apache.spark.sql.Row].asJava, schema)
       else spark.read.schema(schema).option("mode", "PERMISSIVE").json(todo: _*)
     val commit = () => {
-      val all = processed ++ todo
-      // write-temp-then-rename: a crash mid-commit must leave the previous
-      // watermark readable (re-processing is safe; a truncated file is not)
-      KeyedTable.writeText(fs, new Path(checkpointFile), all.toSeq.sorted.mkString("\n"))
+      val (k, done) = watermark
+      // create-once: until entry k+1 exists, readers keep entry k
+      // (re-processing is safe; a lost or truncated watermark is not)
+      KeyedTable.createEntry(fs, ckpt, k + 1, (done ++ todo).toSeq.sorted.mkString("\n"))
+      KeyedTable.logVersions(fs, ckpt).filter(_ <= k)
+        .foreach(v => fs.delete(new Path(ckpt, v.toString), false))
     }
     (df, todo, commit)
   }

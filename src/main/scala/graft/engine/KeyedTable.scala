@@ -23,7 +23,9 @@ import java.nio.charset.StandardCharsets
   * root/
   *   v=1/part-*.parquet        // immutable snapshot versions
   *   v=2/part-*.parquet
-  *   _CURRENT                  // pointer file containing "2"
+  *   v=2/_STAGE                // token of the stage that wrote v=2
+  *   _commits/1                // commit log: v=N is committed iff
+  *   _commits/2                //   _commits/N exists (empty body here)
   * }}}
   *
   * Bucketed (`numBuckets = B`) — manifest-addressed buckets, so a merge
@@ -33,19 +35,19 @@ import java.nio.charset.StandardCharsets
   *   v=1/__bucket=0/...        // every bucket written at bootstrap
   *   v=1/__bucket=1/...
   *   v=2/__bucket=1/...        // later merge touched bucket 1 only
-  *   _MANIFEST_v1              // "bucket,version" per non-empty bucket
-  *   _MANIFEST_v2              // bucket 0 → v1 (untouched), bucket 1 → v2
-  *   _CURRENT
+  *   _commits/1                // "bucket=b,v" per non-empty bucket
+  *   _commits/2                // bucket 0 → v1 (untouched), bucket 1 → v2
   * }}}
-  * A version is its manifest: readers resolve `_CURRENT` → manifest → the
-  * exact bucket directories, each immutable once written. At 100 TB a CDC
-  * batch touching 1% of keys rewrites ≈1% of buckets instead of the table;
-  * old versions remain readable until [[KeyedTable.vacuum]] GCs dirs the
-  * retained manifest chain no longer references.
+  * A version is its manifest: readers resolve the highest log entry → its
+  * manifest → the exact bucket directories, each immutable once written.
+  * At 100 TB a CDC batch touching 1% of keys rewrites ≈1% of buckets
+  * instead of the table; old versions remain readable until
+  * [[KeyedTable.vacuum]] GCs dirs the retained manifest chain no longer
+  * references.
   *
   * == Scale design ==
   *  - merge(batch) = dedupe batch to latest per key → current ANTI-JOIN batch
-  *    keys → UNION batch → write → swap pointer. The anti-join runs against a
+  *    keys → UNION batch → write → commit. The anti-join runs against a
   *    broadcast of ONLY the batch's key columns (a few MB even for millions
   *    of changed keys), so the snapshot side streams map-side with no
   *    shuffle. Keys match NULL-safe ([[KeyedTable.withoutKeys]]), which also
@@ -53,8 +55,19 @@ import java.nio.charset.StandardCharsets
   *    union.
   *  - Bucket routing is `pmod(hash(keys), B)` — the same Murmur3 the engine
   *    uses for shuffle partitioning, so keys distribute like a shuffle would.
-  *  - On object stores the pointer-swap commit would need a conditional-put;
-  *    rename/overwrite of the small pointer file is fine on HDFS/local.
+  *  - The commit is create-once. A version's data and its stage token land
+  *    first; then a temp file holding the entry's body (tag, manifest, delta
+  *    chains) is renamed to `_commits/N`. Hadoop's rename refuses an
+  *    existing target, so of two writers of one version exactly one
+  *    commits; the other gets `ConcurrentModificationException`. The current
+  *    version is the highest entry, so a reader never sees a table without
+  *    one. The rename is atomic on HDFS; the local FS checks the target and
+  *    then renames, so one JVM serializes its renames. An object store needs
+  *    its conditional put (`If-None-Match: *`) in place of the rename.
+  *    Nothing claims N+1 before its data is written: a writer whose data
+  *    write starts after another writer committed the same N+1 overwrites
+  *    that version's files (its own publish then fails). The pipeline has
+  *    one writer per table; concurrent writers of one table are unsupported.
   *
   * == Range bucketing + zone-map pruning ==
   * Hash bucketing spreads every value range across every bucket, so a scan
@@ -75,15 +88,15 @@ import java.nio.charset.StandardCharsets
   * `scd2_1` 1%-epoch cost 75% of its own bootstrap). At 100 TB that is a
   * ~100 TB write per daily 1% batch — fatal. MOR is the standard fix
   * (the Delta/Iceberg merge-on-read shape): an apply writes only DELTA
-  * SEGMENTS, per bucket, recorded per version in a `_DELTAS_vN` sidecar
-  * beside the manifest:
+  * SEGMENTS, per bucket, recorded per version in its log entry beside the
+  * manifest:
   * {{{
   * root/
   *   v=1/__bucket=0..B/...      // base (bootstrap)
   *   v=2/__bucket=3/...         // delta segment: only the batch's rows
   *   v=2/__bucket=7/...         //   (+ __tomb marker column)
-  *   _MANIFEST_v2               // bucket -> BASE version (v=1, unchanged)
-  *   _DELTAS_v2                 // "3,2" / "7,2": delta chain per bucket
+  *   _commits/2                 // "bucket=b,1": bucket -> BASE version;
+  *                              // "deltas=3,2" / "deltas=7,2": delta chains
   * }}}
   * Write cost is ∝ THE BATCH — base files are never rewritten. Readers
   * coalesce: rows of a key's LATEST delta version win over base (and zero
@@ -101,7 +114,7 @@ import java.nio.charset.StandardCharsets
   * rule it out); [[statsAggregate]] honestly declines while deltas are
   * outstanding (replaced keys would double-count).
   *
-  * `statsCols` adds a per-bucket min/max/count sidecar (`_stats/v=N`
+  * `statsCols` adds a per-bucket min/max/count sidecar (`v=N/_stats`
   * parquet, written from a column-pruned read-back of just the files that
   * version wrote — cost ∝ batch, never the table). [[scanRange]] consults
   * the sidecar to read ONLY the buckets whose [min,max] can intersect the
@@ -121,7 +134,6 @@ final class KeyedTable(
     val keys: Seq[String],
     val orderCol: Option[String] = None,
     val numBuckets: Int = 0,
-    val commitProtocol: KeyedTable.CommitProtocol = KeyedTable.RenameCommit,
     val rangeCol: Option[String] = None,
     val statsCols: Seq[String] = Nil,
     val mor: Boolean = false,
@@ -129,63 +141,65 @@ final class KeyedTable(
   import KeyedTable._
   private val hconf = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = new Path(root).getFileSystem(hconf)
+  private def commitsDir = new Path(root, CommitsDir)
 
-  def currentVersion: Long = readPointer(fs, new Path(root, CurrentMarker)).getOrElse(0L)
-
-  /** Every commit funnels through the [[KeyedTable.CommitProtocol]] seam:
-    * version N+1's data/manifest are fully written BEFORE this conditional
-    * pointer swap, so a crash or a lost-race rejection leaves the previous
-    * version intact and readable.
+  /** The highest entry this instance has seen. Entries are created in
+    * order and vacuum deletes only entries below the current one, so while
+    * this entry exists every later entry does too: a read probes upward
+    * from it, and lists the log (a cost that grows with its length) only
+    * when it is gone.
     */
-  // Per-instance writer identity for commit-protocol claim bookkeeping:
-  // lets ConditionalPutCommit tell THIS table's retry apart from a second
-  // same-JVM writer racing the same version transition.
-  private val writerToken = "kt-" + java.util.UUID.randomUUID().toString
+  @volatile private var seenVersion = 0L
 
-  private def commitVersion(next: Long): Unit =
-    commitProtocol.publish(fs, new Path(root, CurrentMarker), next - 1, next, writerToken)
-
-  /** Claim version `next` BEFORE writing its data dir — see
-    * [[KeyedTable.CommitProtocol.reserve]]. Every path that writes
-    * `v=$next` calls this first, so a protocol with real claims rejects
-    * the losing racer before its overwrite-mode write can clobber the
-    * winner's files.
-    *
-    * Also clears any stale `_TAG_v$next` a CRASHED tagged commit left
-    * behind: without this, a later UNtagged commit of the same version
-    * number would silently adopt the orphaned tag, `lastTag` would claim a
-    * batch is applied that never landed, and the redelivered batch would be
-    * permanently skipped — a lost update wearing the exactly-once guard's
-    * own uniform.
-    */
-  private def reserveVersion(next: Long): Unit = {
-    commitProtocol.reserve(fs, new Path(root, CurrentMarker), next - 1, next, writerToken)
-    fs.delete(new Path(root, s"${TagPrefix}v$next"), false)
-    // likewise the sidecars a version writes only when it has content (a
-    // delta chain, bucket stats): v=next must not inherit those of an
-    // abandoned stage or a crashed commit
-    fs.delete(new Path(root, s"${DeltasPrefix}v$next"), false)
-    fs.delete(new Path(root, s"$StatsDir/v=$next"), true)
+  /** The highest entry of the commit log; 0 before the first commit. */
+  def currentVersion: Long = {
+    var v = seenVersion
+    if (v > 0 && fs.exists(new Path(commitsDir, v.toString))) {
+      while (fs.exists(new Path(commitsDir, (v + 1).toString))) v += 1
+    } else v = logVersions(fs, commitsDir).lastOption.getOrElse(0L)
+    seenVersion = v
+    v
   }
 
-  /** The handle of version `next`, written and reserved but not yet
-    * visible. Its publish is the pointer swap; for an unbucketed version
-    * (`written` = the schema of the DataFrame written) it then seeds the
+  /** The body of log entry `v`; None if `v` was never committed or was
+    * vacuumed.
+    */
+  private def commitAt(v: Long): Option[Commit] = {
+    val p = new Path(commitsDir, v.toString)
+    readText(fs, p).map(Commit.parse(p, _))
+  }
+
+  /** The handle of version `next`, written but not yet visible: its data
+    * is in `v=next`, and `commit` is the body of its log entry. Staging
+    * ends by writing a token of its own into `v=next`; publish refuses
+    * unless `v=next` still holds that token, so a stage whose data a later
+    * stage of the same version overwrote can never commit that data under
+    * its own entry. Publish then creates the entry. For an unbucketed
+    * version (`written` = the schema of the DataFrame written) it seeds the
     * session's read plan of the new version, so the first read after a
     * commit does not run a schema-inference job. The seed waits for the
     * publish: a stage that is never published must not evict the plans of
     * the version readers still see.
     */
-  private def staged(next: Long, written: Option[StructType]): Staged =
+  private def staged(next: Long, commit: Commit, written: Option[StructType]): Staged = {
+    val tokenPath = new Path(root, s"v=$next/$StageToken")
+    val token = java.util.UUID.randomUUID().toString
+    writeFile(fs, tokenPath, token)
+    val body = commit.render
     new Staged(next, () => {
-      commitVersion(next)
+      if (!readText(fs, tokenPath).contains(token))
+        throw new java.util.ConcurrentModificationException(
+          s"$root: v=$next no longer holds this stage's data — another writer staged or " +
+            "committed the version since; re-read the snapshot and retry")
+      createEntry(fs, commitsDir, next, body)
       written.foreach(schema => readPlan(root, next, Seq(s"$root/v=$next"), Some(schema)))
     })
+  }
 
-  /** Write `df` as unbucketed version `next`, reserved by the caller. */
-  private def writeVersion(df: DataFrame, next: Long): Staged = {
+  /** Write `df` as unbucketed version `next`. */
+  private def writeVersion(df: DataFrame, next: Long, tag: Option[String] = None): Staged = {
     df.write.mode("overwrite").parquet(s"$root/v=$next")
-    staged(next, Some(df.schema))
+    staged(next, Commit(tag), Some(df.schema))
   }
 
   def exists: Boolean = currentVersion > 0
@@ -220,10 +234,9 @@ final class KeyedTable(
   /** bucket → ascending uncompacted delta-version chain, at the current
     * version (empty for CoW tables and right after compaction).
     */
-  def deltaMap: Map[Int, Seq[Long]] = deltaMapAt(currentVersion)
+  def deltaMap: Map[Int, Seq[Long]] = currentCommit.deltas
 
-  private def deltaMapAt(v: Long): Map[Int, Seq[Long]] =
-    readDeltaMap(fs, new Path(root, s"${DeltasPrefix}v$v"))
+  private def currentCommit: Commit = commitAt(currentVersion).getOrElse(Commit())
 
   /** Uncompacted delta-segment count per bucket — the observability surface
     * for the MOR read tax ([[compactDeltas]]' threshold input).
@@ -319,7 +332,7 @@ final class KeyedTable(
   }
 
   /** bucket → version holding its current data (bucketed tables only). */
-  def manifest: Map[Int, Long] = readManifest(fs, new Path(root, s"${ManifestPrefix}v$currentVersion"))
+  def manifest: Map[Int, Long] = currentCommit.manifest
 
   /** Declared schema persisted at creation — lets an empty snapshot (e.g. a
     * bootstrap batch whose rows were all quality-rejected) stay a valid,
@@ -343,7 +356,10 @@ final class KeyedTable(
       val hasData = fs.listStatus(new Path(s"$root/v=$v"))
         .exists(st => st.isFile && st.getPath.getName.startsWith("part-"))
       if (hasData) readPlan(root, v, Seq(s"$root/v=$v")) else emptyTyped
-    } else resolve(root, v, manifest, if (morActive) deltaMap else Map.empty)
+    } else {
+      val c = commitAt(v).getOrElse(Commit())
+      resolve(root, v, c.manifest, if (morActive) c.deltas else Map.empty)
+    }
   }
 
   /** The parquet read plan over committed version dirs, memoized per
@@ -437,14 +453,14 @@ final class KeyedTable(
     * == Vacuum race contract (pinned by KeyedTableSpec) ==
     * A concurrent `vacuum` that drops `v` makes the reader FAIL LOUDLY,
     * never return partial or empty data: resolving `atVersion` after the
-    * drop throws here (missing version dir / missing manifest — without
-    * the explicit manifest check a vacuumed bucketed version would read as
-    * Map.empty and SILENTLY yield an empty snapshot); a DataFrame resolved
-    * BEFORE the drop fails at its next action with a missing-file error,
-    * because the file listing is pinned at resolution time and
-    * `spark.sql.files.ignoreMissingFiles` stays at its `false` default —
-    * flipping that config would downgrade this contract to silent partial
-    * reads. Coordination (e.g. only vacuuming versions older than the
+    * drop throws here (vacuum deletes the version's log entry before its
+    * data, and without the explicit entry check a vacuumed bucketed version
+    * would read as an empty manifest and SILENTLY yield an empty snapshot);
+    * a DataFrame resolved BEFORE the drop fails at its next action with a
+    * missing-file error, because the file listing is pinned at resolution
+    * time and `spark.sql.files.ignoreMissingFiles` stays at its `false`
+    * default — flipping that config would downgrade this contract to
+    * silent partial reads. Coordination (e.g. only vacuuming versions older than the
     * longest running query) is the operator's job; the engine's job is
     * that the race is always an ERROR, not wrong data.
     */
@@ -452,23 +468,12 @@ final class KeyedTable(
     val cur = currentVersion
     require(v > 0 && v <= cur, s"version $v out of range 1..$cur")
     val source = if (v == cur) root else s"$root#pinned"
-    if (!bucketed) {
-      // checked before the cached plan is returned: a plan resolved before
-      // the drop would otherwise hide the vacuum until its next action
-      if (!fs.exists(new Path(root, s"v=$v")))
-        throw new IllegalStateException(
-          s"$root: version $v directory is gone — vacuumed while referenced?")
-      readPlan(source, v, Seq(s"$root/v=$v"))
-    } else {
-      val mp = new Path(root, s"${ManifestPrefix}v$v")
-      if (!fs.exists(mp))
-        throw new IllegalStateException(
-          s"$root: version $v manifest is gone — vacuumed while referenced?")
-      // the deltas sidecar lives and dies with its manifest (vacuum deletes
-      // both), so manifest-present + sidecar-absent is simply "no deltas"
-      resolve(source, v, readManifest(fs, mp),
-        if (effectiveMor) deltaMapAt(v) else Map.empty)
-    }
+    // checked before the cached plan is returned: a plan resolved before
+    // the drop would otherwise hide the vacuum until its next action
+    val c = commitAt(v).getOrElse(throw new IllegalStateException(
+      s"$root: version $v is gone from the commit log — vacuumed while referenced?"))
+    if (!bucketed) readPlan(source, v, Seq(s"$root/v=$v"))
+    else resolve(source, v, c.manifest, if (effectiveMor) c.deltas else Map.empty)
   }
 
   /** Rows of the listed buckets only (bucketed tables) — the pruned read the
@@ -482,15 +487,14 @@ final class KeyedTable(
 
   /** Truncate-and-reload (K5): write a fresh snapshot ignoring history.
     * Refuses to bootstrap (version 1) over a directory that already holds
-    * version dirs without a `_CURRENT` pointer — that state means a commit
-    * crashed mid-swap, and re-bootstrapping would clobber live data. A lone
-    * `v=1` is the exception: a swap's crash window always leaves v=N+1
-    * beside v=N, so a lone v=1 without a pointer is a bootstrap that was
-    * never published (crashed, or staged and abandoned) and is rewritten.
+    * version dirs but no commit log entry — only a lost log leaves that
+    * state, and re-bootstrapping would clobber live data. A lone `v=1` is
+    * the exception: it is a bootstrap that was never published (crashed,
+    * or staged and abandoned) and is rewritten.
     */
   def overwrite(df: DataFrame): Long = stageOverwrite(df).publish()
 
-  private def stageOverwrite(df: DataFrame): Staged = {
+  private def stageOverwrite(df: DataFrame, tag: Option[String] = None): Staged = {
     val next = currentVersion + 1
     if (!exists) {
       val staleVersions = fs.exists(new Path(root)) &&
@@ -499,7 +503,7 @@ final class KeyedTable(
           n.startsWith("v=") && n != "v=1"
         }
       if (staleVersions) throw new IllegalStateException(
-        s"$root holds version dirs but no ${CurrentMarker} — crash mid-commit? restore the pointer manually")
+        s"$root holds version dirs but no commit log entry — $CommitsDir lost? restore it manually")
       if (mor) {
         require(numBuckets > 0, "merge-on-read requires a bucketed table " +
           "(delta segments are per-bucket)")
@@ -518,14 +522,12 @@ final class KeyedTable(
       }
       writePointer(fs, new Path(root, BucketsMarker), numBuckets.toLong)
     }
-    reserveVersion(next)
     writeText(fs, new Path(root, SchemaMarker), df.schema.json)
-    if (!bucketed) writeVersion(df, next)
+    if (!bucketed) writeVersion(df, next, tag)
     else {
       writeBucketed(df, next)
       val present = listBuckets(fs, new Path(s"$root/v=$next"))
-      writeManifest(fs, new Path(root, s"${ManifestPrefix}v$next"), present.map(_ -> next).toMap)
-      staged(next, None)
+      staged(next, Commit(tag, present.map(_ -> next).toMap), None)
     }
   }
 
@@ -562,7 +564,7 @@ final class KeyedTable(
     written.select((BucketCol +: present).map(col).toIndexedSeq: _*)
       .groupBy(col(BucketCol).cast("int").as("bucket"))
       .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/$StatsDir/v=$next")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/v=$next/$StatsDir")
   }
 
   /** The current snapshot's per-bucket stats relation — `(bucket, min_c,
@@ -583,7 +585,7 @@ final class KeyedTable(
       dm.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) }
     val byVer = pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
     val parts = byVer.flatMap { case (v, bks) =>
-      val p = new Path(s"$root/$StatsDir/v=$v")
+      val p = new Path(s"$root/v=$v/$StatsDir")
       if (fs.exists(p)) Some(spark.read.parquet(p.toString).filter(col("bucket").isin(bks: _*)))
       else None
     }
@@ -681,16 +683,15 @@ final class KeyedTable(
     */
   def merge(batch: DataFrame): Long = stageMerge(batch).publish()
 
-  /** [[merge]] up to, not including, its pointer swap: reserves version
-    * N+1 and writes its data (bucketed tables: also its manifest and
-    * sidecars), then returns the handle whose `publish()` makes it current.
-    * Until then readers and [[currentVersion]] stay at N. An unpublished
-    * stage is the crash-before-publish state the commit protocol already
-    * tolerates: the next commit re-reserves and overwrites v=N+1 (under
-    * [[ConditionalPutCommit]] only this instance can, its claim being
-    * idempotent for it). `publish()` throws
-    * `ConcurrentModificationException` if another writer moved the pointer
-    * meanwhile.
+  /** [[merge]] up to, not including, its commit: writes version N+1's
+    * data (bucketed tables: also its stats sidecar) and returns the handle
+    * whose `publish()` creates log entry N+1 and so makes it current. Until
+    * then readers and [[currentVersion]] stay at N. An unpublished stage is
+    * the crash-before-commit state every commit tolerates: the next commit
+    * of N+1, by any writer, overwrites v=N+1. `publish()` throws
+    * `ConcurrentModificationException` if another writer staged or
+    * committed N+1 meanwhile; the data it staged is then gone, and the
+    * caller re-stages from the new snapshot.
     */
   def stageMerge(batch: DataFrame): Staged = stageCollapsed(collapseLatest(batch))
 
@@ -703,11 +704,8 @@ final class KeyedTable(
     // legacy tables (created before _SCHEMA existed): backfill from the
     // readable current snapshot so empty-bucket reads stay typed
     if (storedSchema.isEmpty) writeText(fs, new Path(root, SchemaMarker), current.schema.json)
-    if (!bucketed) {
-      val next = currentVersion + 1
-      reserveVersion(next)
-      writeVersion(KeyedTable.mergePlan(current, latest, keys), next)
-    } else stageBucketed(latest)
+    if (!bucketed) writeVersion(KeyedTable.mergePlan(current, latest, keys), currentVersion + 1)
+    else stageBucketed(latest)
   }
 
   /** Op-coded CDC merge: the batch carries an op column (`I`/`U`/`D`) and a
@@ -771,13 +769,8 @@ final class KeyedTable(
     */
   def replaceKeys(keysDf: DataFrame, replacement: DataFrame,
                   tag: Option[String] = None): Long = {
-    if (!exists) {
-      // bootstrap: the tag lands AFTER the commit (overwrite owns its commit
-      // sequence), so the batch-dedup guarantee starts with the second batch
-      val v = overwrite(replacement)
-      tag.foreach(t => writeText(fs, new Path(root, s"${TagPrefix}v$v"), t))
-      return v
-    }
+    require(tag.forall(!_.contains('\n')), "a batch tag is one line")
+    if (!exists) return stageOverwrite(replacement, tag).publish()
     if (storedSchema.isEmpty) writeText(fs, new Path(root, SchemaMarker), current.schema.json)
     // NULL-key rejection, ENFORCED in-plan with a DEDICATED error (r10
     // ADVICE): the anti-joins match keys NULL-safe (withoutKeys), so CoW and
@@ -825,12 +818,10 @@ final class KeyedTable(
           lit(") - the covered-keys contract; CoW and MOR would diverge silently")))))
       .filter(col("__kchk"))
       .drop("__covered", "__kchk")
-    if (!bucketed) {
-      val next = currentVersion + 1
-      reserveVersion(next)
-      tag.foreach(t => writeText(fs, new Path(root, s"${TagPrefix}v$next"), t))
-      writeVersion(KeyedTable.cdcMergePlan(current, replacement0, allKeys, keys), next).publish()
-    } else if (morActive) {
+    if (!bucketed)
+      writeVersion(KeyedTable.cdcMergePlan(current, replacement0, allKeys, keys),
+        currentVersion + 1, tag).publish()
+    else if (morActive) {
       // MOR group replace: the delta segment carries the replacement rows
       // plus an explicit tombstone for every touched key with NO
       // replacement rows — so each touched key "appears" in the segment
@@ -854,17 +845,17 @@ final class KeyedTable(
     }
   }
 
-  /** The tag [[mergeCdc]] recorded for the CURRENT version, if any. Written
-    * BEFORE the version pointer flips (non-bootstrap paths), so a visible
-    * snapshot always carries its tag: an applier that stamps each batch with
-    * a stable id and checks `lastTag` before applying gets exactly-once
-    * semantics against consecutive redelivery (the foreachBatch-retry case —
-    * a crash before the commit replays cleanly because the tag is invisible;
-    * after it, the tag is visible and the replay no-ops). It does NOT guard
-    * arbitrary historical replay: only the latest batch's id is retained.
+  /** The tag [[mergeCdc]] recorded for the CURRENT version, if any. The tag
+    * is part of the version's log entry, bootstrap included, so a visible
+    * snapshot always carries its tag and a tag is never visible without its
+    * snapshot: an applier that stamps each batch with a stable id and checks
+    * `lastTag` before applying gets exactly-once semantics against
+    * consecutive redelivery (the foreachBatch-retry case — a crash before
+    * the commit replays cleanly because the tag is invisible; after it, the
+    * tag is visible and the replay no-ops). It does NOT guard arbitrary
+    * historical replay: only the latest batch's id is retained.
     */
-  def lastTag: Option[String] =
-    KeyedTable.readText(fs, new Path(root, s"${TagPrefix}v$currentVersion"))
+  def lastTag: Option[String] = currentCommit.tag
 
   /** The bucket ids `keysDf`'s rows route to — None for unbucketed tables.
     * Lets callers (e.g. incremental aggregate maintenance) read ONLY the
@@ -966,57 +957,32 @@ final class KeyedTable(
   /** GC versions unreferenced by the current manifest chain: keeps the
     * current version plus everything the last `keepVersions` manifests (or
     * the current snapshot, unbucketed) still point into; deletes older
-    * version dirs and manifests. Readers of retained versions are safe —
-    * bucket dirs are immutable and the manifest tells exactly which are
-    * live.
+    * version dirs and the log entries of versions older than the window.
+    * Readers of retained versions are safe — bucket dirs are immutable and
+    * the manifest tells exactly which are live.
     */
   def vacuum(keepVersions: Int = 1): Seq[Long] = {
+    require(keepVersions >= 1, "vacuum keeps at least the current version")
     val cur = currentVersion
     if (cur == 0) return Seq.empty
-    val keepManifests = ((cur - keepVersions + 1) max 1L) to cur
+    val keep = ((cur - keepVersions + 1) max 1L) to cur
     // a retained manifest's delta chains are as live as its base pointers:
     // dropping a referenced delta version would make the coalesced read of
     // a kept snapshot fail (loudly, per the vacuum-race contract — but a
     // correctly-parameterized vacuum must never do it)
-    val live: Set[Long] =
-      if (!bucketed) keepManifests.toSet
-      else keepManifests.flatMap { v =>
-        readManifest(fs, new Path(root, s"${ManifestPrefix}v$v")).values ++
-          readDeltaMap(fs, new Path(root, s"${DeltasPrefix}v$v")).values.flatten
-      }.toSet ++ keepManifests
-    val all = fs.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
-    // never touch versions ABOVE the pointer: v=cur+1 (+ its _COMMIT claim)
-    // is a crashed committer's half-finished transition — the conditional-
-    // put crash contract needs both for explicit recovery, and deleting the
-    // claim would let a later merge silently publish over it
-    val deletable = all.collect {
-      case n if n.startsWith("v=") && {
-        val v = n.stripPrefix("v=").toLong
-        !live.contains(v) && v <= cur
-      } => n.stripPrefix("v=").toLong
-    }
-    deletable.foreach { v =>
-      fs.delete(new Path(root, s"v=$v"), true)
-      fs.delete(new Path(root, s"$StatsDir/v=$v"), true) // stats sidecar dies with its version
-      fs.delete(new Path(root, s"${ManifestPrefix}v$v"), false)
-      fs.delete(new Path(root, s"${DeltasPrefix}v$v"), false) // delta sidecar dies with its manifest
-      fs.delete(new Path(root, s"_COMMIT_v$v"), false) // conditional-put claim
-      fs.delete(new Path(root, s"${TagPrefix}v$v"), false) // batch tag dies with its version
-    }
-    // also drop manifests + commit claims for versions older than the keep
-    // window whose dirs were fully superseded (dir may be live via a newer
-    // manifest). Claims for retained and in-flight versions are never
-    // touched — a claim at cur+1 with the pointer unadvanced is the
-    // crash-recovery marker and must survive vacuum.
-    all.filter(_.startsWith(ManifestPrefix))
-      .map(_.stripPrefix(ManifestPrefix).stripPrefix("v").toLong)
-      .filter(v => v < keepManifests.head)
-      .foreach { v =>
-        fs.delete(new Path(root, s"${ManifestPrefix}v$v"), false)
-        fs.delete(new Path(root, s"${DeltasPrefix}v$v"), false)
-        fs.delete(new Path(root, s"_COMMIT_v$v"), false)
-        fs.delete(new Path(root, s"${TagPrefix}v$v"), false)
-      }
+    val live: Set[Long] = keep.toSet ++ keep.flatMap(commitAt).flatMap(c =>
+      c.manifest.values ++ c.deltas.values.flatten)
+    // never touch versions ABOVE the current one: v=cur+1 is a stage that
+    // may still publish
+    val deletable = fs.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
+      .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
+      .filter(v => v <= cur && !live.contains(v))
+    // entries first: a reader never finds an entry whose data is gone. An
+    // entry older than the window goes even when its dir stays live
+    // through a newer manifest.
+    logVersions(fs, commitsDir).filter(_ < keep.head)
+      .foreach(v => fs.delete(new Path(commitsDir, v.toString), false))
+    deletable.foreach(v => fs.delete(new Path(root, s"v=$v"), true))
     deletable.sorted
   }
 
@@ -1026,7 +992,7 @@ final class KeyedTable(
     * historical versions (reads stay correct but each version dir adds file
     * listings and small files); compaction resets the spread to 1 and makes
     * the next vacuum reclaim everything older. Crash-safe like every commit
-    * here: data lands in v=N+1 before the pointer swaps.
+    * here: data lands in v=N+1 before its log entry.
     */
   def compact(): Long = {
     require(exists, s"cannot compact non-existent table at $root")
@@ -1095,11 +1061,10 @@ final class KeyedTable(
   def deleteKeys(keysDf: DataFrame): Long = {
     require(exists, s"KeyedTable at $root has no committed version")
     val k = keysDf.select(keys.map(col).toIndexedSeq: _*).distinct()
-    if (!bucketed) {
-      val next = currentVersion + 1
-      reserveVersion(next)
-      writeVersion(KeyedTable.withoutKeys(current, k, keys, broadcastKeys = true), next).publish()
-    } else if (morActive) {
+    if (!bucketed)
+      writeVersion(KeyedTable.withoutKeys(current, k, keys, broadcastKeys = true),
+        currentVersion + 1).publish()
+    else if (morActive) {
       // MOR delete: pure tombstone segment — write cost ∝ deleted keys
       val sch = storedSchema.getOrElse(current.schema)
       val tombRows = sch.fields.filterNot(f => keys.contains(f.name))
@@ -1139,21 +1104,16 @@ final class KeyedTable(
 
   /** Stage one MOR delta segment as version N+1: the batch's rows (and
     * tombstones) land bucket-routed under `v=N+1`, base manifest pointers
-    * are COPIED UNCHANGED, and the delta sidecar appends N+1 to each
+    * are COPIED UNCHANGED, and the entry's delta chains append N+1 to each
     * written bucket's chain. Write cost ∝ the batch — never the table.
     */
   private def stageDelta(deltaRows: DataFrame, tag: Option[String]): Staged = {
     val next = currentVersion + 1
-    reserveVersion(next)
+    val prev = commitAt(next - 1).getOrElse(Commit())
     writeBucketed(deltaRows, next)
     val written = listBuckets(fs, new Path(s"$root/v=$next"))
-    val prevD = deltaMap
-    val nextD = prevD ++ written.map(b => b -> (prevD.getOrElse(b, Seq.empty) :+ next))
-    writeManifest(fs, new Path(root, s"${ManifestPrefix}v$next"), manifest)
-    if (nextD.nonEmpty)
-      writeDeltaMap(fs, new Path(root, s"${DeltasPrefix}v$next"), nextD)
-    tag.foreach(t => writeText(fs, new Path(root, s"${TagPrefix}v$next"), t))
-    staged(next, None)
+    val nextD = prev.deltas ++ written.map(b => b -> (prev.deltas.getOrElse(b, Seq.empty) :+ next))
+    staged(next, Commit(tag, prev.manifest, nextD), None)
   }
 
   /** Threshold compaction of the MOR read tax: rewrite ONLY the buckets
@@ -1180,45 +1140,78 @@ final class KeyedTable(
   private def stageBucketsRewrite(touched: Seq[Int], newData: DataFrame,
                                   tag: Option[String] = None): Staged = {
     val next = currentVersion + 1
-    reserveVersion(next)
+    val prev = commitAt(next - 1).getOrElse(Commit())
     writeBucketed(newData, next)
     val written = listBuckets(fs, new Path(s"$root/v=$next"))
-    val prev = manifest
-    val nextManifest = (prev -- touched) ++ written.map(_ -> next).toMap
-    writeManifest(fs, new Path(root, s"${ManifestPrefix}v$next"), nextManifest)
     // a CoW rewrite of a MOR bucket absorbed its delta chain (the input
     // was the coalesced read) — clear it; untouched chains carry forward
-    if (morActive) {
-      val nextD = deltaMap -- touched
-      if (nextD.nonEmpty)
-        writeDeltaMap(fs, new Path(root, s"${DeltasPrefix}v$next"), nextD)
-    }
-    tag.foreach(t => KeyedTable.writeText(fs, new Path(root, s"${TagPrefix}v$next"), t))
-    staged(next, None)
+    staged(next, Commit(tag, (prev.manifest -- touched) ++ written.map(_ -> next),
+      prev.deltas -- touched), None)
   }
 }
 
 object KeyedTable {
-  val CurrentMarker = "_CURRENT"
+  /** The on-disk layout of a table's commit metadata: 2 is the
+    * `_commits/N` log. Directories that outlive a JVM name it, so one
+    * written under another layout is rebuilt, never read.
+    */
+  val LayoutVersion = 2
+  val CommitsDir = "_commits"
+  val StageToken = "_STAGE"
   val BucketsMarker = "_BUCKETS"
   val SchemaMarker = "_SCHEMA"
-  val ManifestPrefix = "_MANIFEST_"
   val BucketCol = "__bucket"
   val RangeColMarker = "_RANGECOL"
   val StatsColsMarker = "_STATSCOLS"
-  val TagPrefix = "_TAG_"
   val BoundsDir = "_bounds"
   val StatsDir = "_stats"
   val MorMarker = "_MORMODE"
-  val DeltasPrefix = "_DELTAS_"
   val TombCol = "__tomb"
   val DeltaVerCol = "__dv"
 
   /** A written, unpublished version of a table ([[KeyedTable.stageMerge]]).
-    * `publish()` swaps the table's pointer to [[version]] and returns it.
+    * `publish()` creates the table's log entry [[version]] and returns it.
     */
-  final class Staged private[KeyedTable] (val version: Long, swap: () => Unit) {
-    def publish(): Long = { swap(); version }
+  final class Staged private[KeyedTable] (val version: Long, commit: () => Unit) {
+    def publish(): Long = { commit(); version }
+  }
+
+  /** The body of a log entry: what version N records beside its data dir.
+    * One line per fact: `tag=…`, `bucket=b,v` per manifest bucket, and
+    * `deltas=b,v1,v2,…` per merge-on-read delta chain (ascending). An
+    * untagged, unbucketed version's body is empty.
+    */
+  private final case class Commit(tag: Option[String] = None, manifest: Map[Int, Long] = Map.empty,
+                                  deltas: Map[Int, Seq[Long]] = Map.empty) {
+    def render: String = (tag.map("tag=" + _) ++
+      manifest.toSeq.sorted.map { case (b, v) => s"bucket=$b,$v" } ++
+      deltas.toSeq.sortBy(_._1).map { case (b, vs) => (b +: vs).mkString("deltas=", ",", "") }
+    ).mkString("\n")
+  }
+
+  private object Commit {
+    /** A body that does not parse is external damage: fail loudly, naming
+      * the entry, rather than read a version with a partial manifest.
+      */
+    def parse(p: Path, body: String): Commit = {
+      def corrupt = new IllegalStateException(
+        s"corrupt commit log entry $p (content: '${body.take(40)}') — repair manually")
+      def longs(csv: String) = csv.split(",").toSeq.map(_.toLongOption.getOrElse(throw corrupt))
+      body.split("\n").filter(_.nonEmpty).foldLeft(Commit()) { (c, line) =>
+        line.split("=", 2) match {
+          case Array("tag", t) => c.copy(tag = Some(t))
+          case Array("bucket", bv) => longs(bv) match {
+            case Seq(b, v) => c.copy(manifest = c.manifest + (b.toInt -> v))
+            case _ => throw corrupt
+          }
+          case Array("deltas", bvs) => longs(bvs) match {
+            case b +: vs if vs.nonEmpty => c.copy(deltas = c.deltas + (b.toInt -> vs))
+            case _ => throw corrupt
+          }
+          case _ => throw corrupt
+        }
+      }
+    }
   }
 
   /** The merge as a pure logical plan: rows of `current` whose key is NOT in
@@ -1310,145 +1303,6 @@ object KeyedTable {
       s"schema drift is additive-only; type conflicts: ${conflicts.mkString("; ")}")
   }
 
-  /** Commit seam: publishing version `next` must be a CONDITIONAL swap of
-    * the current pointer from `expectedCurrent` — never a blind write. On
-    * HDFS/local FS [[RenameCommit]] approximates this with read-check +
-    * atomic rename (the residual check-then-rename window is microseconds
-    * and single-writer deployments never race it); [[ConditionalPutCommit]]
-    * closes that window with create-exclusive claim markers — the
-    * conditional-put discipline an object store (S3 `If-None-Match`, GCS
-    * `x-goog-if-generation-match`, Azure ETag) enforces natively. Both
-    * throw `ConcurrentModificationException` on precondition failure —
-    * version data dirs are immutable either way, so a rejected commit
-    * leaves the table readable at `expectedCurrent` and the loser simply
-    * retries its merge from the new snapshot.
-    */
-  trait CommitProtocol {
-    /** Called BEFORE version `next`'s data dir is written. A protocol that
-      * can exclusively claim the transition does it HERE — so of two racers
-      * staged at the same snapshot, the loser aborts before its
-      * `write.mode("overwrite")` can clobber the winner's already-written
-      * v=next data (publishing last is too late to protect the files).
-      * Default no-op: [[RenameCommit]] keeps its documented
-      * single-writer-deployment window.
-      */
-    def reserve(fs: FileSystem, marker: Path, expectedCurrent: Long, next: Long,
-                owner: String = ""): Unit = ()
-    /** `owner` identifies the writer for same-JVM claim bookkeeping (a
-      * [[KeyedTable]] passes its per-instance token). Empty string means
-      * "identify by current thread" — adequate for direct single-threaded
-      * callers; concurrent writers in one JVM MUST pass distinct tokens.
-      */
-    def publish(fs: FileSystem, marker: Path, expectedCurrent: Long, next: Long,
-                owner: String = ""): Unit
-  }
-
-  /** Rename-based commit for filesystems with atomic rename. Detects a
-    * lost-update race (another committer already advanced the pointer) by
-    * re-reading before the swap.
-    */
-  object RenameCommit extends CommitProtocol {
-    def publish(fs: FileSystem, marker: Path, expectedCurrent: Long, next: Long,
-                owner: String = ""): Unit = {
-      val cur = readPointer(fs, marker).getOrElse(0L)
-      if (cur != expectedCurrent) throw new java.util.ConcurrentModificationException(
-        s"commit of v$next expected current v$expectedCurrent but found v$cur — " +
-          "a concurrent committer won; re-read the snapshot and retry the merge")
-      writePointer(fs, marker, next)
-    }
-  }
-
-  /** Conditional-put commit: closes [[RenameCommit]]'s residual
-    * check-then-rename window with the conditional-create discipline an
-    * object store offers natively (S3 `If-None-Match: *`, GCS
-    * `x-goog-if-generation-match: 0`, Azure `If-None-Match`). The
-    * transition is CLAIMED in [[reserve]] — create-exclusive on
-    * `_COMMIT_v{next}`, called by the table BEFORE any v=next data is
-    * written — so of two racers that both read `expectedCurrent`, exactly
-    * one gets to write the version dir and the pointer; the loser throws
-    * before it can overwrite the winner's files (a publish-time-only check
-    * would reject the loser's POINTER but not un-clobber the DATA its
-    * `mode("overwrite")` write already replaced). The claim file records
-    * the predecessor version, doubling as a commit-log entry.
-    *
-    * Crash contract: a committer that dies between claim and pointer write
-    * leaves `_COMMIT_v{next}` present with the pointer unadvanced — the
-    * table stays readable at `expectedCurrent`, and NO later committer can
-    * silently publish over the half-finished transition (their claim
-    * fails); recovery is explicit (inspect the claim, roll the pointer
-    * forward or delete the claim + its version dir), exactly the semantics
-    * of an orphaned conditional put on a versioned object key. On the local
-    * FS, Hadoop's exclusive create is check-then-create rather than truly
-    * atomic — this class MODELS the store's primitive for test/local runs;
-    * an S3/GCS implementation swaps the create call for the store's real
-    * preconditioned put and keeps everything else.
-    */
-  object ConditionalPutCommit extends CommitProtocol {
-    def claimPath(marker: Path, next: Long): Path =
-      new Path(marker.getParent, s"_COMMIT_v$next")
-    // Transitions this process has reserved, keyed claim → OWNER token —
-    // the local stand-in for the token/ETag a real store's conditional put
-    // hands back to its caller. The owner lets reserve distinguish "the
-    // holder's own retry" (same token — idempotent no-op) from "a second
-    // same-JVM writer racing the same transition" (different token — must
-    // lose HERE, before its data write; a bare key-set couldn't tell them
-    // apart and would let both writers overwrite v=next data).
-    private val held = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    private def heldKey(marker: Path, next: Long) = s"$marker#v$next"
-    // Empty owner → identify by thread: sequential single-threaded callers
-    // (tests, ad-hoc repair) keep retry idempotence; concurrent writers get
-    // distinct tokens even if they never passed one.
-    private def effOwner(owner: String): String =
-      if (owner.nonEmpty) owner else "jvm-thread-" + Thread.currentThread().getId
-    /** Claim the transition BEFORE any data write: exclusive create of the
-      * claim file — of two racers staged at `expectedCurrent`, exactly one
-      * wins; the loser throws here, before it can touch the v=next dir.
-      * Idempotent for the claim's OWNER (a retry after a failed data write
-      * still holds its claim); any other owner — same JVM or not — loses.
-      */
-    override def reserve(fs: FileSystem, marker: Path, expectedCurrent: Long, next: Long,
-                         owner: String = ""): Unit = {
-      val key = heldKey(marker, next)
-      val who = effOwner(owner)
-      val prior = held.get(key)
-      if (prior == who) return // the holder's own retry
-      if (prior != null) throw new java.util.ConcurrentModificationException(
-        s"commit of v$next: this transition is already claimed by writer $prior " +
-          "in this JVM; re-read the snapshot and retry")
-      val cur = readPointer(fs, marker).getOrElse(0L)
-      if (cur != expectedCurrent) throw new java.util.ConcurrentModificationException(
-        s"commit of v$next expected current v$expectedCurrent but found v$cur — " +
-          "a concurrent committer won; re-read the snapshot and retry the merge")
-      // Win the in-JVM slot FIRST: the local FS's exclusive create is
-      // check-then-create, so two same-JVM threads could both pass it.
-      val raced = held.putIfAbsent(key, who)
-      if (raced != null && raced != who) throw new java.util.ConcurrentModificationException(
-        s"commit of v$next: writer $raced claimed this transition concurrently; " +
-          "re-read the snapshot and retry")
-      val claim = claimPath(marker, next)
-      try {
-        val out = try fs.create(claim, false) catch {
-          case e: java.io.IOException => throw new java.util.ConcurrentModificationException(
-            s"commit of v$next lost the conditional put on $claim (${e.getMessage}) — " +
-              "another committer claimed this transition; re-read the snapshot and retry")
-        }
-        // claim content: predecessor version + owner token (commit-log entry)
-        try out.write(s"$expectedCurrent $who".getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-      } catch { case e: Throwable => held.remove(key, who); throw e }
-    }
-    def publish(fs: FileSystem, marker: Path, expectedCurrent: Long, next: Long,
-                owner: String = ""): Unit = {
-      // standalone publish (no prior reserve) claims now — still exclusive
-      reserve(fs, marker, expectedCurrent, next, owner)
-      val cur = readPointer(fs, marker).getOrElse(0L)
-      if (cur != expectedCurrent) throw new java.util.ConcurrentModificationException(
-        s"commit of v$next expected current v$expectedCurrent but found v$cur")
-      writePointer(fs, marker, next)
-      held.remove(heldKey(marker, next))
-    }
-  }
-
   def apply(spark: SparkSession, root: String, keys: Seq[String],
             orderCol: Option[String] = None, numBuckets: Int = 0,
             rangeCol: Option[String] = None, statsCols: Seq[String] = Nil,
@@ -1464,6 +1318,12 @@ object KeyedTable {
       finally in.close()
     }
 
+  private def writeFile(fs: FileSystem, p: Path, content: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(content.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
   /** Write-temp-then-rename — a crash mid-write leaves the old file intact
     * (an in-place truncating create could be observed empty). On the local
     * FS rename won't replace an existing target, so the old file is deleted
@@ -1471,19 +1331,48 @@ object KeyedTable {
     */
   private[engine] def writeText(fs: FileSystem, p: Path, content: String): Unit = {
     val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    writeFile(fs, tmp, content)
     if (fs.exists(p)) fs.delete(p, false)
     if (!fs.rename(tmp, p))
       throw new java.io.IOException(s"atomic rename $tmp -> $p failed")
   }
 
-  /** Absent file → None (normal bootstrap / crash-window state, where the
-    * version dirs still exist and [[KeyedTable.overwrite]] refuses to
-    * clobber them). A file that EXISTS but doesn't parse is external
-    * corruption — fail loudly; treating it as absent would let the next
-    * merge silently re-bootstrap over live data.
+  /** The entries of the create-once log in `dir`, ascending. An entry is
+    * named by its number; names starting with "." are the temp files of
+    * entries being written (or of writes that lost or crashed) and
+    * checksums. Any other name is damage and fails loudly.
+    */
+  private[engine] def logVersions(fs: FileSystem, dir: Path): Seq[Long] = {
+    val names = try fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    names.filterNot(_.startsWith(".")).map(n => n.toLongOption.getOrElse(
+      throw new IllegalStateException(s"corrupt commit log $dir: entry '$n' is not a version number")))
+      .sorted
+  }
+
+  /** Serializes [[createEntry]]'s renames within the JVM: the local FS
+    * checks the target and then renames, which two threads can interleave.
+    */
+  private val renameLock = new Object
+
+  /** Create entry `n` of the log in `dir` holding `body`, only if no entry
+    * `n` exists. The body goes to a temp file named for this call, which is
+    * then renamed to `n`; Hadoop's rename refuses an existing target, so of
+    * two writers of one entry exactly one wins and the other gets
+    * `ConcurrentModificationException`.
+    */
+  private[engine] def createEntry(fs: FileSystem, dir: Path, n: Long, body: String): Unit = {
+    val tmp = new Path(dir, s".$n.${java.util.UUID.randomUUID()}.tmp")
+    writeFile(fs, tmp, body)
+    if (!renameLock.synchronized(fs.rename(tmp, new Path(dir, n.toString)))) {
+      fs.delete(tmp, false)
+      throw new java.util.ConcurrentModificationException(
+        s"$dir/$n exists: another writer committed entry $n first; re-read and retry")
+    }
+  }
+
+  /** Absent file → None. A file that EXISTS but doesn't parse is external
+    * corruption — fail loudly rather than fall back to a default.
     */
   private def readPointer(fs: FileSystem, p: Path): Option[Long] =
     readText(fs, p).map(t => t.trim.toLongOption.getOrElse(
@@ -1492,30 +1381,6 @@ object KeyedTable {
 
   private def writePointer(fs: FileSystem, p: Path, v: Long): Unit =
     writeText(fs, p, v.toString)
-
-  private def readManifest(fs: FileSystem, p: Path): Map[Int, Long] =
-    readText(fs, p).map(
-      _.split("\n").map(_.trim).filter(_.nonEmpty)
-        .map { line => val Array(b, v) = line.split(","); b.toInt -> v.toLong }.toMap
-    ).getOrElse(Map.empty)
-
-  private def writeManifest(fs: FileSystem, p: Path, m: Map[Int, Long]): Unit =
-    writeText(fs, p, m.toSeq.sorted.map { case (b, v) => s"$b,$v" }.mkString("\n"))
-
-  /** Delta sidecar format mirrors the manifest: one line per bucket,
-    * `bucket,v1,v2,...` with the chain ascending. Absent file = no deltas.
-    */
-  private def readDeltaMap(fs: FileSystem, p: Path): Map[Int, Seq[Long]] =
-    readText(fs, p).map(
-      _.split("\n").map(_.trim).filter(_.nonEmpty).map { line =>
-        val parts = line.split(",")
-        parts.head.toInt -> parts.tail.map(_.toLong).toSeq
-      }.toMap
-    ).getOrElse(Map.empty)
-
-  private def writeDeltaMap(fs: FileSystem, p: Path, m: Map[Int, Seq[Long]]): Unit =
-    writeText(fs, p, m.toSeq.sortBy(_._1)
-      .map { case (b, vs) => (b +: vs).mkString(",") }.mkString("\n"))
 
   private def listBuckets(fs: FileSystem, dir: Path): Seq[Int] =
     if (!fs.exists(dir)) Seq.empty

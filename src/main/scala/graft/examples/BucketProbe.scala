@@ -41,18 +41,18 @@ object BucketProbe {
     println(s"BP empty bootstrap: exists=${te.exists} count=${te.current.count()}")
     te.merge(Seq(("a", 1, 1)).toDF("id","ver","v"))
     println(s"BP merge after empty bootstrap: count=${te.current.count()}")
-    // probe: corrupt _CURRENT (external damage) → loud failure, no silent re-bootstrap
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(er, "_CURRENT"), "garbage!!")
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(er, "._CURRENT.crc"))
+    // probe: corrupt log entry (external damage) → loud failure naming the entry
+    val entry = java.nio.file.Paths.get(er, KeyedTable.CommitsDir, te.currentVersion.toString)
+    java.nio.file.Files.writeString(entry, "garbage!!")
+    java.nio.file.Files.deleteIfExists(entry.resolveSibling(s".${entry.getFileName}.crc"))
     val tc = KeyedTable(spark, er, Seq("id"), Some("ver"), numBuckets = 4)
-    try { tc.exists; println("BP corrupt pointer: NO EXCEPTION (bad)") }
-    catch { case e: IllegalStateException => println(s"BP corrupt pointer: loud failure ok — ${e.getMessage.take(60)}") }
-    // probe: ABSENT _CURRENT with live version dirs (crash mid-swap) → bootstrap refused
-    java.nio.file.Files.delete(java.nio.file.Paths.get(er, "_CURRENT"))
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(er, "._CURRENT.crc"))
+    try { tc.current; println("BP corrupt log entry: NO EXCEPTION (bad)") }
+    catch { case e: IllegalStateException => println(s"BP corrupt log entry: loud failure ok — ${e.getMessage.take(60)}") }
+    // probe: LOST commit log with live version dirs → bootstrap refused
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(er, KeyedTable.CommitsDir))
     val tm = KeyedTable(spark, er, Seq("id"), Some("ver"), numBuckets = 4)
-    try { tm.merge(Seq(("x", 1, 0)).toDF("id","ver","v")); println("BP missing pointer: MERGE CLOBBERED (bad)") }
-    catch { case e: IllegalStateException => println(s"BP missing pointer: bootstrap refused ok — ${e.getMessage.take(60)}") }
+    try { tm.merge(Seq(("x", 1, 0)).toDF("id","ver","v")); println("BP lost log: MERGE CLOBBERED (bad)") }
+    catch { case e: IllegalStateException => println(s"BP lost log: bootstrap refused ok — ${e.getMessage.take(60)}") }
     spark.stop()
   }
 }

@@ -277,7 +277,7 @@ object Dedup {
     * (the df² hot-spots) out of the candidate stream entirely and is the
     * 100 TB path; on small-vocabulary corpora where every shingle is common
     * the prune rate collapses and [[jaccardPairs]] wins. Both are exact —
-    * `DedupSpec` pins them equal.
+    * `OperatorsSpec` pins them equal.
     */
   def jaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
                          n: Int, tau: Double,
@@ -540,7 +540,7 @@ object Dedup {
     * buckets as (band_idx, band_val, width) rows with width > cap).
     *
     * Row-identical to `(minhashPairs(df, …, maxBucketWidth = cap),
-    * overWideBuckets(df, …, maxBucketWidth = cap))` — DedupSpec pins both —
+    * overWideBuckets(df, …, maxBucketWidth = cap))` — CorpusOpsSpec pins both —
     * but the unfused pair paid the WHOLE shingle → 32-permutation-minhash →
     * band pipeline twice (the report re-derived [[bandIndex]] from
     * scratch). Here the banded bucket relation, with its per-bucket width,
@@ -883,7 +883,7 @@ object Dedup {
     * at its minimum id, so the label read-off is one aggregation.
     *
     * Same output contract as [[dupClusters]] — (id, cluster_id = component
-    * min) — pinned equal in DedupSpec, including on a chain longer than
+    * min) — pinned equal in CorpusOpsSpec, including on a chain longer than
     * dupClusters' default round budget.
     */
   def dupClustersStar(docs: DataFrame, idCol: String, pairs: DataFrame,

@@ -227,7 +227,7 @@ object Relational {
     * (`InsertWindowGroupLimit`), so each map partition forwards at most `n`
     * rows per group into the exchange — at 100 TB the shuffle carries
     * O(groups·n), not the corpus, and no per-group array ever materializes
-    * on the heap. CapPerGroupSpec pins the `WindowGroupLimit` operator into
+    * on the heap. RelationalSpec pins the `WindowGroupLimit` operator into
     * the physical plan so a regression back to a full window sort is a test
     * failure, not a silent 100× shuffle.
     */
@@ -296,7 +296,7 @@ object Relational {
     * predicates on either column — the standard multi-column layout trick
     * a 100 TB table needs where a single-column sort gives one dimension
     * perfect clustering and leaves the other shuffled across every file
-    * (ZorderSpec measures exactly that difference).
+    * (RelationalSpec measures exactly that difference).
     *
     * Pure shift/mask/or expression tree — whole-stage codegen'd, no UDF;
     * 2·bits fixed terms. Callers bucket unbounded domains first

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * too large for exact answers: HyperLogLog++ distinct counts, quantile
   * sketches, and heavy hitters. All are Spark built-ins (mergeable,
   * map-side-combining, bounded-memory) surfaced with their error knobs;
-  * `SketchesSpec` asserts the error bounds against exact answers. Results
+  * `SamplingSpec` asserts the error bounds against exact answers. Results
   * are engine-internal (sketch layouts differ across engines), so queries
   * over these register rows-only driver checks, never DuckDB hash oracles.
   */

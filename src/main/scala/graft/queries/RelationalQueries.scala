@@ -424,7 +424,7 @@ object RelationalQueries {
 
     // ----- z-order (Morton) clustering value ---------------------------------
     // Bit-interleaved (part, supplier) cell — range-partition/sort by zval
-    // and per-file min/max statistics prune on BOTH dimensions (ZorderSpec
+    // and per-file min/max statistics prune on BOTH dimensions (RelationalSpec
     // measures the locality). Oracle generated from the same bit terms.
     "q_zorder" -> Q(
       (s, d) => Td.lineitem(s, d).select(

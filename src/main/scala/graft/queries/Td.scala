@@ -110,7 +110,9 @@ object Td {
     * changed data or parameters rebuild instead of probing stale cells.
     */
   /** Index-root naming + install discipline shared by the stored indexes:
-    * the root embeds a format version, the source parquet's MODIFICATION
+    * the root embeds a format version, the KeyedTable layout version (the
+    * roots outlive the JVM, and a root written under another table layout
+    * must be rebuilt, never read), the source parquet's MODIFICATION
     * TIME (regenerated data gets a fresh root even at an equal row count),
     * and the row count; the build lands in a sibling temp dir and installs
     * with one atomic directory rename, so a concurrent builder (parallel
@@ -132,7 +134,8 @@ object Td {
     val mtime = sourceToken(s, d, table)
     val cnt = SessionPlanCache.getOrElseUpdate(s, s"$d/$table.parquet", mtime, ("rootCount", kind, fmt))(n)
     val safe = d.replaceAll("[^A-Za-z0-9._-]", "_")
-    System.getProperty("java.io.tmpdir") + s"/graft-$kind-f$fmt-$safe-m$mtime-n$cnt"
+    val layout = graft.engine.KeyedTable.LayoutVersion
+    System.getProperty("java.io.tmpdir") + s"/graft-$kind-f$fmt-k$layout-$safe-m$mtime-n$cnt"
   }
 
   /** Build into `root + tmp-suffix`, then atomically rename into `root`.
@@ -158,14 +161,16 @@ object Td {
       // root can first exist. Running it on every accessor call (pre-r7)
       // paid a listStatus + recursive delete per probe and widened the
       // window for deleting a root a concurrent process was still mid-probe.
-      // Staleness matches kind + source dir with ANY format/mtime/count —
-      // `f\d+` in the pattern is what reclaims superseded-FORMAT roots
-      // (e.g. ivfpq-f1 after an f2 bump), which a literal prefix match
-      // left accumulating in tmpdir forever.
+      // Staleness matches kind + source dir with ANY format/layout/mtime/
+      // count — `f\d+` in the pattern is what reclaims superseded-FORMAT
+      // roots (e.g. ivfpq-f1 after an f2 bump), which a literal prefix
+      // match left accumulating in tmpdir forever; the optional `k\d+`
+      // reclaims roots of another table layout, named with or without it.
       val name = rootPath.getName
       val Q = java.util.regex.Pattern.quote _
-      "^(graft-[A-Za-z0-9]+)-f\\d+-(.*)-m\\d+-n\\d+$".r.findFirstMatchIn(name).foreach { m =>
-        val staleRe = ("^" + Q(m.group(1)) + "-f\\d+-" + Q(m.group(2)) + "-m\\d+-n\\d+$").r
+      val fmtRe = "-f\\d+(?:-k\\d+)?-"
+      ("^(graft-[A-Za-z0-9]+)" + fmtRe + "(.*)-m\\d+-n\\d+$").r.findFirstMatchIn(name).foreach { m =>
+        val staleRe = ("^" + Q(m.group(1)) + fmtRe + Q(m.group(2)) + "-m\\d+-n\\d+$").r
         val parent = rootPath.getParent
         if (fs.exists(parent)) fs.listStatus(parent).foreach { st =>
           val n = st.getPath.getName

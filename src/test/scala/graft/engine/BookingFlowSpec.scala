@@ -160,7 +160,10 @@ class BookingFlowSpec extends SparkSpec {
       writeFile(rawDir, name, (dimHeader +: Seq(row)).mkString("\n"))
     }
     def factRows = fact.current.collect().map(_.toString).sorted.toSeq
-    def watermark = if (Files.exists(Paths.get(ckpt))) Files.readString(Paths.get(ckpt)) else ""
+    // the feed watermark: the highest entry of the checkpoint's log
+    def watermark = Option(new java.io.File(ckpt).listFiles()).toSeq.flatten
+      .map(_.getName).filterNot(_.startsWith(".")).map(_.toLong).maxOption
+      .fold("")(k => Files.readString(Paths.get(ckpt, k.toString)))
     def assertFailedDimOnly(results: Seq[Orchestrator.StepResult]) = {
       assert(results.map(r => (r.name, r.succeeded)) == Seq("LoadCustomerDim" -> false), results)
       assert(results.head.error.isDefined)
@@ -207,6 +210,43 @@ class BookingFlowSpec extends SparkSpec {
     assert(run().forall(_.succeeded))
     assert(fact.currentVersion == version + 1, "no feed file left to apply")
   }
+
+  test("a steady runAll epoch runs a pinned number of Spark jobs") {
+    val base = tmpDir("epoch-jobs")
+    val rawDir = s"$base/customer-raw-data"
+    val feedDir = s"$base/booking-feed"
+    val dim = KeyedTable(spark, s"$base/dim_customer", Seq("customer_id"))
+    val fact = KeyedTable(spark, s"$base/fact_booking", Seq("booking_id"), Some("updated_at"))
+    val agg = KeyedTable(spark, s"$base/agg", Seq("country"))
+    val feed = new ChangeFeed(spark, feedDir, Schemas.bookingRaw, s"$base/feed.ckpt")
+    def run() = BookingFlow.runAll(spark, rawDir, s"$base/customer-data-archive", feed, dim, fact, agg)
+    writeFile(rawDir, "customer_base.csv",
+      (dimHeader +: Seq(dimRow(1, "USA"), dimRow(2, "USA"), dimRow(3, "Japan"))).mkString("\n"))
+    writeFile(feedDir, "batch1.json", Seq(
+      bookingJson("bk1", 1, "Confirmed", 666.5, "2025-07-14T09:30:00+00:00", "2025-07-14T09:30:01+00:00"),
+      bookingJson("bk2", 2, "Confirmed", 100.0, "2025-07-15T09:30:00+00:00", "2025-07-15T09:30:01+00:00"),
+    ).mkString("\n"))
+    assert(run().forall(_.succeeded))
+    // one epoch of the trickle shape: a dim delta CSV and a feed batch with
+    // an update and an insert. The commit log is driver-side file work, so
+    // the count is the same whatever the tables' commit files look like.
+    writeFile(rawDir, "customer_delta1.csv",
+      (dimHeader +: Seq(dimRow(1, "USA", city = "NewCity"))).mkString("\n"))
+    writeFile(feedDir, "batch2.json", Seq(
+      bookingJson("bk2", 2, "Cancelled", 100.0, "2025-07-15T09:30:00+00:00", "2025-07-20T00:00:00+00:00"),
+      bookingJson("bk3", 3, "Confirmed", 250.0, "2025-07-16T09:30:00+00:00", "2025-07-16T09:30:01+00:00"),
+    ).mkString("\n"))
+    val (results, jobs) = jobsOf(run())
+    assert(results.forall(_.succeeded), results)
+    assert(fact.currentVersion == 2 && dim.currentVersion == 2 && fact.current.count() == 3)
+    assert(jobs == EpochJobs, s"a steady runAll epoch ran $jobs Spark jobs, pinned at $EpochJobs")
+  }
+
+  /** Spark jobs of one steady [[BookingFlow.runAll]] epoch over the fixture
+    * above: the dim CSV load and merge, the feed read and fact merge, and
+    * the aggregate refresh.
+    */
+  private val EpochJobs = 11
 
   test("bookingTransform is split → align: no join, rows of the lookup → flag formulation") {
     val base = tmpDir("transform")

@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{lit, when}
 
@@ -61,34 +60,6 @@ class SessionPlanCacheSpec extends SparkSpec {
       assert(t.atVersion(2) eq cur, "atVersion at the current version shares the current read")
       assert(v1.select("id", "v").as[(String, Int)].collect().toSet == Set(("a", 1), ("b", 2)))
       assert(cur.select("id", "v").as[(String, Int)].collect().toSet == Set(("a", 10), ("b", 2)))
-    }
-  }
-
-  /** The Spark jobs `body` starts on this thread. Listener events arrive
-    * asynchronously, so a marker job run after `body` is awaited first.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val prop = "graft.spec.probe"
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(prop))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(prop, tag)
-      val out = body
-      sc.setLocalProperty(prop, s"$tag-marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(s"$tag-marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(s"$tag-marker"), "listener bus did not deliver the marker job")
-      (out, seen.toArray.count(_ == tag))
-    } finally {
-      sc.setLocalProperty(prop, null)
-      sc.removeSparkListener(listener)
     }
   }
 
