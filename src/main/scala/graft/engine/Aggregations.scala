@@ -13,13 +13,16 @@ import org.apache.spark.sql.functions._
   *  - `confirmed_avg_amount`/`cancelled_avg_amount`: CASE '''without ELSE'''
   *    → avg over the matching rows only, NULL when a group has none. Spark's
   *    `avg` skips nulls identically.
-  *  - `COUNT(DISTINCT customer_id)` stays exact (not approx).
+  *  - `COUNT(DISTINCT customer_id)` stays exact (not approx): the size of
+  *    the group's customer set, as a long. Sets skip NULL like the count
+  *    does.
   *
   * Scale: dim is small → broadcast-hash join (explicit hint; AQE would also
   * pick it). The groupBy does partial (map-side) aggregation before the
-  * single shuffle on `country`; `countDistinct` triggers Catalyst's distinct
-  * rewrite (expand + two-phase agg) — the one extra shuffle here is inherent
-  * to exact distinct. Everything stays inside WholeStageCodegen.
+  * single shuffle on `country`. The distinct count rides that one pass as a
+  * per-country set, which holds at most the dim rows the join already
+  * broadcasts; `countDistinct` would make Catalyst expand every row and add
+  * a second shuffle stage.
   */
 object Aggregations {
 
@@ -84,7 +87,7 @@ object Aggregations {
         avg(ifStatus("Cancelled", amount.cast("double"))).as("cancelled_avg_amount"),
         min(amount).cast("decimal(18,2)").as("min_amount"),
         max(amount).cast("decimal(18,2)").as("max_amount"),
-        countDistinct(col("customer_id")).as("distinct_customers"),
+        size(collect_set(col("customer_id"))).cast("long").as("distinct_customers"),
         avg(coalesce(col("nights"), lit(0)).cast("double")).as("avg_stay_duration"),
       )
   }

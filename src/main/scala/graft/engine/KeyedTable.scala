@@ -1,7 +1,7 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -57,13 +57,12 @@ import java.nio.charset.StandardCharsets
   *    uses for shuffle partitioning, so keys distribute like a shuffle would.
   *  - The commit is create-once. A version's data and its stage token land
   *    first; then a temp file holding the entry's body (tag, manifest, delta
-  *    chains) is renamed to `_commits/N`. Hadoop's rename refuses an
-  *    existing target, so of two writers of one version exactly one
-  *    commits; the other gets `ConcurrentModificationException`. The current
-  *    version is the highest entry, so a reader never sees a table without
-  *    one. The rename is atomic on HDFS; the local FS checks the target and
-  *    then renames, so one JVM serializes its renames. An object store needs
-  *    its conditional put (`If-None-Match: *`) in place of the rename.
+  *    chains) becomes `_commits/N` only if no such entry exists: a hard
+  *    link on the local FS, a rename on HDFS, both atomic. Of two writers
+  *    of one version, in one process or several, exactly one commits; the
+  *    other gets `ConcurrentModificationException`. The current version is
+  *    the highest entry, so a reader never sees a table without one. An
+  *    object store needs its conditional put (`If-None-Match: *`) instead.
   *    Nothing claims N+1 before its data is written: a writer whose data
   *    write starts after another writer committed the same N+1 overwrites
   *    that version's files (its own publish then fails). The pipeline has
@@ -198,7 +197,7 @@ final class KeyedTable(
 
   /** Write `df` as unbucketed version `next`. */
   private def writeVersion(df: DataFrame, next: Long, tag: Option[String] = None): Staged = {
-    df.write.mode("overwrite").parquet(s"$root/v=$next")
+    writeParquet(df.write, s"$root/v=$next")
     staged(next, Commit(tag), Some(df.schema))
   }
 
@@ -328,7 +327,7 @@ final class KeyedTable(
     // forever (bounds are immutable). Require representative data up front.
     require(bounds.limit(1).count() > 0,
       s"range bootstrap needs ≥ 1 non-null $rc row to sample boundaries from")
-    bounds.coalesce(1).write.mode("overwrite").parquet(new Path(root, BoundsDir).toString)
+    writeParquet(bounds.coalesce(1).write, new Path(root, BoundsDir).toString)
   }
 
   /** bucket → version holding its current data (bucketed tables only). */
@@ -423,7 +422,12 @@ final class KeyedTable(
     // than the in-memory broadcast relation, so "bytes ≤ threshold" does
     // not strictly bound broadcast memory — it declines the obviously-
     // oversized cases, and AQE can still promote the plain join from
-    // runtime stats when the distinct keys turn out small. Threshold ≤ 0
+    // runtime stats when the distinct keys turn out small. Segments are
+    // zstd ([[KeyedTable.writeParquet]]), about 1.5× smaller on disk than
+    // the snappy this threshold was set against, so the bytes understate
+    // the in-memory size by that much more; the threshold stays, since the
+    // broadcast holds only the delta KEYS, a fraction of the segment rows
+    // these bytes measure. Threshold ≤ 0
     // (auto-broadcast disabled by the operator) declines the forced
     // broadcast too. Bytes are CACHED per delta-chain snapshot (r11
     // ADVICE): one epoch resolves the same table several times (maintain
@@ -522,7 +526,11 @@ final class KeyedTable(
       }
       writePointer(fs, new Path(root, BucketsMarker), numBuckets.toLong)
     }
-    writeText(fs, new Path(root, SchemaMarker), df.schema.json)
+    // rewritten only when it changes: writeText deletes the old file before
+    // renaming the new one in, and a reader of an empty version between the
+    // two would find no stored schema
+    val schemaPath = new Path(root, SchemaMarker)
+    if (!readText(fs, schemaPath).contains(df.schema.json)) writeText(fs, schemaPath, df.schema.json)
     if (!bucketed) writeVersion(df, next, tag)
     else {
       writeBucketed(df, next)
@@ -542,7 +550,7 @@ final class KeyedTable(
     val clustered = effectiveRangeCol
       .map(rc => routed.sortWithinPartitions(col(BucketCol), col(rc)))
       .getOrElse(routed)
-    clustered.write.partitionBy(BucketCol).mode("overwrite").parquet(s"$root/v=$next")
+    writeParquet(clustered.write.partitionBy(BucketCol), s"$root/v=$next")
     writeStats(next)
   }
 
@@ -561,10 +569,10 @@ final class KeyedTable(
     if (present.isEmpty) return
     val aggs = present.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
       count(lit(1)).as("cnt")
-    written.select((BucketCol +: present).map(col).toIndexedSeq: _*)
+    val stats = written.select((BucketCol +: present).map(col).toIndexedSeq: _*)
       .groupBy(col(BucketCol).cast("int").as("bucket"))
       .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/v=$next/$StatsDir")
+    writeParquet(stats.coalesce(1).write, s"$root/v=$next/$StatsDir")
   }
 
   /** The current snapshot's per-bucket stats relation — `(bucket, min_c,
@@ -1318,6 +1326,23 @@ object KeyedTable {
       finally in.close()
     }
 
+  /** The one parquet write of a table: version data, bucket dirs and delta
+    * segments, the stats sidecar and the range bounds all go through here.
+    * zstd writes about a third fewer bytes than Spark's default snappy on
+    * the booking fact and dim (SCALING.md, "Table file codec"). zstd-jni's
+    * buffer pool is off: it keeps soft-referenced buffers (~0.5 MB) live on
+    * the heap between writes. parquet caches one codec per JVM
+    * and zstd level, configured by its first user, so the setting holds
+    * where a table write is the JVM's first zstd use. Reads need no
+    * setting: parquet decodes each column chunk by the codec recorded in
+    * its footer, so versions written with another codec stay readable.
+    */
+  private def writeParquet(w: DataFrameWriter[Row], path: String): Unit =
+    w.mode("overwrite")
+      .option("compression", "zstd")
+      .option("parquet.compression.codec.zstd.bufferPool.enabled", "false")
+      .parquet(path)
+
   private def writeFile(fs: FileSystem, p: Path, content: String): Unit = {
     val out = fs.create(p, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
@@ -1350,25 +1375,30 @@ object KeyedTable {
       .sorted
   }
 
-  /** Serializes [[createEntry]]'s renames within the JVM: the local FS
-    * checks the target and then renames, which two threads can interleave.
-    */
-  private val renameLock = new Object
-
   /** Create entry `n` of the log in `dir` holding `body`, only if no entry
-    * `n` exists. The body goes to a temp file named for this call, which is
-    * then renamed to `n`; Hadoop's rename refuses an existing target, so of
-    * two writers of one entry exactly one wins and the other gets
-    * `ConcurrentModificationException`.
+    * `n` exists. The body goes to a temp file named for this call, which
+    * then becomes `n`; of two writers of one entry, in one process or
+    * several, exactly one wins and the other gets
+    * `ConcurrentModificationException`. On the local FS the entry is a hard
+    * link to the temp file: link(2) refuses an existing name atomically,
+    * where Hadoop's local rename checks the target and then renames. Other
+    * filesystems rename, which HDFS does atomically.
     */
   private[engine] def createEntry(fs: FileSystem, dir: Path, n: Long, body: String): Unit = {
     val tmp = new Path(dir, s".$n.${java.util.UUID.randomUUID()}.tmp")
+    val entry = new Path(dir, n.toString)
     writeFile(fs, tmp, body)
-    if (!renameLock.synchronized(fs.rename(tmp, new Path(dir, n.toString)))) {
-      fs.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"$dir/$n exists: another writer committed entry $n first; re-read and retry")
+    val created = fs match {
+      case local: LocalFileSystem =>
+        try {
+          java.nio.file.Files.createLink(local.pathToFile(entry).toPath, local.pathToFile(tmp).toPath)
+          true
+        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      case _ => fs.rename(tmp, entry)
     }
+    fs.delete(tmp, false)
+    if (!created) throw new java.util.ConcurrentModificationException(
+      s"$dir/$n exists: another writer committed entry $n first; re-read and retry")
   }
 
   /** Absent file → None. A file that EXISTS but doesn't parse is external

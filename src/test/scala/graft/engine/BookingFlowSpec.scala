@@ -246,7 +246,7 @@ class BookingFlowSpec extends SparkSpec {
     * above: the dim CSV load and merge, the feed read and fact merge, and
     * the aggregate refresh.
     */
-  private val EpochJobs = 11
+  private val EpochJobs = 10
 
   test("bookingTransform is split → align: no join, rows of the lookup → flag formulation") {
     val base = tmpDir("transform")

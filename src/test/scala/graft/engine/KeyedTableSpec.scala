@@ -210,7 +210,9 @@ class KeyedTableSpec extends SparkSpec {
     import s.implicits._
     // Every commit is a conditional put: entry N is created only if absent.
     // Two threads publish one staged version at once; both pass the stage's
-    // token check, so only the create-once rename can tell them apart.
+    // token check, so only the create-once entry can tell them apart. No
+    // lock serializes the writers: link(2) itself refuses an existing entry,
+    // in one process or across several.
     val t = KeyedTable(spark, tmpDir("ktcondput-window"), Seq("id"))
     t.overwrite(Seq(("a", 1)).toDF("id", "v"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -672,5 +674,77 @@ class KeyedTableSpec extends SparkSpec {
     assert(!t.exists)
     val e = intercept[IllegalStateException] { t.merge(Seq(("d", 4)).toDF("id", "v")) }
     assert(e.getMessage.contains("no commit log entry"), e.getMessage)
+  }
+
+  test("every parquet file a table writes is zstd: versions, buckets, deltas, stats, bounds") {
+    val s = spark
+    import s.implicits._
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    /** data file → codecs of its column chunks (none for a file of no rows) */
+    def codecs(root: String): Map[String, Set[String]] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(root)).filter(_.getName.endsWith(".parquet")).map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toURI), conf))
+        val cs = try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+          finally r.close()
+        f.getPath.stripPrefix(root) -> cs
+      }.toMap
+    }
+    def rows(ids: Range, v: Int) = ids.map(i => (i.toLong, s"n$i", v)).toDF("id", "name", "v")
+    def check(root: String, mustCover: String*): Unit = {
+      val files = codecs(root).filter(_._2.nonEmpty)
+      for (part <- mustCover) assert(files.keys.exists(_.contains(part)), s"no data file under $part: ${files.keys}")
+      val other = files.filter(_._2 != Set("ZSTD"))
+      assert(other.isEmpty, s"$root: files not zstd: $other")
+    }
+    // unbucketed: overwrite, merge, and a replace through the CDC path
+    val flat = tmpDir("ktcodec-flat")
+    val t0 = KeyedTable(spark, flat, Seq("id"))
+    t0.overwrite(rows(1 to 200, 1))
+    t0.merge(rows(150 to 250, 2))
+    t0.deleteKeys(Seq(1L).toDF("id"))
+    check(flat, "/v=1/", "/v=2/", "/v=3/")
+    // bucketed, range-routed, with a stats sidecar: bootstrap, then a rewrite
+    // of the touched buckets
+    val ranged = tmpDir("ktcodec-range")
+    val t1 = KeyedTable(spark, ranged, Seq("id"), numBuckets = 4, rangeCol = Some("id"), statsCols = Seq("v"))
+    t1.overwrite(rows(1 to 400, 1))
+    t1.merge(rows(390 to 410, 2))
+    check(ranged, s"/${KeyedTable.BoundsDir}/", s"/v=1/${KeyedTable.BucketCol}=", s"/v=2/${KeyedTable.BucketCol}=",
+      s"/v=1/${KeyedTable.StatsDir}/", s"/v=2/${KeyedTable.StatsDir}/")
+    // merge-on-read: delta segments, then compactDeltas folding them into base
+    val mor = tmpDir("ktcodec-mor")
+    val t2 = KeyedTable(spark, mor, Seq("id"), numBuckets = 4, statsCols = Seq("v"), mor = true)
+    t2.overwrite(rows(1 to 400, 1))
+    t2.merge(rows(1 to 40, 2))
+    t2.merge(rows(30 to 60, 3))
+    assert(t2.compactDeltas(maxDeltas = 2).contains(4L))
+    check(mor, s"/v=2/${KeyedTable.BucketCol}=", s"/v=3/${KeyedTable.BucketCol}=", s"/v=4/${KeyedTable.BucketCol}=",
+      s"/v=3/${KeyedTable.StatsDir}/", s"/v=4/${KeyedTable.StatsDir}/")
+    // the files read back as written
+    assert(t0.current.count() == 249 && t1.current.count() == 410 && t2.current.count() == 400)
+    assert(t2.current.filter($"v" === 3).count() == 31)
+  }
+
+  test("an overwrite rewrites the stored schema only when it changes") {
+    val s = spark
+    import s.implicits._
+    val root = tmpDir("ktschema")
+    val t = KeyedTable(spark, root, Seq("id"))
+    val schemaFile = new java.io.File(root, KeyedTable.SchemaMarker).toPath
+    def fileKey = java.nio.file.Files.readAttributes(
+      schemaFile, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey
+    t.overwrite(Seq(("a", 1)).toDF("id", "v"))
+    val first = fileKey
+    assert(first != null)
+    t.overwrite(Seq(("b", 2)).toDF("id", "v"))
+    t.merge(Seq(("c", 3)).toDF("id", "v"))
+    assert(fileKey == first, "an unchanged schema left the file in place")
+    t.overwrite(Seq(("d", 4, "x")).toDF("id", "v", "w"))
+    assert(fileKey != first)
+    assert(t.storedSchema.map(_.fieldNames.toSeq).contains(Seq("id", "v", "w")))
   }
 }
