@@ -341,11 +341,14 @@ final class KeyedTable(
     readText(fs, new Path(root, SchemaMarker)).map(
       org.apache.spark.sql.types.DataType.fromJson(_).asInstanceOf[org.apache.spark.sql.types.StructType])
 
-  private def emptyTyped: DataFrame = {
-    val schema = storedSchema.getOrElse(
-      throw new IllegalStateException(s"KeyedTable at $root has no stored schema"))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  /** [[storedSchema]] of a committed table: every bootstrap goes through
+    * [[stageOverwrite]], which writes `_SCHEMA` before entry 1 exists, so a
+    * committed table without one is corrupt and fails loudly. */
+  private def tableSchema: StructType = storedSchema.getOrElse(
+    throw new IllegalStateException(s"KeyedTable at $root has no stored schema ($SchemaMarker)"))
+
+  private def emptyTyped: DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
 
   /** Read the current snapshot. */
   def current: DataFrame = {
@@ -709,9 +712,6 @@ final class KeyedTable(
     */
   private def stageCollapsed(latest: DataFrame): Staged = {
     if (!exists) return stageOverwrite(latest)
-    // legacy tables (created before _SCHEMA existed): backfill from the
-    // readable current snapshot so empty-bucket reads stay typed
-    if (storedSchema.isEmpty) writeText(fs, new Path(root, SchemaMarker), current.schema.json)
     if (!bucketed) writeVersion(KeyedTable.mergePlan(current, latest, keys), currentVersion + 1)
     else stageBucketed(latest)
   }
@@ -779,7 +779,6 @@ final class KeyedTable(
                   tag: Option[String] = None): Long = {
     require(tag.forall(!_.contains('\n')), "a batch tag is one line")
     if (!exists) return stageOverwrite(replacement, tag).publish()
-    if (storedSchema.isEmpty) writeText(fs, new Path(root, SchemaMarker), current.schema.json)
     // NULL-key rejection, ENFORCED in-plan with a DEDICATED error (r10
     // ADVICE): the anti-joins match keys NULL-safe (withoutKeys), so CoW and
     // MOR would agree on a NULL key tuple — but a NULL key in a group
@@ -837,10 +836,9 @@ final class KeyedTable(
       val cols = tableColumns
       val repl = replacement0.select(cols.map(col).toIndexedSeq: _*)
         .withColumn(TombCol, lit(false))
-      val sch = storedSchema.get
       val tombs = KeyedTable.withoutKeys(allKeys,
         replacement0.select(keys.map(col).toIndexedSeq: _*).distinct(), keys, broadcastKeys = false)
-      val tombRows = sch.fields.filterNot(f => keys.contains(f.name))
+      val tombRows = tableSchema.fields.filterNot(f => keys.contains(f.name))
         .foldLeft(tombs)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
         .select(cols.map(col).toIndexedSeq: _*)
         .withColumn(TombCol, lit(true))
@@ -937,7 +935,6 @@ final class KeyedTable(
     require(keys.forall(batch.columns.contains),
       s"drifted batch must still carry the key columns ${keys.mkString(", ")}")
     if (!exists) return merge(batch)
-    if (storedSchema.isEmpty) writeText(fs, new Path(root, SchemaMarker), current.schema.json)
     val cur = current
     KeyedTable.requireAdditive(
       if (cur.columns.contains(BucketCol)) cur.drop(BucketCol) else cur, batch, keys)
@@ -1074,8 +1071,7 @@ final class KeyedTable(
         currentVersion + 1).publish()
     else if (morActive) {
       // MOR delete: pure tombstone segment — write cost ∝ deleted keys
-      val sch = storedSchema.getOrElse(current.schema)
-      val tombRows = sch.fields.filterNot(f => keys.contains(f.name))
+      val tombRows = tableSchema.fields.filterNot(f => keys.contains(f.name))
         .foldLeft(k.select(keys.map(col).toIndexedSeq: _*))((d, f) =>
           d.withColumn(f.name, lit(null).cast(f.dataType)))
         .select(tableColumns.map(col).toIndexedSeq: _*)
@@ -1106,9 +1102,7 @@ final class KeyedTable(
     * is written at exactly this shape (+ the tombstone marker) so the
     * multi-version delta union never needs schema merging.
     */
-  private def tableColumns: Seq[String] =
-    storedSchema.map(_.fields.map(_.name).toSeq)
-      .getOrElse(current.columns.toSeq.filterNot(_ == BucketCol))
+  private def tableColumns: Seq[String] = tableSchema.fieldNames.toSeq
 
   /** Stage one MOR delta segment as version N+1: the batch's rows (and
     * tombstones) land bucket-routed under `v=N+1`, base manifest pointers
@@ -1228,11 +1222,8 @@ object KeyedTable {
     * never delete — the reference's sink contract (`dataflow:169-172`).
     * `batch` must already be deduped to one row per key.
     */
-  def mergePlan(current: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame = {
-    val cur = if (current.columns.contains(BucketCol)) current.drop(BucketCol) else current
-    withoutKeys(cur, batch, keys, broadcastKeys = true)
-      .unionByName(batch.select(cur.columns.map(col).toIndexedSeq: _*))
-  }
+  def mergePlan(current: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame =
+    cdcMergePlan(current, batch, batch, keys)
 
   /** The CDC apply as a pure plan: every touched key leaves `current` via
     * one anti-join (zero shuffle of the snapshot side — `allKeys` is the

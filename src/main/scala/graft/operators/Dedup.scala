@@ -1449,100 +1449,6 @@ object Dedup {
   private def simhashChunkBounds(maxHamming: Int): Seq[Int] =
     chunkBounds(TextOps.SimHashBits, maxHamming)
 
-  /** [[hammingPairs]] with a BLOCKING column: pairs are mined only within
-    * equal `blockCol` values — the banded join key becomes (block, chunk
-    * idx, chunk val), so cross-block signature collisions never even reach
-    * the candidate stream. The temporal-alignment primitive for video
-    * near-dup ([[graft.operators.Multimodal.videoNearDupPairs]]): block =
-    * frame index, and at 100 TB the block key is also what keeps any one
-    * join bucket bounded by a single frame position's population.
-    * Output: (block, id_a, id_b, hamming).
-    */
-  def hammingPairsBlocked(sig0: DataFrame, idCol: String, blockCol: String,
-                          sigCol: String, bits: Int, maxHamming: Int): DataFrame =
-    hammingPairsBlockedTagged(sig0.withColumn("__no_tag", lit(false)),
-      idCol, blockCol, sigCol, "__no_tag", bits, maxHamming)
-      .drop("tag_a", "tag_b")
-
-  /** [[hammingPairsBlocked]] with a per-row boolean `tagCol` carried through
-    * the mine (output gains `tag_a`/`tag_b`). The tag rides the miner's one
-    * shuffle as a single boolean, so a caller that must route pair CLASSES
-    * differently (e.g. [[graft.operators.Multimodal.videoNearDupPairsTieredFromHashes]]'s
-    * short/long tiers) can mine ONCE and filter classes post-join instead
-    * of composing three separate mines — the r18 tier probe measured the
-    * three-branch composition's stage overhead at ~2× the single miner's
-    * whole wall on the regenerated corpus.
-    */
-  def hammingPairsBlockedTagged(sig0: DataFrame, idCol: String, blockCol: String,
-                                sigCol: String, tagCol: String,
-                                bits: Int, maxHamming: Int): DataFrame = {
-    val bounds = chunkBounds(bits, maxHamming)
-    val sig = sig0.select(col(blockCol).cast("long").as("blk"),
-      col(idCol).cast("long").as("id"),
-      col(sigCol).cast("long").as("sh"),
-      col(tagCol).cast("boolean").as("tg")).localCheckpoint()
-    val chunkCols = (0 until bounds.length - 1).map { c =>
-      struct(lit(c).as("cidx"),
-        chunkOf(col("sh"), bounds(c), bounds(c + 1) - bounds(c)).as("cval"))
-    }
-    val exploded = sig
-      .select(col("blk"), col("id"), col("sh"), col("tg"),
-        explode(array(chunkCols: _*)).as("ch"))
-      .select(col("blk"), col("id"), col("sh"), col("tg"),
-        col("ch.cidx").as("cidx"), col("ch.cval").as("cval"))
-    exploded.as("a").join(exploded.as("b"),
-        col("a.blk") === col("b.blk") &&
-          col("a.cidx") === col("b.cidx") && col("a.cval") === col("b.cval") &&
-          col("a.id") < col("b.id"))
-      .filter(col("a.cidx") === firstAgreeingChunk(col("a.sh"), col("b.sh"), bounds))
-      .select(col("a.blk").as("block"), col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).cast("long").as("hamming"),
-        col("a.tg").as("tag_a"), col("b.tg").as("tag_b"))
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** Two-sided [[hammingPairsBlocked]]: pairs are mined BETWEEN `leftSig`
-    * and `rightSig` (never within either side). Contract: the two relations'
-    * id sets are DISJOINT — each qualifying (left, right) pair is emitted
-    * exactly once, with `id_a`/`id_b` normalized to (smaller, larger) so the
-    * output composes with the self-join miner's `id_a < id_b` convention.
-    *
-    * The asymmetric shape is the cross-tier primitive for
-    * [[graft.operators.Multimodal.videoNearDupPairsTiered]] (r13 ADVICE):
-    * short×long video pairs must be mined at FULL frame resolution, but
-    * mining them through the self-join would price the long×long pair space
-    * at full resolution too. Here the join's candidate mass is bounded by
-    * the SMALL side — every candidate has a left-relation row on one side —
-    * so the expensive population only ever appears opposite the cheap one.
-    * Output: (block, id_a, id_b, hamming), exactly like the self-join form.
-    */
-  def hammingPairsBlockedCross(leftSig: DataFrame, rightSig: DataFrame,
-                               idCol: String, blockCol: String, sigCol: String,
-                               bits: Int, maxHamming: Int): DataFrame = {
-    val bounds = chunkBounds(bits, maxHamming)
-    def side(df: DataFrame): DataFrame = {
-      val sig = df.select(col(blockCol).cast("long").as("blk"),
-        col(idCol).cast("long").as("id"), col(sigCol).cast("long").as("sh"))
-      val chunkCols = (0 until bounds.length - 1).map { c =>
-        struct(lit(c).as("cidx"),
-          chunkOf(col("sh"), bounds(c), bounds(c + 1) - bounds(c)).as("cval"))
-      }
-      sig.select(col("blk"), col("id"), col("sh"),
-          explode(array(chunkCols: _*)).as("ch"))
-        .select(col("blk"), col("id"), col("sh"),
-          col("ch.cidx").as("cidx"), col("ch.cval").as("cval"))
-    }
-    side(leftSig).as("a").join(side(rightSig).as("b"),
-        col("a.blk") === col("b.blk") &&
-          col("a.cidx") === col("b.cidx") && col("a.cval") === col("b.cval"))
-      .filter(col("a.cidx") === firstAgreeingChunk(col("a.sh"), col("b.sh"), bounds))
-      .select(col("a.blk").as("block"),
-        least(col("a.id"), col("b.id")).as("id_a"),
-        greatest(col("a.id"), col("b.id")).as("id_b"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
-
   private[operators] def chunkBounds(bits: Int, maxHamming: Int): Seq[Int] = {
     require(bits >= 1 && bits <= 64, s"signature width must be in [1, 64], got $bits")
     require(maxHamming >= 0 && maxHamming < bits,

@@ -1236,13 +1236,23 @@ object Multimodal {
     spark.createDataFrame(out, schema)
   }
 
+  /** Hash-distribute a signature relation to the session's shuffle width
+    * before an output-bound mine. An explicit partition count (not bare
+    * `repartition(col)`) so AQE's size-targeted coalescing cannot fold the
+    * tiny relation back to one partition; keyed by media_id so a video's
+    * frames colocate for the per-video aggregations downstream.
+    */
+  private def mineWidth(spark: SparkSession, hashes: DataFrame): DataFrame =
+    hashes.repartition(
+      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt,
+      col("media_id"))
+
   /** Video near-duplicate pairs with TEMPORAL ALIGNMENT: frame signatures
-    * are mined per frame position ([[Dedup.hammingPairsBlocked]] — the
-    * banded join key carries the frame index, so only same-position frames
-    * ever become candidates), and two videos pair when the fraction of
-    * matching aligned positions reaches `minMatchFrac` of the SHORTER
-    * video. Decode cost is one container+codec pass per video; the join
-    * moves 8-byte signatures only.
+    * are compared per frame position only (same-position frames, never
+    * shifted ones), and two videos pair when the fraction of matching
+    * aligned positions reaches `minMatchFrac` of the SHORTER video. Decode
+    * cost is one container+codec pass per video; the mine moves 8-byte
+    * signatures only ([[videoNearDupPairsFromHashes]] holds the miner).
     *
     * `frameStride` is the POSITION-SAMPLING valve (r12 verdict Next #4):
     * only every stride-th frame position is mined — the join's candidate
@@ -1257,89 +1267,6 @@ object Multimodal {
     *
     * Output: (id_a, id_b, n_matching, n_comparable, match_frac).
     */
-  /** Hash-distribute a signature relation to the session's shuffle width
-    * before an output-bound mine. An explicit partition count (not bare
-    * `repartition(col)`) so AQE's size-targeted coalescing cannot fold the
-    * tiny relation back to one partition; keyed by media_id so a video's
-    * frames colocate for the per-video aggregations downstream.
-    */
-  private def mineWidth(spark: SparkSession, hashes: DataFrame): DataFrame =
-    hashes.repartition(
-      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt,
-      col("media_id"))
-
-  /** Whole-video signature-CLASS collapse (r18): videos with the identical
-    * (n_frames, ordered frame-signature sequence) are interchangeable in
-    * every pair computation this family performs — n_matching, n_comparable
-    * and match_frac derive only from aligned signatures and lengths — so
-    * the miners run over one REPRESENTATIVE per class and expand results to
-    * members afterwards, AFTER the frac filter (output-bound). This is the
-    * `chunkReps` distinct-collapse one level up, and it lands on the right
-    * side of the r12 collapse law (Dedup.hammingPairs plan note): it pays
-    * exactly when candidates ≫ output, which the regenerated corpus's
-    * 85.6M-candidate / 137K-output video regime is (PROBE_vtier_r18.txt) —
-    * unlike the per-position group collapse r12 measured and rejected,
-    * whole-video classes cannot drift across positions, so expansion is an
-    * exact class cross-product. sf1 measures 2.04× video collapse → ~4×
-    * candidate mass.
-    *
-    * Returns (classes(rep, nf, members), repFrames) — repFrames is the h0
-    * subset belonging to representatives. Grouping keys on the REAL
-    * sequence (no fingerprint): a hash-collision merge would silently fuse
-    * two different videos, and the sequence shuffle costs no more than the
-    * signature table itself.
-    */
-  private def videoClasses(h0: DataFrame): (DataFrame, DataFrame) = {
-    val perVideo = h0.groupBy("media_id").agg(
-      max(col("n_frames")).as("nf"),
-      transform(array_sort(collect_list(struct(col("frame_idx"), col("dhash")))),
-        x => x.getField("dhash")).as("__sig"))
-    val classes = perVideo.groupBy("nf", "__sig")
-      .agg(min(col("media_id")).as("rep"),
-        collect_list(col("media_id")).as("members"))
-      .select("rep", "nf", "members")
-      .localCheckpoint()
-    (classes, h0.join(classes.select(col("rep").as("media_id")), Seq("media_id")))
-  }
-
-  /** Member-pair expansion shared by the two miners: rep-level qualifying
-    * pairs fan out to all cross-class member pairs (same stats — members
-    * are signature-identical), and every ≥2-member class emits its own
-    * within-class pairs at frac exactly 1.0 (identical videos match at
-    * every compared position; `comparable` is the variant's denominator
-    * rule). Orientation normalized to id_a < id_b, classes are disjoint, so
-    * the union is duplicate-free.
-    */
-  private def expandClassPairs(repPairs0: DataFrame, classes: DataFrame,
-                               comparable: (Column, Column) => Column,
-                               minMatchFrac: Double): DataFrame = {
-    // pin the slim rep-level result before the expansion joins: the
-    // frac-filtered stream is output-sized (the cheap side), and the cut
-    // keeps AQE planning the two member joins against known stats instead
-    // of the whole mine pipeline's estimates (the slim-derived-relation
-    // rule, SCALING.md)
-    val repPairs = repPairs0.localCheckpoint()
-    val cross = repPairs
-      .join(classes.select(col("rep").as("id_a"), explode(col("members")).as("__ma")),
-        Seq("id_a"))
-      .join(classes.select(col("rep").as("id_b"), explode(col("members")).as("__mb")),
-        Seq("id_b"))
-      .select(least(col("__ma"), col("__mb")).as("id_a"),
-        greatest(col("__ma"), col("__mb")).as("id_b"),
-        col("n_matching"), col("n_comparable"), col("match_frac"))
-    val mem = classes.filter(size(col("members")) >= 2)
-      .select(col("rep"), col("nf"), explode(col("members")).as("m"))
-    val within = mem.as("a").join(mem.as("b"),
-        col("a.rep") === col("b.rep") && col("a.m") < col("b.m"))
-      .select(col("a.m").as("id_a"), col("b.m").as("id_b"),
-        comparable(col("a.nf"), col("b.nf")).cast("long").as("n_matching"),
-        comparable(col("a.nf"), col("b.nf")).cast("long").as("n_comparable"),
-        lit(1.0).as("match_frac"))
-      .filter(lit(1.0) >= minMatchFrac)
-    cross.unionByName(within)
-      .select("id_a", "id_b", "n_matching", "n_comparable", "match_frac")
-  }
-
   def videoNearDupPairs(spark: SparkSession, media: DataFrame,
                         maxHamming: Int = 6,
                         minMatchFrac: Double = 0.8,
@@ -1363,265 +1290,198 @@ object Multimodal {
     * (measured at sf1: 98 s vs the in-plan path's decode-inclusive 25.5 s
     * band). One explicit shuffle of the 8-byte rows restores the width the
     * decode path used to provide for free.
+    *
+    * The miner has three stages:
+    *  1. one groupBy(media_id) builds the per-video ordered signature ARRAY
+    *     ([[ppPerVideo]]);
+    *  2. candidates: each video explodes one row per (block t of `b`
+    *     consecutive sampled positions, chunk combo), and the self-join on
+    *     (t, combo, every chunk value) admits a pair only where every
+    *     position of a block matches within maxHamming ([[ppJoin]]). The
+    *     block width `b` comes from [[blockWidth]]:
+    *     - `b = 2` at minMatchFrac ≥ 0.75. A pair comparing S ≥ 2 sampled
+    *       positions misses at most q ≤ ⌊S/4⌋ of them, each miss kills at
+    *       most one of the ⌊S/2⌋ disjoint consecutive pairs, and
+    *       ⌊S/4⌋ ≤ ⌊S/2⌋ − 1, so one pair matches at both positions. The
+    *       single-position template collisions that dominate a per-position
+    *       stream cannot match at two consecutive positions, so the
+    *       candidate stream is collision-starved (85.6M → 5.2M rows at
+    *       sf1). Pairs whose SHORTER side compares one
+    *       position only (S = 1) must match there: [[ppFallback]] mines
+    *       position 0 for them.
+    *     - `b = 1` below: single sampled positions. A pair with
+    *       match_frac ≥ f > 0 matches at one compared position or more;
+    *       at f ≤ 0 the output is the pairs with at least one matching
+    *       position.
+    *  3. exact stats ([[ppStats]]), n_comparable from the two lengths:
+    *     - at `b = 1` each candidate row is one matching compared position,
+    *       emitted once, so a pair's row count IS n_matching;
+    *     - at `b = 2` a row is a matching block, so the deduplicated pairs
+    *       join the signature arrays (output-sized) and n_matching is
+    *       recomputed over every sampled position ([[ppVerify]]).
+    *     Stages 1–2 decide WHICH pairs get stats, never what they are
+    *     (AviSpec pins the output against a first-principles recount at
+    *     f ∈ {0.5, 0.6, 0.8}; the oracle pins it end-to-end). Counting at
+    *     `b = 1` is by measurement: on the sf0.1 f = 0.5 mine the array
+    *     verify ran 7–25% slower than the per-position count it replaced,
+    *     the count is at parity (SCALING.md "One video miner").
     */
   def videoNearDupPairsFromHashes(spark: SparkSession, hashes: DataFrame,
                                   maxHamming: Int = 6,
                                   minMatchFrac: Double = 0.8,
                                   frameStride: Int = 1): DataFrame = {
     require(frameStride >= 1, s"frameStride must be >= 1, got $frameStride")
-    val h0 = mineWidth(spark, hashes)
-    // Position-PAIR blocking (r19, verdict Next #1): the per-position miner
-    // below shuffles an ~85.6M-row candidate pair stream whose map-side
-    // partial count collapses nothing (avg ~1.2 matching positions per
-    // candidate — PROBE_vtier_r18.txt), and the frac filter then kills
-    // 99.8% of it. At minMatchFrac ≥ 0.75 a qualifying pair must match at
-    // BOTH positions of at least one disjoint consecutive sampled-position
-    // pair — non-matching positions q ≤ ⌊S/4⌋ each kill at most one of the
-    // ⌊S/2⌋ pairs and ⌊S/4⌋ ≤ ⌊S/2⌋−1 for every S ≥ 2 — so blocking on
-    // (position-pair, chunk-of-frame-1, chunk-of-frame-2) admits only
-    // candidates that match at two consecutive positions, which the
-    // single-position template collisions dominating the stream cannot do.
-    // Survivors are verified EXACTLY against per-video signature arrays
-    // (n_matching recomputed over every sampled position), so the output
-    // is row-identical by construction (AviSpec pins it against a
-    // first-principles recount on a planted corpus; the oracle pins it
-    // end-to-end). Below 0.75 the pigeonhole does not hold (a single miss
-    // can kill the only pair) and the per-position path remains.
-    if (minMatchFrac >= 0.75)
-      return videoPairsPairBlocked(spark, h0, maxHamming, minMatchFrac, frameStride)
-    // NO signature-class collapse here, by measurement (r18): the plain
-    // miner's whole pipeline is one streamed join→partial-agg chain — the
-    // qualifying pair stream never materializes — and on the sf1 corpus the
-    // un-collapsed stream (~4× the rows) still grouped FASTER than the
-    // collapsed plan's extra stages cost (s2 11.3 s vs 18.2 s min-of-3; the
-    // stream cannot even be checkpointed without OOM, which is exactly why
-    // streaming it wins). The collapse pays where it shrinks the expensive
-    // FULL-RESOLUTION branches of the tiered router below (29.6 → 9.9 s).
-    val h = if (frameStride == 1) h0
-      else h0.filter(col("frame_idx") % frameStride === 0)
-    val lens = h0.groupBy("media_id").agg(max(col("n_frames")).as("nf"))
-    val framePairs = Dedup.hammingPairsBlocked(h, "media_id", "frame_idx", "dhash",
-      bits = 64, maxHamming = maxHamming)
-    val sampledComparable =
-      floor((least(col("__na"), col("__nb")) - 1) / frameStride) + 1
-    framePairs.groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_matching"))
-      .join(lens.select(col("media_id").as("id_a"), col("nf").as("__na")), Seq("id_a"))
-      .join(lens.select(col("media_id").as("id_b"), col("nf").as("__nb")), Seq("id_b"))
-      .withColumn("n_comparable",
-        (if (frameStride == 1) least(col("__na"), col("__nb"))
-         else sampledComparable).cast("long"))
-      .withColumn("match_frac",
-        col("n_matching").cast("double") / col("n_comparable").cast("double"))
-      .filter(col("match_frac") >= minMatchFrac)
-      .select("id_a", "id_b", "n_matching", "n_comparable", "match_frac")
+    val perV = ppPerVideo(mineWidth(spark, hashes))
+    val b = blockWidth(minMatchFrac)
+    // sampled-position count S and its ⌊S/b⌋ disjoint blocks
+    val S = (floor((col("nf") - 1) / frameStride) + 1).cast("int")
+    val ex = ppExplode(perV, b, (S / b).cast("int"),
+      (t, i) => (t * b + i) * frameStride, maxHamming)
+    val blocks = ppJoin(ex, ex, b, maxHamming, _ < _)
+    val nComp = (na: Column, nb: Column) => floor((least(na, nb) - 1) / frameStride) + 1
+    if (b == 1)
+      ppStats(blocks.groupBy("id_a", "id_b").agg(count(lit(1)).as("__n")), perV,
+        nComp, col("__n"), minMatchFrac)
+    else // S == 1 ⟺ nf ≤ stride: no block at b = 2
+      ppVerify(blocks.unionByName(ppFallback(perV, S === 1, maxHamming)), perV,
+        nComp, step = (_, _) => lit(frameStride), maxHamming, minMatchFrac)
   }
 
-  /** The position-pair-blocked miner behind [[videoNearDupPairsFromHashes]]
-    * (minMatchFrac ≥ 0.75 arm). Three stages, none of which shuffles the
-    * old 85.6M-row pair stream:
-    *
-    *  1. one groupBy(media_id) builds the per-video ordered signature ARRAY
-    *     (one row per video — h0 is already partitioned by media_id, so no
-    *     extra exchange);
-    *  2. candidates: each video explodes one row per (consecutive
-    *     sampled-position pair t, chunk combo) — 2·(maxHamming+1)² chunk
-    *     rows per position-PAIR vs the old 2·(maxHamming+1) per position —
-    *     and the self-join on (t, combo, both chunk values) admits a pair
-    *     only where two consecutive positions BOTH match within maxHamming;
-    *     each surviving (pair, t) is emitted once (first-agreeing-combo
-    *     predicate, the [[Dedup.hammingPairs]] dedup rule applied to combo
-    *     space) and the distinct() runs over this collision-starved stream.
-    *     Videos whose own sampled count is 1 compare only position 0, and
-    *     at frac ≥ 0.75 that position MUST match — their position-0 frames
-    *     mine against everyone's in a single-position fallback branch
-    *     (disjoint by construction: an S=1 video emits no position-pair).
-    *  3. verify: survivors join the signature arrays (output-sized) and
-    *     n_matching / n_comparable / match_frac are recomputed EXACTLY over
-    *     every sampled position — so stages 1–2 only ever decide WHICH
-    *     pairs get verified, never what the stats are.
-    */
-  /** Pigeonhole chunk boundaries over the 64-bit dHash plus the chunk
-    * extractor and the (combo1, combo2) list the position-pair join blocks
-    * on — shared by the plain and tiered pair-blocked miners. */
-  private def ppChunks(maxHamming: Int): (Seq[(Int, Int)], (Column, Int) => Column) = {
+  /** Candidate block width of the video miners: 2 consecutive sampled
+    * positions at minMatchFrac ≥ 0.75, where the pigeonhole guarantees a
+    * qualifying pair one fully matching pair block, else 1 (coverage
+    * argument: [[videoNearDupPairsFromHashes]]). Wider blocks are left out:
+    * the chunk combos grow as (maxHamming+1)^b. */
+  private def blockWidth(minMatchFrac: Double): Int = if (minMatchFrac >= 0.75) 2 else 1
+
+  /** Pigeonhole chunk extractor over the 64-bit dHash and the chunk combos
+    * of a `width`-position block: one chunk index per position, every
+    * combination of them. */
+  private def ppChunks(maxHamming: Int, width: Int): (Seq[Seq[Int]], (Column, Int) => Column) = {
     val bounds = Dedup.chunkBounds(64, maxHamming)
-    val nChunks = bounds.length - 1
     def chunk(sh: Column, c: Int): Column =
       Dedup.chunkOf(sh, bounds(c), bounds(c + 1) - bounds(c))
-    val comboList = for { c1 <- 0 until nChunks; c2 <- 0 until nChunks } yield (c1, c2)
-    (comboList, chunk)
+    val combos = (1 to width).foldLeft(Seq(Seq.empty[Int])) { (acc, _) =>
+      for (p <- acc; c <- 0 until bounds.length - 1) yield p :+ c
+    }
+    (combos, chunk)
   }
 
   /** Per-video ordered signature arrays — the verify-side relation of the
-    * pair-blocked miners (one row per video; h0 is already partitioned by
-    * media_id so the groupBy adds no exchange). */
+    * miners (one row per video; h0 is already partitioned by media_id so
+    * the groupBy adds no exchange). */
   private def ppPerVideo(h0: DataFrame): DataFrame =
     h0.groupBy("media_id").agg(max(col("n_frames")).as("nf"),
         transform(array_sort(collect_list(struct(col("frame_idx"), col("dhash")))),
           x => x.getField("dhash")).as("sig"))
       .localCheckpoint()
 
-  /** One (id, t, chunk combo) row per consecutive position pair of each
-    * video: `npp` is the per-video pair count, `pos1`/`pos2` map t to the
-    * two 0-based frame positions. */
-  private def ppExplode(perV: DataFrame, npp: Column,
-                        pos1: Column => Column, pos2: Column => Column,
-                        comboList: Seq[(Int, Int)],
-                        chunk: (Column, Int) => Column): DataFrame =
+  /** One (id, t, f0…, k, v0…) row per position block t of each video and
+    * chunk combo k: `nBlocks` is the per-video block count, `pos(t, i)` the
+    * 0-based frame position of the block's i-th member, `f_i` its
+    * signature and `v_i` combo k's chunk of it. */
+  private def ppExplode(perV: DataFrame, width: Int, nBlocks: Column,
+                        pos: (Column, Int) => Column, maxHamming: Int): DataFrame = {
+    val (combos, chunk) = ppChunks(maxHamming, width)
+    val idT = Seq(col("id"), col("t"))
+    val fs = (0 until width).map(i => col(s"f$i"))
     perV.select(col("media_id").as("id"), col("sig"),
-        explode(when(npp >= 1, sequence(lit(0), npp - 1))
+        explode(when(nBlocks >= 1, sequence(lit(0), nBlocks - 1))
           .otherwise(array().cast("array<int>"))).as("t"))
-      .select(col("id"), col("t"),
-        element_at(col("sig"), pos1(col("t")) + 1).as("f1"),
-        element_at(col("sig"), pos2(col("t")) + 1).as("f2"))
-      .select(col("id"), col("t"), col("f1"), col("f2"),
-        explode(array(comboList.map { case (c1, c2) =>
-          struct(lit(c1).as("c1"), lit(c2).as("c2"),
-            chunk(col("f1"), c1).as("v1"), chunk(col("f2"), c2).as("v2"))
-        }: _*)).as("k"))
-      .select(col("id"), col("t"), col("f1"), col("f2"),
-        col("k.c1").as("c1"), col("k.c2").as("c2"),
-        col("k.v1").as("v1"), col("k.v2").as("v2"))
-
-  /** Self-join of an exploded combo relation on (t, combo, both values):
-    * admits a pair only where BOTH positions match within maxHamming, each
-    * surviving (pair, t) emitted once from its first agreeing combo (the
-    * [[Dedup.hammingPairs]] dedup rule lifted to combo space). */
-  private def ppJoin(ex: DataFrame, comboList: Seq[(Int, Int)],
-                     chunk: (Column, Int) => Column, maxHamming: Int): DataFrame = {
-    def firstCombo(f1a: Column, f2a: Column, f1b: Column, f2b: Column): Column =
-      comboList.foldRight(struct(lit(-1).as("c1"), lit(-1).as("c2"))) {
-        case ((c1, c2), els) =>
-          when(chunk(f1a, c1) === chunk(f1b, c1) && chunk(f2a, c2) === chunk(f2b, c2),
-            struct(lit(c1).as("c1"), lit(c2).as("c2"))).otherwise(els)
-      }
-    ex.as("a").join(ex.as("b"),
-        col("a.t") === col("b.t") && col("a.c1") === col("b.c1") &&
-          col("a.c2") === col("b.c2") && col("a.v1") === col("b.v1") &&
-          col("a.v2") === col("b.v2") && col("a.id") < col("b.id"))
-      .filter(bit_count(col("a.f1").bitwiseXOR(col("b.f1"))) <= maxHamming &&
-        bit_count(col("a.f2").bitwiseXOR(col("b.f2"))) <= maxHamming)
-      .filter(struct(col("a.c1"), col("a.c2")) ===
-        firstCombo(col("a.f1"), col("a.f2"), col("b.f1"), col("b.f2")))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .select(idT ++ (0 until width).map(i =>
+        element_at(col("sig"), pos(col("t"), i) + 1).as(s"f$i")): _*)
+      .select(idT ++ fs :+ explode(array(combos.zipWithIndex.map { case (cs, k) =>
+        struct(lit(k).as("k") +: cs.zipWithIndex.map { case (c, i) =>
+          chunk(col(s"f$i"), c).as(s"v$i")
+        }: _*)
+      }: _*)).as("kv"): _*)
+      .select(idT ++ fs :+ col("kv.*"): _*)
   }
 
-  /** Single-position fallback: position-0 frames of the videos selected by
-    * `s1` mined against EVERYONE's position-0 frames — the branch for pairs
-    * whose shorter side compares exactly one position (which at frac ≥ 0.75
-    * must match). Output normalized to id_a < id_b; both-s1 pairs appear in
-    * both orientations and collapse in the caller's distinct. */
-  private def ppFallback(perV: DataFrame, s1: Column, comboList: Seq[(Int, Int)],
-                         chunk: (Column, Int) => Column, maxHamming: Int): DataFrame = {
-    val nChunks = comboList.map(_._1).max + 1
-    val exS = perV.select(col("media_id").as("id"), s1.as("s1"),
-        element_at(col("sig"), 1).as("f0"))
-      .select(col("id"), col("s1"), col("f0"),
-        explode(array((0 until nChunks).map(c =>
-          struct(lit(c).as("c"), chunk(col("f0"), c).as("v"))): _*)).as("k"))
-      .select(col("id"), col("s1"), col("f0"),
-        col("k.c").as("c"), col("k.v").as("v"))
-    def firstChunk(fa: Column, fb: Column): Column =
-      (0 until nChunks).foldRight(lit(-1): Column) { (c, els) =>
-        when(chunk(fa, c) === chunk(fb, c), lit(c)).otherwise(els)
-      }
-    exS.filter(col("s1")).as("a").join(exS.as("b"),
-        col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
-          col("a.id") =!= col("b.id"))
-      .filter(bit_count(col("a.f0").bitwiseXOR(col("b.f0"))) <= maxHamming)
-      .filter(col("a.c") === firstChunk(col("a.f0"), col("b.f0")))
+  /** Join of two exploded block relations on (t, combo, every chunk value)
+    * where `pair` holds for the two ids: admits a pair only where EVERY
+    * position of the block matches within maxHamming, each surviving
+    * (pair, t) emitted once from its first agreeing combo (the
+    * [[Dedup.hammingPairs]] dedup rule lifted to combo space). Output
+    * normalized to id_a < id_b. */
+  private def ppJoin(a: DataFrame, b: DataFrame, width: Int, maxHamming: Int,
+                     pair: (Column, Column) => Column): DataFrame = {
+    val (combos, chunk) = ppChunks(maxHamming, width)
+    def f(side: String, i: Int): Column = col(s"$side.f$i")
+    val firstCombo = combos.zipWithIndex.foldRight(lit(-1): Column) {
+      case ((cs, k), els) =>
+        when(cs.zipWithIndex.map { case (c, i) =>
+          chunk(f("a", i), c) === chunk(f("b", i), c)
+        }.reduce(_ && _), lit(k)).otherwise(els)
+    }
+    val keys = Seq("t", "k") ++ (0 until width).map(i => s"v$i")
+    a.as("a").join(b.as("b"),
+        keys.map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _) &&
+          pair(col("a.id"), col("b.id")))
+      .filter((0 until width).map(i =>
+        bit_count(f("a", i).bitwiseXOR(f("b", i))) <= maxHamming).reduce(_ && _))
+      .filter(col("a.k") === firstCombo)
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"))
   }
 
-  /** Attach both videos' arrays to the distinct candidate pairs and
-    * recompute the exact stats: positions j·step(na,nb) for
-    * j < nComp(na,nb), matching iff within maxHamming. */
+  /** Position-0 fallback of the `b = 2` miners: the width-1 mine over
+    * position 0 between the videos selected by `s1` and EVERYONE — the
+    * branch for pairs whose shorter side compares exactly one position
+    * (which at frac ≥ 0.75 must match). Both-s1 pairs appear in both
+    * orientations and collapse in [[ppVerify]]'s dedup. */
+  private def ppFallback(perV: DataFrame, s1: Column, maxHamming: Int): DataFrame = {
+    def pos0(df: DataFrame): DataFrame =
+      ppExplode(df, 1, lit(1), (_, _) => lit(0), maxHamming)
+    ppJoin(pos0(perV.filter(s1)), pos0(perV), 1, maxHamming, _ =!= _)
+  }
+
+  /** The b = 2 stats: candidate pairs, once each, verified against both
+    * videos' arrays — positions j·step(na,nb) for j < nComp(na,nb),
+    * matching iff within maxHamming. n_matching is a plain loop rather than
+    * an `aggregate` over the positions, which Spark evaluates interpreted
+    * (higher-order functions are CodegenFallback): on the sf0.1 f = 0.5
+    * mine's 790k candidate pairs the verify took 0.90 s vs 1.59 s (min of
+    * 5 in one JVM). The dedup is a grouped count, not `distinct()`: same
+    * pairs, and on that mine's 955k candidate rows 0.62 s vs 0.89 s. */
   private def ppVerify(pairs: DataFrame, perV: DataFrame,
                        nComp: (Column, Column) => Column,
                        step: (Column, Column) => Column,
-                       maxHamming: Int, minMatchFrac: Double): DataFrame =
-    pairs.distinct()
+                       maxHamming: Int, minMatchFrac: Double): DataFrame = {
+    val matching = udf { (a: Seq[Long], b: Seq[Long], n: Long, step: Int) =>
+      var m = 0L
+      var j = 0
+      while (j < n) {
+        if (java.lang.Long.bitCount(a(j * step) ^ b(j * step)) <= maxHamming) m += 1
+        j += 1
+      }
+      m
+    }
+    ppStats(pairs.groupBy("id_a", "id_b").agg(count(lit(1)).as("__n")), perV, nComp,
+      matching(col("__siga"), col("__sigb"), col("n_comparable"),
+        step(col("__na"), col("__nb")).cast("int")),
+      minMatchFrac)
+  }
+
+  /** The stats step of both widths, over one row per candidate pair: both
+    * videos' (nf, sig) join as (__na, __siga) / (__nb, __sigb),
+    * n_comparable = nComp(na, nb), n_matching = `matching`, and the pair is
+    * kept when it matches at one compared position or more and at
+    * frac ≥ minMatchFrac. */
+  private def ppStats(pairs: DataFrame, perV: DataFrame,
+                      nComp: (Column, Column) => Column, matching: Column,
+                      minMatchFrac: Double): DataFrame =
+    pairs
       .join(perV.select(col("media_id").as("id_a"), col("nf").as("__na"),
         col("sig").as("__siga")), Seq("id_a"))
       .join(perV.select(col("media_id").as("id_b"), col("nf").as("__nb"),
         col("sig").as("__sigb")), Seq("id_b"))
       .withColumn("n_comparable", nComp(col("__na"), col("__nb")).cast("long"))
-      .withColumn("__step", step(col("__na"), col("__nb")).cast("int"))
-      .withColumn("n_matching", aggregate(
-        sequence(lit(0), col("n_comparable").cast("int") - 1), lit(0L),
-        (acc, j) => acc + when(bit_count(
-          element_at(col("__siga"), j * col("__step") + 1)
-            .bitwiseXOR(element_at(col("__sigb"), j * col("__step") + 1))) <= maxHamming, 1L)
-          .otherwise(0L)))
+      .withColumn("n_matching", matching.cast("long"))
       .withColumn("match_frac",
         col("n_matching").cast("double") / col("n_comparable").cast("double"))
-      .filter(col("match_frac") >= minMatchFrac)
+      .filter(col("n_matching") > 0 && col("match_frac") >= minMatchFrac)
       .select("id_a", "id_b", "n_matching", "n_comparable", "match_frac")
-
-  private def videoPairsPairBlocked(spark: SparkSession, h0: DataFrame,
-                                    maxHamming: Int, minMatchFrac: Double,
-                                    stride: Int): DataFrame = {
-    val (comboList, chunk) = ppChunks(maxHamming)
-    val perV = ppPerVideo(h0)
-    // sampled-position count S and disjoint position-pair count ⌊S/2⌋
-    val S = (floor((col("nf") - 1) / stride) + 1).cast("int")
-    val ex = ppExplode(perV, (S / lit(2)).cast("int"),
-      t => t * (2 * stride), t => t * (2 * stride) + stride, comboList, chunk)
-    val cand = ppJoin(ex, comboList, chunk, maxHamming)
-    // fallback: pairs whose SHORTER side has a single sampled position
-    // (S == 1 ⟺ nf ≤ stride) compare only position 0
-    val candS1 = ppFallback(perV, S === 1, comboList, chunk, maxHamming)
-    ppVerify(cand.unionByName(candS1), perV,
-      nComp = (na, nb) => floor((least(na, nb) - 1) / stride) + 1,
-      step = (_, _) => lit(stride), maxHamming, minMatchFrac)
-  }
-
-  /** The tiered twin of [[videoPairsPairBlocked]]: a pair's tier — and with
-    * it its denominator rule — is decided by min(na, nb) alone (either side
-    * short ⟺ the MIN is short), so three disjoint-coverage candidate
-    * branches feed ONE exact verify that recomputes each pair's stats under
-    * its own tier's rule:
-    *   A. consecutive PREFIX position pairs (positions < min(nf, tierMin)) —
-    *      covers every full-resolution pair with m ≥ 2 (its witness pair
-    *      sits at 2t+1 ≤ m−1 < tierMin, within both videos' key ranges);
-    *   B. consecutive SAMPLED position pairs over LONG videos only — covers
-    *      both-long pairs (m ≥ tierMin gives S_m ≥ ⌊(tierMin−1)/stride⌋+1
-    *      sampled positions: 4 under the declared tierMin = 8 at stride 2,
-    *      8 under the default 8·stride; at minMatchFrac ≥ 0.75 the
-    *      pigeonhole needs only S_m ≥ 2);
-    *   C. the position-0 fallback for m = 1 pairs (nf = 1 side).
-    * Branches may overlap (a both-long pair can match at prefix AND sampled
-    * pairs) — the verify runs after one distinct(), so overlap costs rows,
-    * never correctness. */
-  private def videoPairsTieredPairBlocked(spark: SparkSession, h0: DataFrame,
-                                          maxHamming: Int, minMatchFrac: Double,
-                                          stride: Int, tierMin: Int): DataFrame = {
-    val (comboList, chunk) = ppChunks(maxHamming)
-    val perV = ppPerVideo(h0)
-    val exA = ppExplode(perV, (least(col("nf"), lit(tierMin)) / 2).cast("int"),
-      t => t * 2, t => t * 2 + 1, comboList, chunk)
-    val SB = (floor((col("nf") - 1) / stride) + 1).cast("int")
-    val nppB = when(col("nf") >= tierMin, (SB / lit(2)).cast("int")).otherwise(lit(0))
-    val exB = ppExplode(perV, nppB,
-      t => t * (2 * stride), t => t * (2 * stride) + stride, comboList, chunk)
-    // C covers every pair whose comparison has exactly ONE position: m = 1
-    // full-res pairs always, plus — only under exotic knobs with
-    // tierMin ≤ stride — both-long pairs whose single sampled position is 0
-    // (m ≤ stride). The shorter side decides (nf = m for the min side).
-    val oneShot = col("nf") === 1 ||
-      (col("nf") >= tierMin && col("nf") <= stride)
-    val cand = ppJoin(exA, comboList, chunk, maxHamming)
-      .unionByName(ppJoin(exB, comboList, chunk, maxHamming))
-      .unionByName(ppFallback(perV, oneShot, comboList, chunk, maxHamming))
-    def full(na: Column, nb: Column): Column = na < tierMin || nb < tierMin
-    ppVerify(cand, perV,
-      nComp = (na, nb) => when(full(na, nb), least(na, nb))
-        .otherwise(floor((least(na, nb) - 1) / stride) + 1),
-      step = (na, nb) => when(full(na, nb), lit(1)).otherwise(lit(stride)),
-      maxHamming, minMatchFrac)
-  }
 
   /** TWO-TIER video near-dup (r13): the production recipe the valve sweep
     * measured out. `frameStride` on a whole corpus backfires when videos are
@@ -1637,16 +1497,9 @@ object Multimodal {
     * the tier split exists to fix). A pair whose shorter video has
     * `n_frames < tierMinFrames` (default −1 resolves to 8·frameStride,
     * giving every strided denominator ≥ 8 positions — frac quantization
-    * ≤ 1/8) is mined at FULL resolution; only both-long pairs are mined at
-    * `frameStride` positions with the sampled denominator. Three disjoint
-    * branches partition the pair space — short×short (self-join over the
-    * short tier's frames), short×long (the asymmetric
-    * [[graft.operators.Dedup.hammingPairsBlockedCross]], whose candidate
-    * mass is bounded by the short side; the long side is pre-cut to
-    * positions < tierMinFrames since a short video has no frames beyond
-    * its own length to align), and long×long (self-join over the long
-    * tier's STRIDED frames — the mass stride is protecting) — so the union
-    * is duplicate-free and decode runs ONCE for all three.
+    * ≤ 1/8) is compared at FULL resolution; only both-long pairs are
+    * compared at `frameStride` positions with the sampled denominator.
+    * Decode runs ONCE for both tiers.
     * Output: (id_a, id_b, n_matching, n_comparable, match_frac) — the same
     * shape as [[videoNearDupPairs]]; `n_comparable` is full-resolution
     * whenever either side is short, sampled for both-long pairs.
@@ -1661,7 +1514,26 @@ object Multimodal {
       maxHamming, minMatchFrac, frameStride, tierMinFrames)
 
   /** [[videoNearDupPairsTiered]] over pre-computed frame signatures — see
-    * [[videoNearDupPairsFromHashes]] for the stored-signature rationale.
+    * [[videoNearDupPairsFromHashes]] for the stored-signature rationale and
+    * the three-stage miner this shares. A pair's tier — and with it its
+    * denominator rule — is decided by min(na, nb) alone (either side short
+    * ⟺ the MIN is short), so the candidate branches feed ONE exact stats
+    * step that computes each pair's stats under its own tier's rule:
+    *   A. blocks of consecutive PREFIX positions (positions
+    *      < min(nf, tierMin)) — cover every full-resolution pair: all its
+    *      m < tierMin compared positions sit within both videos' prefixes;
+    *   B. blocks of consecutive SAMPLED positions over LONG videos only —
+    *      cover both-long pairs (m ≥ tierMin gives S_m ≥ ⌊(tierMin−1)/stride⌋+1
+    *      sampled positions: 4 under the declared tierMin = 8 at stride 2);
+    *   C. at `b = 2` only, the position-0 fallback for pairs that compare
+    *      one position (m = 1, or both-long with m ≤ stride). At `b = 1`,
+    *      A and B already mine every compared position.
+    * At `b = 2` the pigeonhole holds per branch (a branch's pair compares
+    * S ≥ 2 positions), at `b = 1` any match is a candidate. Branches may
+    * overlap (a both-long pair can match at prefix AND sampled positions):
+    * at `b = 2` the verify deduplicates pairs first, and at `b = 1` a
+    * pair's n_matching counts only the rows of its own tier's branch (A
+    * for full resolution, B for both-long).
     */
   def videoNearDupPairsTieredFromHashes(spark: SparkSession, hashes: DataFrame,
                                         maxHamming: Int = 6,
@@ -1673,70 +1545,41 @@ object Multimodal {
     // has a denominator of ≥ 8 sampled positions — the valve sweep's failure
     // mode was exactly denominators of 1–3 positions.
     val tierMin = if (tierMinFrames > 0) tierMinFrames else 8 * frameStride
-    // Position-pair blocking (r19): same rewrite as the plain miner — see
-    // [[videoPairsPairBlocked]]. The tier rule survives intact because a
-    // pair's CLASS is decided by min(nf) alone (either side short ⟺
-    // min(na,nb) < tierMin), so the exact verify recomputes each pair's
-    // denominator and matching positions from the two lengths — the
-    // candidate branches only ever decide WHICH pairs get verified. At
-    // minMatchFrac ≥ 0.75 the pigeonhole guarantees coverage per branch:
-    // full-res pairs (m < tierMin) from consecutive PREFIX position pairs,
-    // both-long pairs (S_m ≥ 4 at the declared tierMin = 8, stride 2) from
-    // consecutive SAMPLED position pairs, m = 1 pairs from the position-0
-    // fallback. This replaces the class-collapse + tagged-mine machinery
-    // whose pair-group shuffle was the family's last big exchange (11.9 s
-    // vs the rewritten plain miner's 2.8 s at sf1).
-    if (minMatchFrac >= 0.75)
-      return videoPairsTieredPairBlocked(spark, mineWidth(spark, hashes),
-        maxHamming, minMatchFrac, frameStride, tierMin)
-    // ONE tagged mine instead of three composed branches (r18; the tier
-    // probe measured the old shortSelf/cross/longSelf composition — three
-    // mines, per-branch checkpoints, a union, six agg-side joins — at ~2×
-    // the EXACT single-join's whole wall on the regenerated corpus, because
-    // each branch re-pays the miner's fixed stages while the mined data is
-    // small). The pair space partitions exactly as before, but in-plan:
-    //   - mining relation = short frames at ALL positions + long frames at
-    //     prefix (< tierMin, the only positions a short video can align
-    //     with — block equality enforces it) or strided positions;
-    //   - pair-class filter post-join: a pair is kept full-res when either
-    //     side is short (tag carried through the mine), and a both-long
-    //     pair only at strided blocks — which drops the prefix long×long
-    //     candidates the single relation admits that the old long-branch
-    //     never formed. Output is row-identical to the three-branch
-    //     composition (AviSpec's first-principles recount and the oracle
-    //     pin both hold).
-    val h0 = mineWidth(spark, hashes).localCheckpoint()
-    // signature-class collapse first (videoClasses) — the tier machinery
-    // then runs over representatives only; tiers are class-level (nf is a
-    // class key), so members expand into the correct tier's stats
-    val (classes, repFrames) = videoClasses(h0)
-    // a pair's denominator rule from the two lengths alone: short-involved
-    // pairs compare full positions, both-long pairs compare sampled ones
-    def comparable(nfA: Column, nfB: Column): Column =
-      when(nfA < tierMin || nfB < tierMin, least(nfA, nfB))
-        .otherwise(floor((least(nfA, nfB) - 1) / frameStride) + 1)
-    // no broadcast hint: at corpus scale lens is one row per class — AQE
-    // broadcasts while it fits and shuffles when it doesn't
-    val lens = classes.select(col("rep").as("media_id"), col("nf"))
-      .withColumn("short", col("nf") < tierMin)
-      .localCheckpoint()
-    val frames = repFrames.join(lens.select("media_id", "short"), Seq("media_id"))
-      .filter(col("short") || col("frame_idx") < tierMin ||
-        col("frame_idx") % frameStride === 0)
-    val framePairs = Dedup.hammingPairsBlockedTagged(frames, "media_id",
-        "frame_idx", "dhash", "short", bits = 64, maxHamming = maxHamming)
-      .filter(col("tag_a") || col("tag_b") ||
-        col("block") % frameStride === 0)
-    val repPairs = framePairs
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_matching"))
-      .join(lens.select(col("media_id").as("id_a"), col("nf").as("__na")), Seq("id_a"))
-      .join(lens.select(col("media_id").as("id_b"), col("nf").as("__nb")), Seq("id_b"))
-      .withColumn("n_comparable", comparable(col("__na"), col("__nb")).cast("long"))
-      .withColumn("match_frac",
-        col("n_matching").cast("double") / col("n_comparable").cast("double"))
-      .filter(col("match_frac") >= minMatchFrac)
-    expandClassPairs(repPairs, classes, comparable, minMatchFrac)
+    val perV = ppPerVideo(mineWidth(spark, hashes))
+    val b = blockWidth(minMatchFrac)
+    def blocks(nBlocks: Column, stride: Int): DataFrame = {
+      val ex = ppExplode(perV, b, (nBlocks / b).cast("int"),
+        (t, i) => (t * b + i) * stride, maxHamming)
+      ppJoin(ex, ex, b, maxHamming, _ < _)
+    }
+    val SB = floor((col("nf") - 1) / frameStride) + 1
+    val prefix = blocks(least(col("nf"), lit(tierMin)), 1)
+    val sampled = blocks(when(col("nf") >= tierMin, SB).otherwise(lit(0)), frameStride)
+    def full(na: Column, nb: Column): Column = na < tierMin || nb < tierMin
+    val nComp = (na: Column, nb: Column) => when(full(na, nb), least(na, nb))
+      .otherwise(floor((least(na, nb) - 1) / frameStride) + 1)
+    if (b == 1)
+      // a full-resolution pair's matching positions are exactly its prefix
+      // rows, a both-long pair's exactly its sampled rows
+      ppStats(prefix.withColumn("__p", lit(true))
+          .unionByName(sampled.withColumn("__p", lit(false)))
+          .groupBy("id_a", "id_b")
+          .agg(count(when(col("__p"), 1)).as("__nprefix"),
+            count(when(!col("__p"), 1)).as("__nsampled")),
+        perV, nComp,
+        when(full(col("__na"), col("__nb")), col("__nprefix")).otherwise(col("__nsampled")),
+        minMatchFrac)
+    else {
+      // C: m = 1 full-res pairs always, plus — only under exotic knobs with
+      // tierMin ≤ stride — both-long pairs whose single sampled position is
+      // 0 (m ≤ stride). The shorter side decides (nf = m for the min side).
+      val oneShot = col("nf") === 1 ||
+        (col("nf") >= tierMin && col("nf") <= frameStride)
+      ppVerify(prefix.unionByName(sampled).unionByName(ppFallback(perV, oneShot, maxHamming)),
+        perV, nComp,
+        step = (na, nb) => when(full(na, nb), lit(1)).otherwise(lit(frameStride)),
+        maxHamming, minMatchFrac)
+    }
   }
 
   // ------------------------------------------------ perceptual audio hash ---

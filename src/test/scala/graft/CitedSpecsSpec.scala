@@ -7,7 +7,9 @@ import scala.jdk.CollectionConverters._
 
 /** A comment that cites a spec as the pin of some behaviour is only worth
   * its word if that spec exists: every `…Spec` name in `src/main` must be a
-  * class, trait or object in `src/test`.
+  * class, trait or object in `src/test`. The same holds for the probe mains
+  * a comment cites as the source of a measurement: every `…Probe` name in
+  * `src/main` must be an object under `graft/examples`.
   */
 class CitedSpecsSpec extends AnyFunSuite {
 
@@ -20,16 +22,27 @@ class CitedSpecsSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  test("every spec cited in src/main has a test class") {
-    val defined = sources("src/test/scala").flatMap { case (_, text) =>
-      """\b(?:class|trait|object)\s+(\w+Spec)\b""".r.findAllMatchIn(text).map(_.group(1))
-    }.toSet
-    val cited = sources("src/main/scala").flatMap { case (p, text) =>
-      """\b[A-Z]\w*Spec\b""".r.findAllIn(text).map(_ -> p)
+  /** Every match of `cited` in `src/main` must be one of `defined`. */
+  private def assertDefined(cited: String, defined: Set[String]): Unit = {
+    val found = sources("src/main/scala").flatMap { case (p, text) =>
+      cited.r.findAllIn(text).map(_ -> p)
     }
-    assert(cited.nonEmpty)
-    val missing = cited.filterNot { case (name, _) => defined(name) }
+    assert(found.nonEmpty)
+    val missing = found.filterNot { case (name, _) => defined(name) }
     assert(missing.isEmpty,
       missing.map { case (name, p) => s"$name cited in $p" }.distinct.mkString("\n"))
+  }
+
+  test("every spec cited in src/main has a test class") {
+    assertDefined("""\b[A-Z]\w*Spec\b""", sources("src/test/scala").flatMap { case (_, text) =>
+      """\b(?:class|trait|object)\s+(\w+Spec)\b""".r.findAllMatchIn(text).map(_.group(1))
+    }.toSet)
+  }
+
+  test("every probe cited in src/main is an example main") {
+    // by object, not by file: one file may hold several probe objects
+    assertDefined("""\b[A-Z]\w*Probe\d*\b""", sources("src/main/scala/graft/examples").flatMap {
+      case (_, text) => """\bobject\s+(\w+)""".r.findAllMatchIn(text).map(_.group(1))
+    }.toSet)
   }
 }

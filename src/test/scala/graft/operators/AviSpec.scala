@@ -8,6 +8,9 @@ class AviSpec extends SparkSpec {
   import spark.implicits._
 
   private def jpeg(bytes: Array[Byte]) = Jpeg.encodeGrayBlocks(bytes, 2)
+  /** A 48-byte frame payload unlike the recount corpora's text frames. */
+  private def filler(k: Int): String =
+    (s"$k QQQQ WWWW EEEE RRRR TTTT YYYY UUUU IIII " * 2).take(48)
 
   test("encode/decode round trip preserves frame payload bytes") {
     val frames = Seq(
@@ -150,14 +153,16 @@ class AviSpec extends SparkSpec {
   }
 
   test("pair-blocked miner matches a first-principles recount (strides 1 and 2, S=1 fallback)") {
-    // r19 rewrite pin: videoNearDupPairsFromHashes at minMatchFrac >= 0.75
-    // mines candidates via consecutive-position-PAIR blocking and verifies
-    // against per-video signature arrays. The expectation below recomputes
-    // every pair's stats from the raw dHashes with plain Scala loops — an
-    // oracle independent of BOTH the old and new plans. The corpus covers:
+    // videoNearDupPairsFromHashes mines candidates from position blocks and
+    // computes their exact stats. The expectation
+    // below recomputes every pair's stats from the raw dHashes with plain
+    // Scala loops — an oracle independent of the plan. The corpus covers:
     // exact clones, a tail-edited near-clone at the frac boundary, an
-    // unrelated video, a 1-frame video (stride-1 fallback branch) and a
-    // 2-frame prefix video (stride-2 fallback branch).
+    // unrelated video, a 1-frame video (stride-1 fallback branch), a
+    // 2-frame prefix video (stride-2 fallback branch) and a video that
+    // matches t1 only at positions 0 and 2 of 4 (frac 0.5: both
+    // consecutive position pairs (0,1) and (2,3) miss it, so only
+    // single-position candidates find it).
     val t1 = "alpha beta gamma delta epsilon zeta eta theta " * 4 // 4 frames @48
     val t2 = "one two three four five six seven eight nine ten " * 4
     val docs = Seq(
@@ -166,13 +171,14 @@ class AviSpec extends SparkSpec {
       (3L, t1.take(144) + "9876543210 QQQQ WWWW EEEE RRRR TTTT YYYY "), // last frame swapped
       (5L, t1.take(48)),               // 1 frame (= frame 0 of t1): S=1 at stride 1 AND 2
       (6L, t1.take(96)),               // 2 frames: S=1 at stride 2 only
+      (7L, (0 until 4).map(k => if (k % 2 == 0) t1.slice(48 * k, 48 * k + 48) else filler(k)).mkString),
     ).toDF("id", "text")
     val media = Multimodal.asAviMediaTable(spark, docs, "id", "text",
       blocksPerRow = 10, frameBytes = 48)
     val h = Multimodal.videoFrameDHash(spark, media).collect()
     val sig = h.map(r => (r.getLong(0), r.getInt(1)) -> r.getAs[Long]("dhash")).toMap
     val nf = h.groupBy(_.getLong(0)).view.mapValues(_.map(_.getInt(1)).max + 1).toMap
-    def expected(stride: Int): Set[(Long, Long, Long, Long, Double)] = {
+    def expected(stride: Int, minFrac: Double): Set[(Long, Long, Long, Long, Double)] = {
       val ids = nf.keys.toSeq.sorted
       (for {
         i <- ids.indices.iterator; j <- (i + 1 until ids.length).iterator
@@ -183,18 +189,21 @@ class AviSpec extends SparkSpec {
           java.lang.Long.bitCount(sig((a, k * stride)) ^ sig((b, k * stride))) <= 1
         }
         frac = nMatch.toDouble / nComp
-        if frac >= 0.8
+        if frac >= minFrac
       } yield (a, b, nMatch.toLong, nComp.toLong, frac)).toSet
     }
+    // the single-position-only pair is in the corpus: 2 of 4 positions
+    assert(expected(1, 0.5).contains((1L, 7L, 2L, 4L, 0.5)), expected(1, 0.5))
     val hashes = Multimodal.videoFrameDHash(spark, media).localCheckpoint()
-    for (stride <- Seq(1, 2)) {
+    for (minFrac <- Seq(0.5, 0.6, 0.8); stride <- Seq(1, 2)) {
       val got = Multimodal.videoNearDupPairsFromHashes(spark, hashes,
-          maxHamming = 1, minMatchFrac = 0.8, frameStride = stride)
+          maxHamming = 1, minMatchFrac = minFrac, frameStride = stride)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getDouble(4))).toSet
-      assert(got == expected(stride), s"stride $stride: got $got want ${expected(stride)}")
+      val want = expected(stride, minFrac)
+      assert(got == want, s"f $minFrac stride $stride: got $got want $want")
       // sanity: the corpus actually exercises the fallback branch
-      assert(got.exists(p => p._1 == 5L || p._2 == 5L), s"stride $stride: no S=1 pair")
+      assert(got.exists(p => p._1 == 5L || p._2 == 5L), s"f $minFrac stride $stride: no S=1 pair")
     }
     // the 2-frame prefix video pairs through the stride-2 fallback too
     val s2 = Multimodal.videoNearDupPairsFromHashes(spark, hashes,
@@ -204,13 +213,18 @@ class AviSpec extends SparkSpec {
   }
 
   test("tiered pair-blocked miner matches a first-principles recount") {
-    // r19: videoNearDupPairsTieredFromHashes' pair-blocked arm, pinned the
-    // same way — stats recomputed with plain Scala under the tier rule
-    // (full resolution when min(nf) < tierMin, sampled otherwise). Corpus
-    // spans both tiers, the cross-tier prefix case, a 1-frame video (the
-    // m=1 fallback) and a long near-clone.
+    // videoNearDupPairsTieredFromHashes pinned the same way — stats
+    // recomputed with plain Scala under the tier rule (full resolution when
+    // min(nf) < tierMin, sampled otherwise). Corpus spans both tiers, the
+    // cross-tier prefix case, a 1-frame video (the m=1 fallback), a long
+    // near-clone, and two videos that match only at non-consecutive
+    // positions: 7 matches `short` at positions 0, 2, 4 of 5 (full-res frac
+    // 0.6) and 8 matches `long` at sampled positions 0, 4, 8 of 0..10
+    // (sampled frac 0.5) — no consecutive prefix or sampled position pair
+    // of either matches, so only single-position candidates find them.
     val short = "alpha beta gamma delta epsilon zeta eta theta " * 5 // 5 frames
     val long = "one two three four five six seven eight nine ten " * 10 // 11 frames
+    def frame(s: String, k: Int): String = s.slice(48 * k, 48 * k + 48)
     val docs = Seq(
       (1L, short), (11L, short),
       (2L, long), (12L, long),
@@ -218,6 +232,8 @@ class AviSpec extends SparkSpec {
       (4L, long.take(240)),            // 5-frame prefix of long: cross-tier
       (5L, long.take(48)),             // 1 frame: m=1 fallback
       (6L, long.take(480) + "zzzz " * 20), // long near-clone, tail drifted
+      (7L, (0 until 5).map(k => if (k % 2 == 0) frame(short, k) else filler(k)).mkString),
+      (8L, (0 until 11).map(k => if (k % 4 == 0) frame(long, k) else filler(k)).mkString),
     ).toDF("id", "text")
     val media = Multimodal.asAviMediaTable(spark, docs, "id", "text",
       blocksPerRow = 10, frameBytes = 48)
@@ -227,7 +243,7 @@ class AviSpec extends SparkSpec {
     val nf = rows.groupBy(_.getLong(0)).view.mapValues(_.map(_.getInt(1)).max + 1).toMap
     val (stride, tierMin) = (2, 8)
     val ids = nf.keys.toSeq.sorted
-    val expected = (for {
+    def expected(minFrac: Double): Set[(Long, Long, Long, Long, Double)] = (for {
       i <- ids.indices.iterator; j <- (i + 1 until ids.length).iterator
       a = ids(i); b = ids(j)
       m = math.min(nf(a), nf(b))
@@ -238,16 +254,22 @@ class AviSpec extends SparkSpec {
         java.lang.Long.bitCount(sig((a, k * step)) ^ sig((b, k * step))) <= 1
       }
       frac = nMatch.toDouble / nComp
-      if frac >= 0.8
+      if frac >= minFrac
     } yield (a, b, nMatch.toLong, nComp.toLong, frac)).toSet
-    val got = Multimodal.videoNearDupPairsTieredFromHashes(spark, h,
-        maxHamming = 1, minMatchFrac = 0.8, frameStride = stride, tierMinFrames = tierMin)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getDouble(4))).toSet
-    assert(got == expected, s"got $got want $expected")
-    // the corpus exercises the fallback and both tiers
-    assert(expected.exists(p => p._1 == 5L || p._2 == 5L), "no m=1 pair in corpus")
-    assert(expected.exists(p => p._4 == 6L), "no sampled-denominator pair") // 11-frame pairs
+    // the single-position-only pairs are in the corpus, in both tiers
+    assert(expected(0.5).contains((1L, 7L, 3L, 5L, 0.6)), expected(0.5))
+    assert(expected(0.5).contains((2L, 8L, 3L, 6L, 0.5)), expected(0.5))
+    for (minFrac <- Seq(0.5, 0.6, 0.8)) {
+      val got = Multimodal.videoNearDupPairsTieredFromHashes(spark, h,
+          maxHamming = 1, minMatchFrac = minFrac, frameStride = stride, tierMinFrames = tierMin)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getDouble(4))).toSet
+      val want = expected(minFrac)
+      assert(got == want, s"f $minFrac: got $got want $want")
+      // the corpus exercises the fallback and both tiers
+      assert(want.exists(p => p._1 == 5L || p._2 == 5L), s"f $minFrac: no m=1 pair in corpus")
+      assert(want.exists(p => p._4 == 6L), s"f $minFrac: no sampled-denominator pair") // 11-frame pairs
+    }
   }
 
   test("videoFrameDHash: tail edit changes only the final frame's hash") {

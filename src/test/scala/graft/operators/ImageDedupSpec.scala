@@ -232,36 +232,4 @@ class ImageDedupSpec extends SparkSpec {
       .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
     assert(chain.contains("unsupported media_type"), chain)
   }
-
-  test("hammingPairsBlockedCross: cross pairs only, normalized orientation, once each") {
-    // r14 (the tiered video router's asymmetric primitive): disjoint-id
-    // contract — pairs BETWEEN the relations, never within either side.
-    val s = spark
-    import s.implicits._
-    // 64-bit sigs, maxHamming 1 → two 32-bit pigeonhole chunks
-    val left = Seq( // (block, id, sig)
-      (1L, 5L, 0L),  // pairs with right 2 (hamming 1) and right 20 (hamming 0)
-      (1L, 6L, 0L),  // left-left vs id 5 would qualify — must NOT be mined
-      (2L, 10L, 0L), // same-block partner on the right only
-    ).toDF("blk", "id", "sig")
-    val right = Seq(
-      (1L, 2L, 1L),   // hamming 1 from 0L, agrees on the high chunk
-      (1L, 3L, 3L),   // hamming 2 — over the bound, filtered
-      (1L, 20L, 0L),  // hamming 0: agrees on BOTH chunks — must emit ONCE
-      (2L, 30L, 0L),  // block-2 partner of left id 10
-      (3L, 40L, 0L),  // different block — never a candidate
-    ).toDF("blk", "id", "sig")
-    val out = Dedup.hammingPairsBlockedCross(left, right, "id", "blk", "sig",
-        bits = 64, maxHamming = 1)
-      .collect().map(r => (r.getLong(1), r.getLong(2)) -> r.getAs[Long]("hamming"))
-    assert(out.length == out.map(_._1).distinct.length, out.toSeq) // once each
-    val pairs = out.toMap
-    // id_a < id_b even when the LEFT id is the larger one (5 vs right 2);
-    // ids 5 AND 6 each cross-pair with right 2 and 20 — but (5,6) itself
-    // (left-left, would qualify at hamming 0) must NOT be mined, nor (2,3)
-    // or (3,20) (right-right), nor anything cross-block
-    assert(pairs.keySet ==
-      Set((2L, 5L), (2L, 6L), (5L, 20L), (6L, 20L), (10L, 30L)), pairs)
-    assert(pairs((2L, 5L)) == 1L && pairs((5L, 20L)) == 0L, pairs)
-  }
 }
