@@ -1,9 +1,9 @@
 package graft.engine
 
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BooleanType, DataType, StructType}
 
 import java.nio.charset.StandardCharsets
 
@@ -18,32 +18,38 @@ import java.nio.charset.StandardCharsets
   * versioned parquet snapshots.
   *
   * == Layout ==
+  * Version N is the log entry `_commits/N`, and the entry is the whole
+  * version: its schema, the table's layout (bucket count, range column,
+  * stats columns, merge-on-read, the range bounds dir) and the names of its
+  * data dirs. Each stage writes into a dir named for it alone,
+  * `v=<N>-<token>`, so no other stage can write there, and a dir that no
+  * entry names is never read. Dir names are relative to the root, so a
+  * table can be built under one root and renamed to another.
+  *
   * Unbucketed (`numBuckets = 0`) — full-snapshot copy-on-write:
   * {{{
   * root/
-  *   v=1/part-*.parquet        // immutable snapshot versions
-  *   v=2/part-*.parquet
-  *   v=2/_STAGE                // token of the stage that wrote v=2
-  *   _commits/1                // commit log: v=N is committed iff
-  *   _commits/2                //   _commits/N exists (empty body here)
+  *   v=1-3f2c…/part-*.parquet  // immutable snapshot versions
+  *   v=2-81ad…/part-*.parquet
+  *   _commits/1                // "schema=…", "dir=v=1-3f2c…"
+  *   _commits/2                // v=N is committed iff _commits/N exists
   * }}}
   *
   * Bucketed (`numBuckets = B`) — manifest-addressed buckets, so a merge
   * rewrites ONLY buckets containing changed keys:
   * {{{
   * root/
-  *   v=1/__bucket=0/...        // every bucket written at bootstrap
-  *   v=1/__bucket=1/...
-  *   v=2/__bucket=1/...        // later merge touched bucket 1 only
-  *   _commits/1                // "bucket=b,v" per non-empty bucket
-  *   _commits/2                // bucket 0 → v1 (untouched), bucket 1 → v2
+  *   v=1-3f2c…/__bucket=0/...  // every bucket written at bootstrap
+  *   v=1-3f2c…/__bucket=1/...
+  *   v=2-81ad…/__bucket=1/...  // later merge touched bucket 1 only
+  *   _commits/1                // "buckets=B", "bucket=b,<dir>" per non-empty bucket
+  *   _commits/2                // bucket 0 → v=1-3f2c… (untouched), bucket 1 → v=2-81ad…
   * }}}
   * A version is its manifest: readers resolve the highest log entry → its
   * manifest → the exact bucket directories, each immutable once written.
   * At 100 TB a CDC batch touching 1% of keys rewrites ≈1% of buckets
   * instead of the table; old versions remain readable until
-  * [[KeyedTable.vacuum]] GCs dirs the retained manifest chain no longer
-  * references.
+  * [[KeyedTable.vacuum]] GCs dirs the retained entries no longer name.
   *
   * == Scale design ==
   *  - merge(batch) = dedupe batch to latest per key → current ANTI-JOIN batch
@@ -55,18 +61,15 @@ import java.nio.charset.StandardCharsets
   *    union.
   *  - Bucket routing is `pmod(hash(keys), B)` — the same Murmur3 the engine
   *    uses for shuffle partitioning, so keys distribute like a shuffle would.
-  *  - The commit is create-once. A version's data and its stage token land
-  *    first; then a temp file holding the entry's body (tag, manifest, delta
-  *    chains) becomes `_commits/N` only if no such entry exists: a hard
-  *    link on the local FS, a rename on HDFS, both atomic. Of two writers
-  *    of one version, in one process or several, exactly one commits; the
-  *    other gets `ConcurrentModificationException`. The current version is
-  *    the highest entry, so a reader never sees a table without one. An
-  *    object store needs its conditional put (`If-None-Match: *`) instead.
-  *    Nothing claims N+1 before its data is written: a writer whose data
-  *    write starts after another writer committed the same N+1 overwrites
-  *    that version's files (its own publish then fails). The pipeline has
-  *    one writer per table; concurrent writers of one table are unsupported.
+  *  - The commit is create-once. A stage reads the current entry N once and
+  *    builds on it alone; its data lands in its own dir first, then a temp
+  *    file holding entry N+1 becomes `_commits/N+1` only if no such entry
+  *    exists: a hard link on the local FS, a rename on HDFS, both atomic.
+  *    The first stage to publish N+1 wins, in one process or several; every
+  *    other stage of N+1 gets `ConcurrentModificationException`, and its
+  *    dir, which no entry names, is never read. The current version is the
+  *    highest entry, so a reader never sees a table without one. An object
+  *    store needs its conditional put (`If-None-Match: *`) instead.
   *
   * == Range bucketing + zone-map pruning ==
   * Hash bucketing spreads every value range across every bucket, so a scan
@@ -74,10 +77,10 @@ import java.nio.charset.StandardCharsets
   * buckets always span the full domain. When `rangeCol` is set (it must be
   * one of `keys`, so a row's bucket is stable across updates), bucket
   * routing becomes RANGE assignment against boundaries sampled at bootstrap
-  * (`_bounds/` parquet, immutable like `_BUCKETS`): bucket b holds the rows
-  * whose `rangeCol` falls in (bound(b-1), bound(b)]. Merges still prune to
-  * touched buckets — the batch's `rangeCol` values route it exactly like
-  * hash routing does.
+  * (`_bounds-<token>` parquet, named by the layout every entry carries and
+  * never rewritten): bucket b holds the rows whose `rangeCol` falls in
+  * (bound(b-1), bound(b)]. Merges still prune to touched buckets — the
+  * batch's `rangeCol` values route it exactly like hash routing does.
   *
   * == Merge-on-read mode (`mor = true`, bucketed tables only) ==
   * Copy-on-write's write amplification is bounded by TOUCHED BUCKETS, and a
@@ -91,11 +94,11 @@ import java.nio.charset.StandardCharsets
   * manifest:
   * {{{
   * root/
-  *   v=1/__bucket=0..B/...      // base (bootstrap)
-  *   v=2/__bucket=3/...         // delta segment: only the batch's rows
-  *   v=2/__bucket=7/...         //   (+ __tomb marker column)
-  *   _commits/2                 // "bucket=b,1": bucket -> BASE version;
-  *                              // "deltas=3,2" / "deltas=7,2": delta chains
+  *   v=1-3f2c…/__bucket=0..B/...  // base (bootstrap)
+  *   v=2-81ad…/__bucket=3/...     // delta segment: only the batch's rows
+  *   v=2-81ad…/__bucket=7/...     //   (+ __tomb marker column)
+  *   _commits/2                   // "bucket=3,v=1-3f2c…": bucket -> BASE dir;
+  *                                // "deltas=3,v=2-81ad…": delta chains
   * }}}
   * Write cost is ∝ THE BATCH — base files are never rewritten. Readers
   * coalesce: rows of a key's LATEST delta version win over base (and zero
@@ -113,9 +116,10 @@ import java.nio.charset.StandardCharsets
   * rule it out); [[statsAggregate]] honestly declines while deltas are
   * outstanding (replaced keys would double-count).
   *
-  * `statsCols` adds a per-bucket min/max/count sidecar (`v=N/_stats`
-  * parquet, written from a column-pruned read-back of just the files that
-  * version wrote — cost ∝ batch, never the table). [[scanRange]] consults
+  * `statsCols` adds a per-bucket min/max/count sidecar (`_stats` parquet
+  * inside each stage's dir, written from a column-pruned read-back of just
+  * the files that stage wrote — cost ∝ batch, never the table).
+  * [[scanRange]] consults
   * the sidecar to read ONLY the buckets whose [min,max] can intersect the
   * predicate — on a range-bucketed table a narrow scan touches a few
   * buckets of B; on a hash-bucketed table the same stats honestly prune
@@ -141,138 +145,123 @@ final class KeyedTable(
   private val hconf = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = new Path(root).getFileSystem(hconf)
   private def commitsDir = new Path(root, CommitsDir)
+  private def entryPath(v: Long) = new Path(commitsDir, v.toString)
 
-  /** The highest entry this instance has seen. Entries are created in
-    * order and vacuum deletes only entries below the current one, so while
-    * this entry exists every later entry does too: a read probes upward
-    * from it, and lists the log (a cost that grows with its length) only
-    * when it is gone.
+  require(rangeCol.forall(keys.contains),
+    s"rangeCol ${rangeCol.getOrElse("")} must be a key column (bucket must be stable across updates)")
+
+  /** Version 0, before the first commit: no schema, and the layout this
+    * instance was built with. A bootstrap records that layout in entry 1,
+    * and from then on the stored layout is authoritative: reopening with
+    * another `numBuckets` or `mor` would route keys to the wrong buckets or
+    * miss the delta chain, so the parameters are ignored once the table
+    * exists.
     */
-  @volatile private var seenVersion = 0L
+  private val unborn =
+    Head(0L, Commit(new StructType(), Layout(numBuckets, rangeCol, (statsCols ++ rangeCol).distinct, mor)))
+
+  /** The highest entry this instance has seen, parsed. Entries are created
+    * in order, never change, and vacuum deletes only entries below the
+    * current one, so while this entry exists every later entry does too:
+    * [[head]] probes upward from it, and lists the log (a cost that grows
+    * with its length) only when it is gone.
+    */
+  @volatile private var seen: Head = unborn
+
+  /** The current version and its entry, read together. */
+  private def head: Head = {
+    val s = seen
+    var v = s.version
+    if (v > 0 && fs.exists(entryPath(v))) {
+      while (fs.exists(entryPath(v + 1))) v += 1
+    } else v = logVersions(fs, commitsDir).lastOption.getOrElse(0L)
+    if (v == s.version) s
+    else if (v == 0) { seen = unborn; unborn }
+    else commitAt(v) match {
+      case Some(c) => val h = Head(v, c); seen = h; h
+      case None => head // vacuumed since the probe: a later entry exists
+    }
+  }
+
+  /** [[head]] as the base of a stage. A stage pins it once: its data, its
+    * schema and layout, and the version it publishes (base + 1) all come
+    * from this one entry. A range column passed on reopen must match the
+    * stored one, or the stage would route rows to the wrong buckets.
+    */
+  private def base: Head = {
+    val h = head
+    (h.entry.layout.rangeCol, rangeCol) match {
+      case (Some(s), Some(p)) if s != p =>
+        throw new IllegalStateException(s"table at $root is range-bucketed on '$s', reopened with rangeCol '$p'")
+      case _ => h
+    }
+  }
 
   /** The highest entry of the commit log; 0 before the first commit. */
-  def currentVersion: Long = {
-    var v = seenVersion
-    if (v > 0 && fs.exists(new Path(commitsDir, v.toString))) {
-      while (fs.exists(new Path(commitsDir, (v + 1).toString))) v += 1
-    } else v = logVersions(fs, commitsDir).lastOption.getOrElse(0L)
-    seenVersion = v
-    v
-  }
+  def currentVersion: Long = head.version
 
   /** The body of log entry `v`; None if `v` was never committed or was
     * vacuumed.
     */
   private def commitAt(v: Long): Option[Commit] = {
-    val p = new Path(commitsDir, v.toString)
+    val p = entryPath(v)
     readText(fs, p).map(Commit.parse(p, _))
   }
 
-  /** The handle of version `next`, written but not yet visible: its data
-    * is in `v=next`, and `commit` is the body of its log entry. Staging
-    * ends by writing a token of its own into `v=next`; publish refuses
-    * unless `v=next` still holds that token, so a stage whose data a later
-    * stage of the same version overwrote can never commit that data under
-    * its own entry. Publish then creates the entry. For an unbucketed
-    * version (`written` = the schema of the DataFrame written) it seeds the
-    * session's read plan of the new version, so the first read after a
-    * commit does not run a schema-inference job. The seed waits for the
-    * publish: a stage that is never published must not evict the plans of
-    * the version readers still see.
+  /** The handle of version `next`, written but not yet visible: `entry`
+    * names its data, and publish creates `_commits/next` holding it.
     */
-  private def staged(next: Long, commit: Commit, written: Option[StructType]): Staged = {
-    val tokenPath = new Path(root, s"v=$next/$StageToken")
-    val token = java.util.UUID.randomUUID().toString
-    writeFile(fs, tokenPath, token)
-    val body = commit.render
-    new Staged(next, () => {
-      if (!readText(fs, tokenPath).contains(token))
-        throw new java.util.ConcurrentModificationException(
-          s"$root: v=$next no longer holds this stage's data — another writer staged or " +
-            "committed the version since; re-read the snapshot and retry")
-      createEntry(fs, commitsDir, next, body)
-      written.foreach(schema => readPlan(root, next, Seq(s"$root/v=$next"), Some(schema)))
-    })
-  }
+  private def staged(next: Long, entry: Commit): Staged = new Staged(next, () => {
+    createEntry(fs, commitsDir, next, entry.render)
+    if (seen.version < next) seen = Head(next, entry)
+  })
 
-  /** Write `df` as unbucketed version `next`. */
-  private def writeVersion(df: DataFrame, next: Long, tag: Option[String] = None): Staged = {
-    writeParquet(df.write, s"$root/v=$next")
-    staged(next, Commit(tag), Some(df.schema))
-  }
+  /** A data dir for version `next` that no other stage can name. */
+  private def newDir(next: Long): String = s"v=$next-${java.util.UUID.randomUUID()}"
 
   def exists: Boolean = currentVersion > 0
 
-  /** The bucket count is TABLE metadata, persisted at creation — reopening
-    * with a different `numBuckets` would route keys to the wrong buckets on
-    * the next merge (missed anti-joins → duplicate keys), so the stored
-    * value is authoritative once the table exists.
+  /** The bucket count, from the stored layout once the table exists. */
+  def effectiveBuckets: Int = head.entry.layout.buckets
+
+  /** Merge-on-read, from the stored layout once the table exists: a CoW
+    * reader of a MOR table would miss the delta chain and serve stale base
+    * rows.
     */
-  def effectiveBuckets: Int =
-    readPointer(fs, new Path(root, BucketsMarker)).map(_.toInt).getOrElse(numBuckets)
-
-  private def bucketed: Boolean = effectiveBuckets > 0
-
-  /** Merge-on-read is TABLE metadata persisted at creation, like the bucket
-    * count: a CoW reader opening a MOR table without the flag would miss
-    * the delta chain and silently serve stale base rows, so the stored
-    * marker is authoritative once the table exists.
-    */
-  def effectiveMor: Boolean =
-    fs.exists(new Path(root, MorMarker)) || (!exists && mor)
-
-  private def morActive: Boolean = bucketed && effectiveMor
+  def effectiveMor: Boolean = head.entry.layout.mor
 
   /** (delta-chain snapshot → summed on-disk bytes) memo for [[resolve]]'s
     * broadcast guard. Delta segments are immutable once written, so the sum
     * is fully determined by the chain map itself; any epoch or compaction
     * invalidates the entry by producing a different map.
     */
-  @transient private var deltaBytesCache: (Map[Int, Seq[Long]], Long) = null
+  @transient private var deltaBytesCache: (Map[Int, Seq[String]], Long) = null
 
   /** bucket → ascending uncompacted delta-version chain, at the current
     * version (empty for CoW tables and right after compaction).
     */
-  def deltaMap: Map[Int, Seq[Long]] = currentCommit.deltas
-
-  private def currentCommit: Commit = commitAt(currentVersion).getOrElse(Commit())
+  def deltaMap: Map[Int, Seq[Long]] = head.entry.deltas.view.mapValues(_.map(versionOf)).toMap
 
   /** Uncompacted delta-segment count per bucket — the observability surface
     * for the MOR read tax ([[compactDeltas]]' threshold input).
     */
-  def deltaCount: Map[Int, Int] = deltaMap.view.mapValues(_.size).toMap
+  def deltaCount: Map[Int, Int] = head.entry.deltas.view.mapValues(_.size).toMap
 
-  require(rangeCol.forall(keys.contains),
-    s"rangeCol ${rangeCol.getOrElse("")} must be a key column (bucket must be stable across updates)")
-
-  /** Range column is TABLE metadata like the bucket count: persisted at
-    * creation, authoritative once the table exists — reopening with a
-    * conflicting `rangeCol` would route merge batches to the wrong buckets.
+  /** The range column, from the stored layout once the table exists (an
+    * existing hash table stays hash); a conflicting `rangeCol` on reopen
+    * throws.
     */
-  def effectiveRangeCol: Option[String] = {
-    val stored = readText(fs, new Path(root, RangeColMarker)).map(_.trim)
-    (stored, rangeCol) match {
-      case (Some(s), Some(p)) if s != p =>
-        throw new IllegalStateException(s"table at $root is range-bucketed on '$s', reopened with rangeCol '$p'")
-      case (Some(s), _) => Some(s)
-      case (None, p) => if (exists) None else p // existing hash table stays hash; else creation param
-    }
-  }
+  def effectiveRangeCol: Option[String] = base.entry.layout.rangeCol
 
-  /** Stats columns are persisted at creation too: every version written
-    * after bootstrap carries a stats row per bucket at one stable schema,
-    * so [[bucketStats]] can union sidecars across the manifest chain.
-    * Reopening params are ignored once the marker exists.
+  /** The stats columns, from the stored layout once the table exists:
+    * every version carries a stats row per bucket at one stable schema, so
+    * [[bucketStats]] can union sidecars across the manifest.
     */
-  def effectiveStatsCols: Seq[String] = {
-    val stored = readText(fs, new Path(root, StatsColsMarker))
-      .map(_.trim.split(",").toSeq.filter(_.nonEmpty))
-    stored.getOrElse(if (exists) Nil else (statsCols ++ rangeCol).distinct)
-  }
+  def effectiveStatsCols: Seq[String] = head.entry.layout.statsCols
 
-  private def bucketExpr: org.apache.spark.sql.Column = effectiveRangeCol match {
+  private def bucketExpr(layout: Layout): Column = layout.rangeCol match {
     case Some(rc) =>
-      val bs = boundaryValues
+      val bs = boundaryValues(layout.bounds.get)
       // ≤ B-1 chained comparisons — stays inside whole-stage codegen.
       // NULL range values route to bucket 0 (a range predicate never
       // matches NULL, so scanRange prunes them via the all-null rule).
@@ -280,31 +269,39 @@ final class KeyedTable(
         case (acc, (v, i)) => acc.when(col(rc) <= lit(v), i)
       }
       base.otherwise(bs.size)
-    case None => pmod(hash(keys.map(col).toIndexedSeq: _*), lit(effectiveBuckets))
+    case None => pmod(hash(keys.map(col).toIndexedSeq: _*), lit(layout.buckets))
   }
 
-  /** Bootstrap-sampled range boundaries (ascending, size ≤ B-1), read once —
-    * immutable after creation, like the bucket count. RangePartitioner-style:
-    * a bounded sample (~200 rows per bucket) is tiled with `ntile` and each
-    * tile's max becomes a boundary; the single-partition window runs over the
-    * SAMPLE (≤ B·200 rows), never the table.
+  /** (bounds dir → its boundaries): a bounds dir is never rewritten, so it
+    * is read once per instance.
     */
-  private lazy val boundaryValues: Seq[Any] = {
-    val p = new Path(root, BoundsDir)
-    require(fs.exists(p), s"range-bucketed table at $root has no $BoundsDir — bootstrap incomplete?")
-    val bs = spark.read.parquet(p.toString).orderBy("t").collect().map(_.get(1)).toSeq
+  @volatile private var boundsRead: (String, Seq[Any]) = null
+
+  /** Bootstrap-sampled range boundaries (ascending, size ≤ B-1) in `dir`.
+    * RangePartitioner-style: a bounded sample (~200 rows per bucket) is
+    * tiled with `ntile` and each tile's max becomes a boundary; the
+    * single-partition window runs over the SAMPLE (≤ B·200 rows), never the
+    * table.
+    */
+  private def boundaryValues(dir: String): Seq[Any] = {
+    val memo = boundsRead
+    if (memo != null && memo._1 == dir) return memo._2
+    val bs = spark.read.parquet(s"$root/$dir").orderBy("t").collect().map(_.get(1)).toSeq
     // An empty read here means the sidecar's FILES were lost while the dir
     // survived. Routing would silently degrade to everything-in-bucket-0 —
     // a later merge would then write keys into buckets other than the ones
     // their current versions live in (duplicate keys across buckets). Fail
     // loudly instead; writeBounds guarantees ≥ 1 boundary at bootstrap.
-    require(bs.nonEmpty, s"range-bucketed table at $root has an empty $BoundsDir sidecar — " +
+    require(bs.nonEmpty, s"range-bucketed table at $root has an empty $dir sidecar — " +
       "files lost after bootstrap? rebuild the table")
+    boundsRead = (dir, bs)
     bs
   }
 
-  private def writeBounds(df: DataFrame, rc: String): Unit = {
-    val b = effectiveBuckets
+  /** Sample `df`'s range boundaries for `b` buckets into a bounds dir of
+    * their own; returns its name.
+    */
+  private def writeBounds(df: DataFrame, rc: String, b: Int): String = {
     val dt = df.schema(rc).dataType
     val orderableAtomic = dt match {
       case _: org.apache.spark.sql.types.NumericType => true
@@ -316,7 +313,7 @@ final class KeyedTable(
     require(orderableAtomic, s"rangeCol $rc must be an orderable atomic type, got $dt")
     val n = df.count()
     val frac = if (n == 0) 1.0 else math.min(1.0, (b * 200.0) / n)
-    val sampled = df.select(col(rc).as("b")).na.drop.sample(withReplacement = false, frac, seed = 42)
+    val sampled = df.select(col(rc).as("b")).na.drop().sample(withReplacement = false, frac, seed = 42)
     val w = org.apache.spark.sql.expressions.Window.orderBy("b")
     val bounds = sampled.withColumn("t", ntile(b).over(w))
       .groupBy("t").agg(max(col("b")).as("b"))
@@ -327,82 +324,69 @@ final class KeyedTable(
     // forever (bounds are immutable). Require representative data up front.
     require(bounds.limit(1).count() > 0,
       s"range bootstrap needs ≥ 1 non-null $rc row to sample boundaries from")
-    writeParquet(bounds.coalesce(1).write, new Path(root, BoundsDir).toString)
+    val dir = s"$BoundsDir-${java.util.UUID.randomUUID()}"
+    writeParquet(bounds.coalesce(1).write, s"$root/$dir")
+    dir
   }
 
   /** bucket → version holding its current data (bucketed tables only). */
-  def manifest: Map[Int, Long] = currentCommit.manifest
+  def manifest: Map[Int, Long] = head.entry.manifest.view.mapValues(versionOf).toMap
 
-  /** Declared schema persisted at creation — lets an empty snapshot (e.g. a
-    * bootstrap batch whose rows were all quality-rejected) stay a valid,
-    * mergeable table instead of a schema-less empty DataFrame.
+  /** The schema of the current version, from its entry — an empty snapshot
+    * (e.g. a bootstrap batch whose rows were all quality-rejected) stays a
+    * valid, mergeable table instead of a schema-less empty DataFrame.
     */
-  def storedSchema: Option[org.apache.spark.sql.types.StructType] =
-    readText(fs, new Path(root, SchemaMarker)).map(
-      org.apache.spark.sql.types.DataType.fromJson(_).asInstanceOf[org.apache.spark.sql.types.StructType])
+  def storedSchema: Option[StructType] = Some(head).filter(_.version > 0).map(_.entry.schema)
 
-  /** [[storedSchema]] of a committed table: every bootstrap goes through
-    * [[stageOverwrite]], which writes `_SCHEMA` before entry 1 exists, so a
-    * committed table without one is corrupt and fails loudly. */
-  private def tableSchema: StructType = storedSchema.getOrElse(
-    throw new IllegalStateException(s"KeyedTable at $root has no stored schema ($SchemaMarker)"))
-
-  private def emptyTyped: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
+  private def emptyOf(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Read the current snapshot. */
-  def current: DataFrame = {
-    val v = currentVersion
-    require(v > 0, s"KeyedTable at $root has no committed version")
-    if (!bucketed) {
-      val hasData = fs.listStatus(new Path(s"$root/v=$v"))
-        .exists(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      if (hasData) readPlan(root, v, Seq(s"$root/v=$v")) else emptyTyped
-    } else {
-      val c = commitAt(v).getOrElse(Commit())
-      resolve(root, v, c.manifest, if (morActive) c.deltas else Map.empty)
-    }
+  def current: DataFrame = snapshot(root, head)
+
+  /** The rows of version `h`, read with its entry's schema. */
+  private def snapshot(source: String, h: Head): DataFrame = {
+    require(h.version > 0, s"KeyedTable at $root has no committed version")
+    val c = h.entry
+    if (c.layout.buckets == 0) readPlan(source, h.version, Seq(s"$root/${c.dir.get}"), c.schema)
+    else resolve(source, h, c.manifest, c.deltas)
   }
 
-  /** The parquet read plan over committed version dirs, memoized per
-    * session in [[SessionPlanCache]]: `source` is the table root and the
-    * token is `v`, the version being resolved, so a commit drops the
-    * superseded version's plans. Time-travel reads of an older version use
-    * their own source, so a snapshot diff (old version against current)
-    * keeps both sides cached.
-    *
-    * An unbucketed commit seeds its version's plan at publish, with the
-    * schema it wrote, so only a session that did not write the version
-    * infers its schema here. Bucketed and merge-on-read reads still infer
-    * on their first read of a version: their path sets come from the
-    * manifest and the delta chain, not from the write.
+  /** The parquet read plan over committed data dirs, memoized per session
+    * in [[SessionPlanCache]]: `source` is the table root and the token is
+    * `v`, the version being resolved, so a commit drops the superseded
+    * version's plans. Time-travel reads of an older version use their own
+    * source, so a snapshot diff (old version against current) keeps both
+    * sides cached. Every read passes the schema its entry records, so no
+    * read runs a schema-inference job.
     */
-  private def readPlan(source: String, v: Long, paths: Seq[String],
-                       schema: Option[StructType] = None): DataFrame =
-    SessionPlanCache.getOrElseUpdate(spark, source, v, paths)(
-      schema.fold(spark.read)(spark.read.schema).parquet(paths: _*))
+  private def readPlan(source: String, v: Long, paths: Seq[String], schema: StructType): DataFrame =
+    SessionPlanCache.getOrElseUpdate(spark, source, v, paths)(spark.read.schema(schema).parquet(paths: _*))
 
-  /** The bucketed read, base + delta coalesce. `m` maps buckets to their
-    * BASE version, `dm` to their uncompacted delta chains. With no deltas
-    * this is the plain manifest-resolved scan. With deltas, the merge
-    * algebra runs at READ time, in the same scale shape the write-side
-    * [[KeyedTable.cdcMergePlan]] uses: the base side streams through one
-    * anti-join against a BROADCAST of the delta keys (no base shuffle);
-    * the delta rows — bounded by the compaction contract — pay one
-    * per-key window to pick each key's latest segment, whose non-tombstone
-    * rows are the key's entire current group (zero rows = key deleted).
+  /** The bucketed read of version `h`, base + delta coalesce. `m` maps
+    * buckets to their BASE dir, `dm` to their uncompacted delta chains.
+    * With no deltas this is the plain manifest-resolved scan. With deltas,
+    * the merge algebra runs at READ time, in the same scale shape the
+    * write-side [[KeyedTable.cdcMergePlan]] uses: the base side streams
+    * through one anti-join against a BROADCAST of the delta keys (no base
+    * shuffle); the delta rows — bounded by the compaction contract — pay
+    * one per-key window to pick each key's latest segment, whose
+    * non-tombstone rows are the key's entire current group (zero rows =
+    * key deleted).
     */
-  private def resolve(source: String, v: Long, m: Map[Int, Long], dm: Map[Int, Seq[Long]]): DataFrame = {
-    val basePaths = m.toSeq.map { case (b, ver) => s"$root/v=$ver/$BucketCol=$b" }
-    val base = if (basePaths.isEmpty) emptyTyped else readPlan(source, v, basePaths)
+  private def resolve(source: String, h: Head, m: Map[Int, String], dm: Map[Int, Seq[String]]): DataFrame = {
+    val schema = h.entry.schema
+    val basePaths = m.toSeq.map { case (b, d) => s"$root/$d/$BucketCol=$b" }
+    val base = if (basePaths.isEmpty) emptyOf(schema) else readPlan(source, h.version, basePaths, schema)
     if (dm.isEmpty) return base
     // one scan leg per delta VERSION (buckets of a version read together),
     // tagged with its version so per-key latest-wins is decidable
-    val byVer = dm.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) }
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq.sortBy(_._1)
-    val deltas = byVer.map { case (dv, bs) =>
-      readPlan(source, v, bs.map(b => s"$root/v=$dv/$BucketCol=$b"))
-        .withColumn(DeltaVerCol, lit(dv))
+    val byDir = dm.toSeq.flatMap { case (b, ds) => ds.map(d => (d, b)) }
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq.sortBy(p => versionOf(p._1))
+    val segment = schema.add(TombCol, BooleanType)
+    val deltas = byDir.map { case (d, bs) =>
+      readPlan(source, h.version, bs.map(b => s"$root/$d/$BucketCol=$b"), segment)
+        .withColumn(DeltaVerCol, lit(versionOf(d)))
     }.reduce(_.unionByName(_))
     val cols = base.columns.toSeq
     val w = org.apache.spark.sql.expressions.Window
@@ -442,8 +426,8 @@ final class KeyedTable(
       val cached = deltaBytesCache
       if (cached != null && cached._1 == dm) cached._2
       else {
-        val b = byVer.iterator.flatMap { case (dv, bs) =>
-          bs.iterator.map(b => fs.getContentSummary(new Path(s"$root/v=$dv/$BucketCol=$b")).getLength)
+        val b = byDir.iterator.flatMap { case (d, bs) =>
+          bs.iterator.map(b => fs.getContentSummary(new Path(s"$root/$d/$BucketCol=$b")).getLength)
         }.sum
         deltaBytesCache = (dm, b)
         b
@@ -454,15 +438,13 @@ final class KeyedTable(
   }
 
   /** Time travel: read the snapshot as of version `v` (must not have been
-    * vacuumed). Unbucketed versions are whole directories; bucketed versions
-    * resolve through that version's manifest.
+    * vacuumed), with the schema and data dirs its own entry names.
     *
     * == Vacuum race contract (pinned by KeyedTableSpec) ==
     * A concurrent `vacuum` that drops `v` makes the reader FAIL LOUDLY,
     * never return partial or empty data: resolving `atVersion` after the
     * drop throws here (vacuum deletes the version's log entry before its
-    * data, and without the explicit entry check a vacuumed bucketed version
-    * would read as an empty manifest and SILENTLY yield an empty snapshot);
+    * data, and the entry is the version);
     * a DataFrame resolved BEFORE the drop fails at its next action with a
     * missing-file error, because the file listing is pinned at resolution
     * time and `spark.sql.files.ignoreMissingFiles` stays at its `false`
@@ -472,102 +454,90 @@ final class KeyedTable(
     * that the race is always an ERROR, not wrong data.
     */
   def atVersion(v: Long): DataFrame = {
-    val cur = currentVersion
-    require(v > 0 && v <= cur, s"version $v out of range 1..$cur")
-    val source = if (v == cur) root else s"$root#pinned"
-    // checked before the cached plan is returned: a plan resolved before
-    // the drop would otherwise hide the vacuum until its next action
-    val c = commitAt(v).getOrElse(throw new IllegalStateException(
-      s"$root: version $v is gone from the commit log — vacuumed while referenced?"))
-    if (!bucketed) readPlan(source, v, Seq(s"$root/v=$v"))
-    else resolve(source, v, c.manifest, if (effectiveMor) c.deltas else Map.empty)
+    val h = head
+    require(v > 0 && v <= h.version, s"version $v out of range 1..${h.version}")
+    if (v == h.version) snapshot(root, h)
+    else snapshot(s"$root#pinned", Head(v, commitAt(v).getOrElse(throw new IllegalStateException(
+      s"$root: version $v is gone from the commit log — vacuumed while referenced?"))))
   }
 
   /** Rows of the listed buckets only (bucketed tables) — the pruned read the
     * merge uses; also useful for key-range queries that know their buckets.
     */
-  def readBuckets(buckets: Seq[Int]): DataFrame = {
+  def readBuckets(buckets: Seq[Int]): DataFrame = readBucketsAt(head, buckets)
+
+  private def readBucketsAt(h: Head, buckets: Seq[Int]): DataFrame = {
     val keep = buckets.toSet
-    resolve(root, currentVersion, manifest.view.filterKeys(keep).toMap,
-      if (morActive) deltaMap.view.filterKeys(keep).toMap else Map.empty)
+    resolve(root, h, h.entry.manifest.view.filterKeys(keep).toMap, h.entry.deltas.view.filterKeys(keep).toMap)
   }
 
-  /** Truncate-and-reload (K5): write a fresh snapshot ignoring history.
-    * Refuses to bootstrap (version 1) over a directory that already holds
-    * version dirs but no commit log entry — only a lost log leaves that
-    * state, and re-bootstrapping would clobber live data. A lone `v=1` is
-    * the exception: it is a bootstrap that was never published (crashed,
-    * or staged and abandoned) and is rewritten.
-    */
-  def overwrite(df: DataFrame): Long = stageOverwrite(df).publish()
+  /** Truncate-and-reload (K5): write a fresh snapshot ignoring history. */
+  def overwrite(df: DataFrame): Long = stageOverwrite(base, df).publish()
 
-  private def stageOverwrite(df: DataFrame, tag: Option[String] = None): Staged = {
-    val next = currentVersion + 1
-    if (!exists) {
-      val staleVersions = fs.exists(new Path(root)) &&
-        fs.listStatus(new Path(root)).exists { st =>
-          val n = st.getPath.getName
-          n.startsWith("v=") && n != "v=1"
-        }
-      if (staleVersions) throw new IllegalStateException(
-        s"$root holds version dirs but no commit log entry — $CommitsDir lost? restore it manually")
-      if (mor) {
-        require(numBuckets > 0, "merge-on-read requires a bucketed table " +
-          "(delta segments are per-bucket)")
-        writeText(fs, new Path(root, MorMarker), "1")
-      }
-      rangeCol.foreach { rc =>
-        require(numBuckets > 0, s"range bucketing on $rc needs numBuckets > 0")
-        writeText(fs, new Path(root, RangeColMarker), rc)
-        writeBounds(df, rc)
-      }
-      val sc = (statsCols ++ rangeCol).distinct
-      if (sc.nonEmpty) {
-        require(numBuckets > 0, "statsCols sidecar only applies to bucketed tables")
-        sc.foreach(c => require(df.columns.contains(c), s"stats column $c not in schema"))
-        writeText(fs, new Path(root, StatsColsMarker), sc.mkString(","))
-      }
-      writePointer(fs, new Path(root, BucketsMarker), numBuckets.toLong)
-    }
-    // rewritten only when it changes: writeText deletes the old file before
-    // renaming the new one in, and a reader of an empty version between the
-    // two would find no stored schema
-    val schemaPath = new Path(root, SchemaMarker)
-    if (!readText(fs, schemaPath).contains(df.schema.json)) writeText(fs, schemaPath, df.schema.json)
-    if (!bucketed) writeVersion(df, next, tag)
-    else {
-      writeBucketed(df, next)
-      val present = listBuckets(fs, new Path(s"$root/v=$next"))
-      staged(next, Commit(tag, present.map(_ -> next).toMap), None)
-    }
+  /** Stage `df` as the whole of version `h.version + 1`, at `df`'s schema
+    * — every unbucketed write, and a bucketed bootstrap or compaction. A
+    * bootstrap records this instance's layout; later versions carry their
+    * base's.
+    */
+  private def stageOverwrite(h: Head, df: DataFrame, tag: Option[String] = None): Staged = {
+    val next = h.version + 1
+    val layout = if (h.version > 0) h.entry.layout else bootstrapLayout(df)
+    val dir = newDir(next)
+    val entry = Commit(df.schema, layout, tag)
+    if (layout.buckets == 0) {
+      writeParquet(df.write, s"$root/$dir")
+      staged(next, entry.copy(dir = Some(dir)))
+    } else staged(next, entry.copy(manifest = writeBucketed(layout, df, dir).map(_ -> dir).toMap))
   }
 
-  /** Shared bucketed-version writer: route to buckets; range tables also
-    * cluster rows by `rangeCol` within each writer task so every parquet
-    * row group covers a narrow value range (the reader's pushed min/max
-    * filters then skip row groups WITHIN the buckets the zone map kept).
-    * Then write the stats sidecar for the files this version produced.
+  /** The layout a bootstrap records: this instance's parameters, with range
+    * bounds sampled from `df`. Refuses a root that holds version dirs above
+    * 1 but no log entry: only a lost log leaves that state, and a bootstrap
+    * would hide live data. (Dirs of version 1 are abandoned bootstraps.)
     */
-  private def writeBucketed(df: DataFrame, next: Long): Unit = {
-    val routed = df.withColumn(BucketCol, bucketExpr)
-    val clustered = effectiveRangeCol
+  private def bootstrapLayout(df: DataFrame): Layout = {
+    val lost = try fs.listStatus(new Path(root)).exists(st => dirVersion(st.getPath.getName).exists(_ > 1))
+      catch { case _: java.io.FileNotFoundException => false }
+    if (lost) throw new IllegalStateException(
+      s"$root holds version dirs but no commit log entry — $CommitsDir lost? restore it manually")
+    val l = unborn.entry.layout
+    require(!l.mor || l.buckets > 0, "merge-on-read requires a bucketed table " +
+      "(delta segments are per-bucket)")
+    l.rangeCol.foreach(rc => require(l.buckets > 0, s"range bucketing on $rc needs numBuckets > 0"))
+    if (l.statsCols.nonEmpty) {
+      require(l.buckets > 0, "statsCols sidecar only applies to bucketed tables")
+      l.statsCols.foreach(c => require(df.columns.contains(c), s"stats column $c not in schema"))
+    }
+    l.copy(bounds = l.rangeCol.map(writeBounds(df, _, l.buckets)))
+  }
+
+  /** Shared bucketed writer: route `df` to buckets under `dir`; range tables
+    * also cluster rows by `rangeCol` within each writer task so every
+    * parquet row group covers a narrow value range (the reader's pushed
+    * min/max filters then skip row groups WITHIN the buckets the zone map
+    * kept). Then write the stats sidecar for the buckets written, and
+    * return them.
+    */
+  private def writeBucketed(layout: Layout, df: DataFrame, dir: String): Seq[Int] = {
+    val routed = df.withColumn(BucketCol, bucketExpr(layout))
+    val clustered = layout.rangeCol
       .map(rc => routed.sortWithinPartitions(col(BucketCol), col(rc)))
       .getOrElse(routed)
-    writeParquet(clustered.write.partitionBy(BucketCol), s"$root/v=$next")
-    writeStats(next)
+    writeParquet(clustered.write.partitionBy(BucketCol), s"$root/$dir")
+    val written = listBuckets(fs, new Path(root, dir))
+    // an all-rows-deleted rewrite writes NO bucket dirs — nothing to stat
+    if (written.nonEmpty) writeStats(layout.statsCols, routed.schema, dir)
+    written
   }
 
-  /** Per-bucket min/max/count sidecar for version `next`, computed from a
-    * column-pruned read-back of ONLY that version's files (stat columns +
-    * the partition column) — cost ∝ what the version wrote, never the
-    * table. One tiny file (≤ B rows).
+  /** Per-bucket min/max/count sidecar for the stage dir `dir`, computed
+    * from a column-pruned read-back of ONLY that dir's files (stat columns
+    * + the partition column, at the `schema` written) — cost ∝ what the
+    * stage wrote, never the table. One tiny file (≤ B rows).
     */
-  private def writeStats(next: Long): Unit = {
-    val sc = effectiveStatsCols
+  private def writeStats(sc: Seq[String], schema: StructType, dir: String): Unit = {
     if (sc.isEmpty) return
-    // an all-rows-deleted rewrite writes NO bucket dirs — nothing to stat
-    if (listBuckets(fs, new Path(s"$root/v=$next")).isEmpty) return
-    val written = spark.read.parquet(s"$root/v=$next")
+    val written = spark.read.schema(schema).parquet(s"$root/$dir")
     val present = sc.filter(written.columns.contains)
     if (present.isEmpty) return
     val aggs = present.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
@@ -575,29 +545,30 @@ final class KeyedTable(
     val stats = written.select((BucketCol +: present).map(col).toIndexedSeq: _*)
       .groupBy(col(BucketCol).cast("int").as("bucket"))
       .agg(aggs.head, aggs.tail: _*)
-    writeParquet(stats.coalesce(1).write, s"$root/v=$next/$StatsDir")
+    writeParquet(stats.coalesce(1).write, s"$root/$dir/$StatsDir")
   }
 
   /** The current snapshot's per-bucket stats relation — `(bucket, min_c,
     * max_c …, cnt)` resolved through the manifest (each bucket's stats come
-    * from the version that last wrote it). Buckets written before stats
-    * were configured are absent (and [[scanRange]] keeps them). Also the
+    * from the dir that last wrote it). Buckets without a stats row are
+    * kept by [[scanRange]]. Also the
     * observability surface for range-boundary skew: a last bucket whose
     * `cnt` dwarfs the rest means data outgrew the bootstrap boundaries.
     */
-  def bucketStats: Option[DataFrame] = {
-    if (!bucketed || !exists || effectiveStatsCols.isEmpty) return None
+  def bucketStats: Option[DataFrame] = bucketStatsAt(head)
+
+  private def bucketStatsAt(h: Head): Option[DataFrame] = {
+    val c = h.entry
+    if (h.version == 0 || c.layout.buckets == 0 || c.layout.statsCols.isEmpty) return None
     // MOR buckets contribute one stats row per SEGMENT (base + each delta):
     // consumers must treat a bucket's rows as a union of possibly-live
     // ranges — deletes make bounds conservative-stale until compaction,
     // which only ever widens, never misses.
-    val dm = if (morActive) deltaMap else Map.empty[Int, Seq[Long]]
-    val pairs = manifest.toSeq.map { case (b, v) => (v, b) } ++
-      dm.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) }
-    val byVer = pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-    val parts = byVer.flatMap { case (v, bks) =>
-      val p = new Path(s"$root/v=$v/$StatsDir")
-      if (fs.exists(p)) Some(spark.read.parquet(p.toString).filter(col("bucket").isin(bks: _*)))
+    val pairs = c.manifest.toSeq.map(_.swap) ++
+      c.deltas.toSeq.flatMap { case (b, ds) => ds.map(d => (d, b)) }
+    val parts = pairs.groupBy(_._1).toSeq.flatMap { case (d, bks) =>
+      val p = new Path(s"$root/$d/$StatsDir")
+      if (fs.exists(p)) Some(spark.read.parquet(p.toString).filter(col("bucket").isin(bks.map(_._2): _*)))
       else None
     }
     parts.reduceOption(_.unionByName(_))
@@ -610,11 +581,9 @@ final class KeyedTable(
     * predicate itself.
     */
   def scanRange(c: String, lo: Any, hi: Any): DataFrame = {
-    val pred = (df: DataFrame) => df.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
-    rangeScanBuckets(c, lo, hi) match {
-      case Some(keep) => pred(readBuckets(keep))
-      case None => pred(current)
-    }
+    val h = head
+    val rows = rangeScanBucketsAt(h, c, lo, hi).fold(snapshot(root, h))(readBucketsAt(h, _))
+    rows.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
   }
 
   /** The bucket ids [[scanRange]] would read — `None` when stats can't
@@ -622,11 +591,14 @@ final class KeyedTable(
     * specs and operational reports can pin the pruning itself, not just
     * the scan's values.
     */
-  def rangeScanBuckets(c: String, lo: Any, hi: Any): Option[Seq[Int]] = {
-    if (!bucketed || !exists || !effectiveStatsCols.contains(c)) return None
-    bucketStats.map { st =>
-      val dm = if (morActive) deltaMap else Map.empty[Int, Seq[Long]]
-      val allBuckets = (manifest.keySet ++ dm.keySet).toSeq
+  def rangeScanBuckets(c: String, lo: Any, hi: Any): Option[Seq[Int]] = rangeScanBucketsAt(head, c, lo, hi)
+
+  private def rangeScanBucketsAt(h: Head, c: String, lo: Any, hi: Any): Option[Seq[Int]] = {
+    if (!h.entry.layout.statsCols.contains(c)) return None
+    bucketStatsAt(h).map { st =>
+      val m = h.entry.manifest
+      val dm = h.entry.deltas
+      val allBuckets = (m.keySet ++ dm.keySet).toSeq
       // A SEGMENT is prunable when its [min,max] misses [lo,hi] entirely,
       // or its column is all-NULL (cnt > 0 with a NULL min — a range
       // predicate never matches NULL; a tombstone-only delta reads the
@@ -642,7 +614,7 @@ final class KeyedTable(
       val rowsPer = st.groupBy("bucket").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       val needed = allBuckets.map(b => b ->
-        ((if (manifest.contains(b)) 1L else 0L) + dm.getOrElse(b, Seq.empty).size)).toMap
+        ((if (m.contains(b)) 1L else 0L) + dm.getOrElse(b, Seq.empty).size)).toMap
       allBuckets.filter(b =>
         admits.contains(b) || rowsPer.getOrElse(b, 0L) != needed(b)).sorted
     }
@@ -656,8 +628,8 @@ final class KeyedTable(
     * when the query is an extremum or a count.
     *
     * `None` when the sidecar cannot speak for every manifest bucket
-    * (unbucketed table, stats never configured, or buckets written before
-    * stats existed) — a partial sidecar would silently undercount, and a
+    * (unbucketed table, stats never configured, or a bucket without a
+    * stats row) — a partial sidecar would silently undercount, and a
     * metadata path that can be subtly wrong is worse than none.
     *
     * NULL semantics fold correctly without special cases: an all-NULL
@@ -667,15 +639,16 @@ final class KeyedTable(
     * `n_rows` matches `COUNT(*)`, never `COUNT(c)`.
     */
   def statsAggregate: Option[DataFrame] = {
+    val h = head
     // outstanding MOR deltas: a replaced key is counted in base AND delta
     // segment stats, so metadata-only sums would double-count — decline
     // honestly; compaction restores the metadata path
-    if (morActive && deltaMap.nonEmpty) return None
-    bucketStats.flatMap { st =>
+    if (h.entry.deltas.nonEmpty) return None
+    bucketStatsAt(h).flatMap { st =>
       val covered = st.select("bucket").distinct().count()
-      if (covered != manifest.size) None
+      if (covered != h.entry.manifest.size) None
       else {
-        val sc = effectiveStatsCols.filter(c => st.columns.contains(s"min_$c"))
+        val sc = h.entry.layout.statsCols.filter(c => st.columns.contains(s"min_$c"))
         val aggs = sc.flatMap(c => Seq(
           min(col(s"min_$c")).as(s"min_$c"), max(col(s"max_$c")).as(s"max_$c"))) :+
           sum(col("cnt")).as("n_rows")
@@ -694,27 +667,27 @@ final class KeyedTable(
     */
   def merge(batch: DataFrame): Long = stageMerge(batch).publish()
 
-  /** [[merge]] up to, not including, its commit: writes version N+1's
-    * data (bucketed tables: also its stats sidecar) and returns the handle
-    * whose `publish()` creates log entry N+1 and so makes it current. Until
-    * then readers and [[currentVersion]] stay at N. An unpublished stage is
-    * the crash-before-commit state every commit tolerates: the next commit
-    * of N+1, by any writer, overwrites v=N+1. `publish()` throws
-    * `ConcurrentModificationException` if another writer staged or
-    * committed N+1 meanwhile; the data it staged is then gone, and the
-    * caller re-stages from the new snapshot.
+  /** [[merge]] up to, not including, its commit: reads the current entry N
+    * once, writes version N+1's data into a dir of its own (bucketed
+    * tables: also its stats sidecar) and returns the handle whose
+    * `publish()` creates log entry N+1 and so makes it current. Until then
+    * readers and [[currentVersion]] stay at N. An unpublished stage is the
+    * crash-before-commit state every commit tolerates: no entry names its
+    * dir, so nothing reads it, and [[vacuum]] deletes it once the table is
+    * at N+1 or later. `publish()` throws `ConcurrentModificationException`
+    * if another stage published N+1 first; the caller re-stages from the
+    * new snapshot.
     */
-  def stageMerge(batch: DataFrame): Staged = stageCollapsed(collapseLatest(batch))
+  def stageMerge(batch: DataFrame): Staged = stageCollapsed(base, collapseLatest(batch))
 
   /** [[stageMerge]] after the per-key collapse — the shared tail
     * [[mergeEvolving]] re-enters so an already-collapsed batch doesn't pay
     * a second window pass.
     */
-  private def stageCollapsed(latest: DataFrame): Staged = {
-    if (!exists) return stageOverwrite(latest)
-    if (!bucketed) writeVersion(KeyedTable.mergePlan(current, latest, keys), currentVersion + 1)
-    else stageBucketed(latest)
-  }
+  private def stageCollapsed(h: Head, latest: DataFrame): Staged =
+    if (h.version == 0) stageOverwrite(h, latest)
+    else if (h.entry.layout.buckets == 0) stageOverwrite(h, KeyedTable.mergePlan(snapshot(root, h), latest, keys))
+    else stageBucketed(h, latest)
 
   /** Op-coded CDC merge: the batch carries an op column (`I`/`U`/`D`) and a
     * sequence column ordering multiple events for one key within the batch.
@@ -741,6 +714,7 @@ final class KeyedTable(
                tag: Option[String] = None): Long = {
     require(batch.columns.contains(opCol), s"CDC batch must carry op column '$opCol'")
     require(batch.columns.contains(seqCol), s"CDC batch must carry sequence column '$seqCol'")
+    val h = base
     // in-plan op validation BEFORE the collapse (rides the same scan, no
     // extra action): a malformed op on a non-latest event must still fail
     // the job — validating after the collapse would silently discard it,
@@ -751,15 +725,15 @@ final class KeyedTable(
       tieBreak = orderableColumns(batch, excluded = seqCol))
     // Bootstrap derives the table schema from the batch; besides op/seq,
     // drop `_old_*` before-image columns (the JoinDelta/TopKDelta feed
-    // convention) — the exists path drops them implicitly via
-    // current.columns, and baking them into a table bootstrapped by an
+    // convention) — the exists path drops them implicitly via the stored
+    // schema, and baking them into a table bootstrapped by an
     // image-carrying feed (CdcFlow auto-first-batch) would be permanent.
-    val cols = if (exists) current.columns.toSeq
+    val cols = if (h.version > 0) h.entry.schema.fieldNames.toSeq
                else batch.columns.filterNot(c =>
                  c == opCol || c == seqCol || c.startsWith("_old_")).toSeq
     val upserts = checked.filter(col(opCol) =!= "D")
       .select(cols.map(col).toIndexedSeq: _*)
-    replaceKeys(checked.select(keys.map(col).toIndexedSeq: _*), upserts, tag)
+    replaceAt(h, checked.select(keys.map(col).toIndexedSeq: _*), upserts, tag)
   }
 
   /** Replace every current row whose key appears in `keysDf` with the rows
@@ -776,9 +750,11 @@ final class KeyedTable(
     * the same consecutive-redelivery guard as [[mergeCdc]] ([[lastTag]]).
     */
   def replaceKeys(keysDf: DataFrame, replacement: DataFrame,
-                  tag: Option[String] = None): Long = {
+                  tag: Option[String] = None): Long = replaceAt(base, keysDf, replacement, tag)
+
+  private def replaceAt(h: Head, keysDf: DataFrame, replacement: DataFrame, tag: Option[String]): Long = {
     require(tag.forall(!_.contains('\n')), "a batch tag is one line")
-    if (!exists) return stageOverwrite(replacement, tag).publish()
+    if (h.version == 0) return stageOverwrite(h, replacement, tag).publish()
     // NULL-key rejection, ENFORCED in-plan with a DEDICATED error (r10
     // ADVICE): the anti-joins match keys NULL-safe (withoutKeys), so CoW and
     // MOR would agree on a NULL key tuple — but a NULL key in a group
@@ -825,31 +801,36 @@ final class KeyedTable(
           lit(") - the covered-keys contract; CoW and MOR would diverge silently")))))
       .filter(col("__kchk"))
       .drop("__covered", "__kchk")
-    if (!bucketed)
-      writeVersion(KeyedTable.cdcMergePlan(current, replacement0, allKeys, keys),
-        currentVersion + 1, tag).publish()
-    else if (morActive) {
+    val layout = h.entry.layout
+    if (layout.buckets == 0)
+      stageOverwrite(h, KeyedTable.cdcMergePlan(snapshot(root, h), replacement0, allKeys, keys), tag).publish()
+    else if (layout.mor) {
       // MOR group replace: the delta segment carries the replacement rows
       // plus an explicit tombstone for every touched key with NO
       // replacement rows — so each touched key "appears" in the segment
       // and the read-time latest-segment rule replaces its whole group
-      val cols = tableColumns
-      val repl = replacement0.select(cols.map(col).toIndexedSeq: _*)
+      val repl = replacement0.select(h.entry.schema.fieldNames.map(col).toIndexedSeq: _*)
         .withColumn(TombCol, lit(false))
       val tombs = KeyedTable.withoutKeys(allKeys,
         replacement0.select(keys.map(col).toIndexedSeq: _*).distinct(), keys, broadcastKeys = false)
-      val tombRows = tableSchema.fields.filterNot(f => keys.contains(f.name))
-        .foldLeft(tombs)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-        .select(cols.map(col).toIndexedSeq: _*)
-        .withColumn(TombCol, lit(true))
-      stageDelta(repl.unionByName(tombRows), tag).publish()
+      stageDelta(h, repl.unionByName(tombRows(h, tombs)), tag).publish()
     } else {
-      val touched = bucketsOf(allKeys).get
-      stageBucketsRewrite(touched,
-        KeyedTable.cdcMergePlan(readBuckets(touched), replacement0, allKeys, keys),
+      val touched = bucketsIn(layout, allKeys)
+      stageBucketsRewrite(h, touched,
+        KeyedTable.cdcMergePlan(readBucketsAt(h, touched), replacement0, allKeys, keys),
         tag).publish()
     }
   }
+
+  /** One tombstone row per key of `keysDf`, at the shape of `h`'s delta
+    * segments: its schema's columns, non-key ones NULL, then the marker.
+    */
+  private def tombRows(h: Head, keysDf: DataFrame): DataFrame =
+    h.entry.schema.fields.filterNot(f => keys.contains(f.name))
+      .foldLeft(keysDf.select(keys.map(col).toIndexedSeq: _*))((d, f) =>
+        d.withColumn(f.name, lit(null).cast(f.dataType)))
+      .select(h.entry.schema.fieldNames.map(col).toIndexedSeq: _*)
+      .withColumn(TombCol, lit(true))
 
   /** The tag [[mergeCdc]] recorded for the CURRENT version, if any. The tag
     * is part of the version's log entry, bootstrap included, so a visible
@@ -861,17 +842,21 @@ final class KeyedTable(
     * tag is visible and the replay no-ops). It does NOT guard arbitrary
     * historical replay: only the latest batch's id is retained.
     */
-  def lastTag: Option[String] = currentCommit.tag
+  def lastTag: Option[String] = head.entry.tag
 
   /** The bucket ids `keysDf`'s rows route to — None for unbucketed tables.
     * Lets callers (e.g. incremental aggregate maintenance) read ONLY the
     * buckets a delta touches via [[readBuckets]] instead of scanning the
     * table. Driver-side payload is ≤ numBuckets ints.
     */
-  def bucketsOf(keysDf: DataFrame): Option[Seq[Int]] =
-    if (!bucketed) None
-    else Some(keysDf.withColumn(BucketCol, bucketExpr)
-      .select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq.sorted)
+  def bucketsOf(keysDf: DataFrame): Option[Seq[Int]] = {
+    val layout = head.entry.layout
+    if (layout.buckets == 0) None else Some(bucketsIn(layout, keysDf))
+  }
+
+  private def bucketsIn(layout: Layout, keysDf: DataFrame): Seq[Int] =
+    keysDf.withColumn(BucketCol, bucketExpr(layout))
+      .select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq.sorted
 
   /** The current rows whose keys appear in `keysDf` — the state read every
     * incremental-maintenance operator needs: bucket-pruned for bucketed
@@ -880,11 +865,11 @@ final class KeyedTable(
     * universe.
     */
   def currentForKeys(keysDf: DataFrame): DataFrame = {
+    val h = head
     val k = keysDf.select(keys.map(col).toIndexedSeq: _*)
-    (bucketsOf(k) match {
-      case Some(bs) => readBuckets(bs)
-      case None     => current
-    }).join(broadcast(k), keys, "left_semi")
+    val layout = h.entry.layout
+    (if (layout.buckets == 0) snapshot(root, h) else readBucketsAt(h, bucketsIn(layout, k)))
+      .join(broadcast(k), keys, "left_semi")
   }
 
   /** The non-key ORDERABLE columns of `batch` (minus `excluded`), the
@@ -917,8 +902,8 @@ final class KeyedTable(
   /** Keyed merge accepting a batch whose SCHEMA drifted from the table's —
     * the reference's `allowSchemaDrift: true` sink behavior. Additive by
     * name ([[KeyedTable.mergePlanEvolving]]): omitted columns null-fill,
-    * new columns extend the table (and its stored schema), type conflicts
-    * throw.
+    * new columns extend the table (and the schema its next entry records),
+    * type conflicts throw.
     *
     * A batch that only OMITS columns keeps the table schema, so it takes
     * the normal incremental path — bucketed tables still rewrite only
@@ -927,68 +912,61 @@ final class KeyedTable(
     * readable snapshot would force schema-merging reads, so that case
     * compacts: one full rewrite at the union schema (exactly what a
     * copy-on-write table format does on column add), after which
-    * incremental merges resume.
+    * incremental merges resume. A rewrite that fails leaves the table as it
+    * was: the wider schema is recorded only by the entry that publishes it.
     */
   def mergeEvolving(batch: DataFrame): Long = {
     // key presence first: everything below references the keys, and a
     // missing key would otherwise surface as an unresolved-column error
     require(keys.forall(batch.columns.contains),
       s"drifted batch must still carry the key columns ${keys.mkString(", ")}")
-    if (!exists) return merge(batch)
-    val cur = current
-    KeyedTable.requireAdditive(
-      if (cur.columns.contains(BucketCol)) cur.drop(BucketCol) else cur, batch, keys)
+    val h = base
+    if (h.version == 0) return stageCollapsed(h, collapseLatest(batch)).publish()
+    val cur = snapshot(root, h)
+    KeyedTable.requireAdditive(cur, batch, keys)
     // Null-fill the omitted columns BEFORE the per-key collapse: the batch
     // may legally omit orderCol itself, and collapsing first would reference
     // a column the frame doesn't have. After widening, the collapse sees the
     // full table schema (an all-null orderCol degrades to the tie-break
     // ordering, same as merge on a null-ordered feed).
-    val missing = cur.schema.fields
-      .filterNot(f => batch.columns.contains(f.name) || f.name == BucketCol)
+    val missing = cur.schema.fields.filterNot(f => batch.columns.contains(f.name))
     val latest = collapseLatest(missing.foldLeft(batch)((d, f) =>
       d.withColumn(f.name, lit(null).cast(f.dataType))))
     val newCols = latest.schema.fields.filterNot(f => cur.columns.contains(f.name))
-    if (newCols.isEmpty) stageCollapsed(latest).publish()
+    if (newCols.isEmpty) stageCollapsed(h, latest).publish()
     else {
       // new columns change every stored file's schema → widen the snapshot
       // and compact: one full rewrite at the union schema
-      val curWide = newCols.foldLeft(
-        if (cur.columns.contains(BucketCol)) cur.drop(BucketCol) else cur)(
-        (d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-      overwrite(KeyedTable.mergePlan(curWide, latest, keys))
+      val curWide = newCols.foldLeft(cur)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+      stageOverwrite(h, KeyedTable.mergePlan(curWide, latest, keys)).publish()
     }
   }
 
-  /** GC versions unreferenced by the current manifest chain: keeps the
-    * current version plus everything the last `keepVersions` manifests (or
-    * the current snapshot, unbucketed) still point into; deletes older
-    * version dirs and the log entries of versions older than the window.
-    * Readers of retained versions are safe — bucket dirs are immutable and
-    * the manifest tells exactly which are live.
+  /** GC data no retained entry names: keeps the entries of the last
+    * `keepVersions` versions and every dir they name (data, delta and
+    * bounds dirs); deletes older entries, then every other dir at or below
+    * the current version — superseded data and the dirs of stages that
+    * lost or were abandoned. Dirs above the current version belong to
+    * stages that may still publish and are never touched. Readers of
+    * retained versions are safe — dirs are immutable and the entries tell
+    * exactly which are live. Returns the versions of the data dirs
+    * deleted.
     */
   def vacuum(keepVersions: Int = 1): Seq[Long] = {
     require(keepVersions >= 1, "vacuum keeps at least the current version")
-    val cur = currentVersion
+    val h = head
+    val cur = h.version
     if (cur == 0) return Seq.empty
-    val keep = ((cur - keepVersions + 1) max 1L) to cur
-    // a retained manifest's delta chains are as live as its base pointers:
-    // dropping a referenced delta version would make the coalesced read of
-    // a kept snapshot fail (loudly, per the vacuum-race contract — but a
-    // correctly-parameterized vacuum must never do it)
-    val live: Set[Long] = keep.toSet ++ keep.flatMap(commitAt).flatMap(c =>
-      c.manifest.values ++ c.deltas.values.flatten)
-    // never touch versions ABOVE the current one: v=cur+1 is a stage that
-    // may still publish
-    val deletable = fs.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
-      .filter(v => v <= cur && !live.contains(v))
+    val keepFrom = (cur - keepVersions + 1) max 1L
+    val live = (h.entry +: (keepFrom until cur).flatMap(commitAt)).flatMap(_.dirs).toSet
+    val garbage = fs.listStatus(new Path(root)).toSeq.map(_.getPath.getName).filter(n =>
+      !live(n) && (n.startsWith(s"$BoundsDir-") || dirVersion(n).exists(_ <= cur)))
     // entries first: a reader never finds an entry whose data is gone. An
-    // entry older than the window goes even when its dir stays live
-    // through a newer manifest.
-    logVersions(fs, commitsDir).filter(_ < keep.head)
-      .foreach(v => fs.delete(new Path(commitsDir, v.toString), false))
-    deletable.foreach(v => fs.delete(new Path(root, s"v=$v"), true))
-    deletable.sorted
+    // entry older than the window goes even when its dirs stay live
+    // through a newer entry.
+    logVersions(fs, commitsDir).filter(_ < keepFrom).foreach(v => fs.delete(entryPath(v), false))
+    garbage.foreach(n => fs.delete(new Path(root, n), true))
+    garbage.flatMap(dirVersion).distinct.sorted
   }
 
   /** Maintenance compaction: rewrite the current snapshot as one fresh
@@ -997,11 +975,12 @@ final class KeyedTable(
     * historical versions (reads stay correct but each version dir adds file
     * listings and small files); compaction resets the spread to 1 and makes
     * the next vacuum reclaim everything older. Crash-safe like every commit
-    * here: data lands in v=N+1 before its log entry.
+    * here: data lands in its own dir before its log entry.
     */
   def compact(): Long = {
-    require(exists, s"cannot compact non-existent table at $root")
-    overwrite(current)
+    val h = base
+    require(h.version > 0, s"cannot compact non-existent table at $root")
+    stageOverwrite(h, snapshot(root, h)).publish()
   }
 
   /** Per-bucket (files, bytes) of the current snapshot — the small-file
@@ -1011,10 +990,12 @@ final class KeyedTable(
     * and parquet row groups fragment. Driver-side listStatus per bucket,
     * bounded by B — the same cost class as the manifest itself.
     */
-  def fileStats: Map[Int, (Int, Long)] = {
-    require(bucketed && exists, "fileStats needs a committed bucketed table")
-    manifest.map { case (b, ver) =>
-      val parts = fs.listStatus(new Path(s"$root/v=$ver/$BucketCol=$b"))
+  def fileStats: Map[Int, (Int, Long)] = fileStatsAt(head)
+
+  private def fileStatsAt(h: Head): Map[Int, (Int, Long)] = {
+    require(h.version > 0 && h.entry.layout.buckets > 0, "fileStats needs a committed bucketed table")
+    h.entry.manifest.map { case (b, d) =>
+      val parts = fs.listStatus(new Path(s"$root/$d/$BucketCol=$b"))
         .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       b -> (parts.length, parts.map(_.getLen).sum)
     }
@@ -1032,12 +1013,13 @@ final class KeyedTable(
     */
   def compactBuckets(maxFilesPerBucket: Int = 4): Option[Long] = {
     require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    val fragmented = fileStats.collect {
+    val h = base
+    val fragmented = fileStatsAt(h).collect {
       case (b, (files, _)) if files > maxFilesPerBucket => b
     }.toSeq.sorted
     if (fragmented.isEmpty) None
-    else Some(stageBucketsRewrite(fragmented,
-      readBuckets(fragmented).repartition(fragmented.size, bucketExpr)).publish())
+    else Some(stageBucketsRewrite(h, fragmented,
+      readBucketsAt(h, fragmented).repartition(fragmented.size, bucketExpr(h.entry.layout))).publish())
   }
 
   /** Export the current snapshot as a native Spark bucketed table (same
@@ -1046,16 +1028,16 @@ final class KeyedTable(
     * itself can't give Catalyst the no-shuffle join and this export can.
     */
   def materializeBucketed(name: String, path: Option[String] = None): Unit = {
-    require(bucketed, s"materializeBucketed needs a bucketed table (numBuckets > 0)")
-    Colocate.materialize(current, name, keys, effectiveBuckets, path)
+    val h = head
+    require(h.entry.layout.buckets > 0, s"materializeBucketed needs a bucketed table (numBuckets > 0)")
+    Colocate.materialize(snapshot(root, h), name, keys, h.entry.layout.buckets, path)
   }
 
   /** How many distinct versions the current manifest points into (1 right
     * after overwrite/compact; grows with incremental merges). Unbucketed
     * tables are always 1.
     */
-  def manifestSpread: Int =
-    if (!bucketed || !exists) 1 else manifest.values.toSet.size max 1
+  def manifestSpread: Int = head.entry.manifest.values.toSet.size max 1
 
   /** Remove the rows whose keys appear in `keysDf`. The fact/dim sinks never
     * delete (the reference contract) — this exists for derived tables like
@@ -1064,58 +1046,47 @@ final class KeyedTable(
     * emptied by the delete simply drops out of the manifest.
     */
   def deleteKeys(keysDf: DataFrame): Long = {
-    require(exists, s"KeyedTable at $root has no committed version")
+    val h = base
+    require(h.version > 0, s"KeyedTable at $root has no committed version")
     val k = keysDf.select(keys.map(col).toIndexedSeq: _*).distinct()
-    if (!bucketed)
-      writeVersion(KeyedTable.withoutKeys(current, k, keys, broadcastKeys = true),
-        currentVersion + 1).publish()
-    else if (morActive) {
-      // MOR delete: pure tombstone segment — write cost ∝ deleted keys
-      val tombRows = tableSchema.fields.filterNot(f => keys.contains(f.name))
-        .foldLeft(k.select(keys.map(col).toIndexedSeq: _*))((d, f) =>
-          d.withColumn(f.name, lit(null).cast(f.dataType)))
-        .select(tableColumns.map(col).toIndexedSeq: _*)
-        .withColumn(TombCol, lit(true))
-      stageDelta(tombRows, None).publish()
-    } else {
-      val touched = bucketsOf(k).get
-      stageBucketsRewrite(touched,
-        KeyedTable.withoutKeys(readBuckets(touched), k, keys, broadcastKeys = true)).publish()
+    val layout = h.entry.layout
+    if (layout.buckets == 0)
+      stageOverwrite(h, KeyedTable.withoutKeys(snapshot(root, h), k, keys, broadcastKeys = true)).publish()
+    // MOR delete: pure tombstone segment — write cost ∝ deleted keys
+    else if (layout.mor) stageDelta(h, tombRows(h, k), None).publish()
+    else {
+      val touched = bucketsIn(layout, k)
+      stageBucketsRewrite(h, touched,
+        KeyedTable.withoutKeys(readBucketsAt(h, touched), k, keys, broadcastKeys = true)).publish()
     }
   }
 
-  private def stageBucketed(latest: DataFrame): Staged = {
-    if (morActive)
+  private def stageBucketed(h: Head, latest: DataFrame): Staged = {
+    if (h.entry.layout.mor)
       // MOR upsert: the collapsed batch IS the delta segment — a key
       // appearing in it replaces its current row at read time, identical
       // to what the CoW anti-join+union would have materialized
-      return stageDelta(
-        latest.select(tableColumns.map(col).toIndexedSeq: _*)
+      return stageDelta(h,
+        latest.select(h.entry.schema.fieldNames.map(col).toIndexedSeq: _*)
           .withColumn(TombCol, lit(false)), None)
     // Touched buckets: a driver-side collect of ≤ numBuckets ints.
-    val touched = bucketsOf(latest).get
-    val curTouched = readBuckets(touched)
-    stageBucketsRewrite(touched, KeyedTable.mergePlan(curTouched, latest, keys))
+    val touched = bucketsIn(h.entry.layout, latest)
+    stageBucketsRewrite(h, touched, KeyedTable.mergePlan(readBucketsAt(h, touched), latest, keys))
   }
 
-  /** The table's data columns in stored-schema order — every delta segment
-    * is written at exactly this shape (+ the tombstone marker) so the
-    * multi-version delta union never needs schema merging.
-    */
-  private def tableColumns: Seq[String] = tableSchema.fieldNames.toSeq
-
   /** Stage one MOR delta segment as version N+1: the batch's rows (and
-    * tombstones) land bucket-routed under `v=N+1`, base manifest pointers
-    * are COPIED UNCHANGED, and the entry's delta chains append N+1 to each
-    * written bucket's chain. Write cost ∝ the batch — never the table.
+    * tombstones) land bucket-routed in the stage's dir, base manifest
+    * pointers are COPIED UNCHANGED, and the entry's delta chains append
+    * that dir to each written bucket's chain. Write cost ∝ the batch —
+    * never the table.
     */
-  private def stageDelta(deltaRows: DataFrame, tag: Option[String]): Staged = {
-    val next = currentVersion + 1
-    val prev = commitAt(next - 1).getOrElse(Commit())
-    writeBucketed(deltaRows, next)
-    val written = listBuckets(fs, new Path(s"$root/v=$next"))
-    val nextD = prev.deltas ++ written.map(b => b -> (prev.deltas.getOrElse(b, Seq.empty) :+ next))
-    staged(next, Commit(tag, prev.manifest, nextD), None)
+  private def stageDelta(h: Head, deltaRows: DataFrame, tag: Option[String]): Staged = {
+    val next = h.version + 1
+    val dir = newDir(next)
+    val prev = h.entry
+    val written = writeBucketed(prev.layout, deltaRows, dir)
+    val nextD = prev.deltas ++ written.map(b => b -> (prev.deltas.getOrElse(b, Seq.empty) :+ dir))
+    staged(next, prev.copy(tag = tag, deltas = nextD))
   }
 
   /** Threshold compaction of the MOR read tax: rewrite ONLY the buckets
@@ -1128,46 +1099,43 @@ final class KeyedTable(
     * observable. Returns None when no chain crossed the threshold.
     */
   def compactDeltas(maxDeltas: Int = 4): Option[Long] = {
-    require(morActive, "compactDeltas applies to merge-on-read bucketed tables")
+    val h = base
+    require(h.entry.layout.mor && h.entry.layout.buckets > 0,
+      "compactDeltas applies to merge-on-read bucketed tables")
     require(maxDeltas >= 1, "maxDeltas must be >= 1")
-    val frag = deltaMap.collect { case (b, vs) if vs.size >= maxDeltas => b }.toSeq.sorted
+    val frag = h.entry.deltas.collect { case (b, ds) if ds.size >= maxDeltas => b }.toSeq.sorted
     if (frag.isEmpty) None
-    else Some(stageBucketsRewrite(frag, readBuckets(frag)).publish())
+    else Some(stageBucketsRewrite(h, frag, readBucketsAt(h, frag)).publish())
   }
 
   /** Stage `newData` as the new content of `touched` buckets at version
     * N+1; untouched buckets keep their old manifest pointers,
     * touched-but-empty buckets drop out.
     */
-  private def stageBucketsRewrite(touched: Seq[Int], newData: DataFrame,
+  private def stageBucketsRewrite(h: Head, touched: Seq[Int], newData: DataFrame,
                                   tag: Option[String] = None): Staged = {
-    val next = currentVersion + 1
-    val prev = commitAt(next - 1).getOrElse(Commit())
-    writeBucketed(newData, next)
-    val written = listBuckets(fs, new Path(s"$root/v=$next"))
+    val next = h.version + 1
+    val dir = newDir(next)
+    val prev = h.entry
+    val written = writeBucketed(prev.layout, newData, dir)
     // a CoW rewrite of a MOR bucket absorbed its delta chain (the input
     // was the coalesced read) — clear it; untouched chains carry forward
-    staged(next, Commit(tag, (prev.manifest -- touched) ++ written.map(_ -> next),
-      prev.deltas -- touched), None)
+    staged(next, prev.copy(tag = tag, manifest = (prev.manifest -- touched) ++ written.map(_ -> dir),
+      deltas = prev.deltas -- touched))
   }
 }
 
 object KeyedTable {
-  /** The on-disk layout of a table's commit metadata: 2 is the
-    * `_commits/N` log. Directories that outlive a JVM name it, so one
-    * written under another layout is rebuilt, never read.
+  /** The on-disk layout of a table: 3 is a `_commits/N` log whose entries
+    * hold the whole version (schema, layout, data dir names). Directories
+    * that outlive a JVM name it, so one written under another layout is
+    * rebuilt, never read.
     */
-  val LayoutVersion = 2
+  val LayoutVersion = 3
   val CommitsDir = "_commits"
-  val StageToken = "_STAGE"
-  val BucketsMarker = "_BUCKETS"
-  val SchemaMarker = "_SCHEMA"
   val BucketCol = "__bucket"
-  val RangeColMarker = "_RANGECOL"
-  val StatsColsMarker = "_STATSCOLS"
   val BoundsDir = "_bounds"
   val StatsDir = "_stats"
-  val MorMarker = "_MORMODE"
   val TombCol = "__tomb"
   val DeltaVerCol = "__dv"
 
@@ -1178,43 +1146,88 @@ object KeyedTable {
     def publish(): Long = { commit(); version }
   }
 
-  /** The body of a log entry: what version N records beside its data dir.
-    * One line per fact: `tag=…`, `bucket=b,v` per manifest bucket, and
-    * `deltas=b,v1,v2,…` per merge-on-read delta chain (ascending). An
-    * untagged, unbucketed version's body is empty.
+  /** A version and its log entry: what a read resolves and a stage builds on. */
+  private final case class Head(version: Long, entry: Commit)
+
+  /** How a table stores its rows, fixed at bootstrap: the bucket count (0 =
+    * unbucketed), the range column and its bounds dir, the stats columns,
+    * and merge-on-read.
     */
-  private final case class Commit(tag: Option[String] = None, manifest: Map[Int, Long] = Map.empty,
-                                  deltas: Map[Int, Seq[Long]] = Map.empty) {
-    def render: String = (tag.map("tag=" + _) ++
-      manifest.toSeq.sorted.map { case (b, v) => s"bucket=$b,$v" } ++
-      deltas.toSeq.sortBy(_._1).map { case (b, vs) => (b +: vs).mkString("deltas=", ",", "") }
+  private final case class Layout(buckets: Int, rangeCol: Option[String], statsCols: Seq[String],
+                                  mor: Boolean, bounds: Option[String] = None)
+
+  /** The body of a log entry: the whole of version N. One line per fact:
+    * `tag=…`; `schema=` the version's `StructType` JSON; the layout,
+    * carried by every entry (`buckets=B`, `range=c`, `stats=c1,c2`,
+    * `mor=true` and `bounds=<dir>`, each only when set); and the data dirs,
+    * relative to the root: `dir=<dir>` for an unbucketed version, or
+    * `bucket=b,<dir>` per manifest bucket and `deltas=b,<dir1>,<dir2>,…` per
+    * merge-on-read delta chain (ascending).
+    */
+  private final case class Commit(schema: StructType, layout: Layout, tag: Option[String] = None,
+                                  dir: Option[String] = None, manifest: Map[Int, String] = Map.empty,
+                                  deltas: Map[Int, Seq[String]] = Map.empty) {
+    def dirs: Seq[String] = (dir ++ manifest.values ++ deltas.values.flatten ++ layout.bounds).toSeq
+
+    def render: String = (tag.map("tag=" + _) ++ Seq("schema=" + schema.json) ++
+      Option.when(layout.buckets > 0)(s"buckets=${layout.buckets}") ++
+      layout.rangeCol.map("range=" + _) ++
+      Option.when(layout.statsCols.nonEmpty)(layout.statsCols.mkString("stats=", ",", "")) ++
+      Option.when(layout.mor)("mor=true") ++
+      layout.bounds.map("bounds=" + _) ++
+      dir.map("dir=" + _) ++
+      manifest.toSeq.sorted.map { case (b, d) => s"bucket=$b,$d" } ++
+      deltas.toSeq.sortBy(_._1).map { case (b, ds) => (b.toString +: ds).mkString("deltas=", ",", "") }
     ).mkString("\n")
   }
 
   private object Commit {
-    /** A body that does not parse is external damage: fail loudly, naming
-      * the entry, rather than read a version with a partial manifest.
+    /** A body that does not parse, or names no schema or no data, is
+      * external damage: fail loudly, naming the entry, rather than read a
+      * version with a partial manifest.
       */
     def parse(p: Path, body: String): Commit = {
       def corrupt = new IllegalStateException(
         s"corrupt commit log entry $p (content: '${body.take(40)}') — repair manually")
-      def longs(csv: String) = csv.split(",").toSeq.map(_.toLongOption.getOrElse(throw corrupt))
-      body.split("\n").filter(_.nonEmpty).foldLeft(Commit()) { (c, line) =>
-        line.split("=", 2) match {
-          case Array("tag", t) => c.copy(tag = Some(t))
-          case Array("bucket", bv) => longs(bv) match {
-            case Seq(b, v) => c.copy(manifest = c.manifest + (b.toInt -> v))
+      def int(s: String) = s.toIntOption.getOrElse(throw corrupt)
+      val c = body.split("\n").filter(_.nonEmpty).foldLeft(Commit(null, Layout(0, None, Nil, mor = false))) {
+        (c, line) =>
+          val l = c.layout
+          line.split("=", 2) match {
+            case Array("tag", t) => c.copy(tag = Some(t))
+            case Array("schema", json) => c.copy(schema = scala.util.Try(DataType.fromJson(json)).toOption
+              .collect { case s: StructType => s }.getOrElse(throw corrupt))
+            case Array("buckets", b) => c.copy(layout = l.copy(buckets = int(b)))
+            case Array("range", r) => c.copy(layout = l.copy(rangeCol = Some(r)))
+            case Array("stats", s) => c.copy(layout = l.copy(statsCols = s.split(",").toSeq))
+            case Array("mor", "true") => c.copy(layout = l.copy(mor = true))
+            case Array("bounds", d) => c.copy(layout = l.copy(bounds = Some(d)))
+            case Array("dir", d) => c.copy(dir = Some(d))
+            case Array("bucket", bd) => bd.split(",") match {
+              case Array(b, d) => c.copy(manifest = c.manifest + (int(b) -> d))
+              case _ => throw corrupt
+            }
+            case Array("deltas", bds) => bds.split(",").toSeq match {
+              case b +: ds if ds.nonEmpty => c.copy(deltas = c.deltas + (int(b) -> ds))
+              case _ => throw corrupt
+            }
             case _ => throw corrupt
           }
-          case Array("deltas", bvs) => longs(bvs) match {
-            case b +: vs if vs.nonEmpty => c.copy(deltas = c.deltas + (b.toInt -> vs))
-            case _ => throw corrupt
-          }
-          case _ => throw corrupt
-        }
       }
+      val l = c.layout
+      if (c.schema == null || (l.buckets == 0) != c.dir.isDefined || l.rangeCol.isDefined != l.bounds.isDefined)
+        throw corrupt
+      c
     }
   }
+
+  /** The version of a data dir name, `v=<N>-<token>`; None for any other
+    * name.
+    */
+  private def dirVersion(name: String): Option[Long] =
+    if (name.startsWith("v=")) name.drop(2).takeWhile(_.isDigit).toLongOption else None
+
+  private def versionOf(dir: String): Long = dirVersion(dir).get
 
   /** The merge as a pure logical plan: rows of `current` whose key is NOT in
     * `batch` (anti-join against a broadcast of the batch's key columns — zero
@@ -1309,48 +1322,28 @@ object KeyedTable {
     new KeyedTable(spark, root, keys, orderCol, numBuckets,
       rangeCol = rangeCol, statsCols = statsCols, mor = mor)
 
+  /** The content of file `p`; None if it does not exist. */
   private[engine] def readText(fs: FileSystem, p: Path): Option[String] =
-    if (!fs.exists(p)) None
-    else {
+    try {
       val in = fs.open(p)
       try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
       finally in.close()
-    }
+    } catch { case _: java.io.FileNotFoundException => None }
 
   /** The one parquet write of a table: version data, bucket dirs and delta
     * segments, the stats sidecar and the range bounds all go through here.
     * zstd writes about a third fewer bytes than Spark's default snappy on
-    * the booking fact and dim (SCALING.md, "Table file codec"). zstd-jni's
-    * buffer pool is off: it keeps soft-referenced buffers (~0.5 MB) live on
-    * the heap between writes. parquet caches one codec per JVM
-    * and zstd level, configured by its first user, so the setting holds
-    * where a table write is the JVM's first zstd use. Reads need no
-    * setting: parquet decodes each column chunk by the codec recorded in
+    * the booking fact and dim (SCALING.md, "Table file codec"). Reads need
+    * no setting: parquet decodes each column chunk by the codec recorded in
     * its footer, so versions written with another codec stay readable.
     */
   private def writeParquet(w: DataFrameWriter[Row], path: String): Unit =
-    w.mode("overwrite")
-      .option("compression", "zstd")
-      .option("parquet.compression.codec.zstd.bufferPool.enabled", "false")
-      .parquet(path)
+    w.mode("overwrite").option("compression", "zstd").parquet(path)
 
   private def writeFile(fs: FileSystem, p: Path, content: String): Unit = {
     val out = fs.create(p, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-  }
-
-  /** Write-temp-then-rename — a crash mid-write leaves the old file intact
-    * (an in-place truncating create could be observed empty). On the local
-    * FS rename won't replace an existing target, so the old file is deleted
-    * first; a crash in that window reads as "absent", never as garbage.
-    */
-  private[engine] def writeText(fs: FileSystem, p: Path, content: String): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    writeFile(fs, tmp, content)
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"atomic rename $tmp -> $p failed")
   }
 
   /** The entries of the create-once log in `dir`, ascending. An entry is
@@ -1392,20 +1385,8 @@ object KeyedTable {
       s"$dir/$n exists: another writer committed entry $n first; re-read and retry")
   }
 
-  /** Absent file → None. A file that EXISTS but doesn't parse is external
-    * corruption — fail loudly rather than fall back to a default.
-    */
-  private def readPointer(fs: FileSystem, p: Path): Option[Long] =
-    readText(fs, p).map(t => t.trim.toLongOption.getOrElse(
-      throw new IllegalStateException(
-        s"corrupt pointer file $p (content: '${t.take(40)}') — repair manually")))
-
-  private def writePointer(fs: FileSystem, p: Path, v: Long): Unit =
-    writeText(fs, p, v.toString)
-
   private def listBuckets(fs: FileSystem, dir: Path): Seq[Int] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.filter(_.isDirectory)
+    fs.listStatus(dir).toSeq.filter(_.isDirectory)
       .map(_.getPath.getName).filter(_.startsWith(s"$BucketCol="))
       .map(_.stripPrefix(s"$BucketCol=").toInt)
 }

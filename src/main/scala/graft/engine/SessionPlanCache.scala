@@ -25,8 +25,8 @@ import scala.collection.concurrent.TrieMap
   * or regenerations seen.
   *
   * What a token sees, and what it does not:
-  *  - a committed `v=N` dir of a [[KeyedTable]] is never rewritten
-  *    (every write commits a new version; vacuum only deletes, and a plan
+  *  - a committed data dir of a [[KeyedTable]] is never rewritten
+  *    (every stage writes a dir of its own; vacuum only deletes, and a plan
   *    over a vacuumed version fails loudly at its next action), so a
   *    version is a sound token;
   *  - a directory mtime changes when a parquet dir is regenerated (the

@@ -1219,8 +1219,8 @@ object Td {
     * sit beside `scd2`/`scd2_1` so the r8 verdict's copy-on-write
     * write-amplification finding (a hash-spread 1% epoch cost 75% of a
     * full bootstrap) is answered with a measured A/B, not prose. The
-    * realistic 1% epoch reuses [[epoch1Scd2Orders]] verbatim: the stored
-    * `_MORMODE` marker routes it to delta segments.
+    * realistic 1% epoch reuses [[epoch1Scd2Orders]] verbatim: the layout
+    * the table's entries record routes it to delta segments.
     */
   private[graft] def buildScd2OrdersMorInto(s: SparkSession, d: String, tmp: String): Unit = {
     val o = orders(s, d)

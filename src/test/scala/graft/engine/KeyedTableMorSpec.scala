@@ -105,15 +105,13 @@ class KeyedTableMorSpec extends SparkSpec {
     t.overwrite((1 to 2000).map(i => (i.toLong, s"v$i")).toDF("k", "v"))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    def dirBytes(p: String): Long = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      if (!fs.exists(path)) 0L
-      else fs.getContentSummary(path).getLength
-    }
-    val baseBytes = dirBytes(s"${t.root}/v=1")
+    /** bytes of version `v`'s dirs (`v=<v>-<token>`) */
+    def dirBytes(v: Int): Long = new java.io.File(t.root).list().toSeq.filter(_.startsWith(s"v=$v-"))
+      .map(d => fs.getContentSummary(new org.apache.hadoop.fs.Path(s"${t.root}/$d")).getLength).sum
+    val baseBytes = dirBytes(1)
     // a 3-key epoch: the delta version dir must hold ONLY those keys' rows
     t.merge(Seq((5L, "x"), (6L, "y"), (7L, "z")).toDF("k", "v"))
-    val deltaBytes = dirBytes(s"${t.root}/v=2")
+    val deltaBytes = dirBytes(2)
     assert(deltaBytes < baseBytes / 4,
       s"delta commit wrote $deltaBytes bytes vs base $baseBytes — not ∝ batch")
     assert(t.manifest.values.toSet == Set(1L))

@@ -4,6 +4,23 @@ import graft.SparkSpec
 
 class KeyedTableSpec extends SparkSpec {
 
+  /** The data dirs of version `v` under `root`: `v=<v>-<token>`. */
+  private def dirsOf(root: String, v: Long): Seq[java.io.File] =
+    Option(new java.io.File(root).listFiles()).toSeq.flatten.filter(_.getName.startsWith(s"v=$v-"))
+
+  /** The names that entry `v` of the table at `root` gives its dirs: data,
+    * delta and bounds dirs, relative to the root.
+    */
+  private def namedBy(root: String, v: Long): Set[String] =
+    java.nio.file.Files.readString(new java.io.File(root, s"${KeyedTable.CommitsDir}/$v").toPath)
+      .split("\n").toSet.flatMap { (line: String) =>
+        line.split("=", 2) match {
+          case Array("dir" | "bounds", d) => Seq(d)
+          case Array("bucket" | "deltas", bds) => bds.split(",").toSeq.tail
+          case _ => Nil
+        }
+      }
+
   test("merge inserts new keys, updates existing, never deletes; idempotent") {
     val s = spark
     import s.implicits._
@@ -53,8 +70,8 @@ class KeyedTableSpec extends SparkSpec {
     val m2 = t.manifest
     assert(m2.values.count(_ == 2L) == 1, s"expected 1 touched bucket, got $m2")
     assert(m2.values.count(_ == 1L) == m1.size - 1) // everything else untouched
-    val v2Buckets = new java.io.File(s"$root/v=2").listFiles().count(_.getName.startsWith("__bucket="))
-    assert(v2Buckets == 1) // only the touched bucket dir exists in v=2
+    val Seq(v2) = dirsOf(root, 2)
+    assert(v2.listFiles().count(_.getName.startsWith("__bucket=")) == 1) // only the touched bucket
     assert(t.current.count() == 100)
     assert(t.current.filter("id = 'k7'").collect()(0).getInt(2) == 700)
 
@@ -66,8 +83,24 @@ class KeyedTableSpec extends SparkSpec {
     val b = u.current.collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
     assert(a == b)
 
+    // a handle reopened with the wrong bucket count merges by the stored
+    // layout: routing by its own 4 would miss k7's bucket and duplicate it
+    val wrong = KeyedTable(spark, root, Seq("id"), orderCol = Some("ver"), numBuckets = 4)
+    assert(wrong.effectiveBuckets == 8)
+    wrong.merge(Seq(("k7", 3, 7000), ("k100", 3, 100)).toDF("id", "ver", "v"))
+    assert(wrong.current.groupBy("id").count().filter("count > 1").count() == 0)
+    assert(wrong.current.count() == 100)
+    assert(t.current.filter("id = 'k7'").collect()(0).getInt(2) == 7000)
+
     t.overwrite(Seq(("x", 1, 0)).toDF("id", "ver", "v"))
     assert(t.current.count() == 1)
+
+    // a bootstrap whose rows were all rejected is a typed, empty, mergeable table
+    val e = KeyedTable(spark, tmpDir("kt3e"), Seq("id"), orderCol = Some("ver"), numBuckets = 4)
+    e.merge(Seq.empty[(String, Int, Int)].toDF("id", "ver", "v"))
+    assert(e.exists && e.current.count() == 0 && e.current.columns.toSeq == Seq("id", "ver", "v"))
+    e.merge(Seq(("a", 1, 1)).toDF("id", "ver", "v"))
+    assert(e.current.select("id", "v").as[(String, Int)].collect().toSeq == Seq(("a", 1)))
   }
 
   test("NULL key is an ordinary key: re-merge is idempotent, deleteKeys removes it") {
@@ -183,7 +216,7 @@ class KeyedTableSpec extends SparkSpec {
     Option(new java.io.File(root, KeyedTable.CommitsDir).listFiles()).toSeq.flatten
       .map(_.getName).filterNot(_.endsWith(".crc")).sorted
 
-  test("a stage whose version a later stage rewrote refuses to publish; the later stage commits") {
+  test("two stages of one base: the first publish commits, the second throws") {
     val s = spark
     import s.implicits._
     for ((buckets, mor) <- Seq((0, false), (4, false), (4, true))) {
@@ -195,13 +228,14 @@ class KeyedTableSpec extends SparkSpec {
       val s1 = t.stageMerge(Seq(("k1", 10), ("b1", 1)).toDF("id", "v"))
       val s2 = t.stageMerge(Seq(("k2", 20), ("b2", 2)).toDF("id", "v"))
       assert(s1.version == 2 && s2.version == 2)
-      // s2 overwrote v=2: publishing s1 would commit b2's data as b1's
-      // version, and b1 would be lost without any caller being told
-      intercept[java.util.ConcurrentModificationException] { s1.publish() }
-      assert(t.currentVersion == 1, s"buckets=$buckets mor=$mor")
-      assert(s2.publish() == 2)
-      assert(rows == base - (("k2", 2)) + (("k2", 20)) + (("b2", 2)), s"buckets=$buckets mor=$mor")
+      // each stage wrote its own dir, so s2 left s1's data alone: the first
+      // publisher wins with its own rows, and the loser's rows are never read
+      assert(s1.publish() == 2)
+      intercept[java.util.ConcurrentModificationException] { s2.publish() }
+      assert(t.currentVersion == 2, s"buckets=$buckets mor=$mor")
+      assert(rows == base - (("k1", 1)) + (("k1", 10)) + (("b1", 1)), s"buckets=$buckets mor=$mor")
       assert(logNames(root) == Seq("1", "2"), s"buckets=$buckets mor=$mor")
+      assert(dirsOf(root, 2).size == 2, "the loser's dir stays until vacuum")
     }
   }
 
@@ -209,10 +243,10 @@ class KeyedTableSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     // Every commit is a conditional put: entry N is created only if absent.
-    // Two threads publish one staged version at once; both pass the stage's
-    // token check, so only the create-once entry can tell them apart. No
-    // lock serializes the writers: link(2) itself refuses an existing entry,
-    // in one process or across several.
+    // Two threads publish one staged version at once, so only the
+    // create-once entry can tell them apart. No lock serializes the
+    // writers: link(2) itself refuses an existing entry, in one process or
+    // across several.
     val t = KeyedTable(spark, tmpDir("ktcondput-window"), Seq("id"))
     t.overwrite(Seq(("a", 1)).toDF("id", "v"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -239,6 +273,28 @@ class KeyedTableSpec extends SparkSpec {
       }
       assert(KeyedTable.logVersions(fs, dir) == (1L to 20L))
       assert(fs.listStatus(dir).forall(!_.getPath.getName.endsWith(".tmp")), "losers leave no temp file")
+      // and end to end: eight instances merge keys no other writer has,
+      // each re-staging from the new snapshot when it loses; every merge
+      // that returned keeps its rows
+      for ((buckets, mor) <- Seq((0, false), (4, false), (4, true))) {
+        val hint = s"buckets=$buckets mor=$mor"
+        val root = tmpDir(s"ktrace-$buckets-$mor")
+        KeyedTable(spark, root, Seq("id"), numBuckets = buckets, mor = mor).overwrite(Seq(("seed", 0)).toDF("id", "v"))
+        val writer = new java.util.concurrent.atomic.AtomicInteger()
+        val out = race(8) {
+          val w = writer.incrementAndGet()
+          val t = KeyedTable(spark, root, Seq("id"))
+          val batch = Seq((s"w$w-a", w), (s"w$w-b", w)).toDF("id", "v")
+          def attempt(tries: Int): Long =
+            try t.merge(batch)
+            catch { case _: java.util.ConcurrentModificationException if tries < 32 => attempt(tries + 1) }
+          attempt(1)
+        }
+        assert(out.map(_.get).sorted == (2L to 9L), hint)
+        val want = Set("seed") ++ (1 to 8).flatMap(w => Seq(s"w$w-a", s"w$w-b"))
+        val fresh = KeyedTable(spark, root, Seq("id"))
+        assert(fresh.current.select("id").as[String].collect().sorted.toSeq == want.toSeq.sorted, hint)
+      }
     } finally pool.shutdown()
   }
 
@@ -262,10 +318,10 @@ class KeyedTableSpec extends SparkSpec {
       intercept[IllegalArgumentException] { t.vacuum(keepVersions = 0) }
       t.vacuum(keepVersions = 1)
       assert(logNames(root) == Seq("3"), s"buckets=$buckets")
-      assert(new java.io.File(root, "v=4").exists)
+      assert(dirsOf(root, 4).size == 1)
       // an older dir stays only while the current manifest points into it
       for (v <- Seq(1L, 2L))
-        assert(new java.io.File(root, s"v=$v").exists == t.manifest.values.exists(_ == v), s"buckets=$buckets")
+        assert(dirsOf(root, v).nonEmpty == t.manifest.values.exists(_ == v), s"buckets=$buckets")
       assert(t.currentVersion == 3 && t.current.count() == 4)
       intercept[IllegalStateException] { t.atVersion(2) }
       assert(inflight.publish() == 4)
@@ -306,7 +362,9 @@ class KeyedTableSpec extends SparkSpec {
     val entry = new java.io.File(root, s"${KeyedTable.CommitsDir}/1")
     java.nio.file.Files.writeString(entry.toPath, "bucket=zero,1")
     new java.io.File(root, s"${KeyedTable.CommitsDir}/.1.crc").delete()
-    val e1 = intercept[IllegalStateException] { t.current }
+    // entries never change, so the writer keeps the one it published;
+    // a reader that opens the entry finds the damage
+    val e1 = intercept[IllegalStateException] { KeyedTable(spark, root, Seq("id"), numBuckets = 4).current }
     assert(e1.getMessage.contains("corrupt commit log entry"), e1.getMessage)
     assert(e1.getMessage.contains(s"${KeyedTable.CommitsDir}/1"), e1.getMessage)
     java.nio.file.Files.writeString(new java.io.File(root, s"${KeyedTable.CommitsDir}/2x").toPath, "")
@@ -660,13 +718,18 @@ class KeyedTableSpec extends SparkSpec {
     assert(t.current.select("id", "v").as[(String, Int)].collect().toSet == Set(("a", 1), ("c", 3)))
   }
 
-  test("an abandoned bootstrap stage is rewritten by the next bootstrap") {
+  test("an abandoned bootstrap is an orphan; a lost log refuses bootstrap") {
     val s = spark
     import s.implicits._
     val t = KeyedTable(spark, tmpDir("ktstage-boot"), Seq("id"))
     val abandoned = t.stageMerge(Seq(("a", 1)).toDF("id", "v"))
     assert(abandoned.version == 1 && !t.exists)
     assert(t.merge(Seq(("b", 2)).toDF("id", "v")) == 1)
+    assert(t.current.select("id", "v").as[(String, Int)].collect().toSeq == Seq(("b", 2)))
+    // the abandoned dir is named by no entry: never read, and vacuum's
+    intercept[java.util.ConcurrentModificationException] { abandoned.publish() }
+    assert(dirsOf(t.root, 1).size == 2)
+    assert(t.vacuum() == Seq(1L) && dirsOf(t.root, 1).size == 1)
     assert(t.current.select("id", "v").as[(String, Int)].collect().toSeq == Seq(("b", 2)))
     // two versions beside a lost commit log refuse a bootstrap over them
     t.merge(Seq(("c", 3)).toDF("id", "v"))
@@ -694,9 +757,13 @@ class KeyedTableSpec extends SparkSpec {
       }.toMap
     }
     def rows(ids: Range, v: Int) = ids.map(i => (i.toLong, s"n$i", v)).toDF("id", "name", "v")
+    /** every pattern must match a data file's path; `<N>` is version N's dir */
     def check(root: String, mustCover: String*): Unit = {
       val files = codecs(root).filter(_._2.nonEmpty)
-      for (part <- mustCover) assert(files.keys.exists(_.contains(part)), s"no data file under $part: ${files.keys}")
+      for (part <- mustCover) {
+        val r = part.replaceAll("<(\\d+)>", "v=$1-[^/]+").r
+        assert(files.keys.exists(r.findFirstIn(_).isDefined), s"no data file under $part: ${files.keys}")
+      }
       val other = files.filter(_._2 != Set("ZSTD"))
       assert(other.isEmpty, s"$root: files not zstd: $other")
     }
@@ -706,15 +773,15 @@ class KeyedTableSpec extends SparkSpec {
     t0.overwrite(rows(1 to 200, 1))
     t0.merge(rows(150 to 250, 2))
     t0.deleteKeys(Seq(1L).toDF("id"))
-    check(flat, "/v=1/", "/v=2/", "/v=3/")
+    check(flat, "/<1>/", "/<2>/", "/<3>/")
     // bucketed, range-routed, with a stats sidecar: bootstrap, then a rewrite
     // of the touched buckets
     val ranged = tmpDir("ktcodec-range")
     val t1 = KeyedTable(spark, ranged, Seq("id"), numBuckets = 4, rangeCol = Some("id"), statsCols = Seq("v"))
     t1.overwrite(rows(1 to 400, 1))
     t1.merge(rows(390 to 410, 2))
-    check(ranged, s"/${KeyedTable.BoundsDir}/", s"/v=1/${KeyedTable.BucketCol}=", s"/v=2/${KeyedTable.BucketCol}=",
-      s"/v=1/${KeyedTable.StatsDir}/", s"/v=2/${KeyedTable.StatsDir}/")
+    check(ranged, s"/${KeyedTable.BoundsDir}-", s"/<1>/${KeyedTable.BucketCol}=", s"/<2>/${KeyedTable.BucketCol}=",
+      s"/<1>/${KeyedTable.StatsDir}/", s"/<2>/${KeyedTable.StatsDir}/")
     // merge-on-read: delta segments, then compactDeltas folding them into base
     val mor = tmpDir("ktcodec-mor")
     val t2 = KeyedTable(spark, mor, Seq("id"), numBuckets = 4, statsCols = Seq("v"), mor = true)
@@ -722,29 +789,119 @@ class KeyedTableSpec extends SparkSpec {
     t2.merge(rows(1 to 40, 2))
     t2.merge(rows(30 to 60, 3))
     assert(t2.compactDeltas(maxDeltas = 2).contains(4L))
-    check(mor, s"/v=2/${KeyedTable.BucketCol}=", s"/v=3/${KeyedTable.BucketCol}=", s"/v=4/${KeyedTable.BucketCol}=",
-      s"/v=3/${KeyedTable.StatsDir}/", s"/v=4/${KeyedTable.StatsDir}/")
+    check(mor, s"/<2>/${KeyedTable.BucketCol}=", s"/<3>/${KeyedTable.BucketCol}=", s"/<4>/${KeyedTable.BucketCol}=",
+      s"/<3>/${KeyedTable.StatsDir}/", s"/<4>/${KeyedTable.StatsDir}/")
     // the files read back as written
     assert(t0.current.count() == 249 && t1.current.count() == 410 && t2.current.count() == 400)
     assert(t2.current.filter($"v" === 3).count() == 31)
   }
 
-  test("an overwrite rewrites the stored schema only when it changes") {
+  test("each entry holds its version's schema; time travel reads its own") {
     val s = spark
     import s.implicits._
-    val root = tmpDir("ktschema")
+    for ((buckets, mor) <- Seq((0, false), (4, false), (4, true))) {
+      val hint = s"buckets=$buckets mor=$mor"
+      val t = KeyedTable(spark, tmpDir(s"ktschema-$buckets-$mor"), Seq("id"), numBuckets = buckets, mor = mor)
+      t.overwrite(Seq.empty[(String, Int)].toDF("id", "v"))                  // v1: empty
+      t.merge(Seq(("a", 1), ("b", 2)).toDF("id", "v"))                        // v2
+      t.mergeEvolving(Seq(("b", 20, "x")).toDF("id", "v", "w"))               // v3: widened
+      t.merge(Seq(("c", 3, "y")).toDF("id", "v", "w"))                        // v4
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+      assert(t.atVersion(1).columns.toSeq == Seq("id", "v") && t.atVersion(1).count() == 0, hint)
+      assert(t.atVersion(2).columns.toSeq == Seq("id", "v"), hint)
+      assert(rows(t.atVersion(2)) == Set(Seq("a", 1), Seq("b", 2)), hint)
+      assert(t.atVersion(3).columns.toSeq == Seq("id", "v", "w"), hint)
+      assert(rows(t.current) == Set(Seq("a", 1, null), Seq("b", 20, "x"), Seq("c", 3, "y")), hint)
+      assert(t.storedSchema.map(_.fieldNames.toSeq).contains(Seq("id", "v", "w")), hint)
+      // the schema is in the entry: no other file at the root holds it
+      assert(new java.io.File(t.root).list().toSet.forall(n => n == KeyedTable.CommitsDir || n.startsWith("v=")), hint)
+    }
+  }
+
+  test("a widening that fails at execution leaves the table as it was") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    for ((buckets, mor) <- Seq((0, false), (4, false), (4, true))) {
+      val hint = s"buckets=$buckets mor=$mor"
+      val t = KeyedTable(spark, tmpDir(s"ktwiden-$buckets-$mor"), Seq("k"), numBuckets = buckets, mor = mor)
+      t.overwrite((1 to 20).map(i => (i.toLong, s"n$i", i * 10L)).toDF("k", "name", "v"))
+      t.merge(Seq((1L, "m1", 11L)).toDF("k", "name", "v"))
+      def rows = t.current.collect().map(_.toString).sorted.toSeq
+      val (version, schema, before) = (t.currentVersion, t.storedSchema, rows)
+      // the batch adds a column `w` whose ANSI cast fails only when the
+      // write executes: read from parquet, so nothing folds it earlier
+      val batchDir = tmpDir(s"ktwiden-batch-$buckets-$mor")
+      Seq((2L, "n2", 20L, "not-a-number")).toDF("k", "name", "v", "ws").write.mode("overwrite").parquet(batchDir)
+      val bad = spark.read.parquet(batchDir).withColumn("w", col("ws").cast("int")).drop("ws")
+      intercept[Exception] { t.mergeEvolving(bad) }
+      assert(t.currentVersion == version, hint)
+      assert(t.storedSchema == schema, hint)
+      assert(rows == before, hint)
+      assert(KeyedTable(spark, t.root, Seq("k")).current.collect().map(_.toString).sorted.toSeq == before, hint)
+      t.merge(Seq((3L, "m3", 33L), (99L, "new", 0L)).toDF("k", "name", "v"))
+      assert(t.currentVersion == version + 1, hint)
+      assert(t.current.columns.toSeq == Seq("k", "name", "v"), hint)
+      assert(rows == (before.filterNot(_.startsWith("[3,")) ++ Seq("[3,m3,33]", "[99,new,0]")).sorted, hint)
+    }
+  }
+
+  test("the root holds only the commit log and the dirs the current entry names") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.lit
+    def rows(ids: Range, v: Int) = ids.map(i => (i.toLong, s"n$i", v)).toDF("id", "name", "v")
+    val kinds = Seq(
+      ("unbucketed", (r: String) => KeyedTable(spark, r, Seq("id"))),
+      ("bucketed", (r: String) => KeyedTable(spark, r, Seq("id"), numBuckets = 4, statsCols = Seq("v"))),
+      ("range", (r: String) => KeyedTable(spark, r, Seq("id"), numBuckets = 4, rangeCol = Some("id"))),
+      ("mor", (r: String) => KeyedTable(spark, r, Seq("id"), numBuckets = 4, mor = true)))
+    for ((kind, open) <- kinds) {
+      val root = tmpDir(s"ktlaw-$kind")
+      val t = open(root)
+      t.overwrite(rows(1 to 100, 1))
+      t.merge(rows(90 to 110, 2))
+      t.mergeCdc(rows(1 to 5, 3).withColumn("_op", lit("D"))
+        .withColumn("_seq", lit(1)))
+      // a stage that loses its race leaves a dir no entry names
+      val lost = t.stageMerge(rows(200 to 210, 4))
+      open(root).merge(rows(300 to 301, 4))
+      intercept[java.util.ConcurrentModificationException] { lost.publish() }
+      t.mergeEvolving(rows(50 to 52, 5).withColumn("extra", lit("e")))
+      t.deleteKeys(Seq(6L, 7L).toDF("id"))
+      if (kind == "mor") assert(t.compactDeltas(maxDeltas = 1).nonEmpty)
+      t.merge(rows(60 to 61, 6).withColumn("extra", lit("f")))
+      val want = t.current.collect().map(_.toString).sorted.toSeq
+      val cur = t.currentVersion
+      def children = new java.io.File(root).list().toSet
+      // vacuum(2) keeps every dir a retained entry names
+      t.vacuum(2)
+      val kept = namedBy(root, cur - 1) ++ namedBy(root, cur)
+      assert(kept.subsetOf(children), s"$kind: ${kept -- children} gone")
+      t.compact()
+      t.vacuum(1)
+      assert(children == namedBy(root, cur + 1) + KeyedTable.CommitsDir, kind)
+      assert(t.current.collect().map(_.toString).sorted.toSeq == want, kind)
+      if (kind != "unbucketed") assert(t.manifestSpread == 1, kind)
+    }
+  }
+
+  test("the metadata I/O of an unbucketed merge is pinned") {
+    val s = spark
+    import s.implicits._
+    CountingFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val root = CountingFileSystem.path(tmpDir("ktcount"))
     val t = KeyedTable(spark, root, Seq("id"))
-    val schemaFile = new java.io.File(root, KeyedTable.SchemaMarker).toPath
-    def fileKey = java.nio.file.Files.readAttributes(
-      schemaFile, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey
-    t.overwrite(Seq(("a", 1)).toDF("id", "v"))
-    val first = fileKey
-    assert(first != null)
-    t.overwrite(Seq(("b", 2)).toDF("id", "v"))
-    t.merge(Seq(("c", 3)).toDF("id", "v"))
-    assert(fileKey == first, "an unchanged schema left the file in place")
-    t.overwrite(Seq(("d", 4, "x")).toDF("id", "v", "w"))
-    assert(fileKey != first)
-    assert(t.storedSchema.map(_.fieldNames.toSeq).contains(Seq("id", "v", "w")))
+    t.overwrite((1 to 20).map(i => (s"k$i", i)).toDF("id", "v"))
+    t.current.count()
+    val (v, calls) = CountingFileSystem.callsOf(t.merge(Seq(("k1", 10), ("new", 0)).toDF("id", "v")))
+    assert(v == 2 && t.current.count() == 21)
+    // the driver's calls: the table's own are two `exists` (the probe for
+    // the current entry and the next) and the entry's create, rename and
+    // temp delete; the rest are Spark's listing of the base version's dir
+    // and its output committer.
+    val driver = calls.collect { case (k, n) if k.startsWith("driver.") => k.stripPrefix("driver.") -> n }
+    assert(driver == Map[String, Long]("create" -> 2, "delete" -> 3, "exists" -> 3, "getFileStatus" -> 10,
+      "listStatus" -> 6, "mkdirs" -> 1, "rename" -> 6), calls.toSeq.sorted.mkString(", "))
   }
 }

@@ -74,7 +74,12 @@ class SessionPlanCacheSpec extends SparkSpec {
       assert(t.currentVersion == v, op)
       val (cur, jobs) = jobsOf(t.current)
       assert(jobs == 0, s"$op: building the current read ran $jobs Spark job(s)")
-      val fresh = spark.read.parquet(s"$root/v=$v")
+      // the entry holds the schema, so a session that did not write the
+      // version infers nothing either
+      val (_, otherJobs) = jobsOf(KeyedTable(spark.newSession(), root, Seq("id")).current)
+      assert(otherJobs == 0, s"$op: another session's first read ran $otherJobs Spark job(s)")
+      val Seq(dir) = new java.io.File(root).list().toSeq.filter(_.startsWith(s"v=$v-"))
+      val fresh = spark.read.parquet(s"$root/$dir")
       assert(cur.schema == fresh.schema, op)
       assert(rows(cur) == rows(fresh), op)
     }
