@@ -1,413 +1,121 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.queries.Td
+
+/** Times the declared query battery on one box and prints one JSON line.
+  *
+  * Usage: `SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.Bench [q_a,q_b,...]`.
+  * With no argument every query runs, after a fresh build of each stored
+  * index ("ib") and the shared-root installs; a comma-separated name list
+  * times only those queries and skips both.
+  */
 object Bench {
-  /** Renders the single JSON stdout line the driver keeps (last 2000 bytes).
-   *
-   * Compact values (2 decimals, trailing zeros stripped): full-precision
-   * doubles pushed the 87-query line past the budget in r4, truncating 22
-   * entries. Fallback ladder: shed precision, then the uniform "q_" key
-   * prefix (flagged in-band via "qprefix"), then constant boilerplate
-   * ("unit"/"sf", then "metric"), then fold queries under an `elide`
-   * threshold into fast_n/fast_sum/fast_max summary keys — those sit at the
-   * measurement noise floor and every one is still correctness-gated by
-   * Verify.
-   *
-   * Key ORDER is part of the contract (r9 verdict #1): the driver keeps the
-   * LAST 2000 stdout bytes, so if a line somehow overflows, front-truncation
-   * must eat per-query detail, not certification. The bulky "queries" map
-   * leads; every health/certification key (ib/err/stalled/stall/nstall/
-   * nretry/pmax/npx) trails it, with "value" the very last key on the line.
-   * BENCH_r09 had the opposite order and lost every health key to a
-   * ~120-byte overflow.
-   *
-   * The elide ladder is ADAPTIVE (r9 verdict #1): the old final fallback was
-   * an unchecked getOrElse at elide=0.35 — a stall-heavy round names more
-   * slow queries, overflows the budget, and the driver's window truncates
-   * the line into unparseable JSON (BENCH_r09 parsed:null). The ladder keeps
-   * raising elide until the line fits; the terminal level folds EVERY query
-   * into the summary keys, leaving a line of pure health keys that always
-   * fits. BenchRenderSpec pins both guarantees under a deliberately
-   * stall-heavy synthetic battery.
-   *
-   * Health-key semantics: "stall" = max over queries of the post-heal
-   * agreement ratio (~1 quiet); "nstall" = queries whose min was never
-   * corroborated (>3× disagreement after retries); "nretry" = raw
-   * ambient-contention evidence; "pmax"/"npx" = vs-prior certification (max
-   * min/prior, and queries still >2× prior after retries — each named in
-   * "regressed" when its runs AGREE with each other, "stalled" when they
-   * never converged). The r10 classifier conflated the two: a converged
-   * plateau shift (trustworthy measurement, real slowdown) carried the same
-   * "untrustworthy entry" label as a genuine stall, so the one real signal
-   * of the round was filed as noise (r10 verdict #2). A "regressed" entry's
-   * value ships and stays a usable prior; a "stalled" entry's does not.
-   * "err" lists queries whose every run threw — a missing entry must read
-   * as FAILED, never as fast.
-   */
-  def render(results: Seq[(String, Double)], sfName: String,
-      stallRatio: Double, nstall: Int, nretry: Int, priorMax: Option[Double],
-      npx: Int, stalledQ: Seq[String], failed: Seq[String],
-      idxBuild: Seq[(String, Double)], budget: Int = 1995,
-      regressedQ: Seq[String] = Nil,
-      isoQ: Seq[(String, Double)] = Nil, xpopQ: Seq[String] = Nil,
-      ibBox: Option[String] = None,
-      mass: Seq[(String, Double)] = Nil): String = {
+  /** Back-to-back runs per query; the min ships. */
+  val Runs = 3
+  /** Extra runs the stall healer may add to one query. */
+  val MaxRetries = 3
+
+  /** The successful run times of one query, ascending, and how many extra
+    * runs the stall healer added. No times means every run threw.
+    */
+  final case class Timing(times: Seq[Double], retries: Int) {
+    def failed: Boolean = times.isEmpty
+    def min: Double = times.head
+    private def over(t: Double): Double = t / math.max(min, 0.001)
+    def spread: Double = over(times.last)
+    /** A second run lands within 1.5× of the min. */
+    def corroborated: Boolean = times.count(_ <= min * 1.5) >= 2
+    /** The runs' agreement: 2nd-best / best once the min is corroborated
+      * (~1 on a quiet box), max / min otherwise.
+      */
+    def health: Double = if (corroborated) over(times(1)) else spread
+    /** The min was never corroborated: it cannot be told from a stall. */
+    def stalled: Boolean = !failed && health > 3
+  }
+
+  /** Measures one query: the min of `Runs` runs of `run` (seconds; a run
+    * that throws counts as failed, not as fast). A loaded machine can stall
+    * whole runs 5-10× at random, and the min is immune to any number of
+    * stalled runs short of all of them. To catch that case, runs that
+    * disagree past 3× with an uncorroborated min get up to `MaxRetries`
+    * more runs, each a fresh chance at a clean pair.
+    */
+  def measure(name: String)(run: () => Double): Timing = {
+    def once(i: Int): Option[Double] =
+      try Some(run()) catch { case e: Throwable =>
+        System.err.println(s"BENCHERR $name#$i ${e.getClass.getSimpleName}: ${e.getMessage}")
+        None
+      }
+    var t = Timing((1 to Runs).flatMap(once).sorted, 0)
+    while (!t.failed && t.spread > 3 && !t.corroborated && t.retries < MaxRetries) {
+      val i = Runs + t.retries + 1
+      System.err.println(f"BENCHRETRY $name#$i min=${t.min}%.2f ratio=${t.spread}%.1f")
+      t = Timing((t.times ++ once(i)).sorted, t.retries + 1)
+    }
+    if (t.stalled)
+      System.err.println(f"BENCHSTALL $name min=${t.min}%.2f max=${t.times.last}%.2f ratio=${t.health}%.1f UNCORROBORATED")
+    t
+  }
+
+  /** Renders the single JSON stdout line; a reader keeps only the last 2000
+    * stdout bytes.
+    *
+    * Key order is part of the contract: "queries" (per-query min seconds)
+    * leads and "value" (their sum) is the last key, with the health keys
+    * between, so a front-truncated line loses query detail, not the total.
+    * "err" lists queries whose every run threw — they are in neither
+    * "queries" nor "value", since a failure must never read as fast.
+    * "stalled" names the queries whose min was never corroborated, "stall"
+    * is the largest `health`, "nstall" the stalled count and "nretry" the
+    * number of queries the healer re-ran.
+    *
+    * To fit `budget` the line sheds precision, then the uniform "q_" key
+    * prefix (flagged by "qprefix"), then "unit" and "metric", then folds
+    * queries under a rising threshold into "fast_n"/"fast_sum"/"fast_max".
+    * The last level folds every query; if its name lists still overflow,
+    * they collapse to counts.
+    */
+  def render(measured: Seq[(String, Timing)], sfName: String,
+      idxBuild: Seq[(String, Double)], budget: Int = 1995): String = {
     def fmt(prec: Int)(v: Double): String =
       BigDecimal(v).setScale(prec, BigDecimal.RoundingMode.HALF_UP)
         .bigDecimal.stripTrailingZeros.toPlainString
+    val ok = measured.filterNot(_._2.failed)
+    val results = ok.map { case (n, t) => n -> t.min }
+    val failed = measured.collect { case (n, t) if t.failed => n }
+    val stalledQ = ok.collect { case (n, t) if t.stalled => n }
     val total = results.map(_._2).sum
-    val stallPart = {
-      val priorPart = priorMax.map(p =>
-        s""""pmax":${fmt(1)(p)},"npx":$npx,""").getOrElse("")
-      s""""stall":${fmt(1)(stallRatio)},"nstall":$nstall,"nretry":$nretry,$priorPart"""
-    }
-    // "ibx" box-epochs the ib block (r15 verdict #4): ib values are
-    // install-cost measurements of THIS box's disk/cpu, and the per-key-MIN
-    // prior merge made a dead fast box's mins trip BENCHIBRETRY/BENCHIBX on
-    // every slower reprovision until depth-4 aging evicted them. The
-    // fingerprint (boot_id) pins the measurement population; the loader
-    // only MIN-merges ib maps whose ibx matches the running box.
+    val stallPart = s""""stall":${fmt(1)(ok.map(_._2.health).maxOption.getOrElse(1.0))},""" +
+      s""""nstall":${stalledQ.size},"nretry":${measured.count(_._2.retries > 0)},"""
     val ibPart = if (idxBuild.isEmpty) ""
-      else ibBox.map(b => s""""ibx":"$b",""").getOrElse("") +
-        idxBuild.map { case (k, v) => "\"" + k + "\":" + fmt(1)(v) }
+      else idxBuild.map { case (k, v) => "\"" + k + "\":" + fmt(1)(v) }
         .mkString("\"ib\":{", ",", "},")
-    // "mass": per-family collision-mass fingerprints of THIS corpus (r17
-    // verdict Next #3) — next round's massXpop comparison population.
-    // Constant across shrink levels, like ib: certification data, and the
-    // comparison breaks if a squeezed artifact drops it.
-    val massPart = if (mass.isEmpty) ""
-      else mass.map { case (k, v) => "\"" + k + "\":" + fmt(0)(v) }
-        .mkString("\"mass\":{", ",", "},")
     def line(prec: Int, strip: Boolean, slim: Int, elide: Double): String = {
-      // "iso": isolated (post-battery, fresh-ordering) re-run measurements —
-      // the SAME-POPULATION baselines future rounds compare their own
-      // isolated re-runs against (r12 verdict Next #1: warm-battery and
-      // isolated values are different measurement populations; three rounds
-      // of phantom movers came from comparing across them). "xpop": queries
-      // whose only prior was cross-population — informational, not counted
-      // in npx; their iso baseline above makes next round's comparison
-      // like-with-like. Key names shrink in lockstep with query keys.
-      val isoPart = if (isoQ.isEmpty) ""
-        else isoQ.map { case (k, v) =>
-          "\"" + (if (strip) k.stripPrefix("q_") else k) + "\":" + fmt(2)(v)
-        }.mkString("\"iso\":{", ",", "},")
-      // stalled/err names strip the "q_" prefix in LOCKSTEP with the query
-      // keys: the prior loader applies one qprefix rule to both, so a line
-      // with unstripped queries but stripped stalled names would fail to
-      // exclude stalled entries from the prior set
+      // names strip "q_" together with the query keys: one qprefix rule
       def nm(s: String) = if (strip) s.stripPrefix("q_") else s
-      val stalledPart = if (stalledQ.isEmpty) ""
-        else stalledQ.map("\"" + nm(_) + "\"").mkString("\"stalled\":[", ",", "],")
-      val regressedPart = if (regressedQ.isEmpty) ""
-        else regressedQ.map("\"" + nm(_) + "\"").mkString("\"regressed\":[", ",", "],")
-      val xpopPart = if (xpopQ.isEmpty) ""
-        else xpopQ.map("\"" + nm(_) + "\"").mkString("\"xpop\":[", ",", "],")
-      val errPart = if (failed.isEmpty) ""
-        else failed.map("\"" + nm(_) + "\"").mkString("\"err\":[", ",", "],")
+      def names(key: String, ns: Seq[String]) =
+        if (ns.isEmpty) "" else ns.map("\"" + nm(_) + "\"").mkString("\"" + key + "\":[", ",", "],")
       val (fast, kept) = results.partition(_._2 < elide)
-      val qs = kept.map { case (k, v) =>
-        val key = if (strip) k.stripPrefix("q_") else k
-        "\"" + key + "\":" + fmt(prec)(v)
-      }.mkString("{", ",", "}")
+      val qs = kept.map { case (k, v) => "\"" + nm(k) + "\":" + fmt(prec)(v) }.mkString("{", ",", "}")
       val hint = if (strip) "\"qprefix\":\"q_\"," else ""
       val head = slim match {
         case 0 => s""""metric":"total","unit":"sec","""
         case 1 => s""""metric":"total","""
         case _ => ""
       }
-      // "sf" survives EVERY shrink level (ADVICE r12): a slim artifact that
-      // drops it used to slip through the cross-scale prior gate (priorSf =
-      // None read as "matches anything"), so a budget-squeezed sf1 artifact
-      // could feed priors to an sf0.1 run. It costs ~12 bytes — keep it.
-      val sf = s""""sf":"$sfName","""
       val fastPart = if (fast.isEmpty) ""
         else s""""fast_n":${fast.size},"fast_sum":${fmt(2)(fast.map(_._2).sum)},""" +
           s""""fast_max":${fmt(2)(fast.map(_._2).max)},"""
-      s"""{$head$hint$fastPart"queries":$qs,$sf$ibPart$massPart$isoPart$errPart$regressedPart$xpopPart$stalledPart$stallPart"value":${fmt(2)(total)}}"""
+      s"""{$head$hint$fastPart"queries":$qs,"sf":"$sfName",$ibPart${names("err", failed)}${names("stalled", stalledQ)}$stallPart"value":${fmt(2)(total)}}"""
     }
     val levels = Seq(
       line(2, false, 0, 0.0), line(1, false, 0, 0.0), line(1, true, 0, 0.0),
       line(1, true, 1, 0.0), line(1, true, 2, 0.0), line(1, true, 2, 0.05),
       line(1, true, 2, 0.15))
     val adaptive = Iterator.iterate(0.35)(_ * 1.4).take(30).map(line(1, true, 2, _))
-    val best = (levels.iterator ++ adaptive ++ Iterator(line(1, true, 2, Double.MaxValue)))
+    (levels.iterator ++ adaptive ++ Iterator(line(1, true, 2, Double.MaxValue)))
       .find(_.length <= budget)
-      .getOrElse(line(1, true, 2, Double.MaxValue))
-    if (best.length <= budget) best
-    else {
-      // Pathological floor (every query stalled AND failed lists huge): even
-      // the terminal level's out-of-band name lists can overflow. Collapse
-      // them to counts — a parseable line with the certification keys beats
-      // a truncated one with names.
-      s"""{"queries":{},"sf":"$sfName","nstalled":${stalledQ.size},"nregressed":${regressedQ.size},"nxpop":${xpopQ.size},"nerr":${failed.size},$stallPart"value":${fmt(2)(total)}}"""
-    }
-  }
-
-  /** Files a query still OVER its prior after all retries (r10 verdict #2):
-   * None = within prior (min ≤ 2× prior, or within the 0.3 s noise floor);
-   * Some("regressed") = over prior but CONVERGED (a second run within 1.5×
-   * of the min corroborates it — the same rule the stall healer uses), so
-   * the value is a trustworthy measurement of a real plateau shift;
-   * Some("stalled") = over prior and never corroborated — untrustworthy.
-   * r10 filed both under "stalled", which told the reader to distrust the
-   * one entry whose runs agreed perfectly (minhash_dedup) exactly as much
-   * as the one that never converged (regional_revenue).
-   */
-  def priorVerdict(times: Seq[Double], prior: Double): Option[String] =
-    if (times.isEmpty || !(times.head > 2 * prior && times.head - prior > 0.3)) None
-    else if (times.count(_ <= times.head * 1.5) >= 2) Some("regressed")
-    else Some("stalled")
-
-  /** Post-battery adjudication verdict for one regressed-flagged query,
-   * given the battery min (after folding in the isolated re-run), the
-   * battery prior, the iso-population prior if one exists, and the isolated
-   * re-run time. Pure — the main loop applies the effects; BenchRenderSpec
-   * pins each branch (the logic used to live inline and was covered only by
-   * live synthetic drives).
-   *
-   *  - "healed": the shipped min is back within the battery prior — plain
-   *    contention noise; flag cleared.
-   *  - "xpopok": the ISOLATED run is within the ISOLATED prior — the
-   *    battery movement was measurement-population context, not code;
-   *    flag cleared, ratio restated against the iso prior.
-   *  - "corroborated": over BOTH populations' priors — a real regression;
-   *    the flag stands.
-   *  - "xpop": no same-population prior exists — unadjudicable this round;
-   *    flag cleared, ratio dropped, iso baseline establishes the prior.
-   */
-  def adjudicate(shippedMin: Double, prior: Double, isoPrior: Option[Double],
-      isoRun: Double): String =
-    if (priorVerdict(Seq(shippedMin), prior).isEmpty) "healed"
-    else isoPrior match {
-      case Some(ip) if priorVerdict(Seq(isoRun), ip).isEmpty => "xpopok"
-      case Some(_) => "corroborated"
-      case None => "xpop"
-    }
-
-  /** One artifact's USABLE priors: (per-query seconds, ib-ladder seconds,
-   * isolated-population seconds).
-   *
-   * The third map is the artifact's "iso" block — post-battery isolated
-   * re-run measurements (r12 verdict Next #1). Battery values and isolated
-   * values are DIFFERENT measurement populations: a warm full battery lets
-   * alphabetical neighbors share Td installs and page cache, so the same
-   * query on the same tree reads materially faster in-battery than alone
-   * (minhash_dedup r11: 0.9 warm vs 1.3-1.7 isolated; dup_clusters_lsh r12:
-   * 1.1 warm vs 2.2 isolated). Three rounds running, comparing across the
-   * populations manufactured a phantom "regression" costing a worktree A/B
-   * to adjudicate. iso priors let the post-battery adjudication compare its
-   * isolated re-run like-with-like. Regressed names KEEP their iso entry
-   * (the iso value is the trustworthy baseline the flag was adjudicated
-   * against); stalled names lose theirs (never converged anywhere).
-   *
-   * Entries named in the artifact's "stalled" list are excluded (they never
-   * converged — untrustworthy values), and so are entries in "regressed"
-   * (r11 verdict #1): a regressed value DID converge, but only on its own
-   * box, and r11 proved twice that single-box convergence is not a real
-   * plateau — the driver's embed_dedup filed at 6.7 s while a quiet box
-   * read 2.29 s. Loading 6.7 as the prior would move the 2×-prior trip
-   * wire to 13.4 s, a 2.8× regression blind spot on that query. Excluded
-   * entries are not lost: the caller merges artifacts newest-first, so an
-   * excluded query FALLS BACK to the next-newest artifact that carries it.
-   *
-   * `curSf` gates cross-scale contamination exactly as before: a prior from
-   * a different scale factor is not a prior at all. The raw text may be the
-   * driver's wrapper JSON with the bench line embedded as an escaped string;
-   * unescape only when no raw queries block is present (blanket-unescaping
-   * could corrupt doubly-escaped wrapper content — ADVICE r9).
-   */
-  /** Stable-per-provision box fingerprint for the ib epoch gate: the
-    * kernel's boot_id changes on every (re)boot and reprovision — exactly
-    * the events that invalidate install-cost baselines. Conservative by
-    * design: a plain reboot also rotates it, costing one round of fresh ib
-    * baselines, which is the iso-refresh precedent (re-measure on doubt)
-    * rather than the alternative failure mode (stale cross-box mins
-    * spraying BENCHIBRETRY for four rounds, README r15).
-    */
-  def boxFp: String =
-    try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/sys/kernel/random/boot_id"))
-      .trim.replace("-", "").take(8)
-    catch { case _: Throwable =>
-      f"${java.net.InetAddress.getLocalHost.getHostName.hashCode}%08x"
-    }
-
-  /** Auto-xpop decision for the collision-mass contract family (r17 verdict
-    * Next #3): a query's battery time breached its 2× prior, but its
-    * family's candidate-pair mass Σ C(w,2) — a property of the DATA, which
-    * the driver regenerates — also moved. If the mass itself moved past the
-    * same 1.5× bar the ib channel uses AND the time movement does not
-    * exceed the mass movement by more than the normal 2× gate slack, the
-    * movement is attributable to the data population, and the query files
-    * as xpop (fresh iso baseline established) instead of burning retries
-    * and manual stash-A/B adjudication — r17's 87.7× corpus shift cost
-    * exactly that labor. A real code regression cannot hide: with mass
-    * ~flat (ratio < 1.5) the veto never fires, and a time ratio far past
-    * 2× the mass ratio still files normally.
-    */
-  def massXpop(timeRatio: Double, massRatio: Double): Boolean =
-    massRatio >= 1.5 && timeRatio <= 2.0 * massRatio
-
-  /** The collision-mass family a query's wall time is contractually
-    * proportional to, if any — only the exact/capped pair miners and their
-    * incremental twins, whose cost model IS the bucket self-join mass.
-    */
-  def massFamilyOf(name: String): Option[String] = name.stripPrefix("q_") match {
-    case n if n.startsWith("chunk_neardup") || n == "chunk_inc_neardup" => Some("chunk")
-    case n if n.startsWith("jaccard_") || n.startsWith("containment_") => Some("shingle")
-    case n if n.startsWith("minhash_") || n.startsWith("dup_clusters") ||
-      n == "incremental_dedup" => Some("docband")
-    case n if n.startsWith("embed_") => Some("embed")
-    case n if n.startsWith("video_neardup") => Some("video")
-    case _ => None
-  }
-
-  /** Per-family candidate-pair mass fingerprints of THIS corpus, emitted in
-    * the artifact's "mass" block: for each quadratic-by-contract miner
-    * family, Σ C(w,2) over the buckets its self-join actually groups by,
-    * plus the max bucket width (`<family>_w`). Cheap (one groupBy + one
-    * aggregate per family, reusing the stored index relations the battery
-    * preloads anyway) and computed pre-battery, so "is this movement data
-    * or code?" becomes a number the artifact answers itself — the
-    * ChunkWidthProbe statistic, standing.
-    */
-  def massStats(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    import org.apache.spark.sql.functions._
-    import graft.queries.Td
-    import graft.operators.{Dedup, Similarity}
-    def widths(b: org.apache.spark.sql.DataFrame, keys: String*): Seq[Double] = {
-      val r = b.groupBy(keys.map(col): _*).agg(count(lit(1)).as("w"))
-        .agg(sum(col("w") * (col("w") - 1) / 2), max(col("w"))).collect()(0)
-      Seq(if (r.isNullAt(0)) 0.0 else r.getDouble(0),
-        if (r.isNullAt(1)) 0.0 else r.getLong(1).toDouble)
-    }
-    val docs = Td.documents(spark, sfDir)
-    // chunk: 32×1 minhash band buckets over distinct-collapsed 16/16 chunk
-    // representatives — q_chunk_neardup's exact self-join key
-    val chunk = widths(Dedup.bandIndex(Dedup.chunkReps(docs, "doc_id", "text"),
-      "cid", "chunk_text", n = 3, numHashes = 32, bands = 32, rowsPerBand = 1),
-      "band_idx", "band_val")
-    // shingle: 3-shingle posting lists — the jaccard/containment candidate key
-    val shingle = widths(Td.docShingles(spark, sfDir, 3), "s")
-    // docband: the stored document-level band index (corpus slice) —
-    // minhash_dedup / dup_clusters' bucket key
-    val docband = widths(Td.bandIndexTable(spark, sfDir), "band_idx", "band_val")
-    // embed: sign-LSH (tbl, bucket) buckets — embed_lsh_pairs' key
-    val embed = widths(Similarity.signBucketIndex(Td.embeddings(spark, sfDir),
-      "vec_id", "embedding", dim = 64), "tbl", "bucket")
-    // video: hamming-blocked (frame_idx, 32-bit signature chunk) buckets at
-    // maxHamming=1 — the frame-pair candidate key of the video family
-    val vh = Td.videoHashTable(spark, sfDir)
-    val vchunks = vh.select(col("frame_idx"), lit(0).as("cidx"),
-        shiftright(col("dhash"), 32).as("cval"))
-      .unionAll(vh.select(col("frame_idx"), lit(1).as("cidx"),
-        col("dhash").bitwiseAND(lit(0xFFFFFFFFL)).as("cval")))
-    val video = widths(vchunks, "frame_idx", "cidx", "cval")
-    Seq("chunk" -> chunk, "shingle" -> shingle, "docband" -> docband,
-      "embed" -> embed, "video" -> video)
-      .flatMap { case (f, Seq(m, w)) => Seq(f -> m, s"${f}_w" -> w) }
-  }
-
-  def parsePriors(raw: String, curSf: Option[String],
-      curBox: Option[String] = None)
-      : (Map[String, Double], Map[String, Double], Map[String, Double]) = {
-    val txt = if (raw.contains("\"queries\":{")) raw else raw.replace("\\\"", "\"")
-    val priorSf = "\"sf\"\\s*:\\s*\"?(?:sf)?([0-9.]+)\"?".r
-      .findFirstMatchIn(txt).map(_.group(1))
-    val sfOk = (priorSf, curSf) match {
-      case (Some(a), Some(b)) => a == b
-      // an artifact that carries NO sf key is not a wildcard (ADVICE r12):
-      // when the current scale is known, require a positive match — render
-      // now keeps "sf" at every shrink level, so a missing key means a
-      // foreign/degenerate artifact, not a slim one
-      case (None, Some(_)) => false
-      case _ => true
-    }
-    if (!sfOk) (Map.empty, Map.empty, Map.empty)
-    else {
-      val prefix = if (txt.contains("\"qprefix\":\"q_\"")) "q_" else ""
-      def nameList(key: String): Set[String] =
-        ("\"" + key + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(txt)
-          .map(_.group(1).split(",").iterator
-            .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-            .filter(_.nonEmpty).map(prefix + _).toSet)
-          .getOrElse(Set.empty)
-      def numMap(body: String): Map[String, Double] =
-        "\"([A-Za-z0-9_]+)\":(-?[0-9.]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      val qs = "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(txt).map(_.group(1))
-        .map(numMap(_).map { case (k, v) => (prefix + k) -> v })
-        .getOrElse(Map.empty[String, Double])
-      // ib epoch gate (r15 verdict #4): when the caller knows its box,
-      // only an artifact stamped with the SAME box fingerprint feeds ib
-      // priors — unstamped artifacts (pre-r16, including the r13 dead-box
-      // mins) and other boxes' artifacts contribute nothing, so a
-      // reprovision starts ib baselines fresh instead of re-tripping
-      // BENCHIBRETRY against a vanished machine for four rounds. Query/iso
-      // priors are NOT box-gated: they have the stalled/regressed/iso
-      // adjudication channels ib lacks.
-      val boxOk = curBox.forall(b =>
-        "\"ibx\":\"([0-9a-fA-F]+)\"".r.findFirstMatchIn(txt)
-          .exists(_.group(1) == b))
-      val ib = if (!boxOk) Map.empty[String, Double]
-        else "\"ib\":\\{([^}]*)\\}".r.findFirstMatchIn(txt).map(_.group(1))
-          .map(numMap).getOrElse(Map.empty[String, Double])
-      val iso = "\"iso\":\\{([^}]*)\\}".r.findFirstMatchIn(txt).map(_.group(1))
-        .map(numMap(_).map { case (k, v) => (prefix + k) -> v })
-        .getOrElse(Map.empty[String, Double])
-      val stalled = nameList("stalled")
-      (qs -- (stalled ++ nameList("regressed")), ib, iso -- stalled)
-    }
-  }
-
-  /** The "mass" block of one artifact, sf-gated exactly like query priors
-    * (mass is a property of the scale's corpus — a cross-scale value is not
-    * a prior at all) but NOT box-gated (the statistic is data, not machine).
-    * Callers walk artifacts newest-first and keep the first non-empty map.
-    */
-  def parseMassPrior(raw: String, curSf: Option[String]): Map[String, Double] = {
-    val txt = if (raw.contains("\"queries\":{")) raw else raw.replace("\\\"", "\"")
-    val priorSf = "\"sf\"\\s*:\\s*\"?(?:sf)?([0-9.]+)\"?".r
-      .findFirstMatchIn(txt).map(_.group(1))
-    val sfOk = (priorSf, curSf) match {
-      case (Some(a), Some(b)) => a == b
-      case (None, Some(_)) => false
-      case _ => true
-    }
-    if (!sfOk) Map.empty
-    else "\"mass\":\\{([^}]*)\\}".r.findFirstMatchIn(txt).map(_.group(1))
-      .map(body => "\"([A-Za-z0-9_]+)\":(-?[0-9.eE+]+)".r.findAllMatchIn(body)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap)
-      .getOrElse(Map.empty)
-  }
-
-  /** Newest-first merge of per-artifact priors: the newest artifact that
-   * carries a query wins; a query its newest artifact EXCLUDED (stalled or
-   * regressed) or elided (fast bucket) falls back to the next-newest one.
-   * Depth-capped so a long-retired query's ancient value cannot resurrect
-   * and spray phantom npx trips across the battery.
-   *
-   * The depth cap is PER MAP (ADVICE r12): a degenerate artifact that
-   * carries ib but an empty queries block (render's terminal elide level
-   * keeps ibPart) must not burn a query-prior slot, and vice versa — each
-   * map folds over the first `depth` artifacts that actually contribute to
-   * IT. ib priors take the PER-KEY MIN across the window instead of
-   * newest-wins (ADVICE r12): the ib channel has no stalled/regressed
-   * exclusion, so one noise-contaminated artifact's inflated value (r11:
-   * cdc filed 11.1 s vs quiet-box 4.1) would otherwise become the prior and
-   * move the 1.5× re-run trip wire to ~16.6 s, disabling in-ladder
-   * adjudication for that key for a round. The min is immune to any number
-   * of inflated artifacts; a genuine build slowdown still ships (slower,
-   * re-run once, logged) — it just keeps being re-checked until the old
-   * fast rounds age out of the window.
-   */
-  def mergePriors(parsed: Seq[(Map[String, Double], Map[String, Double], Map[String, Double])],
-      depth: Int = 4): (Map[String, Double], Map[String, Double], Map[String, Double]) = {
-    def newestWins(maps: Seq[Map[String, Double]]): Map[String, Double] =
-      maps.filter(_.nonEmpty).take(depth)
-        .foldLeft(Map.empty[String, Double])((acc, m) => m ++ acc)
-    val ib = parsed.map(_._2).filter(_.nonEmpty).take(depth)
-      .flatten.groupMapReduce(_._1)(_._2)(math.min)
-    (newestWins(parsed.map(_._1)), ib, newestWins(parsed.map(_._3)))
+      .getOrElse(s"""{"queries":{},"sf":"$sfName","nstalled":${stalledQ.size},"nerr":${failed.size},$stallPart"value":${fmt(2)(total)}}""")
   }
 
   def main(args: Array[String]): Unit = {
@@ -421,6 +129,16 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val selected = args.headOption.map(_.split(",").toSet)
+      .fold(SparkEntry.queries) { names =>
+        val unknown = names.diff(SparkEntry.queries.keySet)
+        require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+        SparkEntry.queries.filter { case (k, _) => names(k) }
+      }
+    val fullBattery = args.isEmpty
+    def timed(f: => Unit): Double = {
+      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+    }
     // Untimed warm-up: first-query cost is dominated by one-time JVM work
     // (Catalyst rule classloading, Janino codegen compiler, parquet reader
     // init) that belongs to the session, not to whichever query runs first.
@@ -444,850 +162,154 @@ object Bench {
       e.select(graft.functions.Kernels.float_dot(col("v"), col("v")).as("d"))
         .agg(sum("d")).count()
     }
-    // Stored-index BUILD cost, measured fresh into a throwaway root every
-    // round (the shared-root installs below are build-once, which made
-    // build regressions invisible to the bench — r5 What's-wrong #4). The
-    // same build bodies the Td accessors install, so bench and production
-    // cannot drift. Reported in the JSON as "ib" (seconds per index).
-    // Full-battery runs only: a filtered dev run (`runMain graft.Bench q_x`)
-    // should not pay four index builds it may never probe — index queries
-    // in a filtered run install their roots on demand via Td.
-    // SPARK_GRAFT_BENCH_IB=1 forces the ib ladder in a filtered run — the
-    // sf1 spot-battery (r10 verdict #3) measures a handful of queries plus
-    // the full build ladder without paying 193 queries at 10× data.
-    val fullBattery = args.headOption.isEmpty
-    val runIb = fullBattery || sys.env.contains("SPARK_GRAFT_BENCH_IB")
-    // Cross-round priors, loaded BEFORE the ib ladder so ladder keys can be
-    // adjudicated against their own priors in-flight. Auto-discovery walks
-    // candidates NEWEST-FIRST; per parsePriors/mergePriors, stalled AND
-    // regressed entries fall back to the next-newest artifact (r11 verdict
-    // #1 — a regressed value converged on one box only; r9: a front-
-    // truncated artifact yields nothing and the merge walks past it).
-    // SPARK_GRAFT_BENCH_ROUND=N (optional) excludes BENCH_rN.json so a
-    // re-run inside round N cannot compare against its own output
-    // (ADVICE r9: same-round self-comparison silently weakens the
-    // cross-round stall check).
-    val (priorTimes, ibPriors, isoPriors, massPriors): (Map[String, Double], Map[String, Double], Map[String, Double], Map[String, Double]) = {
-      val explicit = sys.env.get("SPARK_GRAFT_BENCH_PRIOR").map(new java.io.File(_))
-      val selfRound = sys.env.get("SPARK_GRAFT_BENCH_ROUND").map(_.toInt)
-      // Accepted names: the driver's BENCH_r<N>.json plus builder-saved
-      // per-scale artifacts like BENCH_sf1_r<N>.json / BENCH_sf1ib_r<N>.json
-      // (r13: the sf1 ladder now has adjudicated in-repo priors — the
-      // cross-scale sf gate in parsePriors keeps them out of sf0.1 runs).
-      // The ROUND is the r<N> suffix, not the first digit run (sf1's "1"
-      // must not win the sort or the self-round exclusion).
-      def roundOf(n: String) = "r(\\d+)\\.json".r.findFirstMatchIn(n).get.group(1).toInt
-      val auto = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.matches("BENCH_\\w*r\\d+\\.json"))
-        .filterNot(f => selfRound.contains(roundOf(f.getName)))
-        .sortBy(f => -roundOf(f.getName)).toSeq
-      val candidates = explicit.map(Seq(_)).getOrElse(auto)
-      val curSf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir.split('/').last).map(_.group(1))
-      val raws = candidates.filter(_.isFile)
-        .map(f => scala.io.Source.fromFile(f, "UTF-8").mkString)
-      val (q, ib, iso) = mergePriors(raws.map(
-        parsePriors(_, curSf, curBox = Some(boxFp))))
-      // mass prior: newest artifact (same newest-first walk) that carries a
-      // same-scale mass block — the massXpop comparison population
-      val mp = raws.iterator.map(parseMassPrior(_, curSf))
-        .find(_.nonEmpty).getOrElse(Map.empty[String, Double])
-      (q, ib, iso, mp)
-    }
-    if (priorTimes.nonEmpty || isoPriors.nonEmpty)
-      System.err.println(s"BENCHPRIOR ${priorTimes.size} per-query priors, " +
-        s"${ibPriors.size} ib priors, ${isoPriors.size} iso priors loaded " +
-        s"(newest-first merge; ib per-key min, box-epoched ibx=$boxFp)")
-    val idxBuild: Seq[(String, Double)] = if (!runIb) Seq.empty else {
-      val tmpRoot = java.nio.file.Files.createTempDirectory("graft-bench-ib").toString
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      // recursive on-disk size in MB — the write-volume instrument for the
-      // CoW-vs-MOR epoch A/B (dir growth across an epoch == bytes written,
-      // since nothing is vacuumed mid-epoch)
+    // The index-build ("ib") ladder: each stored index and maintained state
+    // built fresh into a throwaway root, in seconds, through the same build
+    // bodies the Td accessors install (the shared roots are build-once, so
+    // only a fresh build shows a build-cost regression). Later steps read
+    // the state earlier steps left in their root, so the order is part of
+    // each key's meaning. Full battery only: a filtered run installs the
+    // roots its queries need on demand.
+    val idxBuild: Seq[(String, Double)] = if (!fullBattery) Nil else {
+      val root = java.nio.file.Files.createTempDirectory("graft-bench-ib").toString
+      // on-disk MB under a root: its growth across an epoch is the bytes the
+      // epoch wrote, since nothing is vacuumed mid-ladder
       def dirMb(path: String): Double = {
         def walk(f: java.io.File): Long =
           if (f.isFile) f.length
           else Option(f.listFiles).map(_.iterator.map(walk).sum).getOrElse(0L)
         walk(new java.io.File(path)) / 1e6
       }
-      var scd2Bytes = 0.0
-      val out = Seq(
-        "band" -> timed(graft.queries.Td.buildBandIndexInto(spark, sfDir, s"$tmpRoot/band")),
-        // chunk-level stored dedup state (r17): reps collapse + 32×1 band
-        // index — the build cost q_chunk_inc_neardup amortizes per batch
-        "cband" -> timed(graft.queries.Td.buildChunkBandIndexInto(spark, sfDir, s"$tmpRoot/cband")),
-        // substring-level stored dedup state (r18): the corpus
-        // first-occurrence window-fp relation — the build cost
-        // q_substring_inc amortizes per batch
-        "sfp" -> timed(graft.queries.Td.buildSubstringFpIndexInto(spark, sfDir, s"$tmpRoot/sfp")),
-        "ivf" -> timed(graft.queries.Td.buildIvfInto(spark, sfDir, s"$tmpRoot/ivf")),
-        "pq" -> timed(graft.queries.Td.buildPqInto(spark, sfDir, s"$tmpRoot/pq")),
-        "ivfpq" -> timed(graft.queries.Td.buildIvfPqInto(spark, sfDir, s"$tmpRoot/ivfpq")),
-        "cc" -> timed(graft.queries.Td.buildClustersInto(spark, sfDir, s"$tmpRoot/cc")),
-        // banded twin of "cc" (r11): the exact pair mine measured ~29× on
-        // 10× data — ccl is its designated escape path, in the same artifact
-        "ccl" -> timed(graft.queries.Td.buildClustersLshInto(spark, sfDir, s"$tmpRoot/ccl")),
-        // shared video-signature table (r14): the encode + container/codec
-        // decode the three near-dup variants amortize — the multimodal
-        // stage's build cost, visible per-round like every other install
-        "vh" -> timed(graft.queries.Td.buildVideoHashInto(spark, sfDir, s"$tmpRoot/vh")),
-        // append-vs-rebuild evidence: one batch appended to a fresh base
-        // (base build untimed — "ivf"/"ivfpq" already report rebuild cost);
-        // the claim "append ≪ rebuild" must be readable from the artifact
-        "vdd" -> timed(graft.queries.Td.buildVecDedupInto(spark, sfDir, s"$tmpRoot/vdd")),
+      def compact(dir: String, maxDeltas: Int): Unit =
+        graft.engine.KeyedTable(spark, s"$root/$dir", Seq("o_orderkey")).compactDeltas(maxDeltas)
+      var mbBefore = 0.0
+      try Seq(
+        "band" -> timed(Td.buildBandIndexInto(spark, sfDir, s"$root/band")),
+        "cband" -> timed(Td.buildChunkBandIndexInto(spark, sfDir, s"$root/cband")),
+        "sfp" -> timed(Td.buildSubstringFpIndexInto(spark, sfDir, s"$root/sfp")),
+        "ivf" -> timed(Td.buildIvfInto(spark, sfDir, s"$root/ivf")),
+        "pq" -> timed(Td.buildPqInto(spark, sfDir, s"$root/pq")),
+        "ivfpq" -> timed(Td.buildIvfPqInto(spark, sfDir, s"$root/ivfpq")),
+        "cc" -> timed(Td.buildClustersInto(spark, sfDir, s"$root/cc")),
+        "ccl" -> timed(Td.buildClustersLshInto(spark, sfDir, s"$root/ccl")),
+        "vh" -> timed(Td.buildVideoHashInto(spark, sfDir, s"$root/vh")),
+        "vdd" -> timed(Td.buildVecDedupInto(spark, sfDir, s"$root/vdd")),
+        // one batch appended to an untimed base: append next to rebuild
         "ivfa" -> {
-          graft.queries.Td.buildIvfIncBaseInto(spark, sfDir, s"$tmpRoot/ivfinc")
-          timed(graft.queries.Td.appendIvfInc(spark, sfDir, s"$tmpRoot/ivfinc", 60, 80))
+          Td.buildIvfIncBaseInto(spark, sfDir, s"$root/ivfinc")
+          timed(Td.appendIvfInc(spark, sfDir, s"$root/ivfinc", 60, 80))
         },
         "ivfpqa" -> {
-          graft.queries.Td.buildIvfPqIncBaseInto(spark, sfDir, s"$tmpRoot/ivfpqinc")
-          timed(graft.queries.Td.appendIvfPqInc(spark, sfDir, s"$tmpRoot/ivfpqinc", 60, 80))
+          Td.buildIvfPqIncBaseInto(spark, sfDir, s"$root/ivfpqinc")
+          timed(Td.appendIvfPqInc(spark, sfDir, s"$root/ivfpqinc", 60, 80))
         },
-        // round-7 stored-state builds (CDC table + the three maintained
-        // states) — same bodies the accessors install, same no-drift rule
-        "cdc" -> timed(graft.queries.Td.buildCdcOrdersInto(spark, sfDir, s"$tmpRoot/cdc")),
-        // each stress build (~50% of keys churned) is followed by ONE
-        // realistic ~1%-of-keys epoch applied to the root it just built —
-        // the daily-batch figure a capacity planner needs ("jm1" next to
-        // "jm"), in the artifact instead of probe prose (r7 verdict #2)
-        "am" -> timed(graft.queries.Td.buildAggMaintainInto(spark, sfDir, s"$tmpRoot/am")),
-        "am1" -> timed(graft.queries.Td.epoch1AggMaintain(spark, sfDir, s"$tmpRoot/am")),
-        "hm" -> timed(graft.queries.Td.buildHistMaintainInto(spark, sfDir, s"$tmpRoot/hm")),
-        "ds" -> timed(graft.queries.Td.buildDistinctStateInto(spark, sfDir, s"$tmpRoot/ds")),
-        "scd2" -> timed(graft.queries.Td.buildScd2OrdersInto(spark, sfDir, s"$tmpRoot/scd2")),
-        "scd2_1" -> { scd2Bytes = dirMb(s"$tmpRoot/scd2")
-          timed(graft.queries.Td.epoch1Scd2Orders(spark, sfDir, s"$tmpRoot/scd2")) },
-        // BYTES written by the 1% epoch (r9 verdict #6): at sf0.1 the epoch
-        // is read/compute-dominated, so the CoW-vs-MOR TIME A/B is ~parity
-        // and the write-amplification win only shows in write VOLUME —
-        // dir-size delta across the epoch (nothing is vacuumed mid-epoch,
-        // so growth == bytes written). Expect scd2_1_mb >> scd2_1m_mb.
-        "scd2_1_mb" -> (dirMb(s"$tmpRoot/scd2") - scd2Bytes),
-        // merge-on-read A/B (round-9): the SAME stress build + the SAME 1%
-        // epoch against a MOR table — scd2_1m vs scd2_1 is the measured
-        // answer to r8's CoW write-amplification verdict (a hash-spread 1%
-        // epoch rewrote ~the whole table; the MOR epoch writes ∝ batch)
-        "scd2m" -> timed(graft.queries.Td.buildScd2OrdersMorInto(spark, sfDir, s"$tmpRoot/scd2m")),
-        "scd2_1m" -> { scd2Bytes = dirMb(s"$tmpRoot/scd2m")
-          timed(graft.queries.Td.epoch1Scd2Orders(spark, sfDir, s"$tmpRoot/scd2m")) },
-        "scd2_1m_mb" -> (dirMb(s"$tmpRoot/scd2m") - scd2Bytes),
-        // compaction cadence on the MAINTAINED root (r9 verdict #7): the mr
-        // ladder covers a plain table; these keys pin the same contract
-        // under the maintainer's replaceKeys delta writes — read tax with
-        // the accumulated chains (s2r1), threshold compaction (s2c), and
-        // the post-compaction reset (s2r0)
-        "s2r1" -> timed(graft.queries.Td.scanMorOrders(spark, s"$tmpRoot/scd2m")),
-        "s2c" -> timed {
-          graft.engine.KeyedTable(spark, s"$tmpRoot/scd2m", Seq("o_orderkey"))
-            .compactDeltas(maxDeltas = 1)
-          ()
-        },
-        "s2r0" -> timed(graft.queries.Td.scanMorOrders(spark, s"$tmpRoot/scd2m")),
-        // MOR read-tax ladder: full-scan aggregate at 0 / 1 / 8 uncompacted
-        // delta chains, the 1% epoch itself, the threshold compaction, and
-        // the post-compaction read — the compaction-cadence contract as
-        // artifact numbers (r8 verdict Next #6)
-        "mor" -> timed(graft.queries.Td.buildMorOrdersInto(spark, sfDir, s"$tmpRoot/mor")),
-        "mr0" -> timed(graft.queries.Td.scanMorOrders(spark, s"$tmpRoot/mor")),
-        "me1" -> timed(graft.queries.Td.epochMorOrders(spark, sfDir, s"$tmpRoot/mor", 1)),
-        "mr1" -> timed(graft.queries.Td.scanMorOrders(spark, s"$tmpRoot/mor")),
+        "cdc" -> timed(Td.buildCdcOrdersInto(spark, sfDir, s"$root/cdc")),
+        // each stress build (~50% of keys churned) is followed by one ~1%-of-
+        // keys epoch on the root it just built: the daily-batch figure
+        "am" -> timed(Td.buildAggMaintainInto(spark, sfDir, s"$root/am")),
+        "am1" -> timed(Td.epoch1AggMaintain(spark, sfDir, s"$root/am")),
+        "hm" -> timed(Td.buildHistMaintainInto(spark, sfDir, s"$root/hm")),
+        "ds" -> timed(Td.buildDistinctStateInto(spark, sfDir, s"$root/ds")),
+        "scd2" -> timed(Td.buildScd2OrdersInto(spark, sfDir, s"$root/scd2")),
+        "scd2_1" -> { mbBefore = dirMb(s"$root/scd2")
+          timed(Td.epoch1Scd2Orders(spark, sfDir, s"$root/scd2")) },
+        // MB the 1% epoch wrote: copy-on-write rewrites ~the whole table,
+        // merge-on-read (scd2_1m_mb) writes in proportion to the batch
+        "scd2_1_mb" -> (dirMb(s"$root/scd2") - mbBefore),
+        "scd2m" -> timed(Td.buildScd2OrdersMorInto(spark, sfDir, s"$root/scd2m")),
+        "scd2_1m" -> { mbBefore = dirMb(s"$root/scd2m")
+          timed(Td.epoch1Scd2Orders(spark, sfDir, s"$root/scd2m")) },
+        "scd2_1m_mb" -> (dirMb(s"$root/scd2m") - mbBefore),
+        // the maintained MOR root's read with its delta chains (s2r1), the
+        // threshold compaction (s2c) and the read after it (s2r0)
+        "s2r1" -> timed(Td.scanMorOrders(spark, s"$root/scd2m")),
+        "s2c" -> timed(compact("scd2m", maxDeltas = 1)),
+        "s2r0" -> timed(Td.scanMorOrders(spark, s"$root/scd2m")),
+        // MOR read tax: a full-scan aggregate at 0 / 1 / 8 delta chains, the
+        // 1% epoch, the threshold compaction and the read after it
+        "mor" -> timed(Td.buildMorOrdersInto(spark, sfDir, s"$root/mor")),
+        "mr0" -> timed(Td.scanMorOrders(spark, s"$root/mor")),
+        "me1" -> timed(Td.epochMorOrders(spark, sfDir, s"$root/mor", 1)),
+        "mr1" -> timed(Td.scanMorOrders(spark, s"$root/mor")),
         "mr8" -> {
-          (2 to 8).foreach(m => graft.queries.Td.epochMorOrders(spark, sfDir, s"$tmpRoot/mor", m))
-          timed(graft.queries.Td.scanMorOrders(spark, s"$tmpRoot/mor"))
+          (2 to 8).foreach(m => Td.epochMorOrders(spark, sfDir, s"$root/mor", m))
+          timed(Td.scanMorOrders(spark, s"$root/mor"))
         },
-        "morc" -> timed {
-          graft.engine.KeyedTable(spark, s"$tmpRoot/mor", Seq("o_orderkey"))
-            .compactDeltas(maxDeltas = 4)
-          ()
-        },
-        "mrc" -> timed(graft.queries.Td.scanMorOrders(spark, s"$tmpRoot/mor")),
-        "jm" -> timed(graft.queries.Td.buildJoinMaintainInto(spark, sfDir, s"$tmpRoot/jm")),
-        "jm1" -> timed(graft.queries.Td.epoch1JoinMaintain(spark, sfDir, s"$tmpRoot/jm")),
-        "tk" -> timed(graft.queries.Td.buildTopkMaintainInto(spark, sfDir, s"$tmpRoot/tk")),
-        "tk1" -> timed(graft.queries.Td.epoch1TopkMaintain(spark, sfDir, s"$tmpRoot/tk")),
-        // refill-cliff A/B (r10): one-time group-keyed replica bootstrap,
-        // then the SAME 6-delete burst forcing a refill — "tkd" reads the
-        // item-keyed fact table (every bucket), "tkdr" reads only the
-        // hungry group's replica buckets
-        "tkr" -> timed(graft.queries.Td.buildTopkReplicaInto(spark, sfDir, s"$tmpRoot/tk")),
-        "tkd" -> timed(graft.queries.Td.epochTopkRefill(spark, sfDir, s"$tmpRoot/tk", "F", 3, useReplica = false)),
-        "tkdr" -> timed(graft.queries.Td.epochTopkRefill(spark, sfDir, s"$tmpRoot/tk", "O", 4, useReplica = true)),
-        "qm" -> timed(graft.queries.Td.buildQualityMaintainInto(spark, sfDir, s"$tmpRoot/qm")),
-        "tm" -> timed(graft.queries.Td.buildTriangleMaintainInto(spark, sfDir, s"$tmpRoot/tm")),
-        // round-8 stored-state builds: maintained BM25 statistics (corpus +
-        // df + totals through two epochs), pre-delta PageRank ranks, and
-        // the Z-order-clustered events layout
-        "bm" -> timed(graft.queries.Td.buildBm25StatsInto(spark, sfDir, s"$tmpRoot/bm")),
-        "pr" -> timed(graft.queries.Td.buildPrankInto(spark, sfDir, s"$tmpRoot/pr")),
-        // warm-start vs from-scratch evidence for incremental PageRank:
-        // the recurring post-delta epoch (resume from the root just built,
-        // 2 iters over the full graph) next to the cold full ladder
-        "pr1" -> timed(graft.queries.Td.warmPagerankEpoch(spark, sfDir, s"$tmpRoot/pr")),
-        "prf" -> timed(graft.queries.Td.coldPagerankFull(spark, sfDir)),
-        "zo" -> timed(graft.queries.Td.buildZorderEventsInto(spark, sfDir, s"$tmpRoot/zo")))
-      // ib self-adjudication vs box noise (r11 verdict #5): ib keys are
-      // single-run, and they were r11's noisiest channel — the driver filed
-      // cdc 11.1 / am 4.9 / ivfpqa 3.7 where a quiet box read 4.1 / 2.6 /
-      // 1.1. A key landing >1.5× its own prior (and >0.3 s absolute) gets
-      // ONE fresh re-run into a throwaway dir and the MIN ships. Keys whose
-      // measurement depends on state mutated mid-ladder by OTHER keys
-      // (mr1/mr8 read after specific epoch bursts, s2c compacts accumulated
-      // chains, tkd/tkdr replay a delete burst) replay the ladder's exact
-      // build/epoch prefix into the fresh dir first (r14 — these were the
-      // last un-adjudicable channel and produced r13's only unexplained
-      // movers); their deterministic builds reproduce identical state, so
-      // the timed step measures the same operation. _mb keys are byte
-      // volumes, not timings: never adjudicated (BENCHIBX logs any other
-      // recipe gap). Re-runs are capped so garbage priors can't double the
-      // ladder's wall time.
-      def ibRerun(key: String, tag: String = "a"): Option[() => Double] = {
-        val d = s"$tmpRoot/rr_${key}_$tag"
-        import graft.queries.Td
-        val recipes: PartialFunction[String, () => Double] = {
-          case "band"   => () => timed(Td.buildBandIndexInto(spark, sfDir, d))
-          case "cband"  => () => timed(Td.buildChunkBandIndexInto(spark, sfDir, d))
-          case "sfp"    => () => timed(Td.buildSubstringFpIndexInto(spark, sfDir, d))
-          case "ivf"    => () => timed(Td.buildIvfInto(spark, sfDir, d))
-          case "pq"     => () => timed(Td.buildPqInto(spark, sfDir, d))
-          case "ivfpq"  => () => timed(Td.buildIvfPqInto(spark, sfDir, d))
-          case "cc"     => () => timed(Td.buildClustersInto(spark, sfDir, d))
-          case "ccl"    => () => timed(Td.buildClustersLshInto(spark, sfDir, d))
-          case "vh"     => () => timed(Td.buildVideoHashInto(spark, sfDir, d))
-          case "vdd"    => () => timed(Td.buildVecDedupInto(spark, sfDir, d))
-          case "ivfa"   => () => { Td.buildIvfIncBaseInto(spark, sfDir, d)
-            timed(Td.appendIvfInc(spark, sfDir, d, 60, 80)) }
-          case "ivfpqa" => () => { Td.buildIvfPqIncBaseInto(spark, sfDir, d)
-            timed(Td.appendIvfPqInc(spark, sfDir, d, 60, 80)) }
-          case "cdc"    => () => timed(Td.buildCdcOrdersInto(spark, sfDir, d))
-          case "am"     => () => timed(Td.buildAggMaintainInto(spark, sfDir, d))
-          case "am1"    => () => { Td.buildAggMaintainInto(spark, sfDir, d)
-            timed(Td.epoch1AggMaintain(spark, sfDir, d)) }
-          case "hm"     => () => timed(Td.buildHistMaintainInto(spark, sfDir, d))
-          case "ds"     => () => timed(Td.buildDistinctStateInto(spark, sfDir, d))
-          case "scd2"   => () => timed(Td.buildScd2OrdersInto(spark, sfDir, d))
-          case "scd2_1" => () => { Td.buildScd2OrdersInto(spark, sfDir, d)
-            timed(Td.epoch1Scd2Orders(spark, sfDir, d)) }
-          case "scd2m"  => () => timed(Td.buildScd2OrdersMorInto(spark, sfDir, d))
-          case "scd2_1m" => () => { Td.buildScd2OrdersMorInto(spark, sfDir, d)
-            timed(Td.epoch1Scd2Orders(spark, sfDir, d)) }
-          // State-coupled keys (r13 verdict Next #1): until r14 these had no
-          // isolation recipe — they read state other ladder keys mutated, so
-          // they shipped single-run (BENCHIBX1) and were the only channel
-          // with no adjudication path; r13's only unexplained movers (tm
-          // 9.3→13.0, tkdr 4.8→6.2, scd2m 6.1→7.8 at sf0.1) all sat there.
-          // Their state IS rebuildable: each recipe replays the ladder's
-          // exact build/epoch prefix into a fresh dir and times only the
-          // ladder's own timed step, so the re-run measures the same
-          // operation minus mid-ladder ambient contention. The prefixes make
-          // these the EXPENSIVE recipes — they only run on a >1.5×-prior
-          // trip or under SPARK_GRAFT_BENCH_IB_RUNS min-of-N, same as all.
-          case "s2r1"   => () => { Td.buildScd2OrdersMorInto(spark, sfDir, d)
-            Td.epoch1Scd2Orders(spark, sfDir, d)
-            timed(Td.scanMorOrders(spark, d)) }
-          case "s2c"    => () => { Td.buildScd2OrdersMorInto(spark, sfDir, d)
-            Td.epoch1Scd2Orders(spark, sfDir, d)
-            timed {
-              graft.engine.KeyedTable(spark, d, Seq("o_orderkey"))
-                .compactDeltas(maxDeltas = 1)
-              ()
-            } }
-          case "s2r0"   => () => { Td.buildScd2OrdersMorInto(spark, sfDir, d)
-            Td.epoch1Scd2Orders(spark, sfDir, d)
-            graft.engine.KeyedTable(spark, d, Seq("o_orderkey"))
-              .compactDeltas(maxDeltas = 1)
-            timed(Td.scanMorOrders(spark, d)) }
-          case "mor"    => () => timed(Td.buildMorOrdersInto(spark, sfDir, d))
-          case "mr0"    => () => { Td.buildMorOrdersInto(spark, sfDir, d)
-            timed(Td.scanMorOrders(spark, d)) }
-          case "me1"    => () => { Td.buildMorOrdersInto(spark, sfDir, d)
-            timed(Td.epochMorOrders(spark, sfDir, d, 1)) }
-          case "mr1"    => () => { Td.buildMorOrdersInto(spark, sfDir, d)
-            Td.epochMorOrders(spark, sfDir, d, 1)
-            timed(Td.scanMorOrders(spark, d)) }
-          case "mr8"    => () => { Td.buildMorOrdersInto(spark, sfDir, d)
-            (1 to 8).foreach(m => Td.epochMorOrders(spark, sfDir, d, m))
-            timed(Td.scanMorOrders(spark, d)) }
-          case "morc"   => () => { Td.buildMorOrdersInto(spark, sfDir, d)
-            (1 to 8).foreach(m => Td.epochMorOrders(spark, sfDir, d, m))
-            timed {
-              graft.engine.KeyedTable(spark, d, Seq("o_orderkey"))
-                .compactDeltas(maxDeltas = 4)
-              ()
-            } }
-          case "mrc"    => () => { Td.buildMorOrdersInto(spark, sfDir, d)
-            (1 to 8).foreach(m => Td.epochMorOrders(spark, sfDir, d, m))
-            graft.engine.KeyedTable(spark, d, Seq("o_orderkey"))
-              .compactDeltas(maxDeltas = 4)
-            timed(Td.scanMorOrders(spark, d)) }
-          case "tkd"    => () => { Td.buildTopkMaintainInto(spark, sfDir, d)
-            Td.epoch1TopkMaintain(spark, sfDir, d)
-            Td.buildTopkReplicaInto(spark, sfDir, d)
-            timed(Td.epochTopkRefill(spark, sfDir, d, "F", 3, useReplica = false)) }
-          case "tkdr"   => () => { Td.buildTopkMaintainInto(spark, sfDir, d)
-            Td.epoch1TopkMaintain(spark, sfDir, d)
-            Td.buildTopkReplicaInto(spark, sfDir, d)
-            Td.epochTopkRefill(spark, sfDir, d, "F", 3, useReplica = false)
-            timed(Td.epochTopkRefill(spark, sfDir, d, "O", 4, useReplica = true)) }
-          case "jm"     => () => timed(Td.buildJoinMaintainInto(spark, sfDir, d))
-          case "jm1"    => () => { Td.buildJoinMaintainInto(spark, sfDir, d)
-            timed(Td.epoch1JoinMaintain(spark, sfDir, d)) }
-          case "tk"     => () => timed(Td.buildTopkMaintainInto(spark, sfDir, d))
-          case "tk1"    => () => { Td.buildTopkMaintainInto(spark, sfDir, d)
-            timed(Td.epoch1TopkMaintain(spark, sfDir, d)) }
-          // tkr bootstraps on the post-epoch state, exactly as the ladder
-          // does (tk → tk1 → tkr)
-          case "tkr"    => () => { Td.buildTopkMaintainInto(spark, sfDir, d)
-            Td.epoch1TopkMaintain(spark, sfDir, d)
-            timed(Td.buildTopkReplicaInto(spark, sfDir, d)) }
-          case "qm"     => () => timed(Td.buildQualityMaintainInto(spark, sfDir, d))
-          case "tm"     => () => timed(Td.buildTriangleMaintainInto(spark, sfDir, d))
-          case "bm"     => () => timed(Td.buildBm25StatsInto(spark, sfDir, d))
-          case "pr"     => () => timed(Td.buildPrankInto(spark, sfDir, d))
-          case "pr1"    => () => { Td.buildPrankInto(spark, sfDir, d)
-            timed(Td.warmPagerankEpoch(spark, sfDir, d)) }
-          case "prf"    => () => timed(Td.coldPagerankFull(spark, sfDir))
-          case "zo"     => () => timed(Td.buildZorderEventsInto(spark, sfDir, d))
-        }
-        recipes.lift(key)
-      }
-      // ib min-of-N (r12 verdict Next #3): the sf0.1 ladder got >1.5×-prior
-      // re-run adjudication in r12, but a first-ever scale's ladder (sf1 has
-      // no in-repo artifacts, hence no ib priors) is single-run with ~15%
-      // per-key spread (jm 70 vs 60.2 across r12's two sf1 batteries).
-      // SPARK_GRAFT_BENCH_IB_RUNS=N re-runs every recipe-able key N-1 more
-      // times into fresh dirs and ships the MIN, logging the spread
-      // (BENCHIBSPREAD) so the artifact's reader can see the noise band.
-      // Since r14 every timed key has a recipe (state-coupled keys replay
-      // their prefix); only _mb byte volumes ship single-run (BENCHIBX1).
-      val ibRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_IB_RUNS", "1").toInt
-      val outMinned = if (ibRuns <= 1) out else out.map { case (k, v) =>
-        if (k.endsWith("_mb") || ibRerun(k).isEmpty) {
-          if (!k.endsWith("_mb"))
-            System.err.println(s"BENCHIBX1 $k single-run (state-coupled recipe)")
-          k -> v
-        } else {
-          val extras = (2 to ibRuns).flatMap { i =>
-            try Some(ibRerun(k, s"m$i").get.apply()) catch { case e: Throwable =>
-              System.err.println(s"BENCHIBERR $k#$i ${e.getClass.getSimpleName}: ${e.getMessage}")
-              None
-            }
-          }
-          val all = v +: extras
-          System.err.println(f"BENCHIBSPREAD $k min=${all.min}%.2f max=${all.max}%.2f runs=${all.size}")
-          k -> all.min
-        }
-      }
-      var ibRetries = 0
-      val adjudicated = outMinned.map { case (k, v) =>
-        val over = !k.endsWith("_mb") &&
-          ibPriors.get(k).exists(p => v > 1.5 * p && v - p > 0.3)
-        if (!over) k -> v
-        else ibRerun(k) match {
-          case Some(thunk) if ibRetries < 8 =>
-            ibRetries += 1
-            System.err.println(f"BENCHIBRETRY $k first=$v%.2f prior=${ibPriors(k)}%.2f")
-            val v2 = try thunk() catch { case e: Throwable =>
-              System.err.println(s"BENCHIBERR $k ${e.getClass.getSimpleName}: ${e.getMessage}")
-              Double.NaN }
-            k -> (if (v2.isNaN) v else math.min(v, v2))
-          case _ =>
-            System.err.println(f"BENCHIBX $k first=$v%.2f prior=${ibPriors(k)}%.2f ships as measured")
-            k -> v
-        }
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmpRoot))
-      adjudicated
+        "morc" -> timed(compact("mor", maxDeltas = 4)),
+        "mrc" -> timed(Td.scanMorOrders(spark, s"$root/mor")),
+        "jm" -> timed(Td.buildJoinMaintainInto(spark, sfDir, s"$root/jm")),
+        "jm1" -> timed(Td.epoch1JoinMaintain(spark, sfDir, s"$root/jm")),
+        "tk" -> timed(Td.buildTopkMaintainInto(spark, sfDir, s"$root/tk")),
+        "tk1" -> timed(Td.epoch1TopkMaintain(spark, sfDir, s"$root/tk")),
+        // refill cliff: a group-keyed replica bootstrap, then the same
+        // delete burst refilled from the item-keyed fact table (tkd, every
+        // bucket) and from the replica (tkdr, the hungry group's buckets)
+        "tkr" -> timed(Td.buildTopkReplicaInto(spark, sfDir, s"$root/tk")),
+        "tkd" -> timed(Td.epochTopkRefill(spark, sfDir, s"$root/tk", "F", 3, useReplica = false)),
+        "tkdr" -> timed(Td.epochTopkRefill(spark, sfDir, s"$root/tk", "O", 4, useReplica = true)),
+        "qm" -> timed(Td.buildQualityMaintainInto(spark, sfDir, s"$root/qm")),
+        "tm" -> timed(Td.buildTriangleMaintainInto(spark, sfDir, s"$root/tm")),
+        "bm" -> timed(Td.buildBm25StatsInto(spark, sfDir, s"$root/bm")),
+        "pr" -> timed(Td.buildPrankInto(spark, sfDir, s"$root/pr")),
+        // warm-start PageRank epoch on the root just built, next to the
+        // cold full run
+        "pr1" -> timed(Td.warmPagerankEpoch(spark, sfDir, s"$root/pr")),
+        "prf" -> timed(Td.coldPagerankFull(spark, sfDir)),
+        "zo" -> timed(Td.buildZorderEventsInto(spark, sfDir, s"$root/zo")))
+      finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
-    // Shared-root installs (build-once, amortized across every later
-    // batch/query — Td scaladoc): force them here so timed runs measure the
-    // recurring probe cost regardless of whether a previous process already
-    // installed the index roots in tmpdir. Without this, run 1 of the
-    // min-of-3 pays the build AND its checkpoint/cache pressure bleeds into
-    // run 2 — cold-vs-warm /tmp state swung q_incremental_dedup 7.45 s vs
-    // 1.37 s at sf0.1. (Full battery only; a filtered dev run lets its own
-    // queries install on demand — min-of-3 still reports a warm run.)
+    // Shared-root installs (build-once, amortized across every later query):
+    // forced here so that run 1 of a query's min-of-3 neither pays the build
+    // nor passes its checkpoint/cache pressure on to run 2, whether or not an
+    // earlier process already installed the roots in tmpdir.
     if (fullBattery) {
-      graft.queries.Td.bandIndexTable(spark, sfDir).count()
-      graft.queries.Td.chunkBandTables(spark, sfDir)._2.count()
-      graft.queries.Td.substringFpTable(spark, sfDir).count()
-      graft.queries.Td.ivfIndexTable(spark, sfDir).assigned.count()
-      graft.queries.Td.pqIndexTable(spark, sfDir).codes.count()
-      graft.queries.Td.ivfpqIndexTable(spark, sfDir).codes.count()
-      graft.queries.Td.clusterTable(spark, sfDir).count()
-      graft.queries.Td.videoHashTable(spark, sfDir).count()
-      graft.queries.Td.ivfIncIndexTable(spark, sfDir)._1.assigned.count()
-      graft.queries.Td.ivfpqIncIndexTable(spark, sfDir)._1.codes.count()
-      graft.queries.Td.vecDedupTables(spark, sfDir)._2.count()
-      graft.queries.Td.cdcOrdersTable(spark, sfDir).current.count()
-      graft.queries.Td.aggMaintainTable(spark, sfDir).current.count()
-      graft.queries.Td.histMaintainTable(spark, sfDir).current.count()
-      graft.queries.Td.distinctStateTable(spark, sfDir).current.count()
-      graft.queries.Td.scd2OrdersTable(spark, sfDir).current.count()
-      graft.queries.Td.joinMaintainTables(spark, sfDir)._1.current.count()
-      graft.queries.Td.topkMaintainTable(spark, sfDir).current.count()
-      graft.queries.Td.qualityMaintainTable(spark, sfDir).current.count()
-      graft.queries.Td.triangleMaintainTables(spark, sfDir)._2.current.count()
-      graft.queries.Td.bm25StatsTables(spark, sfDir)._2.current.count()
-      graft.queries.Td.pagerankTable(spark, sfDir).current.count()
-      graft.queries.Td.zorderEventsTable(spark, sfDir).current.count()
+      Td.bandIndexTable(spark, sfDir).count()
+      Td.chunkBandTables(spark, sfDir)._2.count()
+      Td.substringFpTable(spark, sfDir).count()
+      Td.ivfIndexTable(spark, sfDir).assigned.count()
+      Td.pqIndexTable(spark, sfDir).codes.count()
+      Td.ivfpqIndexTable(spark, sfDir).codes.count()
+      Td.clusterTable(spark, sfDir).count()
+      Td.videoHashTable(spark, sfDir).count()
+      Td.ivfIncIndexTable(spark, sfDir)._1.assigned.count()
+      Td.ivfpqIncIndexTable(spark, sfDir)._1.codes.count()
+      Td.vecDedupTables(spark, sfDir)._2.count()
+      Td.cdcOrdersTable(spark, sfDir).current.count()
+      Td.aggMaintainTable(spark, sfDir).current.count()
+      Td.histMaintainTable(spark, sfDir).current.count()
+      Td.distinctStateTable(spark, sfDir).current.count()
+      Td.scd2OrdersTable(spark, sfDir).current.count()
+      Td.joinMaintainTables(spark, sfDir)._1.current.count()
+      Td.topkMaintainTable(spark, sfDir).current.count()
+      Td.qualityMaintainTable(spark, sfDir).current.count()
+      Td.triangleMaintainTables(spark, sfDir)._2.current.count()
+      Td.bm25StatsTables(spark, sfDir)._2.current.count()
+      Td.pagerankTable(spark, sfDir).current.count()
+      Td.zorderEventsTable(spark, sfDir).current.count()
     }
-    // Collision-mass fingerprints of THIS corpus, computed pre-battery (r17
-    // verdict Next #3): one number per quadratic-by-contract miner family,
-    // shipped in the artifact's "mass" block and compared against the
-    // newest same-scale artifact's block to auto-file data-shift movers as
-    // xpop (massXpop above). Full batteries always; a filtered dev run opts
-    // in with SPARK_GRAFT_BENCH_MASS=1.
-    val massSeq: Seq[(String, Double)] =
-      if (!(fullBattery || sys.env.contains("SPARK_GRAFT_BENCH_MASS"))) Nil
-      else {
-        val t0 = System.nanoTime()
-        val m = massStats(spark, sfDir)
-        System.err.println(f"BENCHMASS ${(System.nanoTime() - t0) / 1e9}%.1f s " +
-          m.map { case (k, v) => f"$k=$v%.0f" }.mkString(" "))
-        m
-      }
-    val massNow = massSeq.toMap
-    // Queries whose prior breach was attributed to a family mass shift —
-    // filed as xpop with a post-battery iso baseline, exactly the manual
-    // protocol r17 ran by hand for the 87.7× corpus regeneration.
-    val massXpopQ = scala.collection.mutable.LinkedHashSet.empty[String]
-
-    // Optional dev filter: `runMain graft.Bench q_a,q_b` times only those
-    // queries (the driver invokes with no args → full battery).
-    val selected = args.headOption.map(_.split(",").toSet)
-      .fold(SparkEntry.queries) { names =>
-        val unknown = names.diff(SparkEntry.queries.keySet)
-        require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-        SparkEntry.queries.filter { case (k, _) => names(k) }
-      }
-    // Name-sorted execution: Map iteration order shifts whenever a query is
-    // added, silently reassigning which query absorbs residual first-run
-    // cost; a fixed order keeps per-query times comparable run-over-round.
-    // MIN of 3 back-to-back runs per query (was median): this box stalls
-    // whole runs 5-10× at random under sustained load — external CPU
-    // throttling, not GC (verbose trace showed a 50.7 s run with 0.37 s of
-    // GC between 5-6 s neighbors). Additive noise corrupts a median as soon
-    // as 2 of 3 runs are hit (~10 phantom regressions per round at 100+
-    // queries); the min is immune to any number of stalled runs short of
-    // all of them, and for deterministic read-only queries the best run IS
-    // the steady-state cost. First-plan codegen still lands on run 1.
-    // SPARK_GRAFT_BENCH_STAT=median restores the old estimator.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // Per-run diagnostics to STDERR (stdout must stay parseable): run index,
-    // time, GC time delta — the signal that separates in-JVM degradation
-    // (escalating times, growing GC share) from ambient machine noise.
-    val verbose = sys.env.contains("SPARK_GRAFT_BENCH_VERBOSE")
-    def gcMillis: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    val ratios = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // Queries whose every run threw — reported out-of-band in the JSON
-    // ("err" key) and EXCLUDED from times/total: a swallowed throw has a
-    // near-zero wall time, so folding it in would report the failure as a
-    // fast success AND inflate the stall ratio with a phantom min (r6
-    // ADVICE). stderr carries the per-run exception for diagnosis.
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Queries whose min was never corroborated even after retries — the
-    // residual "don't trust this entry" set, reported out-of-band.
-    val stalledQ = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Queries CONVERGED but >2× prior after retries — trustworthy values,
-    // real plateau shifts; reported out-of-band as "regressed" and kept as
-    // priors for the next round (r10 verdict #2).
-    val regressedQ = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Isolated post-battery re-run measurements — shipped in the artifact's
-    // "iso" block as next round's same-population baselines (verdict r12 #1).
-    val isoQ = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Queries whose only prior was cross-population: movement unadjudicable,
-    // iso baseline established instead of a flag. Informational, not npx.
-    val xpopQ = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Queries whose battery-prior breach was VETOED by the iso prior
-    // (BENCHISOOK). They get a post-battery isolated re-run of their own
-    // (ADVICE r13): the veto path never reached the regressed-adjudication
-    // loop, so a one-time inflated iso baseline would otherwise persist
-    // forever — only vetoed queries kept the stale entry alive, and every
-    // future round's movement up to 2× it stayed unflagged. The refresh
-    // re-measures the iso population each time the veto fires; a fresh run
-    // that is ITSELF over the iso bar (corroborated min-of-2) files the
-    // regression the veto would have hidden.
-    val isoVetoedQ = scala.collection.mutable.LinkedHashSet.empty[String]
-    var retriedQ = 0
-    val maxRetries = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "3").toInt
-    // Cross-round prior (r8 verdict Next #3): the corroboration rule above
-    // cannot catch a WHOLE-QUERY stall — when all 3 runs of one query are
-    // hit together, they corroborate each other and the wrong min ships
-    // (r8 shipped scd2_temporal at 4.5 s vs a real 0.86 s). The previous
-    // round's artifact is the missing signal: a query reading > 2× its
-    // prior (and > 0.3 s absolute over it — the noise floor) retries even
-    // when its runs agree, and lands in the stalled list if it never gets
-    // under. Priors come from the newest BENCH_r*.json in the working dir
-    // (or SPARK_GRAFT_BENCH_PRIOR); queries the prior itself flagged as
-    // stalled are excluded; elided fast-bucket queries simply have no
-    // prior. A genuine regression still ships — slower, retried, and
-    // flagged — it cannot hide, only noise gets healed.
-    // Per-query vs-prior bookkeeping is BY NAME (r11 verdict #5): the
-    // post-battery adjudication pass below can improve a regressed query's
-    // min, and pmax must then reflect the improved ratio, not the stale one.
-    val priorRatioByName = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // One timed run of one query — shared by the battery loop and the
-    // post-battery adjudication pass (r11 verdict #5), so a re-run measures
-    // EXACTLY what the battery measured, just in a different order/
-    // contention population.
-    def runQueryOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        i: Int): Double = {
-        // Snapshot registered RDD ids BEFORE the run and release only what
-        // the run itself registered: operators that localCheckpoint slim
-        // intermediates (minhashDedup, dupClusters, dedupAgainstIndex) can
-        // only free those blocks when the driver GCs the RDD references, so
-        // repeated runs in one JVM accumulate blocks and each run inherits
-        // the previous one's memory pressure — measured q_incremental_dedup
-        // escalating 12 s → 66 s across back-to-back runs, which the MEDIAN
-        // then reported. Scoping (vs the old unpersist-everything sweep)
-        // keeps any future cross-query persisted relation alive: stripping
-        // a localCheckpointed plan's blocks is unrecoverable (truncated
-        // lineage cannot recompute) — ADVICE r5.
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        val gc0 = gcMillis
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
-          System.err.println(s"BENCHERR $name#$i ${e.getClass.getSimpleName}: ${e.getMessage}")
-          false
-        }
-        // failed run → NaN: sorts last (total ordering), filtered below so
-        // it can enter neither the min/median nor the stall ratio
-        val t = if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
-        if (verbose)
-          System.err.println(f"BENCHRUN $name#$i t=$t%.2f gc=${(gcMillis - gc0) / 1000.0}%.2f s")
-        spark.sparkContext.getPersistentRDDs
-          .foreach { case (id, rdd) => if (!before(id)) rdd.unpersist(blocking = false) }
-        t
-    }
-    val priorFlagged = scala.collection.mutable.LinkedHashSet.empty[String]
-    val results0 = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def runOnce(i: Int): Double = runQueryOnce(name, fn, i)
-      var times = (1 to runs).map(runOnce).filterNot(_.isNaN).sorted
-      // Self-healing (r7 verdict #1): run disagreement past 3× means some
-      // run was stalled by external contention. The MIN is immune unless
-      // EVERY run was hit — so instead of trusting it blindly, CORROBORATE
-      // it: the min counts as certified once a second run lands within
-      // 1.5× of it. While the ratio is past 3 and the min is uncorroborated,
-      // re-run (up to maxRetries extra) — each retry is a fresh chance at a
-      // clean pair. A query that exhausts retries uncorroborated is carried
-      // in the out-of-band "stalled" list and counted in nstall; a query
-      // whose min IS corroborated reports the agreement ratio (2nd-best /
-      // best, ~1) instead of the raw max/min, so one stalled run out of
-      // three no longer poisons the battery's health keys the way r7's
-      // artifact poisoned itself.
-      def ratio = times.last / math.max(times.head, 0.001)
-      def corroborated = times.count(_ <= times.head * 1.5) >= 2
-      var extra = 0
-      while (times.nonEmpty && ratio > 3 && !corroborated && extra < maxRetries) {
-        extra += 1
-        System.err.println(f"BENCHRETRY $name#${runs + extra} min=${times.head}%.2f ratio=$ratio%.1f")
-        val t = runOnce(runs + extra)
-        if (!t.isNaN) times = (times :+ t).sorted
-      }
-      // cross-round prior pass: whole-query stalls corroborate themselves,
-      // so also retry while the min exceeds 2× last round's time by more
-      // than the 0.3 s noise floor; exhausting retries still over the bar
-      // puts the query in the stalled list (untrustworthy entry)
-      val prior = priorTimes.get(name)
-      // Population veto (r12 verdict Next #1): a battery value within 2× of
-      // the query's ISOLATED prior is clean even when it towers over a
-      // warm-battery prior — isolated runs are the slower population (no
-      // warm neighbors), so clearing that bar means the movement is context,
-      // not code. Retries and filing are both skipped; the dominating prior
-      // stays loaded for pmax bookkeeping.
-      def isoVeto = isoPriors.get(name).exists(ip =>
-        times.nonEmpty && !(times.head > 2 * ip && times.head - ip > 0.3))
-      // Collision-mass veto (r17 verdict Next #3): the query's family
-      // candidate-pair mass moved with the regenerated corpus, and the time
-      // movement is proportional — data, not code. Checked only when the
-      // cheaper same-population iso veto did not already clear the breach.
-      def massRatioOf: Option[Double] = for {
-        f <- massFamilyOf(name)
-        cur <- massNow.get(f)
-        prev <- massPriors.get(f) if prev > 0
-      } yield cur / prev
-      def breached = prior.exists(p =>
-        times.nonEmpty && times.head > 2 * p && times.head - p > 0.3)
-      def massVeto = breached && prior.exists(p =>
-        massRatioOf.exists(mr => massXpop(times.head / math.max(p, 0.05), mr)))
-      def priorExceeded = breached && !isoVeto && !massVeto
-      if (breached && isoVeto) {
-        isoVetoedQ += name
-        System.err.println(f"BENCHISOOK $name min=${times.head}%.2f " +
-          f"prior=${prior.get}%.2f isoPrior=${isoPriors(name)}%.2f within iso - no flag")
-      } else if (breached && massVeto) {
-        massXpopQ += name
-        System.err.println(f"BENCHMASSX $name min=${times.head}%.2f " +
-          f"prior=${prior.get}%.2f massRatio=${massRatioOf.get}%.1f " +
-          "family mass moved with the data - filed xpop, no retries")
-      }
-      var pExtra = 0
-      while (priorExceeded && pExtra < maxRetries) {
-        pExtra += 1
-        System.err.println(f"BENCHPRETRY $name#${runs + extra + pExtra} " +
-          f"min=${times.head}%.2f prior=${prior.get}%.2f")
-        val t = runOnce(runs + extra + pExtra)
-        if (!t.isNaN) times = (times :+ t).sorted
-      }
-      prior.foreach { p =>
-        // a mass-veto'd query files as xpop: ratio dropped (next round
-        // compares against the fresh iso baseline, not the old population)
-        if (times.nonEmpty && !massVeto) priorRatioByName(name) =
-          times.head / math.max(if (isoVeto) isoPriors(name) else p, 0.05)
-        if (!isoVeto && !massVeto) priorVerdict(times, p).foreach { verdict =>
-          priorFlagged += name
-          if (verdict == "regressed") {
-            if (!regressedQ.contains(name)) {
-              regressedQ += name
-              System.err.println(f"BENCHPREGRESS $name min=${times.head}%.2f " +
-                f"prior=$p%.2f CONVERGED-OVER-PRIOR")
-            }
-          } else if (!stalledQ.contains(name)) {
-            stalledQ += name
-            System.err.println(f"BENCHPSTALL $name min=${times.head}%.2f " +
-              f"prior=$p%.2f UNCORROBORATED-VS-PRIOR")
-          }
-        }
-      }
-      if (extra > 0 || pExtra > 0) retriedQ += 1
-      if (times.nonEmpty && times.head > 0) {
-        val health =
-          if (times.size >= 2 && corroborated) times(1) / math.max(times.head, 0.001)
-          else ratio
-        ratios += health
-        if (health > 3) {
-          stalledQ += name
-          System.err.println(f"BENCHSTALL $name min=${times.head}%.2f max=${times.last}%.2f ratio=$health%.1f UNCORROBORATED")
-        }
-      }
-      val stat = sys.env.getOrElse("SPARK_GRAFT_BENCH_STAT", "min")
-      if (times.isEmpty) { failed += name; name -> Double.NaN }
-      else name -> (if (stat == "median") times(times.length / 2) else times.head)
-    }
-    // Post-battery self-adjudication (r11 verdict #5): "converged over prior"
-    // on ONE box is still not a real plateau — all four of the driver's r11
-    // movers (embed_dedup 6.7 s, ib cdc 11.1 / am 4.9 / ivfpqa 3.7) re-
-    // measured clean in isolation (2.29 / 4.1 / 2.6 / 1.1). Every regressed-
-    // flagged query gets ONE more run here, after the whole battery — a
-    // fresh ordering/contention population, the cheapest cross-population
-    // witness available in-process. The min ships; a re-run that lands back
-    // within prior clears the flag (and npx), one that stays over
-    // corroborates the regression before the artifact names it.
-    val resultMap = scala.collection.mutable.LinkedHashMap(results0: _*)
-    for (name <- regressedQ.toList) {
-      val p = priorTimes(name)
-      System.err.println(f"BENCHREADJ $name min=${resultMap(name)}%.2f prior=$p%.2f re-running")
-      val t = runQueryOnce(name, SparkEntry.queries(name), -1)
-      if (!t.isNaN) {
-        // the isolated measurement ships in the artifact's "iso" block
-        // regardless of the verdict below — it is next round's
-        // same-population baseline (verdict r12 #1)
-        isoQ(name) = t
-        if (t < resultMap(name)) {
-          resultMap(name) = t
-          priorRatioByName(name) = t / math.max(p, 0.05)
-        }
-        adjudicate(resultMap(name), p, isoPriors.get(name), t) match {
-          case "healed" =>
-            regressedQ -= name
-            priorFlagged -= name
-            System.err.println(f"BENCHREADJOK $name t=$t%.2f back within prior - flag cleared")
-          case "xpopok" =>
-            val ip = isoPriors(name)
-            regressedQ -= name
-            priorFlagged -= name
-            priorRatioByName(name) = t / math.max(ip, 0.05)
-            System.err.println(f"BENCHXPOPOK $name iso=$t%.2f isoPrior=$ip%.2f " +
-              "within iso - flag cleared")
-          case "corroborated" =>
-            System.err.println(f"BENCHREADJX $name iso=$t%.2f isoPrior=${isoPriors(name)}%.2f " +
-              "still over - regression corroborated in both populations")
-          case _ => // "xpop"
-            regressedQ -= name
-            priorFlagged -= name
-            priorRatioByName.remove(name)
-            xpopQ += name
-            System.err.println(f"BENCHXPOP $name iso=$t%.2f battery-prior=$p%.2f " +
-              "cross-population - iso baseline established")
+    // Name-sorted, so which query absorbs residual first-run cost does not
+    // shift when a query is added. After each run, unpersist only the RDDs
+    // that run registered: operators that localCheckpoint intermediates can
+    // only free those blocks that way, and repeated runs otherwise inherit
+    // each other's memory pressure (q_incremental_dedup escalated 12 s →
+    // 66 s), while a relation persisted across queries must stay (a
+    // localCheckpointed plan cannot recompute its stripped blocks).
+    val sc = spark.sparkContext
+    val measured = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> measure(name) { () =>
+        val before = sc.getPersistentRDDs.keySet
+        try timed(fn(spark, sfDir).count())
+        finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
+          if (!before(id)) rdd.unpersist(blocking = false)
         }
       }
     }
-    // Mass-xpop filing (r17 verdict Next #3): each mass-veto'd query ships
-    // in the artifact's "xpop" list and gets ONE post-battery isolated run
-    // as next round's same-population baseline — the manual data-shift
-    // protocol (file xpop + fresh iso baselines), automated. Capped like
-    // the other re-run passes so a corpus-wide shift can't double the wall.
-    var massIsoRuns = 0
-    for (name <- massXpopQ.toList) {
-      xpopQ += name
-      if (!isoQ.contains(name)) {
-        if (massIsoRuns >= 8) {
-          System.err.println(s"BENCHISOSKIP $name mass-xpop cap reached - iso baseline not established")
-        } else {
-          massIsoRuns += 1
-          val t = runQueryOnce(name, SparkEntry.queries(name), -6)
-          if (!t.isNaN) {
-            isoQ(name) = t
-            if (t < resultMap(name)) resultMap(name) = t
-            System.err.println(f"BENCHMASSISO $name iso=$t%.2f baseline established")
-          }
-        }
-      }
-    }
-    // Iso-baseline refresh for veto'd queries (ADVICE r13): each gets one
-    // isolated re-run; a clean or corroborated-over run ships as the fresh
-    // "iso" entry (next round compares against CURRENT iso reality, not the
-    // entry that justified the veto), and the per-query ratio is restated
-    // iso-run/iso-prior — like-for-like, instead of the battery-min/iso-prior
-    // quotient that systematically understated pmax (battery is the faster
-    // population). Verdicts via priorVerdict on the re-run(s): None = clean
-    // refresh; "regressed" (min-of-2, runs agree over the iso bar) = the
-    // regression the veto would have hidden — filed and counted in npx;
-    // "stalled" (single over-bar run its second run disproved... or never
-    // corroborated) = untrustworthy — logged, iso entry NOT shipped, so the
-    // merge falls back to the prior artifact's baseline. Capped like the ib
-    // re-runs so a noisy box can't double the battery's wall time.
-    var isoRefreshes = 0
-    for (name <- isoVetoedQ.toList if !isoQ.contains(name)) {
-      if (isoRefreshes >= 8) {
-        // Cap overflow must be VISIBLE (ADVICE r14): a 9th+ vetoed query
-        // silently keeping its stale iso baseline is exactly the
-        // invisibility this refresh pass exists to fix.
-        System.err.println(s"BENCHISOSKIP $name cap reached - iso baseline not refreshed")
-      } else {
-      isoRefreshes += 1
-      val ip = isoPriors(name)
-      var runs2 = Seq(runQueryOnce(name, SparkEntry.queries(name), -2)).filterNot(_.isNaN)
-      if (runs2.nonEmpty && priorVerdict(runs2, ip).nonEmpty) {
-        val t2 = runQueryOnce(name, SparkEntry.queries(name), -3)
-        if (!t2.isNaN) runs2 = (runs2 :+ t2).sorted
-      }
-      if (runs2.nonEmpty) {
-        if (runs2.head < resultMap(name)) resultMap(name) = runs2.head
-        priorVerdict(runs2, ip) match {
-          case None =>
-            isoQ(name) = runs2.head
-            priorRatioByName(name) = runs2.head / math.max(ip, 0.05)
-            System.err.println(f"BENCHISOREF $name iso=${runs2.head}%.2f " +
-              f"isoPrior=$ip%.2f baseline refreshed")
-          case Some("regressed") =>
-            isoQ(name) = runs2.head
-            priorRatioByName(name) = runs2.head / math.max(ip, 0.05)
-            regressedQ += name
-            priorFlagged += name
-            System.err.println(f"BENCHISOX $name iso=${runs2.head}%.2f " +
-              f"isoPrior=$ip%.2f over in the iso population too - veto overturned")
-          case Some(_) =>
-            System.err.println(f"BENCHISOSTALL $name iso=${runs2.head}%.2f " +
-              f"isoPrior=$ip%.2f uncorroborated - baseline kept, not refreshed")
-        }
-      }
-      }
-    }
-    // Forced iso-baseline establishment (verdict r14 #1): after a box
-    // reprovision the CPU-parallel families genuinely read 1.5–1.8× their
-    // old-box priors on IDENTICAL code, and with no same-population entry
-    // every future artifact files phantom movement against the dead box.
-    // SPARK_GRAFT_BENCH_ISO_FORCE="ann_,embed_,semantic_" (comma-separated
-    // q_-stripped name prefixes) gives each matching battery query one
-    // post-battery isolated re-run shipped as an "iso" entry. With an iso
-    // prior the run adjudicates exactly like the refresh loop (min-of-2 on
-    // a breach; BENCHISOFX files a corroborated regression, BENCHISOFSTALL
-    // keeps the old baseline); with none it simply establishes this box's
-    // baseline (BENCHISOFORCE).
-    val isoForce = sys.env.get("SPARK_GRAFT_BENCH_ISO_FORCE")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
-    var isoForced = 0
-    for (name <- resultMap.keys.toSeq.sorted
-         if isoForce.exists(p => name.stripPrefix("q_").startsWith(p))
-            && !isoQ.contains(name)) {
-      if (isoForced >= 40) {
-        System.err.println(s"BENCHISOSKIP $name force cap reached - iso baseline not established")
-      } else {
-        isoForced += 1
-        val ip = isoPriors.get(name)
-        var runs2 = Seq(runQueryOnce(name, SparkEntry.queries(name), -4)).filterNot(_.isNaN)
-        if (runs2.nonEmpty && ip.exists(p => priorVerdict(runs2, p).nonEmpty)) {
-          val t2 = runQueryOnce(name, SparkEntry.queries(name), -5)
-          if (!t2.isNaN) runs2 = (runs2 :+ t2).sorted
-        }
-        if (runs2.nonEmpty) {
-          if (runs2.head < resultMap(name)) resultMap(name) = runs2.head
-          ip match {
-            case None =>
-              isoQ(name) = runs2.head
-              System.err.println(f"BENCHISOFORCE $name iso=${runs2.head}%.2f " +
-                "baseline established (no iso prior)")
-            case Some(p) => priorVerdict(runs2, p) match {
-              case None =>
-                isoQ(name) = runs2.head
-                priorRatioByName(name) = runs2.head / math.max(p, 0.05)
-                System.err.println(f"BENCHISOFORCE $name iso=${runs2.head}%.2f " +
-                  f"isoPrior=$p%.2f refreshed")
-              case Some("regressed") =>
-                isoQ(name) = runs2.head
-                priorRatioByName(name) = runs2.head / math.max(p, 0.05)
-                regressedQ += name
-                priorFlagged += name
-                System.err.println(f"BENCHISOFX $name iso=${runs2.head}%.2f " +
-                  f"isoPrior=$p%.2f over in the iso population - filed")
-              case Some(_) =>
-                System.err.println(f"BENCHISOFSTALL $name iso=${runs2.head}%.2f " +
-                  f"isoPrior=$p%.2f uncorroborated - baseline kept")
-            }
-          }
-        }
-      }
-    }
-    // Ladder-vehicle rename (verdict r14 #7): a filtered SPARK_GRAFT_BENCH_IB
-    // run exists to measure the ib ladder, and its vehicle query's time is
-    // NOT an adjudicated query baseline — ship the key as "veh_<name>" so
-    // no future prior-merge can mistake it for one (no query bears that
-    // name; the ib block is the artifact's payload either way).
-    val vehicleRun = !fullBattery && sys.env.contains("SPARK_GRAFT_BENCH_IB")
-    val results = resultMap.toSeq.filterNot(_._2.isNaN)
-      .map { case (n, v) =>
-        (if (vehicleRun) n.replaceFirst("^q_", "veh_") else n) -> v }
-    // Normalize the artifact's sf label to the canonical "sf<N>" form: a
-    // dir named graft-sf1 would otherwise render "sf":"graft-sf1", which
-    // the numeric prior-gate parse cannot read — the artifact would be
-    // unusable as a prior for its own scale (r13, found saving the first
-    // in-repo sf1 artifacts).
+    // "sf<N>" even for a dir named like graft-sf1
     val sfLabel = {
       val last = sfDir.split('/').last
       "sf([0-9.]+)".r.findFirstMatchIn(last).map("sf" + _.group(1)).getOrElse(last)
     }
-    val out = render(results, sfLabel,
-      stallRatio = if (ratios.isEmpty) 1.0 else ratios.max,
-      nstall = ratios.count(_ > 3), nretry = retriedQ,
-      priorMax = if (priorRatioByName.isEmpty) None else Some(priorRatioByName.values.max),
-      npx = priorFlagged.size, stalledQ = stalledQ.distinct.toSeq,
-      failed = failed.toSeq, idxBuild = idxBuild,
-      regressedQ = regressedQ.distinct.toSeq,
-      isoQ = isoQ.toSeq, xpopQ = xpopQ.distinct.toSeq,
-      ibBox = Some(boxFp), mass = massSeq)
-    // Stdout is a shared channel: the r12 sf1 run saw a JVM GC warning print
-    // AHEAD of the artifact line, and the contract survived only because the
-    // JSON prints last (verdict r12 #7). Belt-and-braces: the exact line is
-    // ALSO written to a dedicated file (SPARK_GRAFT_BENCH_OUT, default
-    // tmp/BENCH_last.json under the working dir) that a driver can prefer
-    // over tail-scraping; the write happens BEFORE the println and swallows
-    // its own failures so it can never contaminate stdout. The prior loader
-    // is noise-tolerant either way (regex scan — BenchRenderSpec pins it).
-    try {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "tmp/BENCH_last.json"))
-      Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(p, (out + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
-    // This MUST stay the final stdout line (nothing may print after it), so
-    // the whole battery survives the driver's tail window.
-    println(out)
+    // the final stdout line: nothing may print after it
+    println(render(measured, sfLabel, idxBuild))
     spark.stop()
   }
 }

@@ -2,15 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench artifact-line contract (r9 verdict #1): the driver keeps
- * only the LAST 2000 stdout bytes, so the line must (a) ALWAYS fit the
- * 1995-byte budget — even for a deliberately stall-heavy battery where the
- * old fixed elide=0.35 fallback overflowed and front-truncation destroyed
- * the health keys (BENCH_r09 parsed:null) — and (b) order keys so that if a
- * line ever did overflow, truncation eats query detail, not certification:
- * "queries" first, health keys after, "value" last.
+/** Pins the bench line contract and the per-query timing rule. A reader
+ * keeps only the LAST 2000 stdout bytes, so the line must (a) always fit
+ * the 1995-byte budget, even for a stall-heavy battery, and (b) order keys
+ * so that if a line ever did overflow, truncation eats query detail, not
+ * the total: "queries" first, health keys after, "value" last.
  */
 class BenchRenderSpec extends AnyFunSuite {
+  import Bench.Timing
 
   // strict JSON validation via Spark's bundled jackson
   private def parseable(s: String): Boolean =
@@ -19,13 +18,29 @@ class BenchRenderSpec extends AnyFunSuite {
       mapper.readTree(s) != null
     } catch { case _: Throwable => false }
 
-  private def mkBattery(n: Int, sec: Double): Seq[(String, Double)] =
-    (1 to n).map(i => f"q_synthetic_query_name_$i%03d" -> sec)
+  private def clean(sec: Double) = Timing(Seq(sec, sec, sec), 0)
+  // runs that never agreed: health 4, uncorroborated after all retries
+  private def stalledT(sec: Double) = Timing(Seq(sec, 4 * sec, 4 * sec), Bench.MaxRetries)
+  private val failedT = Timing(Nil, 0)
+
+  private def mkBattery(n: Int, sec: Double): Seq[(String, Timing)] =
+    (1 to n).map(i => f"q_synthetic_query_name_$i%03d" -> clean(sec))
+
+  /** A run thunk that replays `script` (NaN = the run throws) and counts
+    * its calls.
+    */
+  private class Scripted(script: Double*) extends (() => Double) {
+    private val it = script.iterator
+    var calls = 0
+    def apply(): Double = {
+      calls += 1
+      val t = it.next()
+      if (t.isNaN) throw new RuntimeException("scripted failure") else t
+    }
+  }
 
   test("clean battery: fits budget, parses, value is the last key") {
     val line = Bench.render(mkBattery(190, 0.1), "sf0.1",
-      stallRatio = 1.2, nstall = 0, nretry = 0, priorMax = Some(1.1),
-      npx = 0, stalledQ = Nil, failed = Nil,
       idxBuild = Seq("ivf" -> 2.8, "pq" -> 1.9))
     assert(line.length <= 1995, s"len=${line.length}")
     assert(parseable(line))
@@ -39,309 +54,95 @@ class BenchRenderSpec extends AnyFunSuite {
 
   test("stall-heavy battery (every query slow + long stalled list) still fits and keeps health keys") {
     // 200 queries all at 1.7 s — nothing under any fixed elide threshold
-    // below 1.7, so the old fixed-0.35 fallback would emit ~200 entries
-    // (>4 kB) and overflow; 40 stalled names + priors loaded, the exact
-    // regime that destroyed BENCH_r09
-    val stalled = (1 to 40).map(i => f"q_synthetic_query_name_$i%03d")
-    val line = Bench.render(mkBattery(200, 1.7), "sf0.1",
-      stallRatio = 8.3, nstall = 12, nretry = 31, priorMax = Some(4.2),
-      npx = 9, stalledQ = stalled, failed = Seq("q_synthetic_query_name_201"),
+    // below 1.7, so a fixed-0.35 fallback would emit ~200 entries (>4 kB)
+    // and overflow; 40 of them stalled, one failed
+    val battery = mkBattery(200, 1.7).zipWithIndex.map { case ((n, t), i) =>
+      n -> (if (i < 40) stalledT(1.7) else t)
+    } :+ ("q_synthetic_query_name_201" -> failedT)
+    val line = Bench.render(battery, "sf0.1",
       idxBuild = (1 to 25).map(i => s"ib$i" -> 9.9))
     assert(line.length <= 1995, s"len=${line.length}")
     assert(parseable(line))
-    for (k <- Seq("\"stall\":", "\"nstall\":", "\"nretry\":", "\"pmax\":",
-        "\"npx\":", "\"stalled\":", "\"err\":", "\"value\":"))
+    for (k <- Seq("\"stall\":", "\"nstall\":", "\"nretry\":", "\"stalled\":",
+        "\"err\":", "\"value\":"))
       assert(line.contains(k), s"missing $k in ${line.takeRight(400)}")
-    // the last 120 bytes alone carry the certification keys (tail-window
-    // survivability even under a hypothetical overflow)
+    // the last 120 bytes alone carry the total (tail-window survivability
+    // even under a hypothetical overflow)
     val tail = line.takeRight(120)
     assert(tail.contains("\"value\":"))
   }
 
   test("pathological floor: every query stalled AND failed — counts replace name lists, line still parses") {
-    val names = (1 to 300).map(i => f"q_synthetic_query_name_$i%03d")
-    val line = Bench.render(mkBattery(300, 2.0), "sf0.1",
-      stallRatio = 50.0, nstall = 300, nretry = 300, priorMax = Some(9.9),
-      npx = 300, stalledQ = names, failed = names,
+    val battery = (1 to 300).flatMap { i =>
+      Seq(f"q_synthetic_query_name_$i%03d" -> stalledT(2.0),
+        f"q_synthetic_failed_query_$i%03d" -> failedT)
+    }
+    val line = Bench.render(battery, "sf0.1",
       idxBuild = (1 to 25).map(i => s"ib$i" -> 9.9))
     assert(line.length <= 1995, s"len=${line.length}")
     assert(parseable(line))
     assert(line.contains("\"value\":"))
     assert(line.contains("\"stall\":"))
-  }
-
-  test("vs-prior filing: converged plateau shift → regressed, unconverged → stalled (r10 verdict #2)") {
-    // the exact r10 confusion, as the synthetic case the verdict asked for:
-    // one CONVERGED plateau shift (minhash_dedup's shape — three runs agree,
-    // all >2× prior) and one true stall (regional_revenue's shape — runs
-    // never converge) must carry DISTINCT labels
-    assert(Bench.priorVerdict(Seq(1.56, 1.60, 1.62), prior = 0.6).contains("regressed"))
-    assert(Bench.priorVerdict(Seq(2.1, 5.0, 7.2), prior = 0.9).contains("stalled"))
-    // within 2× prior, or within the 0.3 s noise floor → no filing
-    assert(Bench.priorVerdict(Seq(1.7, 1.8), prior = 0.9).isEmpty)
-    assert(Bench.priorVerdict(Seq(0.5, 0.52), prior = 0.2).isEmpty)
-    assert(Bench.priorVerdict(Nil, prior = 0.9).isEmpty)
-    // rendered: distinct out-of-band lists; the regressed entry's value
-    // ships in "queries" (a trustworthy measurement of ITS box). Since r12
-    // the prior LOADER nevertheless excludes it too (see the parsePriors
-    // cases below): single-box convergence is not a real plateau, and the
-    // newest-first merge falls back to an older artifact's value instead.
-    val line = Bench.render(Seq("q_alpha" -> 1.56, "q_beta" -> 2.1), "sf0.1",
-      stallRatio = 1.1, nstall = 1, nretry = 2, priorMax = Some(2.3), npx = 2,
-      stalledQ = Seq("q_beta"), failed = Nil, idxBuild = Nil,
-      regressedQ = Seq("q_alpha"))
-    assert(parseable(line))
-    val prefix = if (line.contains("\"qprefix\":\"q_\"")) "q_" else ""
-    assert("\"regressed\":\\[\"(q_)?alpha\"\\]".r.findFirstIn(line).isDefined, line)
-    assert("\"stalled\":\\[\"(q_)?beta\"\\]".r.findFirstIn(line).isDefined, line)
-    // loader regexes: stalled strips beta from priors, alpha survives
-    val qs = "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(line).map(_.group(1))
-      .map("\"([A-Za-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(_)
-        .map(m => (prefix + m.group(1)) -> m.group(2).toDouble).toMap)
-      .getOrElse(Map.empty[String, Double])
-    val stalledPrior = "\"stalled\":\\[([^\\]]*)\\]".r.findFirstMatchIn(line)
-      .map(_.group(1).split(",").map(x => prefix + x.trim.stripPrefix("\"").stripSuffix("\"")).toSet)
-      .getOrElse(Set.empty[String])
-    assert((qs -- stalledPrior).keySet == Set("q_alpha"))
-  }
-
-  test("prior parsing round-trip: next round's regexes read the new key order") {
-    // the exact regexes Bench's prior loader uses, applied to a rendered line
-    val line = Bench.render(Seq("q_alpha" -> 1.2, "q_beta" -> 0.8), "sf0.1",
-      stallRatio = 1.1, nstall = 0, nretry = 0, priorMax = None, npx = 0,
-      stalledQ = Seq("q_beta"), failed = Nil, idxBuild = Seq("ivf" -> 2.0))
-    val prefix = if (line.contains("\"qprefix\":\"q_\"")) "q_" else ""
-    val qs = "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(line).map(_.group(1))
-      .map("\"([A-Za-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(_)
-        .map(m => (prefix + m.group(1)) -> m.group(2).toDouble).toMap)
-      .getOrElse(Map.empty[String, Double])
-    assert(qs.keySet == Set("q_alpha", "q_beta"), qs)
-    val stalledPrior = "\"stalled\":\\[([^\\]]*)\\]".r.findFirstMatchIn(line)
-      .map(_.group(1).split(",").map(x => prefix + x.trim.stripPrefix("\"").stripSuffix("\"")).toSet)
-      .getOrElse(Set.empty[String])
-    assert(stalledPrior == Set("q_beta"))
-    val priorSf = "\"sf\"\\s*:\\s*\"?(?:sf)?([0-9.]+)\"?".r.findFirstMatchIn(line).map(_.group(1))
-    assert(priorSf.contains("0.1"))
-  }
-
-  test("parsePriors excludes BOTH stalled and regressed entries; ib priors parsed (r11 verdict #1)") {
-    // the r11 shape: embed_dedup filed at 6.7 s as regressed (converged on
-    // the driver's box; a quiet box read 2.29 s). Its value must NOT load
-    // as a prior — otherwise the 2×-prior trip wire moves to 13.4 s, a 2.8×
-    // blind spot on exactly the query the flag was about.
-    val line = Bench.render(
-      Seq("q_embed_dedup" -> 6.7, "q_minhash_dedup" -> 0.7, "q_pagerank" -> 0.9),
-      "sf0.1", stallRatio = 2.1, nstall = 0, nretry = 2, priorMax = Some(2.8),
-      npx = 1, stalledQ = Seq("q_pagerank"), failed = Nil,
-      idxBuild = Seq("jm" -> 28.9, "cdc" -> 11.1), regressedQ = Seq("q_embed_dedup"))
-    val (qs, ib, _) = Bench.parsePriors(line, curSf = Some("0.1"))
-    assert(qs == Map("q_minhash_dedup" -> 0.7), qs) // stalled AND regressed both gone
-    assert(ib == Map("jm" -> 28.9, "cdc" -> 11.1), ib)
-    // a driver-wrapped (escaped) copy of the same line parses identically
-    val wrapped = "{\"n\": 11, \"tail\": \"" + line.replace("\"", "\\\"") + "\"}"
-    assert(Bench.parsePriors(wrapped, Some("0.1"))._1 == qs)
-    assert(Bench.parsePriors(wrapped, Some("0.1"))._2 == ib)
-    // cross-scale gate unchanged: an sf0.1 artifact yields nothing at sf1
-    assert(Bench.parsePriors(line, Some("1")) ==
-      ((Map.empty, Map.empty, Map.empty)))
-  }
-
-  test("ib priors are box-epoched: only same-ibx artifacts feed the min merge (r15 verdict #4)") {
-    val mk = (box: Option[String], jm: Double) => Bench.render(
-      Seq("q_alpha" -> 1.0), "sf0.1", stallRatio = 1.0, nstall = 0,
-      nretry = 0, priorMax = None, npx = 0, stalledQ = Nil, failed = Nil,
-      idxBuild = Seq("jm" -> jm), ibBox = box)
-    val stamped = mk(Some("deadbeef"), 10.0)
-    assert(stamped.contains("\"ibx\":\"deadbeef\""))
-    val otherBox = mk(Some("cafe0000"), 4.0)   // a dead fast box's min
-    val unstamped = mk(None, 3.0)              // pre-r16 artifact shape
-    // same box → ib loads; other box / unstamped → ib dropped, but the
-    // query priors still load (they have their own adjudication channels)
-    assert(Bench.parsePriors(stamped, Some("0.1"), Some("deadbeef"))._2 ==
-      Map("jm" -> 10.0))
-    assert(Bench.parsePriors(otherBox, Some("0.1"), Some("deadbeef"))._2.isEmpty)
-    assert(Bench.parsePriors(unstamped, Some("0.1"), Some("deadbeef"))._2.isEmpty)
-    assert(Bench.parsePriors(otherBox, Some("0.1"), Some("deadbeef"))._1 ==
-      Map("q_alpha" -> 1.0))
-    // no box supplied (tests, ad-hoc parses) → legacy behavior
-    assert(Bench.parsePriors(unstamped, Some("0.1"))._2 == Map("jm" -> 3.0))
-    // the merged min now spans only same-box artifacts: the 4.0 min from
-    // the vanished box cannot re-trip BENCHIBRETRY against the 10.0 box
-    val parsed = Seq(stamped, otherBox, unstamped)
-      .map(Bench.parsePriors(_, Some("0.1"), Some("deadbeef")))
-    assert(Bench.mergePriors(parsed)._2 == Map("jm" -> 10.0))
-    // an empty (box-rejected) ib map must not burn a depth slot
-    val deep = Seq(otherBox, otherBox, otherBox, otherBox, stamped)
-      .map(Bench.parsePriors(_, Some("0.1"), Some("deadbeef")))
-    assert(Bench.mergePriors(deep)._2 == Map("jm" -> 10.0))
-  }
-
-  test("mergePriors: excluded/elided queries fall back to the next-newest artifact") {
-    val newest = Bench.render(Seq("q_embed_dedup" -> 6.7, "q_tfidf" -> 0.5), "sf0.1",
-      stallRatio = 1.1, nstall = 0, nretry = 0, priorMax = None, npx = 1,
-      stalledQ = Nil, failed = Nil, idxBuild = Seq("jm" -> 28.9),
-      regressedQ = Seq("q_embed_dedup"))
-    val older = Bench.render(Seq("q_embed_dedup" -> 2.4, "q_tfidf" -> 1.0,
-      "q_retired" -> 3.0), "sf0.1",
-      stallRatio = 1.1, nstall = 0, nretry = 0, priorMax = None, npx = 0,
-      stalledQ = Nil, failed = Nil, idxBuild = Seq("jm" -> 24.2, "cdc" -> 4.1))
-    val parsed = Seq(newest, older).map(Bench.parsePriors(_, Some("0.1")))
-    val (qs, ib, _) = Bench.mergePriors(parsed)
-    // the regressed 6.7 does NOT become the prior; the older 2.4 does
-    assert(qs("q_embed_dedup") == 2.4, qs)
-    // the newest artifact wins where it carries a usable value
-    assert(qs("q_tfidf") == 0.5, qs)
-    // a query only the older artifact carries still gets a prior
-    assert(qs("q_retired") == 3.0, qs)
-    // ib priors take the PER-KEY MIN across the window (ADVICE r12): the ib
-    // channel has no stalled/regressed exclusion, so a noise-inflated value
-    // (jm 28.9 here) must not displace the older quiet 24.2 — an inflated
-    // prior would move the 1.5× re-run trip wire out of reach
-    assert(ib == Map("jm" -> 24.2, "cdc" -> 4.1), ib)
-    // depth cap: an ancient artifact past the cap contributes nothing
-    val ancient = Bench.render(Seq("q_fossil" -> 9.0), "sf0.1",
-      stallRatio = 1.0, nstall = 0, nretry = 0, priorMax = None, npx = 0,
-      stalledQ = Nil, failed = Nil, idxBuild = Nil)
-    val five = Seq(newest, older, older, older, ancient).map(Bench.parsePriors(_, Some("0.1")))
-    assert(!Bench.mergePriors(five)._1.contains("q_fossil"))
-  }
-
-  test("mergePriors depth cap is PER MAP: an ib-only artifact does not burn a query-prior slot (ADVICE r12)") {
-    // a terminal-elide artifact keeps ibPart but folds every query away —
-    // it must not count against the query-prior window
-    val ibOnly = (Map.empty[String, Double], Map("jm" -> 9.9), Map.empty[String, Double])
-    val withQ = (Map("q_alpha" -> 1.0), Map.empty[String, Double], Map.empty[String, Double])
-    // four ib-only artifacts ahead of the only query-bearing one: the old
-    // shared cap would exhaust all 4 slots before reaching q_alpha
-    val (qs, ib, _) = Bench.mergePriors(Seq(ibOnly, ibOnly, ibOnly, ibOnly, withQ))
-    assert(qs == Map("q_alpha" -> 1.0), qs)
-    assert(ib == Map("jm" -> 9.9), ib)
-  }
-
-  test("population tagging round-trip: iso map rendered, parsed back, survives a regressed flag; xpop list rendered (verdict r12 #1)") {
-    // the r12 dup_clusters_lsh shape: battery value 2.3 flagged regressed vs
-    // a warm-battery prior 1.1, the post-battery isolated re-run read 2.2 —
-    // that iso value must ship AND load back so next round compares
-    // isolated-vs-isolated instead of re-flagging forever
-    // shape 1 (xpop): no iso prior existed, flag cleared, filed as xpop —
-    // the battery value stays a usable prior AND the iso baseline ships
-    val line = Bench.render(
-      Seq("q_dup_clusters_lsh" -> 2.3, "q_other" -> 0.5), "sf0.1",
-      stallRatio = 1.1, nstall = 0, nretry = 1, priorMax = Some(1.2), npx = 0,
-      stalledQ = Seq("q_other"), failed = Nil, idxBuild = Nil,
-      isoQ = Seq("q_dup_clusters_lsh" -> 2.2, "q_other" -> 0.6),
-      xpopQ = Seq("q_dup_clusters_lsh"))
-    assert(parseable(line), line)
-    assert(line.contains("\"iso\":{"), line)
-    assert("\"xpop\":\\[\"(q_)?dup_clusters_lsh\"\\]".r.findFirstIn(line).isDefined, line)
-    val (qs, _, iso) = Bench.parsePriors(line, Some("0.1"))
-    // the stalled name loses its iso entry (never converged anywhere);
-    // the xpop name keeps both its battery value and its iso baseline
-    assert(iso == Map("q_dup_clusters_lsh" -> 2.2), iso)
-    assert(qs == Map("q_dup_clusters_lsh" -> 2.3), qs)
-    // shape 2 (corroborated regression): the name stays in "regressed" — its
-    // battery value is excluded from priors as before, but its iso entry
-    // SURVIVES (it is the adjudicated baseline the flag was tested against)
-    val line2 = Bench.render(
-      Seq("q_dup_clusters_lsh" -> 2.3), "sf0.1",
-      stallRatio = 1.1, nstall = 0, nretry = 1, priorMax = Some(2.1), npx = 1,
-      stalledQ = Nil, failed = Nil, idxBuild = Nil,
-      regressedQ = Seq("q_dup_clusters_lsh"),
-      isoQ = Seq("q_dup_clusters_lsh" -> 2.2))
-    val (qs2, _, iso2) = Bench.parsePriors(line2, Some("0.1"))
-    assert(qs2 == Map.empty, qs2)
-    assert(iso2 == Map("q_dup_clusters_lsh" -> 2.2), iso2)
-  }
-
-  test("adjudicate: the four post-battery verdicts and their thresholds (verdict r12 #1)") {
-    // healed: shipped min back within 2x battery prior (or the 0.3s floor)
-    assert(Bench.adjudicate(shippedMin = 1.9, prior = 1.0, isoPrior = None, isoRun = 1.9) == "healed")
-    assert(Bench.adjudicate(shippedMin = 0.5, prior = 0.25, isoPrior = None, isoRun = 0.5) == "healed")
-    // xpopok: still over the battery prior, but the ISOLATED run is within
-    // the ISOLATED prior — population context, not code (dup_clusters r12:
-    // battery 2.3 vs warm prior 1.1, iso 2.2 vs iso prior 2.2)
-    assert(Bench.adjudicate(2.3, 1.1, Some(2.2), 2.2) == "xpopok")
-    // corroborated: over BOTH populations' priors — a real regression
-    assert(Bench.adjudicate(4.8, 1.1, Some(2.2), 4.9) == "corroborated")
-    // xpop: no same-population prior — unadjudicable, baseline established
-    assert(Bench.adjudicate(2.3, 1.1, None, 2.2) == "xpop")
-  }
-
-  test("artifact line extracted through interleaved stdout noise (verdict r12 #7)") {
-    // the r12 sf1 run printed a GCLocker warning ahead of the JSON line; the
-    // prior loader must still find every block in a noisy tail capture
-    val clean = Bench.render(Seq("q_alpha" -> 1.2), "sf0.1",
-      stallRatio = 1.0, nstall = 0, nretry = 0, priorMax = None, npx = 0,
-      stalledQ = Nil, failed = Nil, idxBuild = Seq("jm" -> 24.0),
-      isoQ = Seq("q_alpha" -> 1.3))
-    val noisy = "26/08/15 08:30:01 WARN MapPartitionsRDD: RDD 19266 was locally " +
-      "checkpointed, its lineage has been truncated\n" +
-      "[3.805s][warning][gc,alloc] Executor task launch worker: Retried waiting " +
-      "for GCLocker too often allocating 524290 words\n" + clean +
-      "\n26/08/15 08:30:02 INFO SparkContext: Successfully stopped SparkContext"
-    val (qs, ib, iso) = Bench.parsePriors(noisy, Some("0.1"))
-    assert(qs == Map("q_alpha" -> 1.2), qs)
-    assert(ib == Map("jm" -> 24.0), ib)
-    assert(iso == Map("q_alpha" -> 1.3), iso)
-  }
-
-  test("missing sf key is NOT a wildcard when the current scale is known (ADVICE r12)") {
-    // handcrafted degenerate artifact with no sf anywhere: must yield no
-    // priors at a known scale (render now keeps sf at every shrink level,
-    // so a missing key means a foreign artifact)
-    val noSf = """{"queries":{"alpha":1.2},"qprefix":"q_","ib":{"jm":9.0},"stall":1.0,"value":1.2}"""
-    assert(Bench.parsePriors(noSf, Some("0.1")) ==
-      ((Map.empty, Map.empty, Map.empty)))
-    // with an unknown current scale it still loads (explicit-prior dev path)
-    assert(Bench.parsePriors(noSf, None)._1 == Map("q_alpha" -> 1.2))
-  }
-
-  test("mass block: rendered, parsed back sf-gated, and the auto-xpop fires on a planted data shift (r17 verdict Next #3)") {
-    // render carries the mass fingerprints next to ib
-    val line = Bench.render(Seq("q_chunk_neardup" -> 12.0), "sf1",
-      stallRatio = 1.0, nstall = 0, nretry = 0, priorMax = None, npx = 0,
-      stalledQ = Nil, failed = Nil, idxBuild = Seq("ivf" -> 2.0),
-      mass = Seq("chunk" -> 102400000.0, "chunk_w" -> 142.0))
-    assert(parseable(line))
-    assert(line.contains("\"mass\":{\"chunk\":102400000,\"chunk_w\":142}"), line)
-    // parse round-trip, gated on scale exactly like query priors
-    assert(Bench.parseMassPrior(line, Some("1")) ==
-      Map("chunk" -> 102400000.0, "chunk_w" -> 142.0))
-    assert(Bench.parseMassPrior(line, Some("0.1")).isEmpty)
-    // a line with no mass block yields nothing (pre-r18 artifacts)
-    assert(Bench.parseMassPrior("""{"queries":{"a":1},"sf":"sf1","value":1}""",
-      Some("1")).isEmpty)
-    // PLANTED DATA SHIFT — the r17 adjudication, automated: chunk mass
-    // 87.7×, chunk_neardup wall 4.6× its prior → xpop, not a regression
-    assert(Bench.massXpop(timeRatio = 4.6, massRatio = 87.7))
-    // flat mass cannot veto a real regression
-    assert(!Bench.massXpop(timeRatio = 4.6, massRatio = 1.0))
-    // time movement far past the mass movement still files normally
-    assert(!Bench.massXpop(timeRatio = 8.0, massRatio = 1.6))
-    // mass moved but below the 1.5× noise bar → no veto
-    assert(!Bench.massXpop(timeRatio = 2.5, massRatio = 1.4))
-    // family mapping: the contract-quadratic miners and nothing else
-    assert(Bench.massFamilyOf("q_chunk_neardup").contains("chunk"))
-    assert(Bench.massFamilyOf("q_chunk_neardup_capped").contains("chunk"))
-    assert(Bench.massFamilyOf("q_jaccard_pairs").contains("shingle"))
-    assert(Bench.massFamilyOf("q_containment_capped").contains("shingle"))
-    assert(Bench.massFamilyOf("q_dup_clusters_lsh").contains("docband"))
-    assert(Bench.massFamilyOf("q_embed_lsh_pairs").contains("embed"))
-    assert(Bench.massFamilyOf("q_video_neardup_tiered").contains("video"))
-    assert(Bench.massFamilyOf("q_agg_battery").isEmpty)
-    assert(Bench.massFamilyOf("q_pipeline_e2e").isEmpty)
+    assert(line.contains("\"nstalled\":300"), line)
+    assert(line.contains("\"nerr\":300"), line)
   }
 
   test("sf key survives every shrink level (ADVICE r12)") {
     // force deep elide levels with a huge stall-heavy battery and check the
     // chosen line still carries sf
-    val stalled = (1 to 60).map(i => f"q_synthetic_query_name_$i%03d")
-    val line = Bench.render(mkBattery(300, 1.7), "sf0.1",
-      stallRatio = 9.0, nstall = 40, nretry = 60, priorMax = Some(5.0),
-      npx = 20, stalledQ = stalled, failed = Nil,
+    val battery = mkBattery(300, 1.7).zipWithIndex.map { case ((n, t), i) =>
+      n -> (if (i < 60) stalledT(1.7) else t)
+    }
+    val line = Bench.render(battery, "sf0.1",
       idxBuild = (1 to 25).map(i => s"ib$i" -> 9.9))
     assert(line.length <= 1995)
     assert(parseable(line))
     assert(line.contains("\"sf\":\"sf0.1\""), line.takeRight(300))
+  }
+
+  test("measure: min of three runs, no retry when the runs agree or the min is corroborated") {
+    val agree = new Scripted(1.2, 1.0, 1.1)
+    assert(Bench.measure("q_a")(agree) == Timing(Seq(1.0, 1.1, 1.2), 0))
+    assert(agree.calls == Bench.Runs)
+    // one stalled run past 3× does not matter once a second run corroborates
+    val oneStall = new Scripted(1.0, 9.0, 1.3)
+    val t = Bench.measure("q_b")(oneStall)
+    assert(oneStall.calls == 3 && t.min == 1.0 && t.retries == 0)
+    assert(t.health == 1.3 && !t.stalled)
+  }
+
+  test("measure: the stall healer re-runs an uncorroborated min until a run agrees, at most MaxRetries times") {
+    // runs disagree 6× and the min stands alone: one retry corroborates it
+    val healed = new Scripted(1.0, 5.0, 6.0, 1.2)
+    val t = Bench.measure("q_c")(healed)
+    assert(healed.calls == 4)
+    assert(t == Timing(Seq(1.0, 1.2, 5.0, 6.0), 1))
+    assert(t.health == 1.2 && !t.stalled)
+    // a retry may also beat the min: the min still ships
+    val faster = new Scripted(2.0, 7.0, 8.0, 0.5, 0.6)
+    val f = Bench.measure("q_d")(faster)
+    assert(faster.calls == 5 && f.min == 0.5 && f.retries == 2)
+    // never corroborated: MaxRetries extra runs, then filed as stalled
+    val never = new Scripted(1.0, 5.0, 6.0, 7.0, 8.0, 9.0, 10.0)
+    val s = Bench.measure("q_e")(never)
+    assert(never.calls == Bench.Runs + Bench.MaxRetries)
+    assert(s.retries == Bench.MaxRetries && s.min == 1.0 && s.stalled)
+  }
+
+  test("measure: a query whose every run throws goes to err, not into queries or value") {
+    val broken = new Scripted(Double.NaN, Double.NaN, Double.NaN)
+    val b = Bench.measure("q_broken")(broken)
+    assert(b.failed && broken.calls == Bench.Runs) // no healer retries
+    // a run that throws is dropped; the other runs still make the min
+    val flaky = new Scripted(Double.NaN, 2.0, Double.NaN)
+    assert(Bench.measure("q_flaky")(flaky) == Timing(Seq(2.0), 0))
+    val line = Bench.render(Seq("q_broken" -> b, "q_ok" -> clean(1.25),
+      "q_slow" -> stalledT(0.5)), "sf0.01", idxBuild = Nil)
+    assert(parseable(line), line)
+    assert(line.contains("\"err\":[\"q_broken\"]"), line)
+    assert(line.contains("\"stalled\":[\"q_slow\"]"), line)
+    assert(line.contains("\"queries\":{\"q_ok\":1.25,\"q_slow\":0.5}"), line)
+    assert(line.contains("\"nstall\":1,\"nretry\":1,"), line)
+    assert(line.endsWith("\"value\":1.75}"), line)
   }
 }

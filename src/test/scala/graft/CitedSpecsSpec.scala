@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * its word if that spec exists: every `…Spec` name in `src/main` must be a
   * class, trait or object in `src/test`. The same holds for the probe mains
   * a comment cites as the source of a measurement: every `…Probe` name in
-  * `src/main` must be an object under `graft/examples`.
+  * `src/main` must be an object under `graft/examples`, and so must every
+  * probe the verify skill tells a reader to run.
   */
 class CitedSpecsSpec extends AnyFunSuite {
 
@@ -22,11 +23,18 @@ class CitedSpecsSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  /** Every match of `cited` in `src/main` must be one of `defined`. */
-  private def assertDefined(cited: String, defined: Set[String]): Unit = {
-    val found = sources("src/main/scala").flatMap { case (p, text) =>
-      cited.r.findAllIn(text).map(_ -> p)
-    }
+  private val probeName = """\b[A-Z]\w*Probe\d*\b"""
+
+  private def exampleObjects: Set[String] =
+    // by object, not by file: one file may hold several probe objects
+    sources("src/main/scala/graft/examples").flatMap { case (_, text) =>
+      """\bobject\s+(\w+)""".r.findAllMatchIn(text).map(_.group(1))
+    }.toSet
+
+  /** Every match of `cited` in `citers` must be one of `defined`. */
+  private def assertDefined(cited: String, defined: Set[String],
+      citers: Seq[(Path, String)] = sources("src/main/scala")): Unit = {
+    val found = citers.flatMap { case (p, text) => cited.r.findAllIn(text).map(_ -> p) }
     assert(found.nonEmpty)
     val missing = found.filterNot { case (name, _) => defined(name) }
     assert(missing.isEmpty,
@@ -40,9 +48,11 @@ class CitedSpecsSpec extends AnyFunSuite {
   }
 
   test("every probe cited in src/main is an example main") {
-    // by object, not by file: one file may hold several probe objects
-    assertDefined("""\b[A-Z]\w*Probe\d*\b""", sources("src/main/scala/graft/examples").flatMap {
-      case (_, text) => """\bobject\s+(\w+)""".r.findAllMatchIn(text).map(_.group(1))
-    }.toSet)
+    assertDefined(probeName, exampleObjects)
+  }
+
+  test("every probe the verify skill names is an example main") {
+    val skill = Paths.get(".claude/skills/verify/SKILL.md")
+    assertDefined(probeName, exampleObjects, Seq(skill -> Files.readString(skill)))
   }
 }

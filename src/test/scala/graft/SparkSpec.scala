@@ -8,8 +8,21 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local SparkSession for suites. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh dir under `java.io.tmpdir`, deleted with its contents once the
+    * suite ends.
+    */
+  def tmpDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tmpDirs.add(dir)
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+    finally super.afterAll()
 
   /** The Spark jobs `body` starts on this thread, and on the threads that
     * capture its local properties (`SQLExecution.withThreadLocalCaptured`).
