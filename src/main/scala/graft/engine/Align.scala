@@ -32,16 +32,4 @@ object Align {
     }
     df.select(cols.toIndexedSeq: _*)
   }
-
-  /** Like alignTo but additionally truncates strings to a maximum length —
-    * the reference's `allowDataTruncation: true` for NVARCHAR(n) targets
-    * (`pipeline/New_LoadCustomerDim.json:96-100`).
-    */
-  def alignTruncating(df: DataFrame, schema: StructType, maxLen: Map[String, Int]): DataFrame = {
-    val aligned = alignTo(df, schema)
-    maxLen.foldLeft(aligned) { case (d, (name, n)) =>
-      if (d.columns.contains(name)) d.withColumn(name, substring(col(name), 1, n))
-      else d
-    }
-  }
 }

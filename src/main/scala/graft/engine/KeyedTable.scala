@@ -34,6 +34,15 @@ import java.nio.charset.StandardCharsets
   *   _commits/1                // "schema=…", "dir=v=1-3f2c…"
   *   _commits/2                // v=N is committed iff _commits/N exists
   * }}}
+  * An unbucketed version is one file when its plan's static size estimate
+  * (the analyzed plan's `sizeInBytes`, no job) is at most
+  * `spark.sql.files.openCostInBytes` and bounds what the plan outputs
+  * (`KeyedTable.oneFile`): Spark charges that cost per file and gives
+  * each small file its own scan split, so a trickle merge that wrote one
+  * file per input file would leave every later read a task per file. The
+  * version is written through `coalesce(1)`, which adds no shuffle. Larger
+  * versions, and plans whose estimate cannot see their row count (an
+  * explode), keep one file per write task.
   *
   * Bucketed (`numBuckets = B`) — manifest-addressed buckets, so a merge
   * rewrites ONLY buckets containing changed keys:
@@ -253,12 +262,6 @@ final class KeyedTable(
     */
   def effectiveRangeCol: Option[String] = base.entry.layout.rangeCol
 
-  /** The stats columns, from the stored layout once the table exists:
-    * every version carries a stats row per bucket at one stable schema, so
-    * [[bucketStats]] can union sidecars across the manifest.
-    */
-  def effectiveStatsCols: Seq[String] = head.entry.layout.statsCols
-
   private def bucketExpr(layout: Layout): Column = layout.rangeCol match {
     case Some(rc) =>
       val bs = boundaryValues(layout.bounds.get)
@@ -477,7 +480,8 @@ final class KeyedTable(
   /** Stage `df` as the whole of version `h.version + 1`, at `df`'s schema
     * — every unbucketed write, and a bucketed bootstrap or compaction. A
     * bootstrap records this instance's layout; later versions carry their
-    * base's.
+    * base's. An unbucketed version below the open cost is one file (see
+    * Layout).
     */
   private def stageOverwrite(h: Head, df: DataFrame, tag: Option[String] = None): Staged = {
     val next = h.version + 1
@@ -485,7 +489,7 @@ final class KeyedTable(
     val dir = newDir(next)
     val entry = Commit(df.schema, layout, tag)
     if (layout.buckets == 0) {
-      writeParquet(df.write, s"$root/$dir")
+      writeParquet((if (KeyedTable.oneFile(df)) df.coalesce(1) else df).write, s"$root/$dir")
       staged(next, entry.copy(dir = Some(dir)))
     } else staged(next, entry.copy(manifest = writeBucketed(layout, df, dir).map(_ -> dir).toMap))
   }
@@ -1330,15 +1334,42 @@ object KeyedTable {
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
 
+  /** Whether an unbucketed version of `df` is written as one file: its
+    * analyzed plan's size estimate is at most
+    * `spark.sql.files.openCostInBytes`, and the estimate bounds the output.
+    * It does only when each node is a file or local scan, or an operator
+    * the estimator never undercounts: one that keeps or drops rows, a union
+    * (the sum) or a join (the product). A Generate or a typed flatMap scales
+    * its child's size by row width alone, so the explode of a small corpus
+    * into every window or shingle estimates small, and `coalesce(1)` would
+    * run its whole last stage as one task; a checkpoint's leaf carries such
+    * an estimate too. Any other plan keeps one file per write task.
+    */
+  private[engine] def oneFile(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val plan = df.queryExecution.analyzed
+    val bounded = plan.find {
+      case _: LogicalRelation | _: LocalRelation | _: Project | _: Filter | _: Join | _: Union |
+           _: Aggregate | _: Window | _: Deduplicate | _: Distinct | _: Sort | _: SubqueryAlias |
+           _: ResolvedHint | _: RepartitionOperation => false
+      case _ => true
+    }.isEmpty
+    bounded && plan.stats.sizeInBytes <= df.sparkSession.sessionState.conf.filesOpenCostInBytes
+  }
+
   /** The one parquet write of a table: version data, bucket dirs and delta
     * segments, the stats sidecar and the range bounds all go through here.
     * zstd writes about a third fewer bytes than Spark's default snappy on
     * the booking fact and dim (SCALING.md, "Table file codec"). Reads need
     * no setting: parquet decodes each column chunk by the codec recorded in
     * its footer, so versions written with another codec stay readable.
+    * The committer writes no `_SUCCESS` marker: the commit entry is the
+    * commit, and no reader looks for one.
     */
   private def writeParquet(w: DataFrameWriter[Row], path: String): Unit =
-    w.mode("overwrite").option("compression", "zstd").parquet(path)
+    w.mode("overwrite").option("compression", "zstd")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false").parquet(path)
 
   private def writeFile(fs: FileSystem, p: Path, content: String): Unit = {
     val out = fs.create(p, true)

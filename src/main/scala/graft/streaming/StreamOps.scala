@@ -227,18 +227,4 @@ object StreamOps {
           out.iterator
       }
   }
-
-  /** Convenience: run a streaming query over `df` to completion with
-    * AvailableNow into an in-memory sink and return the result table.
-    */
-  def runToMemory(df: DataFrame, queryName: String, mode: OutputMode): DataFrame = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    df.sparkSession.table(queryName)
-  }
 }

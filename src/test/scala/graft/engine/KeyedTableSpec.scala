@@ -886,6 +886,39 @@ class KeyedTableSpec extends SparkSpec {
     }
   }
 
+  test("an unbucketed version smaller than the file open cost is one file") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{explode, lit, sequence}
+    def rows(ids: Range, v: Int) = ids.map(i => (i.toLong, s"n$i", v)).toDF("id", "name", "v")
+    /** part files per version after an overwrite and a merge, and the rows read back */
+    def write(root: String): (Seq[Int], Seq[String]) = {
+      val t = KeyedTable(spark, root, Seq("id"))
+      t.overwrite(rows(1 to 20, 1))
+      t.merge(rows(15 to 25, 2))
+      val files = Seq(1L, 2L).map(v => dirsOf(root, v).flatMap(_.list()))
+      // a stage dir holds its part files and their checksums, no `_SUCCESS`
+      files.flatten.foreach(f => assert(f.startsWith("part-") || f.startsWith(".part-"), f))
+      (files.map(_.count(_.startsWith("part-"))), t.current.collect().map(_.toString).sorted.toSeq)
+    }
+    val (one, oneRows) = write(tmpDir("ktsized"))
+    assert(one == Seq(1, 1))
+    // an explode's estimate is its input's, although each of the 20 rows
+    // becomes 50, so it keeps one file per task
+    val exploded = tmpDir("ktsized-explode")
+    KeyedTable(spark, exploded, Seq("id", "j")).overwrite(rows(1 to 20, 1)
+      .withColumn("j", explode(sequence(lit(1), lit(50)))))
+    assert(dirsOf(exploded, 1L).flatMap(_.list()).count(_.startsWith("part-")) > 1)
+    // at an open cost of 1 byte every version is above it: one file per task
+    val key = "spark.sql.files.openCostInBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val (several, severalRows) = try write(tmpDir("ktsized-split"))
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(several.forall(_ > 1), several)
+    assert(severalRows == oneRows && oneRows.size == 25)
+  }
+
   test("the metadata I/O of an unbucketed merge is pinned") {
     val s = spark
     import s.implicits._
@@ -898,10 +931,11 @@ class KeyedTableSpec extends SparkSpec {
     assert(v == 2 && t.current.count() == 21)
     // the driver's calls: the table's own are two `exists` (the probe for
     // the current entry and the next) and the entry's create, rename and
-    // temp delete; the rest are Spark's listing of the base version's dir
-    // and its output committer.
+    // temp delete; the rest are Spark's listing of the base version's one
+    // file and its output committer, which renames the version's one part
+    // file and writes no `_SUCCESS` marker.
     val driver = calls.collect { case (k, n) if k.startsWith("driver.") => k.stripPrefix("driver.") -> n }
-    assert(driver == Map[String, Long]("create" -> 2, "delete" -> 3, "exists" -> 3, "getFileStatus" -> 10,
-      "listStatus" -> 6, "mkdirs" -> 1, "rename" -> 6), calls.toSeq.sorted.mkString(", "))
+    assert(driver == Map[String, Long]("create" -> 1, "delete" -> 3, "exists" -> 3, "getFileStatus" -> 2,
+      "listStatus" -> 2, "mkdirs" -> 1, "rename" -> 2), calls.toSeq.sorted.mkString(", "))
   }
 }

@@ -69,20 +69,22 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val s = ext
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-ext-null").toString
-    Seq(
-      (1L, Seq[Option[Float]](Some(1f), None), Seq[Option[Float]](Some(2f), Some(3f))),
-      (2L, Seq[Option[Float]](Some(1f)), Seq[Option[Float]](Some(2f), Some(3f))),
-      (3L, Seq[Option[Float]](Some(2f), Some(3f)), Seq[Option[Float]](Some(4f), Some(5f))),
-    ).toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
-    val df = ext.read.parquet(dir)
-    val reread = df.select(col("id"), expr(hofDot).as("d"))
-    assert(reread.queryExecution.optimizedPlan.expressions.exists(_.exists(_.isInstanceOf[FloatDot])))
-    val out = reread.orderBy("id").collect()
-    assert(out(0).isNullAt(1) && out(1).isNullAt(1))
-    assert(out(2).getDouble(1) == 2f * 4f + 3f * 5f)
-    // double-typed multiply must NOT be rewritten (different arithmetic)
-    val dbl = df.select(
-      expr("aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"))
-    assert(!dbl.queryExecution.optimizedPlan.expressions.exists(_.exists(_.isInstanceOf[FloatDot])))
+    try {
+      Seq(
+        (1L, Seq[Option[Float]](Some(1f), None), Seq[Option[Float]](Some(2f), Some(3f))),
+        (2L, Seq[Option[Float]](Some(1f)), Seq[Option[Float]](Some(2f), Some(3f))),
+        (3L, Seq[Option[Float]](Some(2f), Some(3f)), Seq[Option[Float]](Some(4f), Some(5f))),
+      ).toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
+      val df = ext.read.parquet(dir)
+      val reread = df.select(col("id"), expr(hofDot).as("d"))
+      assert(reread.queryExecution.optimizedPlan.expressions.exists(_.exists(_.isInstanceOf[FloatDot])))
+      val out = reread.orderBy("id").collect()
+      assert(out(0).isNullAt(1) && out(1).isNullAt(1))
+      assert(out(2).getDouble(1) == 2f * 4f + 3f * 5f)
+      // double-typed multiply must NOT be rewritten (different arithmetic)
+      val dbl = df.select(
+        expr("aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"))
+      assert(!dbl.queryExecution.optimizedPlan.expressions.exists(_.exists(_.isInstanceOf[FloatDot])))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }
