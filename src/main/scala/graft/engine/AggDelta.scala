@@ -98,7 +98,7 @@ object AggDelta {
     // consumers (bucket resolution, the state join, mergeCdc's collapse +
     // write + key collect) would otherwise EACH re-evaluate the delta plan,
     // re-scanning the input batch once per consumer — measured 4× the
-    // batch-scan cost at sf0.1 (AggMaintProbe). One pass over the batch,
+    // batch-scan cost at sf0.1 (SCALING.md, AggDelta row). One pass over the batch,
     // by construction.
     val deltas = micro.groupBy(groups.map(col).toIndexedSeq: _*)
       .agg(dAggs.head, dAggs.tail: _*).localCheckpoint()

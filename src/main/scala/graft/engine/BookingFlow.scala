@@ -89,7 +89,10 @@ object BookingFlow {
   /** Streaming shell over the same core: file-source + AvailableNow +
     * foreachBatch→merge — Spark's checkpoint offset log is the continuation
     * token (SURVEY §2.5 O3). Late/duplicate data needs no watermark: keyed
-    * overwrite makes the latest `updated_at` version win (§2.6).
+    * overwrite keeps one version per key. Within one micro-batch the latest
+    * `updated_at` wins; across batches the version that arrives last wins,
+    * even if it is older (SURVEY §2.3 T3, pinned by `KeyedTableSpec`'s
+    * "last-arriving version wins even if older").
     */
   def loadBookingFactStream(spark: SparkSession, feedDir: String, checkpointDir: String,
                             fact: KeyedTable, dim: KeyedTable,

@@ -56,31 +56,23 @@ final class ChangeFeed(
       (k, body.split("\n").map(_.trim).filter(_.nonEmpty).toSet)
     }
 
-  private def listFeed(): Seq[String] = {
-    val dir = new Path(feedDir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".json"))
-      .map(_.getPath.toString)
-      .sorted
-  }
-
   /** Unprocessed feed files as one DataFrame, plus a commit callback that
     * advances the watermark — call it only after the downstream write
     * commits, so a failed run re-reads the same slice (at-least-once, which
     * the keyed merge makes effectively exactly-once).
     */
   def readNew(): (DataFrame, Seq[String], () => Unit) = {
-    val (_, processed) = watermark
-    val todo = listFeed().filterNot(processed.contains)
+    val (k, processed) = watermark
+    val todo = Orchestrator.listFiles(spark, feedDir, ".json").filterNot(processed.contains)
     val df =
       if (todo.isEmpty) spark.createDataFrame(List.empty[org.apache.spark.sql.Row].asJava, schema)
       else spark.read.schema(schema).option("mode", "PERMISSIVE").json(todo: _*)
     val commit = () => {
-      val (k, done) = watermark
-      // create-once: until entry k+1 exists, readers keep entry k
-      // (re-processing is safe; a lost or truncated watermark is not)
-      KeyedTable.createEntry(fs, ckpt, k + 1, (done ++ todo).toSeq.sorted.mkString("\n"))
+      // create-once on the entry this read saw: until entry k+1 exists,
+      // readers keep entry k (re-processing is safe; a lost or truncated
+      // watermark is not), and if another consumer created k+1 since,
+      // createEntry throws instead of advancing past its files
+      KeyedTable.createEntry(fs, ckpt, k + 1, (processed ++ todo).toSeq.sorted.mkString("\n"))
       KeyedTable.logVersions(fs, ckpt).filter(_ <= k)
         .foreach(v => fs.delete(new Path(ckpt, v.toString), false))
     }

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   *  - Timestamps are untouched: a fixed time window holds ×factor events,
   *    the realistic shape of a bigger day.
   *
-  * Dev-side instrument only (like PerfProbe) — not part of any query path.
+  * Dev-side tool only — not part of any query path.
   */
 object ScaleUp {
 
@@ -116,8 +116,8 @@ object ScaleUp {
         // BYTE per splice, which the gradient-robust perceptual hashes
         // cannot see — the sf1 corpus carried ~39× the video near-dup pair
         // mass of a real 10× crawl (every source doc's 9 replicas were
-        // frame-level near-dups of each other; measured via
-        // VideoSlopeProbe). Varying the length shifts every downstream
+        // frame-level near-dups of each other; SCALING.md's r12 slope
+        // table, q_video_neardup row). Varying the length shifts every downstream
         // byte, so replica frame streams misalign and byte-level near-dup
         // structure stays intra-replica, exactly like the text-level
         // jaccard and embedding constructions already guaranteed.

@@ -1178,8 +1178,8 @@ object Dedup {
     * generator: with an attribute child, InferFiltersFromGenerate adds
     * size>0/isnotnull filters that predicate pushdown then substitutes the
     * alias tree into — the kernel would run 3× per row (the r16
-    * filter-pushdown blowup law, Generate-inferred variant;
-    * examples/GenerateInferProbe shows both plans). An expression child
+    * filter-pushdown blowup law, Generate-inferred variant; SCALING.md
+    * "Round-17 additions", and PlanLintSpec lints both plans). An expression child
     * skips the infer rule, and GenerateExec evaluates its generator exactly
     * once per input row.
     */

@@ -52,8 +52,9 @@ object Graph {
     * synchronous integer recurrence just continues (pinned in GraphSpec),
     * so warm-started results stay oracle-reproducible from base tables.
     *
-    * WHAT WARM-START BUYS — measured, not assumed (examples/PrankWarmProbe,
-    * sf0.1 supplier⇄part graph, 21k nodes; settles the r8–r12 null result):
+    * WHAT WARM-START BUYS — measured, not assumed (SCALING.md "Round-13
+    * measured updates", sf0.1 supplier⇄part graph, 21k nodes; settles the
+    * r8–r12 null result):
     * it does NOT buy wall time at local scales. The cold ladder's marginal
     * iteration is ~free here (cold 2/3/5/10 iters: 1.18/1.03/1.03/1.09 s —
     * fixed per-iteration overhead dominates, not data), while the warm

@@ -1261,8 +1261,8 @@ object Multimodal {
     * positions of the shorter video (⌊(min_nf − 1)/stride⌋ + 1). An exact
     * clone still matches at every sampled position (frac 1.0); a local edit
     * confined to skipped positions becomes invisible — the documented
-    * recall trade, measured against planted clones by
-    * examples/VideoValveProbe (SCALING.md r13). Default 1 = every position,
+    * recall trade, measured against planted clones in SCALING.md "Round-13
+    * measured updates" (the valve curves). Default 1 = every position,
     * plan unchanged.
     *
     * Output: (id_a, id_b, n_matching, n_comparable, match_frac).

@@ -80,7 +80,7 @@ object QualityOps {
     // predicate through every Project unconditionally, re-inlining the
     // full tokenize + line-ize + HOF pipeline into the scan's Filter node —
     // one extra interpreted evaluation of everything (measured 4.5 s vs
-    // 1.1 s at sf0.1, examples/QualityProbe). The typed lambda is an
+    // 1.1 s at sf0.1; SCALING.md, c4Clean row). The typed lambda is an
     // optimizer black box: it stays put above the projections, costs one
     // row-deserialize on an already-columnar-broken path, and keeps the
     // operator zero-shuffle.
@@ -193,7 +193,7 @@ object QualityOps {
     // The LM relation is VOCABULARY-bounded, not corpus-bounded — pinning
     // it is O(V) and saves the totals branch a third full corpus explode
     // (same bounded-metadata rationale as the ANN centroid collects;
-    // measured in examples/QualityProbe).
+    // SCALING.md, lmScore row).
     val lm = toks.groupBy("tok").agg(count(lit(1)).as("c")).localCheckpoint()
     val totals = lm.agg(sum(col("c")).as("N"), count(lit(1)).as("V"))
     val scored = toks

@@ -426,8 +426,8 @@ object Similarity {
   /** Exact nearest-centroid assignment kernel (r12 verdict Next #2) — a
     * primitive-array scan with optional triangle-inequality group pruning.
     *
-    * What the r12 "assignment-cost-bound" U actually was (measured by
-    * examples/SemAssignProbe, r13): NOT flops. (1) The historical closure
+    * What the r12 "assignment-cost-bound" U actually was (measured in
+    * SCALING.md "Round-13 measured updates"): NOT flops. (1) The historical closure
     * indexed `Seq[Float]` in its hot loop — unspecialized apply BOXES every
     * element, ~10× over the primitive loop (train at nlist 1024 over 20k
     * vectors: 20.5 s boxed → 2.2 s primitive); (2) semDedup's unpinned
@@ -497,9 +497,7 @@ object Similarity {
       s / norms(c)
     }
 
-    /** Brute-force twin, kept for the spec's equivalence sweep and the
-      * SemAssignProbe pruned-vs-brute instrument.
-      */
+    /** Brute-force twin, kept for the spec's equivalence sweep. */
     private[graft] def assignBrute(v0: Seq[Float]): Int = {
       val v = toArr(v0)
       var best = 0
@@ -675,9 +673,9 @@ object Similarity {
       // keep the codegen'd [[nearestCell]] path: they compile once.
       // Assignment via CentroidPruner (r12 verdict Next #2): the historical
       // inline loop indexed Seq[Float] per element — unspecialized apply
-      // boxes every float, which (not flops) was the dominant term of
-      // SemKnobProbe's nlist-U right side (train at 1024 over 20k vectors:
-      // 20.5 s boxed → 2.2 s primitive; SemAssignProbe r13). The pruner
+      // boxes every float, which (not flops) was the dominant term of the
+      // nlist ladder's right side (train at 1024 over 20k vectors: 20.5 s
+      // boxed → 2.2 s primitive; SCALING.md "Round-13 measured updates"). The pruner
       // reproduces the scan BIT-IDENTICALLY (same double arithmetic, same
       // >=-toward-higher-index ties — see its doc), so trained centroids
       // are unchanged and no stored-index format bumps.
@@ -835,17 +833,6 @@ object Similarity {
     assigned.write.mode("append").partitionBy("cell").parquet(s"$root/assigned")
     appendLog(spark, root, batch.count())
   }
-
-  /** In-memory twin of [[ivfAppendWrite]] for an un-persisted [[IvfIndex]]:
-    * same assignment rule, result unioned into the assigned relation.
-    */
-  def ivfAppend(index: IvfIndex, batch: DataFrame, idCol: String,
-                vecCol: String): IvfIndex =
-    IvfIndex(index.centroids,
-      index.assigned.unionByName(
-        batch.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-          l2Norm(col(vecCol)).as("__cn"),
-          nearestCell(col(vecCol), index.centroids).as("cell"))))
 
   /** IVF approximate top-k: corpus partitioned into `nlist` cells by nearest
     * centroid; each query probes only its `nprobe` nearest cells and ranks
@@ -1322,10 +1309,10 @@ object Similarity {
     // local relation), so the codes scan gets a STATIC partition filter —
     // strictly stronger than dynamic pruning, which Spark would not plan
     // here anyway (a LocalRelation probe side carries no selective scan
-    // filter for the DPP rule to latch onto; verified via IvfPqProbe: the
-    // equi-join alone read every cell directory). With the IN filter the
-    // scan's PartitionFilters lists the ≤ |queries|·nprobe probed cells and
-    // only those directories are read.
+    // filter for the DPP rule to latch onto: the equi-join alone read every
+    // cell directory). With the IN filter the scan's PartitionFilters lists
+    // the ≤ |queries|·nprobe probed cells and only those directories are
+    // read (PartitionPruneSpec pins both).
     val probedCells = qt.map { case (_, _, _, cell) => cell }.distinct.toSeq
     val shortlist = index.codes
       .filter(col("cell").isInCollection(probedCells))

@@ -454,7 +454,7 @@ object TextOps {
     * common subexpression per row, but Generate/aggregate evaluation has no
     * CSE, so a raw `tokens(text)` argument re-runs the normalize regexes +
     * split per gram element — measured 24 s vs 0.8 s for 260k grams at
-    * sf0.1 (examples/NgramProbe).
+    * sf0.1 (SCALING.md, ngramCounts row).
     */
   def ngramsRaw(toks: Column, n: Int): Column = {
     val grams = transform(sequence(lit(1), size(toks) - (n - 1)),
@@ -496,7 +496,7 @@ object TextOps {
     * corpus is exploded and aggregated exactly once. The obvious
     * join-formulation (gdf = tf.groupBy(term) joined back) consumes tf
     * twice, which re-derives the whole explode+agg upstream; measured ~30%
-    * slower cold at sf0.1 (examples/TermsProbe) and 2× the corpus scans at
+    * slower cold at sf0.1 (SCALING.md, topTerms row) and 2× the corpus scans at
     * scale. The rank filter still gets Spark 4's WindowGroupLimit rewrite.
     */
   def topTerms(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
@@ -1005,7 +1005,7 @@ object TextOps {
     // Tokenize behind its OWN projection: [[ngramsRaw]]'s lambda reads the
     // token array via element_at ×n, and handed the raw `tokens(text)`
     // expression those reads re-run the normalize-regexes+split per gram
-    // element — measured 24 s for 260k grams at sf0.1 (NgramProbe) vs ~1 s
+    // element — measured 24 s for 260k grams at sf0.1 (SCALING.md) vs ~1 s
     // against a bound attribute. The alias is referenced multiple times by
     // a non-cheap expression, so CollapseProject keeps the barrier.
     val ex = df.select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))

@@ -27,8 +27,8 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   * codegen CANNOT hoist common subexpressions (ProjectExec can) — a heavy
   * derived column referenced twice in a pushed-down predicate recomputes
   * per reference (gopher gate: 0.25 s projected vs 30.3 s filtered at sf1;
-  * the Generate-inferred variant runs a kernel 3× per row,
-  * examples.GenerateInferProbe). Flag any FilterExec whose condition
+  * the Generate-inferred variant runs a kernel 3× per row, SCALING.md
+  * "Round-17 additions"). Flag any FilterExec whose condition
   * contains ≥ 2 semantically-equal occurrences of the same non-trivial
   * subtree (≥ `minComputeNodes` compute nodes — attributes, literals and
   * casts don't count); only MAXIMAL repeated subtrees are reported.

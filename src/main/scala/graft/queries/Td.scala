@@ -25,7 +25,7 @@ object Td {
   /** One lazy read plan per (session, dir, name, source mtime), held in
     * [[graft.engine.SessionPlanCache]]. Constructing a parquet relation
     * costs ~50–65 ms per call (footer/schema read + file listing + plan
-    * build, measured by examples/TableLoadProbe), and the battery constructs
+    * build; SCALING.md "Round-18 additions"), and the battery constructs
     * each table on every run of every query. A regenerated source has a new
     * mtime and is re-read (TdCacheSpec).
     */
@@ -73,12 +73,13 @@ object Td {
   /** Shared shingle-relation plan over `documents` for the similarity/dedup
     * queries. Deliberately NOT persisted at this scale: the columnar cache
     * serializer costs ~4.5 s to write the sf0.1 relation while recomputing
-    * it with the char-loop tokenizer costs ~0.4 s per consumer (measured,
-    * JaccardProbe2). Re-measured round 4 across the whole 7-query shingle
-    * family A/B (persist vs not, same subset bench): persisted 26.7 s vs
-    * unpersisted 25.4 s — the cache write still doesn't pay even amortized
-    * over every consumer, so the r3 bench's q_jaccard_pairs spike (7.3 s vs
-    * 2.2 s reproduced) was ambient-load noise, not this plan. The crossover
+    * it with the char-loop tokenizer costs ~0.4 s per consumer (measured;
+    * SCALING.md "Corpus / training-data operators"). Re-measured round 4
+    * across the whole 7-query shingle family A/B (persist vs not, same
+    * subset bench): persisted 26.7 s vs unpersisted 25.4 s — the cache
+    * write still doesn't pay even amortized over every consumer, so the r3
+    * bench's q_jaccard_pairs spike (7.3 s vs 2.2 s reproduced) was
+    * ambient-load noise, not this plan. The crossover
     * flips when the source is large — at 100 TB a rescan dwarfs the cache
     * write, which is why the Dedup operators' own `persistIntermediate`
     * default stays true.
@@ -1138,7 +1139,7 @@ object Td {
   // The `ib` stress builds above deliberately hammer ~50% of keys so the
   // maintenance machinery is exercised hard; the number a capacity planner
   // actually plans around is the ~1%-of-keys DAILY-BATCH epoch (the regime
-  // JoinMaintProbe measures). Each helper below applies ONE such epoch to
+  // SCALING.md's JoinDelta row measures). Each helper below applies ONE such epoch to
   // the root its stress build just created (same tmpRoot the bench deletes
   // afterwards), so BENCH_r{N}.json carries both figures mechanically —
   // `jm` next to `jm1`, `am` next to `am1` — instead of the realistic
@@ -1334,14 +1335,21 @@ object Td {
   private def sessionId(s: SparkSession): String =
     SessionPlanCache.getOrElseUpdate(s, "session", (), "id")(java.util.UUID.randomUUID().toString)
 
+  /** Where a per-session catalog table's data lives: the driver's
+    * SparkFiles root, which Spark deletes when the context stops, so the
+    * files go with the in-memory catalog entry that names them.
+    */
+  private def sessionTableDir(name: String): String =
+    new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(), name).getPath
+
   /** Per-session co-bucketed catalog tables over `events` — facts
     * (event_id, user_id, value) and dims (event_id, event_type), both
     * bucketed 32 ways on event_id. Catalog entries are in-memory and
     * per-session, so names carry the session id (concurrent driver
     * correctness + bench JVMs each build their own — the data is tiny
     * relative to the shuffle the export exists to delete) and the data
-    * lands under tmpdir like the stored indexes. Built once per session,
-    * reused by every join the gate runs.
+    * lands in [[sessionTableDir]]. Built once per session, reused by every
+    * join the gate runs.
     */
   def cobucketTables(s: SparkSession, d: String): (String, String) = {
     val sid = sessionId(s).replace("-", "").take(10)
@@ -1349,11 +1357,10 @@ object Td {
     val (l, r) = (s"graft_cb_facts_${safe}_$sid", s"graft_cb_dims_${safe}_$sid")
     if (!s.catalog.tableExists(l) || !s.catalog.tableExists(r)) {
       val ev = events(s, d)
-      val base = System.getProperty("java.io.tmpdir")
       graft.engine.Colocate.materialize(ev.select("event_id", "user_id", "value"),
-        l, Seq("event_id"), 32, Some(s"$base/$l"))
+        l, Seq("event_id"), 32, Some(sessionTableDir(l)))
       graft.engine.Colocate.materialize(ev.select("event_id", "event_type"),
-        r, Seq("event_id"), 32, Some(s"$base/$r"))
+        r, Seq("event_id"), 32, Some(sessionTableDir(r)))
     }
     (l, r)
   }
@@ -1424,7 +1431,7 @@ object Td {
     * ~free here while the init join is not; warm-start's measured value is
     * ranking quality per iteration, not wall time (the r13 adjudication of
     * the r8+ null result — numbers in [[graft.operators.Graph.pageRank]]'s
-    * `init` doc, from examples/PrankWarmProbe).
+    * `init` doc and SCALING.md "Round-13 measured updates").
     */
   private[graft] def warmPagerankEpoch(s: SparkSession, d: String, root: String): Unit = {
     val init = graft.engine.KeyedTable(s, root, Seq("node")).current
@@ -1499,10 +1506,9 @@ object Td {
     val safe = d.replaceAll("[^A-Za-z0-9]", "_")
     val name = s"graft_cb_user_${safe}_$sid"
     if (!s.catalog.tableExists(name)) {
-      val base = System.getProperty("java.io.tmpdir")
       graft.engine.Colocate.materialize(
         events(s, d).select(col("user_id"), col("value")),
-        name, Seq("user_id"), 32, Some(s"$base/$name"))
+        name, Seq("user_id"), 32, Some(sessionTableDir(name)))
     }
     name
   }

@@ -1200,9 +1200,9 @@ object TextQueries {
         // the predicate, where FilterExec's short-circuit codegen cannot
         // eliminate common subexpressions — the tokenizer/regex chain then
         // runs ~10× per row (measured: 30.3 s vs 0.25 s for the SAME gate
-        // at sf1, PipelineProbe2). The pinned relation is the slim flags
-        // manifest (id + 8 ints — no text), so the pin is the cheap side;
-        // `lang` rejoins from the pruned parquet scan rather than from the
+        // at sf1, SCALING.md "Round-16 additions"). The pinned relation is
+        // the slim flags manifest (id + 8 ints — no text), so the pin is
+        // the cheap side; `lang` rejoins from the pruned parquet scan rather than from the
         // windowed dd subtree. The `mixed` pin covers the multi-branch
         // reads below (mix counts + threshold probe, shard prefix-sum ×2).
         val flags = QualityOps.gopherGate(dd, "doc_id", "text").localCheckpoint()
@@ -1622,10 +1622,11 @@ object TextQueries {
     // hamming/frac knobs as q_video_neardup, so the two results differ
     // EXACTLY by the sampling semantics — a wrong stride filter, a
     // mis-calibrated denominator, or a sampled position leaking into
-    // n_comparable changes rows and hash-fails. (VideoValveProbe measures
-    // the knob's cost/recall curve; on this corpus's 3–13-frame videos the
-    // coarse denominator ADMITS more template pairs — the documented
-    // short-video hazard — while exact clones stay at frac 1.0.)
+    // n_comparable changes rows and hash-fails. (SCALING.md "Round-13
+    // measured updates" has the knob's cost/recall curve; on this
+    // corpus's 3–13-frame videos the coarse denominator ADMITS more
+    // template pairs — the documented short-video hazard — while exact
+    // clones stay at frac 1.0.)
     "q_video_neardup_s2" -> Q(
       (s, d) => Multimodal.videoNearDupPairsFromHashes(s, Td.videoHashTable(s, d),
         maxHamming = 1, minMatchFrac = 0.8, frameStride = 2),
@@ -2348,7 +2349,8 @@ object TextQueries {
     // `_capped`): band buckets wider than 4 reps are dropped BEFORE the
     // self-join, so the pair stage's cost is bounded per bucket no matter
     // how boilerplate-heavy the corpus gets (bucket widths grew 6 → 22
-    // from sf0.01 to sf0.1 on this corpus — ChunkWidthProbe — and keep
+    // from sf0.01 to sf0.1 on this corpus — SCALING.md "Round-17
+    // additions" — and keep
     // growing with scale; the uncapped exact query is the sf1 tail at
     // ~27 s). Recall-only by construction: emitted pairs stay
     // exact-verified; what the cap drops is REPORTED in the output

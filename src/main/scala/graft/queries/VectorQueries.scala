@@ -552,7 +552,7 @@ object VectorQueries {
     // Coarse cells narrow the probe to nprobe/nlist of the corpus, ADC runs
     // only over THOSE cells' stored codes (a static cell IN (probed)
     // partition filter prunes the cell-partitioned codes relation to the
-    // probed directories, IvfPqProbe-verified — flat pqSearch's all-codes
+    // probed directories, PartitionPruneSpec-pinned — flat pqSearch's all-codes
     // scan never happens), exact re-rank recovers cosine order. Codebooks
     // quantize per-cell RESIDUALS (IVFADC): same budget, measurably better
     // recall than raw-vector codebooks (mean 0.86 → 0.92 at sf0.01).

@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * class, trait or object in `src/test`. The same holds for the probe mains
   * a comment cites as the source of a measurement: every `…Probe` name in
   * `src/main` must be an object under `graft/examples`, and so must every
-  * probe the verify skill tells a reader to run.
+  * probe the verify skill tells a reader to run. And every example main is
+  * there for a reason the README's `examples/` entry gives in one line.
   */
 class CitedSpecsSpec extends AnyFunSuite {
 
@@ -49,6 +50,18 @@ class CitedSpecsSpec extends AnyFunSuite {
 
   test("every probe cited in src/main is an example main") {
     assertDefined(probeName, exampleObjects)
+  }
+
+  test("the example mains are exactly those README's examples/ entry lists, each with its reason") {
+    val lines = Files.readAllLines(Paths.get("README.md")).asScala.toSeq
+    val entry = lines.indexWhere(_.matches("""\s+examples/\s+.*"""))
+    assert(entry >= 0, "README has no examples/ entry")
+    // the entry's continuation lines, then one `Name  reason` line per main
+    val listed = lines.drop(entry + 1).dropWhile(_.matches("""\s{20,}\S.*"""))
+      .map("""^\s{4}(\w+)\s{2,}(\S.*)$""".r.findFirstMatchIn(_))
+      .takeWhile(_.nonEmpty).flatten.map(m => m.group(1) -> m.group(2))
+    assert(listed.map(_._1).distinct.size == listed.size, listed)
+    assert(listed.map(_._1).toSet == exampleObjects)
   }
 
   test("every probe the verify skill names is an example main") {

@@ -54,4 +54,28 @@ class ChangeFeedSpec extends SparkSpec {
     val (rows4, todo4, _) = readNew()
     assert(rows4.isEmpty && todo4.isEmpty)
   }
+
+  test("a commit whose next entry another read committed first throws and leaves that entry") {
+    val base = tmpDir("feed-race")
+    val feedDir = s"$base/feed"
+    val ckpt = s"$base/feed.ckpt"
+    val feed = new ChangeFeed(spark, feedDir, schema, ckpt)
+    Files.createDirectories(Paths.get(feedDir))
+    Files.writeString(Paths.get(feedDir, "a.json"), """{"id":"a","n":1}""")
+    val (_, todo1, commit1) = feed.readNew()
+    Files.writeString(Paths.get(feedDir, "b.json"), """{"id":"b","n":2}""")
+    val (_, todo2, commit2) = feed.readNew()
+    assert(todo1.map(_.split("/").last) == Seq("a.json"))
+    assert(todo2.map(_.split("/").last) == Seq("a.json", "b.json"))
+    // both reads saw the empty watermark: the second commit creates entry 1,
+    // and the first, whose next entry now exists, must not publish entry 2
+    commit2()
+    intercept[java.util.ConcurrentModificationException](commit1())
+    val entries = new java.io.File(ckpt).listFiles().map(_.getName).filterNot(_.startsWith(".")).toSeq
+    assert(entries == Seq("1"))
+    assert(Files.readString(Paths.get(ckpt, "1")).split("\n").map(_.split("/").last).toSeq ==
+      Seq("a.json", "b.json"))
+    val (_, todo3, _) = feed.readNew()
+    assert(todo3.isEmpty)
+  }
 }

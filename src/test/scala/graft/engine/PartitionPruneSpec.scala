@@ -60,4 +60,40 @@ class PartitionPruneSpec extends SparkSpec {
       assert(q.head().getDouble(0) > 0)
     } finally spark.conf.set(key, prev) // session is JVM-shared across suites
   }
+
+  test("stored IVF indexes: IVF+PQ reads only the probed cells' codes, IVF prunes its cells dynamically") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.operators.Similarity
+    import graft.queries.Td
+    val d = "/root/testdata/sf0.001"
+    val emb = Td.embeddings(spark, d)
+    val one = emb.orderBy("vec_id").limit(1)
+    val nprobe = 4
+    val pq = Similarity.ivfPqSearch(Td.ivfpqIndexTable(spark, d), emb, one, "vec_id", "embedding",
+      topK = 5, nprobe = nprobe, rerank = 50)
+    // execute THIS plan instance: a derived one (pq.count()) would leave
+    // these scan metrics at zero
+    pq.queryExecution.executedPlan.execute().count()
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val codes = aqe.collectWithSubqueries(pq.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
+      .filter(_.relation.location.rootPaths.exists(_.getName == "codes"))
+    assert(codes.nonEmpty, pq.queryExecution.executedPlan.toString)
+    codes.foreach { scan =>
+      // the probed cell set is known at plan time: a static IN filter
+      assert(scan.partitionFilters.exists(_.find {
+        case _: In | _: InSet => true
+        case _ => false
+      }.nonEmpty), scan.partitionFilters)
+      val read = scan.metrics("numPartitions").value
+      assert(read >= 1 && read <= nprobe, s"codes scan read $read cell dirs, probed $nprobe")
+    }
+    // plain IVF's probe side is a filtered scan, which the DPP rule takes
+    val ivf = Similarity.ivfSearch(Td.ivfIndexTable(spark, d), emb.filter(col("vec_id") < 10),
+      "vec_id", "embedding", k = 5, nprobe = nprobe)
+    val ivfPlan = ivf.queryExecution.executedPlan.toString
+    assert(ivfPlan.contains("dynamicpruning"), ivfPlan)
+    assert(ivf.count() > 0)
+  }
 }

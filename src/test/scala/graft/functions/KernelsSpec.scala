@@ -17,15 +17,32 @@ class KernelsSpec extends SparkSpec {
   }
 
   test("FloatDot equals the HOF zip_with/aggregate formulation on real embeddings") {
+    val s = spark
+    import s.implicits._
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(50)
     val pairs = emb.select(col("embedding").as("a"))
       .crossJoin(emb.select(col("embedding").as("b")).limit(5))
+    val hof = expr("aggregate(zip_with(a, b, (x, y) -> x*y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
     val rows = pairs.select(
       Kernels.float_dot(col("a"), col("b")).as("kernel"),
-      expr("aggregate(zip_with(a, b, (x, y) -> x*y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)").as("hof"),
+      hof.as("hof"),
     ).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1))) // bit-exact
+    // edge cases, through parquet so they run the compiled kernel over a scan
+    val dir = s"${tmpDir("floatdot-edges")}/t"
+    Seq(
+      (1L, Option(Seq(1.0f, 2.0f)), Option(Seq(3.0f))),         // length mismatch → null
+      (2L, Option(Seq.empty[Float]), Option(Seq.empty[Float])), // empty → 0.0
+      (3L, None, Option(Seq(1.0f))),                             // null input → null
+    ).toDF("id", "a", "b").write.parquet(dir)
+    val edgeRows = spark.read.parquet(dir)
+    // the HOF falls back from codegen; the kernel alone is in a codegen'd Project
+    val plan = edgeRows.select(Kernels.float_dot(col("a"), col("b"))).queryExecution.executedPlan.toString
+    assert("""\*\(\d+\) Project \[[^\n]*floatdot""".r.findFirstIn(plan).nonEmpty, plan)
+    val edges = edgeRows.select(col("id"), Kernels.float_dot(col("a"), col("b")), hof).collect()
+      .map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+    assert(edges == Map(1L -> (None, None), 2L -> (Some(0.0), Some(0.0)), 3L -> (None, None)))
   }
 
   test("HashScore equals the HOF unigram+bigram weight-sum formulation") {
@@ -91,6 +108,8 @@ class KernelsSpec extends SparkSpec {
         |  graft_hash_score(array('the', 'quick')) AS s_default,
         |  graft_hash_score(array('the', 'quick'), array(5L, 7L)) AS s_custom,
         |  graft_vocab_count(array('a', 'b', 'a'), array('a')) AS vc,
+        |  graft_vocab_count(CAST(array() AS ARRAY<STRING>), array('a')) AS vc_empty,
+        |  graft_vocab_count(array('nope'), array('a')) AS vc_none,
         |  array_join(graft_phrase_merge(array('new', 'york', 'city'),
         |    array('new york')), ' ') AS merged,
         |  array_join(graft_bpe_segment('lower', array('e r', 'er </w>')), ' ') AS seg,
@@ -107,9 +126,9 @@ class KernelsSpec extends SparkSpec {
     val exp2 = Seq("the", "quick", "the quick")
       .map(f => Seq(5L, 7L)((h(f) % 2).toInt)).sum
     assert(r.getLong(1) == exp2)
-    assert(r.getInt(2) == 2)
-    assert(r.getString(3) == "new_york city")
-    assert(r.getString(4) == "l o w er</w>" && r.getLong(5) == 8L)
+    assert(r.getInt(2) == 2 && r.getInt(3) == 0 && r.getInt(4) == 0)
+    assert(r.getString(5) == "new_york city")
+    assert(r.getString(6) == "l o w er</w>" && r.getLong(7) == 8L)
     // non-literal table argument fails at ANALYSIS, not per-row at runtime
     val e = intercept[Exception] {
       spark.sql("SELECT graft_vocab_count(array('a'), array(CAST(id AS STRING))) FROM range(1)")

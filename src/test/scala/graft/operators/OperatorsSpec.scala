@@ -304,6 +304,17 @@ class OperatorsSpec extends SparkSpec {
     assert(raw.forall(_.isNullAt(3))) // width null — no container to parse
     assert(raw.find(_.getLong(0) == 1L).get.getAs[Long]("sum_px") ==
       texts(1L).getBytes("UTF-8").map(b => (b & 0xff).toLong).sum)
+    // a null source text wraps to null content and decodes to a row of null
+    // features beside the real one; the job does not die
+    val s0 = spark
+    import s0.implicits._
+    val withNull = Multimodal.decodeFeatures(spark, Multimodal.asBmpMediaTable(spark,
+        Seq((7L, "hello"), (8L, null.asInstanceOf[String])).toDF("doc_id", "text"), "doc_id", "text"))
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(withNull(7L).getAs[Int]("width") == 10 &&
+      withNull(7L).getAs[Long]("sum_px") == "hello".getBytes("UTF-8").map(_.toLong).sum)
+    assert(withNull(8L).isNullAt(withNull(8L).fieldIndex("width")) &&
+      withNull(8L).isNullAt(withNull(8L).fieldIndex("sum_px")))
   }
 
   test("multimodal: WAV encode→parse round trip, chunk walking, signed samples") {

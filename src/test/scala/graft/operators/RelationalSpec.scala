@@ -234,4 +234,19 @@ class RelationalSpec extends SparkSpec {
       s"expected partial+final mode in:\n$plan")
     assert(out.count() == 15)
   }
+
+  test("declared rank-filter top-k queries plan WindowGroupLimit; a global top-k plans TakeOrderedAndProject") {
+    // Spark 4's InferWindowGroupLimit is why the top-k operators stay
+    // declarative window expressions (SCALING.md "What the optimizer
+    // already gives us"); each of these would shuffle its full input if
+    // the rewrite stopped firing
+    val d = "/root/testdata/sf0.001"
+    def plan(q: String) = graft.SparkEntry.queries(q)(spark, d).queryExecution.executedPlan.toString
+    for (q <- Seq("q_cosine_topk", "q_latest_per_key")) {
+      val p = plan(q)
+      assert(p.contains("WindowGroupLimit"), s"$q:\n$p")
+    }
+    val p = plan("q_topk_orders")
+    assert(p.contains("TakeOrderedAndProject"), p)
+  }
 }

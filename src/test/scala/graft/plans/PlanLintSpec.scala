@@ -45,8 +45,8 @@ class PlanLintSpec extends SparkSpec {
   }
 
   test("generate-inferred filter: planted aliased-array explode triple-eval is flagged (r17 law #3)") {
-    // The Generate-inferred variant of the pushdown law (GenerateInferProbe,
-    // SCALING.md r17): exploding an ALIASED heavy array lets
+    // The Generate-inferred variant of the pushdown law (SCALING.md
+    // "Round-17 additions"): exploding an ALIASED heavy array lets
     // InferFiltersFromGenerate add size>0/isnotnull filters on the
     // attribute, which pushdown then substitutes the alias tree into — the
     // kernel lands ≥2× in one FilterExec condition (plus once in the

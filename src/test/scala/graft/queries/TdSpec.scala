@@ -20,6 +20,19 @@ class TdSpec extends SparkSpec {
     assert(p2.sparkSession eq s2)
   }
 
+  test("co-bucketed session tables live under the SparkFiles root, which goes when the context stops") {
+    val d = "/root/testdata/sf0.001"
+    val (l, r) = Td.cobucketTables(spark, d)
+    val root = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory()).getCanonicalFile
+    for (t <- Seq(l, r, Td.cobucketUserTable(spark, d))) {
+      val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $t").filter("col_name = 'Location'")
+        .head().getString(1)
+      val dir = new java.io.File(new java.net.URI(loc).getPath).getCanonicalFile
+      assert(dir.getParentFile == root, s"$t at $dir, not under $root")
+      assert(dir.list().count(_.endsWith(".parquet")) > 0, s"$t: no data files in $dir")
+    }
+  }
+
   test("MOR bench bodies run end-to-end and read-path-equal their CoW twins") {
     val d = "/root/testdata/sf0.001"
     val tmp = tmpDir("td-mor-bench")
